@@ -244,14 +244,18 @@ object Dedup {
       .filter(size($"sh") > 0)
   }
 
+  /** Hashed word 3-shingles of a text column — the `sh` the dedup index
+    * stores and probes with.
+    */
+  private[graft] def shingleHashes(text: Column): Column =
+    org.apache.spark.sql.graft.GraftFunctions.word_shingle_hashes(text, 3)
+
   /** The hashed-shingle frame minhash banding runs over. */
   private def shingleFrame(documents: DataFrame): DataFrame = {
     val s = documents.sparkSession
     import s.implicits._
     documents
-      .select($"doc_id",
-        org.apache.spark.sql.graft.GraftFunctions
-          .word_shingle_hashes($"text", 3).as("sh"))
+      .select($"doc_id", shingleHashes($"text").as("sh"))
       .filter(size($"sh") > 0)
   }
 
@@ -266,19 +270,6 @@ object Dedup {
     * generic array hashing, over 3M keeper segments) as 80%+ of the
     * segment near-dup wall.
     */
-  /** Banding rows (doc_id, band, band_hash) of an already-hashed
-    * (doc_id, sh) frame — the pending-buffer side of
-    * [[dedupProbeFrames]] (the streaming gates band their small
-    * not-yet-folded keeper set per trigger; recomputing ≤ growEvery
-    * batches of bands is cheaper than the bucketed append it defers).
-    */
-  private[graft] def bandingRowsOf(shingled: DataFrame, bands: Int,
-      rows: Int): DataFrame = {
-    val s = shingled.sparkSession
-    import s.implicits._
-    minhashBandedFrom(shingled.filter(size($"sh") > 0), bands, rows)
-  }
-
   private def minhashBandedFrom(shingled: DataFrame, bands: Int,
       rows: Int): DataFrame = {
     val s = shingled.sparkSession
@@ -2359,7 +2350,7 @@ object Dedup {
     val keepers = meta.groupBy($"h", $"h2")
       .agg(min($"ord").as("doc_id"), min_by($"sh", $"ord").as("sh"))
       .select($"doc_id", $"sh")
-    bandingRowsOf(keepers, bands, rows)
+    minhashBandedFrom(keepers.filter(size($"sh") > 0), bands, rows)
       .groupBy($"band", $"band_hash")
       .agg(count(lit(1)).as("bucket_n"))
       .filter($"bucket_n" > maxBucket)
@@ -2695,67 +2686,86 @@ object Dedup {
     * frame. Only the delta is hashed; the corpus is never rescanned or
     * reshuffled — both stored tables join in their bucketed layout, so
     * per-batch cost is O(delta) + candidate-sized shuffles regardless of
-    * corpus size.
+    * corpus size. Rows come sorted by (corpus_id, new_id); callers that
+    * need only the id set use [[dedupDeltaPairs]], which skips the sort.
     */
   def dedupDelta(spark: SparkSession, table: String, delta: DataFrame,
-      bands: Int = 16, rows: Int = 4, minJaccard: Double = 0.5): DataFrame =
-    dedupDeltaHandle(spark, table, delta, bands, rows, minJaccard)._1
-
-  /** [[dedupDelta]] plus its persisted delta-shingle frame — the
-    * minhashPairsHandle contract, so a long-lived caller (the streaming
-    * gates) can unpersist the operator's own cache once the batch's
-    * actions have run instead of clearing the whole session cache (which
-    * would evict co-resident workloads' persisted frames mid-flight).
-    */
-  def dedupDeltaHandle(spark: SparkSession, table: String, delta: DataFrame,
-      bands: Int = 16, rows: Int = 4,
-      minJaccard: Double = 0.5): (DataFrame, Seq[DataFrame]) = {
-    indexRecoverAndRefresh(spark, table, Seq("_bands", "_shingles"))
-    val dsh = shingleFrame(delta)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (dedupDeltaFromShingles(spark, table, dsh, bands, rows, minJaccard),
-      Seq(dsh))
+      bands: Int = 16, rows: Int = 4, minJaccard: Double = 0.5): DataFrame = {
+    import spark.implicits._
+    dedupDeltaPairs(spark, table, delta, bands, rows, minJaccard)
+      .orderBy($"corpus_id", $"new_id")
   }
 
-  /** [[dedupDelta]] core over an already-hashed (doc_id, sh) delta frame
-    * (caller persists it — banding and the verify join both read it):
-    * the segment gate probes through here off ONE fused
-    * SegmentShingleHashes pass instead of re-tokenizing every segment
-    * (VERDICT r14 #8).
+  /** [[dedupDelta]] without the final sort — the (corpus_id, new_id,
+    * jaccard) pairs, each once, in no particular order.
     */
-  private[graft] def dedupDeltaFromShingles(spark: SparkSession,
-      table: String, shingled: DataFrame, bands: Int, rows: Int,
-      minJaccard: Double): DataFrame =
-    dedupProbeFrames(
-      spark.table(s"${table}_bands"),
-      spark.table(s"${table}_shingles"),
-      shingled, bands, rows, minJaccard)
+  private[graft] def dedupDeltaPairs(spark: SparkSession, table: String,
+      delta: DataFrame, bands: Int, rows: Int,
+      minJaccard: Double): DataFrame = {
+    val dsh = shingleFrame(delta)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    dedupProbeFrames(Seq(storedIndex(spark, table)), dsh, bands, rows,
+      minJaccard)
+      // duplicate index rows (an at-least-once append replay) fan the
+      // verify joins into duplicate output rows — collapse the
+      // result-sized frame so probes stay exactly-once downstream
+      .dropDuplicates("corpus_id", "new_id")
+  }
 
-  /** Probe an already-hashed (doc_id, sh) delta frame against a corpus
-    * index given as FRAMES — (doc_id, band, band_hash) banding rows plus
-    * the (doc_id, sh) shingle rows. [[dedupDeltaFromShingles]] passes
-    * the stored bucketed tables; the streaming gates' deferred-growth
-    * path (r16) passes the small PENDING keeper buffer (novel rows not
-    * yet folded into the bucketed index), so the gate verdict keeps
-    * seeing every earlier batch while index appends amortize over
-    * `growEvery` triggers.
+  /** The (bands, shingles) tables of a [[writeDedupIndex]] index as an
+    * index part for [[dedupProbeFrames]], recovered and refreshed first.
     */
-  private[graft] def dedupProbeFrames(bandsIdx: DataFrame,
-      shinglesIdx: DataFrame, shingled: DataFrame, bands: Int, rows: Int,
+  private[graft] def storedIndex(spark: SparkSession,
+      table: String): (DataFrame, DataFrame) = {
+    indexRecoverAndRefresh(spark, table, Seq("_bands", "_shingles"))
+    (spark.table(s"${table}_bands"), spark.table(s"${table}_shingles"))
+  }
+
+  /** A not-yet-indexed (doc_id, sh) frame as an index part for
+    * [[dedupProbeFrames]]: its banding rows and its shingle rows. The
+    * streaming gates pass their pending buffer through here (banding
+    * ≤ growEvery batches per trigger is cheaper than the bucketed append
+    * it defers).
+    */
+  private[graft] def bufferIndex(shingled: DataFrame, bands: Int,
+      rows: Int): (DataFrame, DataFrame) = {
+    val s = shingled.sparkSession
+    import s.implicits._
+    val sh = shingled.filter(size($"sh") > 0)
+    (minhashBandedFrom(sh, bands, rows), sh)
+  }
+
+  /** Probe an already-hashed (doc_id, sh) delta frame against an index
+    * given as PARTS — each a (doc_id, band, band_hash) banding frame plus
+    * its (doc_id, sh) shingle frame. The parts are unioned, so however
+    * many there are (the stored tables, plus the streaming gates'
+    * pending buffer — see [[bufferIndex]]) the probe is ONE band join
+    * and ONE verify. The (corpus_id, new_id, jaccard) result is unsorted,
+    * and a pair repeats when its corpus doc has duplicate index rows (an
+    * at-least-once append replay, or a crash between a fold's append and
+    * its buffer delete); callers collapse it as they need — an anti-join
+    * on new_id needs nothing.
+    */
+  private[graft] def dedupProbeFrames(index: Seq[(DataFrame, DataFrame)],
+      shingled: DataFrame, bands: Int, rows: Int,
       minJaccard: Double): DataFrame = {
     val spark = shingled.sparkSession
     import spark.implicits._
     val dsh = shingled.filter(size($"sh") > 0)
+    val bandsIdx = index
+      .map(_._1.select($"band", $"band_hash", $"doc_id".as("corpus_id")))
+      .reduce(_ unionByName _)
+    val shinglesIdx = index
+      .map(_._2.select($"doc_id".as("corpus_id"), $"sh".as("sh_a")))
+      .reduce(_ unionByName _)
     val cand = bandsIdx
-      .select($"band", $"band_hash", $"doc_id".as("corpus_id"))
       .join(minhashBandedFrom(dsh, bands, rows)
         .select($"band", $"band_hash", $"doc_id".as("new_id")),
         Seq("band", "band_hash"))
       .select($"corpus_id", $"new_id")
       .dropDuplicates("corpus_id", "new_id")
     val withSh = cand
-      .join(shinglesIdx
-        .select($"doc_id".as("corpus_id"), $"sh".as("sh_a")), "corpus_id")
+      .join(shinglesIdx, "corpus_id")
       .join(dsh.select($"doc_id".as("new_id"), $"sh".as("sh_b")), "new_id")
     val ni = org.apache.spark.sql.graft.GraftFunctions
       .sorted_intersection_size($"sh_a", $"sh_b")
@@ -2764,11 +2774,6 @@ object Dedup {
         round(ni.cast("double") / (size($"sh_a") + size($"sh_b") - ni), 6))
       .filter($"jaccard" >= minJaccard)
       .select($"corpus_id", $"new_id", $"jaccard")
-      // duplicate index rows (an at-least-once append replay) fan the
-      // verify joins into duplicate output rows — collapse the
-      // result-sized frame so probes stay exactly-once downstream
-      .dropDuplicates("corpus_id", "new_id")
-      .orderBy($"corpus_id", $"new_id")
   }
 
   /** Append a batch's band + shingle rows to a [[writeDedupIndex]] table
@@ -2787,7 +2792,9 @@ object Dedup {
   }
 
   /** [[appendDedupIndex]] core over an already-hashed (doc_id, sh) frame
-    * (caller persists it — read twice).
+    * (caller persists it — read twice). Each table is repartitioned on
+    * its bucket column first, so every task writes one bucket's file: an
+    * append adds at most `buckets` files per table, not tasks × buckets.
     */
   private[graft] def appendDedupIndexFromShingles(shingled: DataFrame,
       table: String, buckets: Int, bands: Int, rows: Int): Unit = {
@@ -2796,10 +2803,12 @@ object Dedup {
     val sh = shingled.filter(size($"sh") > 0)
     minhashBandedFrom(sh, bands, rows)
       .select($"doc_id", $"band", $"band_hash")
+      .repartition(buckets, $"band_hash")
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .bucketBy(buckets, "band_hash").sortBy("band_hash")
       .format("parquet").saveAsTable(s"${table}_bands")
-    sh.write.mode(org.apache.spark.sql.SaveMode.Append)
+    sh.repartition(buckets, $"doc_id")
+      .write.mode(org.apache.spark.sql.SaveMode.Append)
       .bucketBy(buckets, "doc_id").sortBy("doc_id")
       .format("parquet").saveAsTable(s"${table}_shingles")
   }
@@ -2837,7 +2846,7 @@ object Dedup {
 
   /** Per-table data-file counts for a stored index — the observability
     * half of the compaction contract (verdict r16 #3): a long-running
-    * stream's fold cycles append one file per (task × bucket) per fold,
+    * stream's fold cycles append up to one file per bucket per fold,
     * so this is the number that grows without bound until
     * [[compactIndex]] runs.
     */
@@ -2933,8 +2942,8 @@ object Dedup {
     segmentDeltaHandle(spark, table, delta, width, bands, rows, minJaccard)._1
 
   /** [[segmentDelta]] plus its persisted internals (delta segment frame +
-    * the probe's shingle frame) — the dedupDeltaHandle contract for the
-    * streaming segment gate.
+    * the probe's shingle frame) — the minhashPairsHandle contract for
+    * the streaming segment gate.
     */
   def segmentDeltaHandle(spark: SparkSession, table: String, delta: DataFrame,
       width: Int = 10, bands: Int = 16, rows: Int = 4,
@@ -2968,18 +2977,19 @@ object Dedup {
   /** The stored-index-matched (ord) set behind [[segmentDelta]], over a
     * persisted [[segmentHashFrame]]: exact = (h, h2) digest semi-join
     * against the keeper store; edited = the band/shingle-verify probe
-    * over the SAME pre-hashed shingles.
+    * over the SAME pre-hashed shingles, against the stored tables plus
+    * any `extra` index parts (the segment gate's pending buffer).
     */
   private[graft] def segmentDeltaOrdsFromMeta(spark: SparkSession,
       table: String, meta: DataFrame, bands: Int, rows: Int,
-      minJaccard: Double): DataFrame = {
+      minJaccard: Double,
+      extra: Seq[(DataFrame, DataFrame)] = Nil): DataFrame = {
     import spark.implicits._
-    indexRecoverAndRefresh(spark, table,
-      Seq("_segdigests", "_bands", "_shingles"))
+    indexRecoverAndRefresh(spark, table, Seq("_segdigests"))
     val exact = meta
       .join(spark.table(s"${table}_segdigests"), Seq("h", "h2"), "left_semi")
       .select($"ord")
-    val fuzzy = dedupDeltaFromShingles(spark, table,
+    val fuzzy = dedupProbeFrames(storedIndex(spark, table) +: extra,
       meta.select($"ord".as("doc_id"), $"sh"), bands, rows, minJaccard)
       .select($"new_id".as("ord"))
     exact.unionByName(fuzzy).distinct()

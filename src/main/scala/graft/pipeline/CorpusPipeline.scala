@@ -498,7 +498,7 @@ object CorpusPipeline {
     // d02: stored-corpus matches (new_id is always the later element —
     // corpus ids precede the delta's) ∪ within-delta pair losers
     val ndLosers = Dedup
-      .dedupDelta(s, s"${stateTable}_doc",
+      .dedupDeltaPairs(s, s"${stateTable}_doc",
         afterSeg.select($"doc_id", $"text"), cfg.nearDupBands,
         cfg.nearDupRows, cfg.nearDupJaccard)
       .select($"new_id".as("doc_id"))

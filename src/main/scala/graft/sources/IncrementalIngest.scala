@@ -20,13 +20,20 @@ object IncrementalIngest {
 
   val hashCol = "content_hash"
 
-  private def batchFiles(storeDir: String,
+  /** The store's batch files, listed through the Hadoop FileSystem of
+    * the path itself, so `file://`, HDFS and S3 stores list like plain
+    * local paths (java.io.File would see none of them, and dedup would
+    * silently stop).
+    */
+  private def batchFiles(spark: SparkSession, storeDir: String,
       excludeBatchId: Option[String]): Array[String] = {
-    val dir = new java.io.File(storeDir)
-    Option(dir.listFiles()).getOrElse(Array.empty)
+    val dir = new org.apache.hadoop.fs.Path(storeDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) Array.empty
+    else fs.listStatus(dir).map(_.getPath)
       .filter(f => f.getName.endsWith(".parquet") &&
         !excludeBatchId.contains(f.getName.stripSuffix(".parquet")))
-      .map(_.getPath)
+      .map(_.toString)
   }
 
   /** All content hashes currently in the store (empty frame if none).
@@ -35,13 +42,13 @@ object IncrementalIngest {
     */
   def processedHashes(spark: SparkSession, storeDir: String,
       excludeBatchId: Option[String] = None): DataFrame = {
-    val files = batchFiles(storeDir, excludeBatchId)
+    val files = batchFiles(spark, storeDir, excludeBatchId)
+    val schema = StructType(Seq(StructField(hashCol, StringType)))
     if (files.isEmpty)
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField(hashCol, StringType))))
-    else
-      spark.read.parquet(files.toIndexedSeq: _*).select(col(hashCol)).distinct()
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else // the hash column's known type: no schema-inference job
+      spark.read.schema(schema).parquet(files.toIndexedSeq: _*).distinct()
   }
 
   /** Distinct record ids currently in the store (column-pruned scan,
@@ -52,7 +59,7 @@ object IncrementalIngest {
     */
   def storedIds(spark: SparkSession, storeDir: String,
       idCol: String = "doc_id"): DataFrame = {
-    val files = batchFiles(storeDir, None)
+    val files = batchFiles(spark, storeDir, None)
     if (files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -72,37 +79,59 @@ object IncrementalIngest {
     * Spark's overwrite-a-read-path error. Reusing a batchId for a
     * DIFFERENT feed replaces that batch's rows; IncrementalRun.run guards
     * against doing that to a completed batch.
+    *
+    * [[flagFresh]] then [[landBatch]], with the flagged rows materialised
+    * once: the count and the write both read them.
     */
   def appendBatch(records: DataFrame, storeDir: String, batchId: String,
       idCol: String = "doc_id", contentCol: String = "text"): Long = {
-    val spark = records.sparkSession
-    val hashed = records.withColumn(hashCol, sha2(col(contentCol), 256))
-
-    // in-batch dedup: keep the first (min id) row per hash
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(hashCol)).orderBy(col(idCol))
-    val firstPerHash = hashed
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-
-    val fresh = firstPerHash.join(
-      processedHashes(spark, storeDir, Some(batchId)), Seq(hashCol), "left_anti")
-
-    val n = fresh.count()
-    if (n > 0) {
-      fresh
-        .withColumn("date_processed", lit(batchId))
-        .coalesce(1) // one file per batch, matching the reference layout
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd")
-        .parquet(s"$storeDir/$batchId.parquet")
-    }
+    val flagged = flagFresh(records, storeDir, batchId, idCol, contentCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val n = flagged.filter(col(freshCol)).count()
+    if (n > 0) landBatch(flagged, storeDir, batchId)
+    flagged.unpersist()
     n
   }
 
+  /** The boolean column [[flagFresh]] adds. */
+  private[graft] val freshCol = "_fresh"
+
+  /** `records` plus its `content_hash` and a [[freshCol]] flag, lazily:
+    * true on the rows [[appendBatch]] would land — the first (min id) row
+    * per hash whose hash is not in the store (`<batchId>.parquet` itself
+    * excluded, as in [[appendBatch]]).
+    */
+  private[graft] def flagFresh(records: DataFrame, storeDir: String,
+      batchId: String, idCol: String = "doc_id",
+      contentCol: String = "text"): DataFrame = {
+    val spark = records.sparkSession
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(hashCol)).orderBy(col(idCol))
+    val stored = processedHashes(spark, storeDir, Some(batchId))
+      .withColumn("_stored", lit(true))
+    records.withColumn(hashCol, sha2(col(contentCol), 256))
+      .withColumn("_rn", row_number().over(w))
+      .join(stored, Seq(hashCol), "left")
+      .withColumn(freshCol, col("_rn") === 1 && col("_stored").isNull)
+      .drop("_rn", "_stored")
+  }
+
+  /** Write the fresh rows of a [[flagFresh]] frame as
+    * `<batchId>.parquet` — map-only, one file. The caller drops any
+    * columns of its own first and skips the call when no row is fresh
+    * (a fully-duplicate batch writes no file).
+    */
+  private[graft] def landBatch(flagged: DataFrame, storeDir: String,
+      batchId: String): Unit =
+    flagged.filter(col(freshCol)).drop(freshCol)
+      .withColumn("date_processed", lit(batchId))
+      .coalesce(1) // one file per batch, matching the reference layout
+      .write.mode(SaveMode.Overwrite)
+      .option("compression", "zstd")
+      .parquet(s"$storeDir/$batchId.parquet")
+
   /** Store-wide uniqueness audit (check_unique_hashes.py:9-78). */
   def audit(spark: SparkSession, storeDir: String): DataFrame = {
-    processedHashes(spark, storeDir) // touch to validate layout
     val all = spark.read.parquet(storeDir + "/*.parquet")
     all.agg(
       count(lit(1)).as("total_hashes"),

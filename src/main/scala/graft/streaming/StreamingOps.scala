@@ -81,16 +81,15 @@ object StreamingOps {
       .map(_.getPath.toString)
   }
 
-  /** Env-gated per-step gate timing (GRAFT_GATE_TIMING) — the probe-side
-    * decomposition StreamProbe's per-trigger wall can't see.
+  /** Run one step of a gate under a call-site label (`gate probe`,
+    * `gate land`, …): the label names the step's Spark jobs and stages,
+    * so a listener or trace attributes each trigger's time to its steps.
     */
-  private def timed[T](name: String)(f: => T): T =
-    if (sys.env.contains("GRAFT_GATE_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[gate] $name%-16s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      r
-    } else f
+  private def step[T](spark: SparkSession, label: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    sc.setCallSite(label)
+    try f finally sc.clearCallSite()
+  }
 
   /** Keep a gate's stored-index file counts bounded over an unbounded
     * stream (verdict r16 #3): after a fold/grow step, any index table
@@ -102,7 +101,7 @@ object StreamingOps {
     */
   private def maybeCompact(spark: org.apache.spark.sql.SparkSession,
       indexTable: String, compactAbove: Int): Unit =
-    if (compactAbove > 0) timed("index_compact") {
+    if (compactAbove > 0) step(spark, "gate compact") {
       graft.operators.Dedup.compactIndex(spark, indexTable, compactAbove)
         .toSeq.sortBy(_._1).foreach { case (t, (bef, aft)) =>
           System.err.println(s"[gate] compacted $t: $bef -> $aft files")
@@ -245,35 +244,49 @@ object StreamingOps {
   }
 
   /** Streaming NEAR-dup gate — dedup-on-arrival over the stored band
-    * index: each micro-batch is probed with `Dedup.dedupDelta` against
-    * the `indexTable` pair (corpus never rescanned — the stored tables
-    * join in their bucketed layout), novel docs land in the hash-dedup
-    * incremental store, and the index GROWS by exactly those docs so
-    * later batches dedup against everything that came before. The
-    * continuous form of the d14 contract: per-trigger cost tracks the
-    * batch, not the corpus.
+    * index: each micro-batch is probed against the `indexTable` pair
+    * (corpus never rescanned — the stored tables join in their bucketed
+    * layout), novel docs land in the hash-dedup incremental store, and
+    * the index GROWS by exactly those docs so later batches dedup
+    * against everything that came before. The continuous form of the
+    * d14 contract: per-trigger cost tracks the batch, not the corpus.
     *
-    * Idempotence: the store append is content-hash deduped (replays
-    * ingest 0 rows); index growth runs at-least-once (duplicate index
-    * rows from a partial-failure replay collapse in dedupDelta).
-    * Probe-before-grow also means a replayed batch's docs match
-    * THEMSELVES — in the index or in their own pending file — and are
-    * gated, never double-kept.
-    */
-  /** Index growth is DEFERRED (r16, VERDICT r15 #6): survivors' shingle
+    * Index growth is DEFERRED (r16, VERDICT r15 #6): survivors' shingle
     * rows land in a small per-batch PENDING parquet buffer
-    * (`<storeDir>_idx_pending/<bid>.parquet`, one coalesced file) and
-    * fold into the bucketed index tables only once `growEvery` pending
-    * batches accumulate — the two bucketed saveAsTable appends were the
-    * per-trigger commit-surface tax §7.14 measured. The gate verdict is
-    * unchanged: every probe reads stored index ∪ pending buffer, so
-    * batch N+1 still dedups against batch N inside the fold window.
-    * Replay idempotence: ingest lands BEFORE the pending write, a
-    * replayed batch's docs match themselves in the index or in their
-    * own pending file (kept = ∅ → nothing rewritten), the fold is
-    * at-least-once (append → delete; duplicate index rows from a crash
-    * between the two collapse in dedupDelta), and a stopped stream's
-    * unfolded pending is simply probed again after restart.
+    * (`<storeDir>_idx_pending/<bid>.parquet`, one file) and fold into
+    * the bucketed index tables only once `growEvery` pending batches
+    * accumulate — the two bucketed saveAsTable appends were the
+    * per-trigger commit-surface tax §7.14 measured. Every probe reads
+    * stored index ∪ pending buffer, so batch N+1 still dedups against
+    * batch N inside the fold window.
+    *
+    * ONE execution per trigger decides both verdicts. The batch is
+    * persisted with its shingle hashes; a single band join and verify
+    * over two index parts — the stored tables and the pending buffer
+    * (`Dedup.dedupProbeFrames`) — finds the near-dups;
+    * `IncrementalIngest.flagFresh` flags the survivors the content-hash
+    * store would land; and one localCheckpoint materialises the flagged
+    * survivors, shingles included, counting (an Observation) what each
+    * write will land. The store file and the pending file are then
+    * map-only writes of the checkpointed rows, each skipped when it
+    * would be empty: no join, store scan or shingle hash runs twice,
+    * and no action runs just to count. Each step runs under a call-site
+    * label (`gate probe`, `gate land`, `gate pending`, `gate fold`,
+    * `gate compact`) that names its Spark jobs and stages.
+    *
+    * Idempotence, in replay order: the store file lands BEFORE the
+    * pending write, once per batch id (a committed `_SUCCESS` is never
+    * rewritten, and a replay that skips it says so on stderr); a
+    * replayed batch's docs match THEMSELVES in the index
+    * or in their own pending file, so only contentless docs survive and
+    * nothing is rewritten; the fold is at-least-once (append → delete;
+    * duplicate index rows from a crash between the two collapse in the
+    * probe); and a stopped stream's unfolded pending buffer is simply
+    * probed again after restart. Batch ids name the store files, so a
+    * restart over an existing store needs the `checkpointDir` it ran
+    * with: without one, ids start again at 0, and a trigger whose store
+    * file already exists fails the query rather than drop its
+    * survivors.
     */
   def dedupStream(docs: DataFrame, indexTable: String, storeDir: String,
       minJaccard: Double = 0.5,
@@ -290,57 +303,75 @@ object StreamingOps {
         import spark.implicits._
         val bid = f"batch$batchId%06d"
         val b = batch.toDF()
+          .withColumn("_sh", graft.operators.Dedup.shingleHashes($"text"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val (dd, ddCaches) = graft.operators.Dedup
-          .dedupDeltaHandle(spark, indexTable, b, minJaccard = minJaccard)
-        val dsh = ddCaches.head // the batch's (doc_id, sh) frame
-        val pendDup = {
-          val files = pendingFiles(spark, pendingDir)
-          if (files.isEmpty) spark.emptyDataset[Long].toDF("doc_id")
-          else {
-            val pend = spark.read.parquet(files: _*)
-            graft.operators.Dedup.dedupProbeFrames(
-                graft.operators.Dedup.bandingRowsOf(pend, 16, 4), pend,
-                dsh, 16, 4, minJaccard)
-              .select($"new_id".as("doc_id"))
-          }
+        val shingled = b.select($"doc_id", $"_sh".as("sh"))
+        // the pending files' schema is the one this gate writes them with
+        def readShingles(files: Seq[String]): DataFrame =
+          spark.read.schema(shingled.schema).parquet(files: _*)
+        // what the two writes will land, counted by the checkpoint itself
+        val counts = org.apache.spark.sql.Observation(s"$queryName-$bid")
+        val kept = step(spark, "gate probe") {
+          val pending = pendingFiles(spark, pendingDir)
+          val index = graft.operators.Dedup.storedIndex(spark, indexTable) +:
+            (if (pending.isEmpty) Nil
+             else Seq(graft.operators.Dedup
+               .bufferIndex(readShingles(pending), 16, 4)))
+          val dups = graft.operators.Dedup
+            .dedupProbeFrames(index, shingled, 16, 4, minJaccard)
+          // flagged over the whole batch: docs sharing a content hash
+          // share their shingles, hence their verdict, so this equals
+          // flagging the survivors — and runs beside the probe
+          val flagged = graft.sources.IncrementalIngest
+            .flagFresh(b, storeDir, bid)
+          flagged.join(dups, flagged("doc_id") === dups("new_id"), "left_anti")
+            .observe(counts,
+              count(when(col(graft.sources.IncrementalIngest.freshCol), 1))
+                .as("land"),
+              count(when(size($"_sh") > 0, 1)).as("pending"))
+            .localCheckpoint()
         }
-        val dupIds = dd.select($"new_id".as("doc_id"))
-          .unionByName(pendDup).distinct()
-        // ONE probe execution per trigger: localCheckpoint collapses the
-        // band-join + verify lineage, so the downstream actions (ingest
-        // count + write, emptiness test, pending write) read a
-        // materialized batch-sized verdict instead of each replaying the
-        // stored-table joins (formerly up to 4 probe executions/trigger).
-        val kept = timed("probe") {
-          b.join(dupIds, Seq("doc_id"), "left_anti").localCheckpoint()
+        val toWrite = counts.get.view.mapValues(_.asInstanceOf[Long]).toMap
+        // write-once: a replay's survivors are at most the contentless
+        // docs (the rest match themselves), so rewriting a committed
+        // store file from them would drop the batch's landed rows
+        if (toWrite("land") > 0) {
+          if (!pathExists(spark, s"$storeDir/$bid.parquet/_SUCCESS"))
+            step(spark, "gate land") {
+              graft.sources.IncrementalIngest.landBatch(kept.drop("_sh"),
+                storeDir, bid)
+            }
+          else if (checkpointDir.isEmpty)
+            // no checkpoint: batch ids restarted at 0, so this file is an
+            // earlier run's batch, not this batch's replay
+            throw new IllegalStateException(s"$storeDir/$bid.parquet " +
+              "exists: restarting a dedup gate over an existing store " +
+              "needs the checkpointDir it ran with")
+          else System.err.println(s"[gate] $bid replayed: its store file " +
+            s"is committed, ${toWrite("land")} survivor(s) not re-landed")
         }
-        timed("ingest_append") {
-          graft.sources.IncrementalIngest.appendBatch(kept, storeDir, bid)
-        }
-        if (!kept.isEmpty) timed("pending_write") {
-          dsh.join(kept.select($"doc_id"), Seq("doc_id"), "left_semi")
+        if (toWrite("pending") > 0) step(spark, "gate pending") {
+          kept.filter(size($"_sh") > 0).select($"doc_id", $"_sh".as("sh"))
             .coalesce(1)
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$pendingDir/$bid.parquet")
         }
         val toFold = pendingFiles(spark, pendingDir)
         if (toFold.size >= growEvery) {
-          timed("index_fold") {
+          step(spark, "gate fold") {
             graft.operators.Dedup.appendDedupIndexFromShingles(
-              spark.read.parquet(toFold: _*), indexTable, 8, 16, 4)
+              readShingles(toFold), indexTable, 8, 16, 4)
             deletePath(spark, pendingDir)
           }
           maybeCompact(spark, indexTable, compactAbove)
         }
-        // Self-cleaning (ADVICE r13): unpersist exactly the frames THIS
-        // operator persisted (the batch + dedupDelta's shingle cache via
-        // its handle) once the batch's actions have run — never a
+        // Self-cleaning (ADVICE r13): unpersist exactly the frame THIS
+        // operator persisted once the batch's actions have run — never a
         // session-wide clearCache, which would evict a co-resident
         // workload's persisted frames mid-flight (two gates sharing one
         // SparkSession is a plausible deployment).
         b.unpersist()
-        ddCaches.foreach(_.unpersist())
+        org.apache.spark.sql.graft.SparkInternals.releaseCheckpointBlocks(kept)
         ()
       }
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
@@ -396,25 +427,18 @@ object StreamingOps {
         val meta = graft.operators.Dedup
           .segmentHashFrame(b.select($"doc_id", $"text"), width)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // the pending files' schema is the one this gate writes them with
+        val pend = Some(pendingFiles(spark, pendingDir)).filter(_.nonEmpty)
+          .map(files => spark.read.schema(meta.schema).parquet(files: _*))
+        // stored index and pending buffer: one exact semi-join each, one
+        // shared fuzzy probe over both (Dedup.dedupProbeFrames)
         val storedOrds = graft.operators.Dedup
           .segmentDeltaOrdsFromMeta(spark, indexTable, meta, 16, 4,
-            minJaccard)
-        val pendOrds = {
-          val files = pendingFiles(spark, pendingDir)
-          if (files.isEmpty) spark.emptyDataset[Long].toDF("ord")
-          else {
-            val pend = spark.read.parquet(files: _*)
-            val exact = meta
-              .join(pend.select($"h", $"h2"), Seq("h", "h2"), "left_semi")
-              .select($"ord")
-            val pendSh = pend.select($"ord".as("doc_id"), $"sh")
-            val fuzzy = graft.operators.Dedup.dedupProbeFrames(
-                graft.operators.Dedup.bandingRowsOf(pendSh, 16, 4), pendSh,
-                meta.select($"ord".as("doc_id"), $"sh"), 16, 4, minJaccard)
-              .select($"new_id".as("ord"))
-            exact.unionByName(fuzzy)
-          }
-        }
+            minJaccard, pend.toSeq.map(p => graft.operators.Dedup
+              .bufferIndex(p.select($"ord".as("doc_id"), $"sh"), 16, 4)))
+        val pendOrds = pend.fold(spark.emptyDataset[Long].toDF("ord"))(p =>
+          meta.join(p.select($"h", $"h2"), Seq("h", "h2"), "left_semi")
+            .select($"ord"))
         val rollup = graft.operators.Dedup.segmentNeardupRollup(
           meta.select($"doc_id", $"ord"),
           storedOrds.unionByName(pendOrds).distinct())
@@ -422,25 +446,26 @@ object StreamingOps {
         // verdict is doc_id-sized; checkpointing it keeps the ingest
         // actions and the pending write from each replaying the
         // stored-table exact+fuzzy probe joins.
-        val gated = timed("probe") {
+        val gated = step(spark, "segment gate probe") {
           rollup.filter($"kept_ratio" < segKeptRatioMin)
             .select($"doc_id").localCheckpoint()
         }
         val kept = b.join(gated, Seq("doc_id"), "left_anti")
-        timed("ingest_append") {
+        step(spark, "segment gate land") {
           graft.sources.IncrementalIngest.appendBatch(kept, storeDir, bid)
         }
-        if (!kept.select($"doc_id").isEmpty) timed("pending_write") {
-          meta.join(gated, Seq("doc_id"), "left_anti")
-            .coalesce(1)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$pendingDir/$bid.parquet")
-        }
+        if (!kept.select($"doc_id").isEmpty)
+          step(spark, "segment gate pending") {
+            meta.join(gated, Seq("doc_id"), "left_anti")
+              .coalesce(1)
+              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+              .parquet(s"$pendingDir/$bid.parquet")
+          }
         val toFold = pendingFiles(spark, pendingDir)
         if (toFold.size >= growEvery) {
-          timed("index_fold") {
+          step(spark, "segment gate fold") {
             graft.operators.Dedup.appendSegmentIndexFromMeta(
-              spark.read.parquet(toFold: _*), indexTable)
+              spark.read.schema(meta.schema).parquet(toFold: _*), indexTable)
             deletePath(spark, pendingDir)
           }
           maybeCompact(spark, indexTable, compactAbove)

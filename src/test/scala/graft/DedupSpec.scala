@@ -560,6 +560,34 @@ class DedupSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("dedupDelta returns its pairs sorted by (corpus_id, new_id)") {
+    def text(i: Long): String =
+      (0 until 40).map(j => s"o${i}_$j").mkString(" ")
+    def edit(t: String, tag: String): String = t.replaceFirst("^\\S+", tag)
+    // each delta doc near-dups TWO corpus docs (a base and its edit), and
+    // the delta ids run opposite to the corpus ids
+    val corpus = ((0L until 20L).map(i => i -> text(i)) ++
+      (0L until 20L).map(i => (100L + i) -> edit(text(i), "E")))
+      .toDF("doc_id", "text")
+    Seq("_bands", "_shingles").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS ord_idx_spec$t"))
+    Dedup.writeDedupIndex(corpus, "ord_idx_spec")
+    val delta = (0L until 20L).map(i => (1000L - i) -> edit(text(i), "D"))
+      .toDF("doc_id", "text")
+    val got = Dedup.dedupDelta(spark, "ord_idx_spec", delta)
+    assert(got.queryExecution.optimizedPlan match {
+      case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s.global
+      case _ => false
+    }, "the result must end in a global sort")
+    val rows = got.select($"corpus_id", $"new_id").as[(Long, Long)]
+      .collect().toSeq
+    assert(rows.size == 40, s"want both matches of every delta doc: $rows")
+    assert(rows == rows.sorted, s"rows out of (corpus_id, new_id) order: $rows")
+    Seq("_bands", "_shingles").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS ord_idx_spec$t"))
+    spark.catalog.clearCache()
+  }
+
   test("semantic index: multi-probe delta finds perturbed near-dups, stored side never reshuffles") {
     val corpus = GenCorpus.generateEmbeddings(spark, 2000)
     spark.sql("DROP TABLE IF EXISTS sem_idx_spec_vecs")

@@ -48,4 +48,16 @@ class IngestSpec extends SparkSpec {
     assert(n == 0)
     assert(!new java.io.File(s"$store/b0002.parquet").exists())
   }
+
+  test("a file:// store URI sees its earlier batches: dedup and audit hold") {
+    val store = "file://" + tmpStore()
+    val batch = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
+    assert(IncrementalIngest.appendBatch(batch, store, "b0001") == 2)
+    assert(IncrementalIngest.appendBatch(batch, store, "b0002") == 0,
+      "the first batch must be visible through the URI")
+    assert(IncrementalIngest.audit(spark, store).collect()(0)
+      .getAs[Long]("duplicate_count") == 0)
+    assert(IncrementalIngest.storedIds(spark, store).as[Long].collect()
+      .toSet == Set(1L, 2L))
+  }
 }

@@ -146,6 +146,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData((100L, text(100)), (101L, text(101)))
     q.processAllAvailable()
     assert(pendingCount() == 1, "one pending batch file before the fold")
+    val filesBefore = graft.operators.Dedup.indexFileCounts(spark, "pend_idx")
     assert(spark.table("pend_idx_bands").count() == bandsBefore,
       "bucketed index must not grow before the fold")
     // batch 2: a near-dup of PENDING doc 100 must be gated by the
@@ -156,6 +157,11 @@ class StreamingSpec extends SparkSpec {
       (201L, text(201)))
     q.processAllAvailable()
     assert(pendingCount() == 0, "fold at growEvery must empty the buffer")
+    // bucket-aligned appends: one fold adds at most one file per bucket
+    val filesAfter = graft.operators.Dedup.indexFileCounts(spark, "pend_idx")
+    assert(filesAfter.keySet == filesBefore.keySet &&
+      filesAfter.forall { case (t, n) => n - filesBefore(t) <= 8 },
+      s"one fold grew the index from $filesBefore to $filesAfter files")
     // this session counted the table pre-fold, so its relation cache
     // holds the old file list; the fold appended through the stream's
     // cloned session — refresh before recounting (readers of an
@@ -173,6 +179,102 @@ class StreamingSpec extends SparkSpec {
       s"kept $keptIds: 200 gated by pending, 300 by the folded index")
     Seq("_bands", "_shingles").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS pend_idx$t"))
+    spark.catalog.clearCache()
+  }
+
+  test("gate replay of an uncommitted batch leaves the store and the pending buffer unchanged") {
+    val root = java.nio.file.Files.createTempDirectory("graft_greplay_").toString
+    val inDir = s"$root/in"
+    val ck = s"$root/ck"
+    val store = s"$root/store"
+    new java.io.File(inDir).mkdirs()
+    def text(i: Long): String =
+      (0 until 40).map(j => s"r${i}_$j").mkString(" ")
+    def edit(i: Long, tag: String): String =
+      text(i).replaceFirst("^\\S+", tag)
+    def stage(name: String, rows: Seq[(Long, String)]): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_greplay_stage_")
+        .toString
+      rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(inDir, name))
+      ()
+    }
+    Seq("_bands", "_shingles").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS rpl_idx$t"))
+    graft.operators.Dedup.writeDedupIndex(
+      (0L until 5L).map(i => i -> text(i)).toDF("doc_id", "text"), "rpl_idx")
+    // batch 0: two fresh docs, one near-dup of the seed index; batch 1: a
+    // near-dup of batch 0 (pending), a fresh doc and its exact copy;
+    // batch 2: a near-dup of batch 1, a fresh doc, a copy of batch 0's
+    // doc, and a contentless doc (no shingles: it cannot match itself)
+    stage("f1.parquet", Seq(100L -> text(100), 101L -> text(101),
+      102L -> edit(2, "A")))
+    stage("f2.parquet", Seq(200L -> edit(100, "B"), 201L -> text(201),
+      202L -> text(201)))
+    stage("f3.parquet", Seq(300L -> edit(201, "C"), 301L -> text(301),
+      302L -> text(100), 303L -> ""))
+    def gate() = StreamingOps.dedupStream(
+      spark.readStream.schema("doc_id BIGINT, text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(inDir),
+      "rpl_idx", store, queryName = "graft_gate_replay",
+      checkpointDir = Some(ck))
+    def storeRows() = spark.read.parquet(s"$store/*.parquet")
+      .select($"doc_id", $"content_hash", $"date_processed")
+      .as[(Long, String, String)].collect().toSeq.sorted
+    def pendingRows() = spark.read.parquet(s"${store}_idx_pending/*.parquet")
+      .select($"doc_id", $"sh").as[(Long, Seq[Long])].collect().toSeq
+      .sortBy(_._1)
+    val q1 = gate()
+    q1.processAllAvailable(); q1.stop()
+    val (stored, pending) = (storeRows(), pendingRows())
+    assert(stored.map(_._1) == Seq(100L, 101L, 201L, 301L, 303L),
+      s"stored ${stored.map(_._1)}")
+    assert(pending.map(_._1) == Seq(100L, 101L, 201L, 202L, 301L),
+      s"pending ${pending.map(_._1)}")
+    // crash after batch 2's writes, before its commit: the restart
+    // replays batch 2 from its logged offsets
+    Seq("2", ".2.crc").foreach(f => new java.io.File(s"$ck/commits/$f").delete())
+    val q2 = gate()
+    q2.processAllAvailable(); q2.stop()
+    assert(q2.recentProgress.exists(p => p.batchId == 2 && p.numInputRows == 4),
+      "the restart must replay batch 2")
+    assert(storeRows() == stored, "the replay changed the store")
+    assert(stored.map(_._1).distinct == stored.map(_._1), "a doc kept twice")
+    assert(pendingRows() == pending, "the replay changed the pending buffer")
+    assert(graft.sources.IncrementalIngest.audit(spark, store).collect()(0)
+      .getAs[Long]("duplicate_count") == 0)
+    Seq("_bands", "_shingles").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS rpl_idx$t"))
+    spark.catalog.clearCache()
+  }
+
+  test("gate restarted over an existing store without its checkpoint fails instead of dropping survivors") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_nockpt_").toString
+    def text(i: Long): String =
+      (0 until 40).map(j => s"k${i}_$j").mkString(" ")
+    Seq("_bands", "_shingles").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS nockpt_idx$t"))
+    graft.operators.Dedup.writeDedupIndex(
+      Seq(0L -> text(0)).toDF("doc_id", "text"), "nockpt_idx")
+    def run(rows: (Long, String)*): Unit = {
+      val mem = MemoryStream[(Long, String)]
+      val q = StreamingOps.dedupStream(
+        mem.toDF().toDF("doc_id", "text"), "nockpt_idx", s"$dir/store")
+      try { mem.addData(rows: _*); q.processAllAvailable() }
+      finally q.stop()
+    }
+    run(1L -> text(1))
+    // a second run starts again at batch000000, whose file exists
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      run(2L -> text(2)))
+    assert(e.getMessage.contains("checkpointDir"), e.getMessage)
+    assert(spark.read.parquet(s"$dir/store/*.parquet").select("doc_id")
+      .as[Long].collect().toSeq == Seq(1L), "the first run's batch changed")
+    Seq("_bands", "_shingles").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS nockpt_idx$t"))
     spark.catalog.clearCache()
   }
 

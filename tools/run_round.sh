@@ -22,8 +22,10 @@ SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
 python3 tools/selfcheck.py /tmp/vout001 /root/testdata/sf0.001 | tail -3
 
 echo "== bench sf0.1 =="
+# default heap: half of MemTotal, clamped to 2-8 GiB
+MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-  SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-24g} \
+  SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-$MEM} \
   sbt -batch "runMain graft.Bench" 2>&1 | grep -oE '\{"metric".*'
 
 echo "== plans =="
