@@ -275,7 +275,8 @@ object GenCorpus {
     val outDir = args.headOption.getOrElse("/tmp/graftdata/sf1")
     val nBase = if (args.length > 1) args(1).toLong else 47500L
     val dupPct = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val spark = GraftSession.local(cpus)
     val docs = generate(spark, nBase, dupPct)
     docs.repartition(32).write.mode(SaveMode.Overwrite)

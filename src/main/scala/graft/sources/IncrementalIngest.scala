@@ -130,12 +130,21 @@ object IncrementalIngest {
       .option("compression", "zstd")
       .parquet(s"$storeDir/$batchId.parquet")
 
-  /** Store-wide uniqueness audit (check_unique_hashes.py:9-78). */
+  /** Store-wide uniqueness audit (check_unique_hashes.py:9-78).
+    *
+    * `duplicate_count` counts over non-null hashes only, and the trailing
+    * `null_hashes` column reports the contentless rows. A doc with null
+    * text has a null hash, and [[flagFresh]] lands one such doc per batch,
+    * so the reference's `len − nunique` (pandas `nunique` skips NaN, like
+    * `countDistinct` skips null) would report every one of them as a
+    * duplicate. That divergence from the reference is deliberate.
+    */
   def audit(spark: SparkSession, storeDir: String): DataFrame = {
     val all = spark.read.parquet(storeDir + "/*.parquet")
     all.agg(
       count(lit(1)).as("total_hashes"),
       countDistinct(col(hashCol)).as("unique_hashes"),
-      (count(lit(1)) - countDistinct(col(hashCol))).as("duplicate_count"))
+      (count(col(hashCol)) - countDistinct(col(hashCol))).as("duplicate_count"),
+      (count(lit(1)) - count(col(hashCol))).as("null_hashes"))
   }
 }

@@ -60,4 +60,20 @@ class IngestSpec extends SparkSpec {
     assert(IncrementalIngest.storedIds(spark, store).as[Long].collect()
       .toSet == Set(1L, 2L))
   }
+
+  test("audit: contentless docs are counted as null hashes, not duplicates") {
+    val store = tmpStore()
+    // each batch lands its one null-text doc: a null hash matches nothing
+    val b1 = Seq((1L, "alpha"), (2L, null)).toDF("doc_id", "text")
+    val b2 = Seq((3L, "beta"), (4L, null)).toDF("doc_id", "text")
+    assert(IncrementalIngest.appendBatch(b1, store, "b0001") == 2)
+    assert(IncrementalIngest.appendBatch(b2, store, "b0002") == 2)
+    val audit = IncrementalIngest.audit(spark, store)
+    assert(audit.columns.last == "null_hashes")
+    val row = audit.collect()(0)
+    assert(row.getAs[Long]("total_hashes") == 4)
+    assert(row.getAs[Long]("unique_hashes") == 2)
+    assert(row.getAs[Long]("duplicate_count") == 0)
+    assert(row.getAs[Long]("null_hashes") == 2)
+  }
 }
