@@ -64,7 +64,8 @@ object Bench {
     // locale that renders decimal commas.
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val spark = GraftSession.local(cpus)
     // Shuffle partitions stay pinned to the session default (= cpus).
     // Round 14 TRIED the input-scaled heuristic the r13 verdict asked
@@ -79,8 +80,8 @@ object Bench {
     // cluster the equivalent dial is executors x cores — reduce-side
     // width there comes from the deployment, not a per-query pin; the
     // operators themselves never hardcode a partition count.
-    System.err.println(
-      s"[bench] spark.sql.shuffle.partitions=$cpus (= cores; see comment)")
+    System.err.println("[bench] spark.sql.shuffle.partitions=" +
+      spark.conf.get("spark.sql.shuffle.partitions") + " (see comment)")
     // Warm the session (codegen, file indexes, broadcast machinery) so the
     // first timed query doesn't absorb startup cost: count every table once
     // (builds each InMemoryFileIndex + touches the parquet footers).
@@ -91,16 +92,24 @@ object Bench {
       "to_date(date_format(current_date(), 'MMMM d, yyyy'), 'MMMM d, yyyy')",
       "to_date(date_format(current_date(), 'MM/dd/yyyy'), 'MM/dd/yyyy')",
       "to_date(date_format(current_date(), 'yyyy-MM-dd'), 'yyyy-MM-dd')").collect()
+    // A table the sf dir lacks (a docs-only dir) is skipped with a
+    // notice; any other failure fails the run.
+    def ifPresent(tables: String*)(warm: => Unit): Unit =
+      try warm catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "PATH_NOT_FOUND" =>
+          System.err.println(
+            s"[bench] warm-up skips ${tables.mkString(", ")}: ${e.getMessage}")
+      }
     Tables.all.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      ifPresent(t)(spark.read.parquet(s"$sfDir/$t.parquet").count())
     }
     // Warm the full execution path the timed queries use — shuffle + AQE +
     // broadcast join + global sort + whole-stage codegen + the noop sink —
     // so the first timed query does not absorb ~1.5 s of one-time
     // machinery init. Twice: the second run hits the JIT-compiled paths.
-    for (_ <- 1 to 2)
-      try {
+    ifPresent("nation", "region") {
+      for (_ <- 1 to 2) {
         val n = spark.read.parquet(s"$sfDir/nation.parquet")
         val r = spark.read.parquet(s"$sfDir/region.parquet")
         n.join(org.apache.spark.sql.functions.broadcast(r),
@@ -108,7 +117,8 @@ object Bench {
           .groupBy("r_name").count()
           .orderBy("r_name")
           .write.format("noop").mode("overwrite").save()
-      } catch { case _: Throwable => () }
+      }
+    }
     // Optional args = query-name filter (local iteration); the driver
     // passes none and benches the full suite. Misspelled names fail fast
     // rather than silently benching nothing.
@@ -140,24 +150,11 @@ object Bench {
     val regime = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
     regime += regimeCheckpoint(spark, sfDir)
     org.apache.spark.sql.graft.SparkInternals.drainListenerBus(spark.sparkContext)
-    // Suite order (VERDICT r18 #8): the r18 sf10 ladders showed an
-    // alphabetical-order × cache tide on the d-family, so an INTERLEAVED
-    // mode exists — `reps` full passes over the suite, each pass visiting
-    // the queries in a deterministically-seeded random order, so a
-    // query's reps sample `reps` different suite positions. It was
-    // MEASURED and REJECTED as the default (REGRESSION_AB_r19.json,
-    // back-to-back same-box sf0.1/32c, regimes 1.222 vs 1.223):
-    // interleaving makes per-query min-of-reps a geomean 1.305× WORSE —
-    // consecutive reps are exactly what gives min-of-reps its
-    // warm-JIT/warm-path meaning, and spreading a query's reps across
-    // the suite times per-visit cold cost on ~100 small queries to
-    // de-tide ~5 d-family ones (which the r19 shuffle-writer fix already
-    // largely de-tided: alpha-order d19 spread [2.69,2.72,3.47] vs the
-    // r18 driver's 12.4-28 s). Default stays the legacy alphabetical
-    // consecutive-reps order — the methodology of every BENCH_r*.json —
-    // and SPARK_GRAFT_BENCH_ORDER=interleaved is the diagnostic arm for
-    // position-tide attribution.
-    val orderMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER", "alpha")
+    // Suite order: each query's reps back to back, alphabetically. An
+    // interleaved order was measured and rejected (VERDICT r18 #8,
+    // REGRESSION_AB_r19.json): it made per-query min-of-reps a geomean
+    // 1.305× worse, because consecutive reps are what give min-of-reps
+    // its warm-path meaning.
     // One measured run of one query: time the noop-sink materialization,
     // then restore a clean-slate session (catalog cache + transient
     // checkpoint blocks) so no run times a neighbor's leftovers.
@@ -192,13 +189,8 @@ object Bench {
       // heap, effectively never within a suite — so each run stacked a
       // dead generation and later suite neighbors timed eviction churn
       // (the r17 d16/d17/s02/s03 inflation; REGRESSION_AB_r18 is the
-      // A/B). Memo tables are pinned and survive. Opt-out env is for
-      // the A/B control arm only.
-      // value-checked, not presence-checked: KEEP=0/empty/false must
-      // mean FREE, or a 1/0 toggling harness silently runs keep-vs-keep
-      if (!sys.env.get("SPARK_GRAFT_KEEP_CHECKPOINTS")
-          .exists(v => v.nonEmpty && v != "0" && !v.equalsIgnoreCase("false")))
-        graft.CacheHygiene.freeTransient(spark)
+      // A/B). Memo tables are pinned and survive.
+      graft.CacheHygiene.freeTransient(spark)
       // Deterministic listener drain (a fixed sleep can under-wait on a
       // backlogged bus and credit this run's stages to the next one).
       org.apache.spark.sql.graft.SparkInternals
@@ -216,14 +208,7 @@ object Bench {
       wanted.map { case (n, _) => n -> 0L }: _*)
     val accMemoB = scala.collection.mutable.Map(
       wanted.map { case (n, _) => n -> 0L }: _*)
-    // The run schedule: legacy = each query's reps back-to-back in
-    // alphabetical order; interleaved = reps passes, each a seeded
-    // shuffle (seed = pass index: deterministic across invocations, so
-    // two arms of an A/B see the SAME orders).
-    val schedule: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      if (orderMode == "alpha") wanted.flatMap(q => Seq.fill(reps)(q))
-      else (1 to reps).flatMap(p => new scala.util.Random(0x5EED0000L + p)
-        .shuffle(wanted))
+    val schedule = wanted.flatMap(q => Seq.fill(reps)(q))
     val midRun = schedule.size / 2
     schedule.zipWithIndex.foreach { case ((name, fn), ri) =>
       if (ri == midRun && schedule.size >= 4) {
@@ -306,7 +291,7 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     val totalMin = results.collect { case (_, v, _, _, ts) if v >= 0 => ts.head }.sum
     val detail =
-      s"""{"metric":"detail","reps":$reps,"stat":"median","order":"$orderMode","regime":$regimeJson,"queries":$qs,"queries_min":$qsMin,"total_min":${f"$totalMin%.3f"},"shuffle_mb":$sh,"spread":$spread,"failed":${failedNames.mkString("[", ",", "]")},"memoized":${memoizedNames.mkString("[", ",", "]")},"sf":"$sfDir"}"""
+      s"""{"metric":"detail","reps":$reps,"stat":"median","order":"alpha","regime":$regimeJson,"queries":$qs,"queries_min":$qsMin,"total_min":${f"$totalMin%.3f"},"shuffle_mb":$sh,"spread":$spread,"failed":${failedNames.mkString("[", ",", "]")},"memoized":${memoizedNames.mkString("[", ",", "]")},"sf":"$sfDir"}"""
     // Full per-query detail goes on its OWN line (and into a file) because
     // the driver keeps only the final ~2000 chars of stdout: the LAST line
     // must stay short so it always fits the tail buffer and parses.
@@ -321,10 +306,13 @@ object Bench {
       val filteredTag = if (args.isEmpty) "" else "_filtered"
       s"BENCH_DETAIL_$sfTag$filteredTag.json"
     })
-    try {
-      val w = new java.io.PrintWriter(detailPath)
-      try w.println(detail) finally w.close()
-    } catch { case _: Throwable => () }
+    // A file the run cannot write fails the run.
+    def writeLines(path: String, lines: String*): Unit = {
+      val w = new java.io.PrintWriter(path)
+      try lines.foreach(w.println) finally w.close()
+      if (w.checkError()) sys.error(s"[bench] cannot write $path")
+    }
+    writeLines(detailPath, detail)
     val totalLine =
       f"""{"metric":"total","value":$total%.3f,"value_min":$totalMin%.3f,"unit":"sec","n":${results.size},"failed":${failedNames.size},"reps":$reps,"stat":"median","regime_index":$regimeIndex%.3f,"sf":"$sfDir"}"""
     // Artifact hygiene (VERDICT r13 #4): executor shutdown races can
@@ -332,12 +320,7 @@ object Bench {
     // JSON-lines parsing of BENCH_r*.json. With SPARK_GRAFT_BENCH_OUT
     // set, the two summary lines are ALSO written straight to that file
     // — guaranteed valid JSON lines regardless of console noise.
-    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { out =>
-      try {
-        val w = new java.io.PrintWriter(out)
-        try { w.println(detail); w.println(totalLine) } finally w.close()
-      } catch { case _: Throwable => () }
-    }
+    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach(writeLines(_, detail, totalLine))
     println(detail)
     println(totalLine)
     spark.stop()

@@ -82,9 +82,9 @@ object GenCorpus {
       s"dupPct must be in [0, 50], got $dupPct")
     // idOffset shifts the TEXT derivation, not just the ids: texts are
     // tokensFor(doc_id), so two generate() calls with overlapping id
-    // ranges emit byte-identical documents. A probe that wants docs
-    // NOVEL relative to another generated corpus (DeltaProbe's delta
-    // against a GenScale store — both start at id 0) must offset into
+    // ranges emit byte-identical documents. A caller that wants docs
+    // NOVEL relative to another generated corpus (a delta against a
+    // GenScale store — both start at id 0) must offset into
     // disjoint id space or its "novel" half silently exact-collides.
     val base = spark.range(nBase).select(($"id" + idOffset).as("doc_id"))
       .select(col("doc_id") :: finish(tokensFor($"doc_id")): _*)
@@ -101,58 +101,6 @@ object GenCorpus {
         concat(lit("m"), pmod(xxhash64($"doc_id", lit(8)), lit(1000)).cast("string")))))
       .select(col("doc_id") :: finish($"mut"): _*)
     base.unionByName(dups)
-  }
-
-  /** Adversarially SKEWED corpus — the pathological key shapes the
-    * benign generators never produce, planted at a controlled fraction
-    * so every dedup-family cap/salting claim can be stressed with a
-    * measurable ground truth. On top of `nBase` standard docs
-    * (ids [0, nBase), source tag "base"), three hot masses of
-    * `hotPct`% of nBase each:
-    *
-    *  - "hot_exact": ONE document text (base doc 0's tokens) repeated
-    *    verbatim — the 100k×-header shape. Every copy shares every
-    *    band, so all 16 minhash buckets blow any cap; exact-first
-    *    stages must catch this mass BEFORE banding.
-    *  - "hot_template": ONE template (base doc 1's tokens) plus a
-    *    per-doc 2-token suffix — distinct texts at shingle-Jaccard
-    *    ≈ 0.9–0.97, no exact-stage collapse, most bands identical →
-    *    a hot band-hash bucket family of DISTINCT docs, the shape
-    *    that forces a drop-vs-link decision at the bucket cap.
-    *  - "hot_segment": otherwise-normal unique docs that all OPEN with
-    *    the same `width`-token boilerplate segment (cookie banner /
-    *    license header shape) — hot at segment granularity only;
-    *    whole-doc near-dup never fires, d13/d18b must.
-    *
-    * The `source` column carries the class tag so probes can compute
-    * per-class flag recall exactly.
-    */
-  def generateSkewedDocs(spark: org.apache.spark.sql.SparkSession,
-      nBase: Long, hotPct: Int, width: Int = 10): DataFrame = {
-    import spark.implicits._
-    require(hotPct >= 1 && hotPct <= 30, s"hotPct must be in [1,30], got $hotPct")
-    val hotN = nBase * hotPct / 100
-    def withTag(df: DataFrame, tag: String): DataFrame =
-      df.withColumn("source", lit(tag))
-    val base = withTag(spark.range(nBase).select($"id".as("doc_id"))
-      .select(col("doc_id") :: finish(tokensFor($"doc_id")): _*), "base")
-    val hotExact = withTag(spark.range(hotN)
-      .select(($"id" + nBase).as("doc_id"))
-      .select(col("doc_id") :: finish(tokensFor(lit(0L))): _*), "hot_exact")
-    val hotTemplate = withTag(spark.range(hotN)
-      .select(($"id" + nBase + hotN).as("doc_id"))
-      .withColumn("mut", concat(tokensFor(lit(1L)), array(
-        concat(lit("m"), pmod(xxhash64($"doc_id", lit(7)), lit(100000)).cast("string")),
-        concat(lit("m"), pmod(xxhash64($"doc_id", lit(8)), lit(100000)).cast("string")))))
-      .select(col("doc_id") :: finish($"mut"): _*), "hot_template")
-    val boiler = transform(sequence(lit(0), lit(width - 1)),
-      j => concat(lit("b"), j.cast("string")))
-    val hotSegment = withTag(spark.range(hotN)
-      .select(($"id" + nBase + 2 * hotN).as("doc_id"))
-      .withColumn("mut", concat(boiler, tokensFor($"doc_id")))
-      .select(col("doc_id") :: finish($"mut"): _*), "hot_segment")
-    base.unionByName(hotExact).unionByName(hotTemplate)
-      .unionByName(hotSegment)
   }
 
   /** Clustered embeddings table matching the testdata schema
@@ -237,37 +185,6 @@ object GenCorpus {
         payload.as("payload"),
         nb.cast("long").as("n_bytes"),
         sha2(payload, 256).as("content_hash"))
-  }
-
-  /** Deterministic event-stream feed for the streaming probes: `waves`
-    * micro-batch payloads of `perWave` events each. Wave k carries a
-    * FRESH cohort of `usersPerWave` users whose events span ~1 hour;
-    * waves sit 3 hours apart, so each wave's watermark advance pushes the
-    * previous cohort past the session gap + watermark horizon — state
-    * must stay bounded at ~one cohort (the eviction contract under
-    * sustained rate). Driver-side by design: MemoryStream, the only
-    * deterministic streaming source in local mode, is driver-fed; the
-    * per-event work still executes on executors.
-    */
-  def generateEventWaves(waves: Int, perWave: Int,
-      usersPerWave: Int = 10000): IndexedSeq[IndexedSeq[graft.streaming.Ev]] = {
-    val types = Vector("click", "view", "purchase", "scroll", "hover")
-    val baseMs = java.sql.Timestamp.valueOf("2026-01-01 00:00:00").getTime
-    val perUser = math.max(perWave / usersPerWave, 1)
-    (0 until waves).map { wv =>
-      val waveStart = baseMs + wv.toLong * 3L * 3600 * 1000
-      (0 until perWave).map { i =>
-        val user = (wv.toLong * usersPerWave) + (i % usersPerWave)
-        val seqNo = i / usersPerWave // 0 until perUser
-        // user's events 5 min apart (inside the 30-min session gap),
-        // cohort staggered over the hour by a user-hash offset
-        val ts = waveStart + seqNo.toLong * 5 * 60 * 1000 +
-          (user % 60) * 1000L * (3600 / math.max(perUser, 1) / 60)
-        graft.streaming.Ev(user, new java.sql.Timestamp(ts),
-          types((i * 2654435761L % types.size).toInt.abs),
-          (i % 100) / 10.0)
-      }
-    }
   }
 
   def main(args: Array[String]): Unit = {

@@ -99,7 +99,8 @@ object Recall {
     val sfDir = if (args.length > 0) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = if (args.length > 1) Some(args(1)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val k = 5

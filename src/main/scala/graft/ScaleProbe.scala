@@ -16,7 +16,8 @@ object ScaleProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = if (args.length > 1) args(1).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val spark = GraftSession.local(cpus)
     import spark.implicits._
 

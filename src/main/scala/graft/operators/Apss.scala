@@ -71,27 +71,13 @@ object Apss {
     // log(n/df) arithmetic is unchanged double math — bit-identical to
     // the lit(n.toDouble) form the brute-force oracle mirrors.
     val tf = terms.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-    // A/B control arm ONLY (VERDICT r18 #3 asked for the old-vs-new t24
-    // comparison isolated AND in-suite): the EXACT r17 form — dfw from a
-    // separate distinct pass over terms, and n fetched via a driver
-    // count() action (a full extra tokenize+distinct job per invocation)
-    // — against the r18 form, which derives dfw from tf and folds n into
-    // the plan as a broadcast one-row aggregate. Same log(n/df) doubles
-    // either way (lit(n) and the aggregated n_docs carry the identical
-    // value); REGRESSION_AB_r19 records both arms. Default: in-plan.
-    val w = if (sys.env.get("SPARK_GRAFT_T24_DRIVER_COUNT")
-        .exists(v => v.nonEmpty && v != "0")) {
-      val dfwOld = terms.select($"doc_id", $"term").distinct()
-        .groupBy($"term").agg(count(lit(1)).as("df"))
-      val n = terms.select($"doc_id").distinct().count()
-      tf.join(dfwOld, Seq("term"))
-        .withColumn("w", $"tf" * log(lit(n.toDouble) / $"df"))
-    } else {
-      val dfw = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-      val nDocs = tf.agg(countDistinct($"doc_id").as("n_docs"))
-      tf.join(dfw, Seq("term")).crossJoin(broadcast(nDocs))
-        .withColumn("w", $"tf" * log($"n_docs".cast("double") / $"df"))
-    }
+    // The r17 form (a separate distinct pass for df and a driver count()
+    // for n) measured a tie against this one, so the form with no extra
+    // driver action stays (REGRESSION_AB_r19).
+    val dfw = tf.groupBy($"term").agg(count(lit(1)).as("df"))
+    val nDocs = tf.agg(countDistinct($"doc_id").as("n_docs"))
+    val w = tf.join(dfw, Seq("term")).crossJoin(broadcast(nDocs))
+      .withColumn("w", $"tf" * log($"n_docs".cast("double") / $"df"))
     val nrm = w.groupBy($"doc_id").agg(sqrt(sum($"w" * $"w")).as("nrm"))
     val wn = w.join(nrm, Seq("doc_id")).filter($"nrm" > 0)
       .select($"doc_id", $"term", ($"w" / $"nrm").as("wn"))

@@ -131,7 +131,7 @@ object Dedup {
     // partial aggregation collapses the hot key map-side before the
     // exchange — the skew-safety the former stats-groupBy + join-back +
     // self-join shape bought by re-reading the banding stream three
-    // times. Measured at sf1 (BandProbe, r14): 2.4-3× faster with
+    // times. Measured at sf1 (r14, CHANGELOG.md): 2.4-3× faster with
     // bit-identical pairs; Spark's own collect_list would instead
     // buffer the full hot bucket (the OOM shape the cap exists to
     // prevent).
@@ -735,8 +735,8 @@ object Dedup {
     * DuckDB oracle stays bit-comparable), 10 at sf10's 200k vectors, 19
     * at 100M. A fixed planes=8 at 100M+ vectors would mark most of the
     * corpus oversized (`semanticDroppedBuckets` surfaces this loudly;
-    * PlanesProbe measures the cliff) — planes scales first, maxBucket
-    * stays the skew guard.
+    * the r15 cliff measurement is in CHANGELOG.md) — planes scales
+    * first, maxBucket stays the skew guard.
     */
   /** Sign-partition bucket id over a double-array column `v`: bit p =
     * sign of the projection onto the p-th md5-family ±1 hyperplane
@@ -895,8 +895,8 @@ object Dedup {
     * past the cap at corpus-scaled planes holds >maxBucket vectors
     * concentrated in one of 2^planes sign cells — degenerate
     * template/boilerplate mass where O(n²) verify is unpayable and the
-    * bucket IS the cluster (the SemDeDup pragmatic move; PlanesProbe
-    * measured this covering 100% of a 200k clustered corpus 3–4×
+    * bucket IS the cluster (the SemDeDup pragmatic move; r15,
+    * CHANGELOG.md, measured this covering 100% of a 200k clustered corpus 3–4×
     * FASTER than any pair form, 5.4 s vs 18–44 s, because giant
     * clusters never expand into pairs).
     *
@@ -2305,7 +2305,7 @@ object Dedup {
     // keeper aggregation (ord is unique per row, so min_by is
     // deterministic), and exact dups fall out of a join against the
     // persisted keeper frame — replacing keeper-groupBy + ord-anti-join
-    // + keeper-ord-join, three meta exchanges. The r15 A/B (ProbeD18)
+    // + keeper-ord-join, three meta exchanges. The r15 A/B (CHANGELOG.md)
     // rejected this at ~1.5 s inside the stage's old noise band; the
     // r16 waterfall re-priced the three-exchange form at 5.5 s vs 3.5 s
     // once the banding leg stopped dominating, so it lands now.

@@ -300,21 +300,6 @@ object Graph {
     * lambdas, which measured 20× slower than generated code on the ×16
     * probe's 184M expanded pairs (the round-1 SimHash lesson again).
     */
-  /** Observability for the fan bound (the minhashDroppedBuckets
-    * contract): customers whose supplier fan exceeds `maxFan` — the rows
-    * [[projectionCommon]] excludes from pair expansion — with their fan
-    * sizes. A hub customer touching a constant fraction of suppliers
-    * surfaces here instead of silently vanishing; one partial-agg
-    * groupBy, diagnostic-only.
-    */
-  def fanExcluded(pairs: DataFrame, maxFan: Int = 64): DataFrame = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    pairs.groupBy($"ck").agg(countDistinct($"sk").as("fan"))
-      .filter($"fan" > maxFan)
-      .orderBy($"fan".desc, $"ck")
-  }
-
   /** Per-customer distinct sorted supplier arrays — the projection's ONE
     * corpus-sized shuffle (collect_set dedups any repeated raw pairs in
     * the same pass, so callers hand in RAW pairs and no separate
@@ -323,8 +308,8 @@ object Graph {
     * persisted frame map-side.
     *
     * Plain groupBy, no explicit repartition (r19, VERDICT r18 #5 —
-    * guide §2.3 partial-agg-below-the-exchange, decided by ProbeG02 on
-    * the sf10 trade pairs): the partial ObjectHashAggregate dedups
+    * guide §2.3 partial-agg-below-the-exchange, decided on the sf10
+    * trade pairs, OPTIMIZATION_r19.md): the partial ObjectHashAggregate dedups
     * map-side and the exchange carries per-task partial sets instead of
     * raw pair rows. Measured min/median 6.4-7.0/7.6-10.0 s (repartition
     * form) → 5.5-6.0/5.7-6.7 s at 32c, 19.9/29.1 → 15.6/16.1 s at 8c —
@@ -399,7 +384,7 @@ object Graph {
     * projection, g02b's sketch arrays, g03 via g02) starts from, paid
     * once per corpus: "materialize the projection input once, query it
     * many times", exactly the projectionTables layout one level down.
-    * r15 measurement (GraphProbe, sf10): rebuilding this stage inside
+    * r15 measurement (CHANGELOG.md, sf10): rebuilding this stage inside
     * g02b — via EITHER shape — dominates its wall; the r14-suggested
     * anti-join rewrite was additionally 2-3× slower than the
     * arrays-derived form because its fan side forces a SECOND
@@ -568,7 +553,7 @@ object Graph {
     * the exploded DISTINCT pairs by supplier plus |suppliers|-sized
     * banding. The verdict-suggested alternative — a broadcast anti-join
     * fan bound over the raw stream with one direct groupBy(sk) — was
-    * built and A/B'd (GraphProbe, sf10, bit-identical arrays:
+    * built and A/B'd (r15, CHANGELOG.md, sf10, bit-identical arrays:
     * symmdiff = 0): it measured 2-3× SLOWER (96-131 s vs 37-43 s
     * warm), because its fan side forces a SECOND orders⋈lineitem build
     * and `countDistinct(sk) by ck` pays a two-exchange distinct

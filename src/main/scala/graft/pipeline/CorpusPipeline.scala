@@ -25,10 +25,11 @@ object CorpusPipeline {
       nearDupJaccard: Double = 0.8,
       // Star-link oversized LSH buckets against their min-id
       // representative instead of dropping them (Dedup.minhashPairs
-      // oversizedLink). Default ON for curation: the SkewProbe measured
-      // drop mode passing 97% of a hot near-identical template family
-      // (144/5000 flagged) while star mode flags 5000/5000 AND runs
-      // faster (SURVEY §7.10) — exactly the mass curation exists to kill.
+      // oversizedLink). Default ON for curation: r11 measured
+      // (CHANGELOG.md) drop mode passing 97% of a hot near-identical
+      // template family (144/5000 flagged) while star mode flags
+      // 5000/5000 AND runs faster (SURVEY §7.10) — exactly the mass
+      // curation exists to kill.
       nearDupStarMode: Boolean = true)
 
   /** Returns the curated corpus with per-doc annotations. */
@@ -112,7 +113,7 @@ object CorpusPipeline {
       nearDupBands: Int = 16,
       nearDupRows: Int = 4,
       maxBucket: Int = 64,
-      // see Config.nearDupStarMode — default ON for the same SkewProbe
+      // see Config.nearDupStarMode — default ON for the same r11 skew
       // evidence (drop mode silently passes hot-template near-dup mass)
       nearDupStarMode: Boolean = true,
       // 0 = corpus-derived via Dedup.scaledPlanes at the semantic
@@ -128,7 +129,7 @@ object CorpusPipeline {
       // the pair stage's eligibility cap silently PASSES every member
       // of a bucket past semMaxBucket — at corpus-scaled planes that is
       // precisely the degenerate hot-template mass curation exists to
-      // kill (PlanesProbe: 77–89% of a 200k clustered corpus sits
+      // kill (r15, CHANGELOG.md: 77–89% of a 200k clustered corpus sits
       // over-cap, and canonical routing covers it 3–4× faster than any
       // pair form because giant clusters never expand into pairs).
       semOversizedCanonical: Boolean = true,
@@ -238,10 +239,7 @@ object CorpusPipeline {
       val t0 = System.nanoTime()
       val p = df.localCheckpoint()
       val n = p.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        println(f"[stage] $name%-22s $sec%8.2f s")
-      stages += ((name, nIn, n, sec))
+      stages += ((name, nIn, n, (System.nanoTime() - t0) / 1e9))
       (p, n)
     }
 
@@ -405,9 +403,9 @@ object CorpusPipeline {
       DocumentPipeline.epochShuffleOf(seqKeyed, cfg.epoch, cfg.epochShards))
 
     // stage_sec: per-stage materialization wall — the variance/runtime
-    // profile travels WITH the waterfall (VERDICT r12 #4) instead of
-    // only behind the GRAFT_STAGE_TIMING env print. Additive column;
-    // the correctness row is rows-only so timing nondeterminism is fine.
+    // profile travels WITH the waterfall (VERDICT r12 #4). Additive
+    // column; the correctness row is rows-only so timing nondeterminism
+    // is fine.
     val wf = stages.toSeq.zipWithIndex.map { case ((name, nIn, nOut, sec), i) =>
       (i, name, nIn, nOut, nIn - nOut,
         if (nIn == 0) 0.0

@@ -91,6 +91,27 @@ object StreamingOps {
     try f finally sc.clearCallSite()
   }
 
+  /** A gate's store landing, once per batch id: `land` writes
+    * `<storeDir>/<bid>.parquet` unless a committed one exists. A
+    * replayed batch is gated or rewritten against its own earlier index
+    * rows, so rewriting its committed file from the replay would drop
+    * rows the batch already landed; the replay skips the write and says
+    * so on stderr. Without a `checkpointDir`, batch ids start again at 0
+    * on every run, so a committed file is an earlier run's batch, not
+    * this batch's replay: the trigger fails rather than drop its
+    * survivors.
+    */
+  private def landOnce(spark: SparkSession, storeDir: String, bid: String,
+      checkpointDir: Option[String], label: String)(land: => Unit): Unit =
+    if (!pathExists(spark, s"$storeDir/$bid.parquet/_SUCCESS"))
+      step(spark, label)(land)
+    else if (checkpointDir.isEmpty)
+      throw new IllegalStateException(s"$storeDir/$bid.parquet exists: " +
+        "restarting a dedup gate over an existing store needs the " +
+        "checkpointDir it ran with")
+    else System.err.println(s"[gate] $bid replayed: its store file is " +
+      "committed, its survivors are not re-landed")
+
   /** Keep a gate's stored-index file counts bounded over an unbounded
     * stream (verdict r16 #3): after a fold/grow step, any index table
     * whose data-file count exceeds `compactAbove` is rewritten through
@@ -332,24 +353,11 @@ object StreamingOps {
             .localCheckpoint()
         }
         val toWrite = counts.get.view.mapValues(_.asInstanceOf[Long]).toMap
-        // write-once: a replay's survivors are at most the contentless
-        // docs (the rest match themselves), so rewriting a committed
-        // store file from them would drop the batch's landed rows
-        if (toWrite("land") > 0) {
-          if (!pathExists(spark, s"$storeDir/$bid.parquet/_SUCCESS"))
-            step(spark, "gate land") {
-              graft.sources.IncrementalIngest.landBatch(kept.drop("_sh"),
-                storeDir, bid)
-            }
-          else if (checkpointDir.isEmpty)
-            // no checkpoint: batch ids restarted at 0, so this file is an
-            // earlier run's batch, not this batch's replay
-            throw new IllegalStateException(s"$storeDir/$bid.parquet " +
-              "exists: restarting a dedup gate over an existing store " +
-              "needs the checkpointDir it ran with")
-          else System.err.println(s"[gate] $bid replayed: its store file " +
-            s"is committed, ${toWrite("land")} survivor(s) not re-landed")
-        }
+        if (toWrite("land") > 0)
+          landOnce(spark, storeDir, bid, checkpointDir, "gate land") {
+            graft.sources.IncrementalIngest.landBatch(kept.drop("_sh"),
+              storeDir, bid)
+          }
         if (toWrite("pending") > 0) step(spark, "gate pending") {
           kept.filter(size($"_sh") > 0).select($"doc_id", $"_sh".as("sh"))
             .coalesce(1)
@@ -400,8 +408,10 @@ object StreamingOps {
     * each probe unions the stored-index verdict with an exact(h,h2) +
     * banded-fuzzy probe of the pending buffer, so the kept_ratio a doc
     * gates on still sees every earlier batch inside the fold window.
-    * Same replay story: ingest before pending write, self-match on
-    * replay → kept = ∅ → nothing rewritten, fold at-least-once.
+    * Same replay story: the store lands once per batch id
+    * ([[landOnce]]) before the pending write, a replay's docs match
+    * themselves so no pending file is rewritten, and the fold is
+    * at-least-once.
     */
   def segmentDedupStream(docs: DataFrame, indexTable: String,
       storeDir: String, width: Int = 10, segKeptRatioMin: Double = 0.5,
@@ -450,14 +460,19 @@ object StreamingOps {
           rollup.filter($"kept_ratio" < segKeptRatioMin)
             .select($"doc_id").localCheckpoint()
         }
-        val kept = b.join(gated, Seq("doc_id"), "left_anti")
-        step(spark, "segment gate land") {
-          graft.sources.IncrementalIngest.appendBatch(kept, storeDir, bid)
-        }
-        if (!kept.select($"doc_id").isEmpty)
+        val flagged = graft.sources.IncrementalIngest
+          .flagFresh(b.join(gated, Seq("doc_id"), "left_anti"), storeDir, bid)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        if (!flagged.filter(col(graft.sources.IncrementalIngest.freshCol)).isEmpty)
+          landOnce(spark, storeDir, bid, checkpointDir, "segment gate land") {
+            graft.sources.IncrementalIngest.landBatch(flagged, storeDir, bid)
+          }
+        // the kept docs' segments; a replay's are none (its docs match
+        // themselves), so it leaves the batch's pending file as it was
+        val keptMeta = meta.join(gated, Seq("doc_id"), "left_anti")
+        if (!keptMeta.isEmpty)
           step(spark, "segment gate pending") {
-            meta.join(gated, Seq("doc_id"), "left_anti")
-              .coalesce(1)
+            keptMeta.coalesce(1)
               .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
               .parquet(s"$pendingDir/$bid.parquet")
           }
@@ -472,6 +487,7 @@ object StreamingOps {
         }
         // Self-cleaning via the handle (the fused meta frame), not
         // session-wide clearCache — see dedupStream.
+        flagged.unpersist()
         b.unpersist()
         meta.unpersist()
         ()
@@ -495,8 +511,7 @@ object StreamingOps {
     * the store append must be once-per-batch-id:
     * [[graft.sources.IncrementalIngest.appendBatch]]'s content-hash
     * dedup cannot help (the replay's rewritten text differs), hence
-    * the same _SUCCESS-keyed write-once discipline as
-    * [[semanticDedupStream]]'s store landing.
+    * the gates' write-once landing ([[landOnce]]).
     */
   def substringDedupStream(docs: DataFrame, indexTable: String,
       storeDir: String, k: Int = 20,
@@ -520,9 +535,7 @@ object StreamingOps {
             Seq("doc_id"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         if (!cleaned.isEmpty) {
-          val committed =
-            pathExists(spark, s"$storeDir/$bid.parquet/_SUCCESS")
-          if (!committed) {
+          landOnce(spark, storeDir, bid, checkpointDir, "substring gate land") {
             cleaned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
               .parquet(s"$storeDir/$bid.parquet")
           }
@@ -555,11 +568,11 @@ object StreamingOps {
     * the parquet store and GROW the index by map-only bucket assignment
     * so later batches dedup against everything that came before.
     *
-    * Same idempotence story as dedupStream: index growth is
-    * marker-guarded per batch id; a replay after partial failure
-    * re-appends, leaving at worst duplicate index rows that
-    * semanticDelta collapses; probe-before-grow gates a replayed
-    * batch's vectors against themselves.
+    * Same idempotence story as dedupStream: the store lands once per
+    * batch id ([[landOnce]]); index growth is marker-guarded per batch
+    * id; a replay after partial failure re-appends, leaving at worst
+    * duplicate index rows that semanticDelta collapses; probe-before-grow
+    * gates a replayed batch's vectors against themselves.
     */
   /** `planes` MUST match the value the index was written with — a
     * mismatched plane count produces signatures from a different bit
@@ -607,16 +620,10 @@ object StreamingOps {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val marker = s"${storeDir}_idx_marked/$bid"
         if (!kept.isEmpty) {
-          // The store landing must be REPLAY-STABLE: after a partial index
-          // append, the replayed batch's kept set SHRINKS (probe-before-
-          // grow gates vectors against their own partial index rows), so
-          // rewriting the store from the replay would silently lose the
-          // already-landed vectors. The _SUCCESS marker of the first
-          // committed write is the idempotence key: write once per batch
-          // id, never rewrite.
-          val committed =
-            pathExists(spark, s"$storeDir/$bid.parquet/_SUCCESS")
-          if (!committed) {
+          // after a partial index append, the replayed batch's kept set
+          // SHRINKS (probe-before-grow gates vectors against their own
+          // partial index rows), hence the write-once landing
+          landOnce(spark, storeDir, bid, checkpointDir, "semantic gate land") {
             kept.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
               .parquet(s"$storeDir/$bid.parquet")
           }

@@ -302,7 +302,7 @@ class CorpusPipelineSpec extends SparkSpec {
     val kills = killsOf(r.waterfall)
     // the near-dup PAIR still dies (its bucket has 2 members, under the
     // cap) but the 30 template variants live in oversized buckets drop
-    // mode discards — the exact leak the SkewProbe measured (SURVEY §7.10)
+    // mode discards — the exact leak r11 measured (CHANGELOG.md, SURVEY §7.10)
     assert(kills("d02_minhash_neardup") >= 1 &&
       kills("d02_minhash_neardup") <= 3,
       s"drop mode should pass the template family: " +

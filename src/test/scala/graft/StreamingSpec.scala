@@ -562,6 +562,147 @@ class StreamingSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  /** Runs `gate` without a checkpoint over `first`, then again over
+    * `second` on the same store: the second run starts again at
+    * batch000000, whose file the first run committed, so it must fail and
+    * leave that file as it was.
+    */
+  private def assertRestartWithoutCheckpointFails[T: org.apache.spark.sql.Encoder](
+      store: String, idCol: String, first: T, second: T)(
+      gate: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    def run(row: T): Unit = {
+      val mem = MemoryStream[T]
+      val q = gate(mem.toDF())
+      try { mem.addData(row); q.processAllAvailable() }
+      finally q.stop()
+    }
+    def storeRows() = spark.read.parquet(s"$store/*.parquet")
+      .select(col(idCol)).as[Long].collect().toSeq
+    run(first)
+    val landed = storeRows()
+    assert(landed.nonEmpty, "the first run must land its batch")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      run(second))
+    assert(e.getMessage.contains("checkpointDir"), e.getMessage)
+    assert(storeRows() == landed, "the first run's batch changed")
+  }
+
+  test("semantic gate restarted without its checkpoint fails instead of dropping survivors") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_snockpt_").toString
+    spark.sql("DROP TABLE IF EXISTS snockpt_idx_vecs")
+    graft.operators.Dedup.writeSemanticIndex(
+      GenCorpus.generateEmbeddings(spark, 10), "snockpt_idx")
+    def oneHot(d: Int): Seq[Float] = Seq.tabulate(64)(j => if (j == d) 1f else 0f)
+    assertRestartWithoutCheckpointFails(s"$dir/store", "vec_id",
+      (1L, oneHot(1)), (2L, oneHot(2))) { df =>
+      StreamingOps.semanticDedupStream(df.toDF("vec_id", "embedding"),
+        "snockpt_idx", s"$dir/store")
+    }
+    spark.sql("DROP TABLE IF EXISTS snockpt_idx_vecs")
+    spark.catalog.clearCache()
+  }
+
+  test("substring gate restarted without its checkpoint fails instead of dropping survivors") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bnockpt_").toString
+    spark.sql("DROP TABLE IF EXISTS bnockpt_idx_grams")
+    def ws(tag: String, n: Int): String = (0 until n).map(i => s"$tag$i").mkString(" ")
+    graft.operators.Dedup.writeSubstringIndex(
+      Seq(0L -> ws("s", 30)).toDF("doc_id", "text"), "bnockpt_idx", k = 20)
+    assertRestartWithoutCheckpointFails(s"$dir/store", "doc_id",
+      (1L, ws("a", 30)), (2L, ws("b", 30))) { df =>
+      StreamingOps.substringDedupStream(df.toDF("doc_id", "text"),
+        "bnockpt_idx", s"$dir/store", k = 20)
+    }
+    spark.sql("DROP TABLE IF EXISTS bnockpt_idx_grams")
+    spark.catalog.clearCache()
+  }
+
+  test("segment gate restarted without its checkpoint fails instead of dropping survivors") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_gnockpt_").toString
+    Seq("bands", "shingles", "segdigests").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS gnockpt_idx_$t"))
+    def ws(tag: String, n: Int): String = (0 until n).map(i => s"$tag$i").mkString(" ")
+    graft.operators.Dedup.writeSegmentIndex(
+      Seq(0L -> ws("s", 40)).toDF("doc_id", "text"), "gnockpt_idx")
+    assertRestartWithoutCheckpointFails(s"$dir/store", "doc_id",
+      (1L, ws("a", 40)), (2L, ws("b", 40))) { df =>
+      StreamingOps.segmentDedupStream(df.toDF("doc_id", "text"),
+        "gnockpt_idx", s"$dir/store")
+    }
+    Seq("bands", "shingles", "segdigests").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS gnockpt_idx_$t"))
+    spark.catalog.clearCache()
+  }
+
+  test("segment gate replay of an uncommitted batch leaves the store and the pending buffer unchanged") {
+    val root = java.nio.file.Files.createTempDirectory("graft_sreplay_").toString
+    val inDir = s"$root/in"
+    val ck = s"$root/ck"
+    val store = s"$root/store"
+    new java.io.File(inDir).mkdirs()
+    Seq("bands", "shingles", "segdigests").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS sreplay_idx_$t"))
+    def seg(tag: String): Seq[String] = (0 until 10).map(j => s"$tag$j")
+    def edit(s: Seq[String], repl: String): Seq[String] = s.init :+ repl
+    def doc(tags: String*): String = tags.flatMap(seg).mkString(" ")
+    def edited(tags: String*): String =
+      (tags.map(t => edit(seg(t), s"x$t")) :+ seg("tail")).flatten.mkString(" ")
+    def stage(name: String, rows: Seq[(Long, String)]): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_sreplay_stage_")
+        .toString
+      rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(inDir, name))
+      ()
+    }
+    graft.operators.Dedup.writeSegmentIndex(
+      Seq(0L -> doc("sa", "sb", "sc", "sd")).toDF("doc_id", "text"),
+      "sreplay_idx")
+    // batch 0: two novel docs and edited seed segments (gated); batch 1:
+    // edited copies of batch 0's doc 100 (gated by the pending buffer)
+    // and a novel doc; batch 2: a novel doc and a contentless one (no
+    // segments: it cannot match itself on replay)
+    stage("f1.parquet", Seq(100L -> doc("a1", "a2", "a3", "a4"),
+      101L -> doc("b1", "b2", "b3", "b4"), 102L -> edited("sa", "sb", "sc")))
+    stage("f2.parquet", Seq(200L -> edited("a1", "a2", "a3"),
+      201L -> doc("c1", "c2", "c3", "c4")))
+    stage("f3.parquet", Seq(300L -> doc("d1", "d2", "d3", "d4"),
+      301L -> (null: String)))
+    def gate() = StreamingOps.segmentDedupStream(
+      spark.readStream.schema("doc_id BIGINT, text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(inDir),
+      "sreplay_idx", store, queryName = "graft_segment_gate_replay",
+      checkpointDir = Some(ck))
+    def storeRows() = spark.read.parquet(s"$store/*.parquet")
+      .select($"doc_id", $"content_hash", $"date_processed")
+      .as[(Long, String, String)].collect().toSeq.sorted
+    def pendingRows() = spark.read.parquet(s"${store}_idx_pending/*.parquet")
+      .select($"doc_id", $"ord", $"h", $"h2")
+      .as[(Long, Long, Long, Long)].collect().toSeq.sorted
+    val q1 = gate()
+    q1.processAllAvailable(); q1.stop()
+    val (stored, pending) = (storeRows(), pendingRows())
+    assert(stored.map(_._1) == Seq(100L, 101L, 201L, 300L, 301L),
+      s"stored ${stored.map(_._1)}")
+    assert(pending.map(_._1).distinct == Seq(100L, 101L, 201L, 300L),
+      s"pending ${pending.map(_._1).distinct}")
+    // crash after batch 2's writes, before its commit: the restart
+    // replays batch 2 from its logged offsets
+    Seq("2", ".2.crc").foreach(f => new java.io.File(s"$ck/commits/$f").delete())
+    val q2 = gate()
+    q2.processAllAvailable(); q2.stop()
+    assert(q2.recentProgress.exists(p => p.batchId == 2 && p.numInputRows == 2),
+      "the restart must replay batch 2")
+    assert(storeRows() == stored, "the replay changed the store")
+    assert(pendingRows() == pending, "the replay changed the pending buffer")
+    Seq("bands", "shingles", "segdigests").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS sreplay_idx_$t"))
+    spark.catalog.clearCache()
+  }
+
   test("stream-stream interval join matches views within the hour before purchase") {
     implicit val sqlCtx = spark.sqlContext
     val vs = MemoryStream[Ev]
