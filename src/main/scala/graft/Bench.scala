@@ -217,20 +217,14 @@ object Bench {
           .drainListenerBus(spark.sparkContext)
       }
       val sh0 = shuffleBytes.get()
-      val ccL0 = graft.operators.Dedup.ccLookups.get()
-      val ccB0 = graft.operators.Dedup.ccBuilds.get()
-      val pjL0 = graft.operators.Graph.projLookups.get()
-      val pjB0 = graft.operators.Graph.projBuilds.get()
+      val (memoL0, memoB0) = CacheHygiene.memoCounts
       val (sec, failed) = runOnce(name, fn)
       accTimes(name) = accTimes(name) :+ sec
       accSh(name) = accSh(name) + (shuffleBytes.get() - sh0)
       if (failed) accFailed(name) = true
-      accMemoL(name) = accMemoL(name) +
-        (graft.operators.Dedup.ccLookups.get() - ccL0) +
-        (graft.operators.Graph.projLookups.get() - pjL0)
-      accMemoB(name) = accMemoB(name) +
-        (graft.operators.Dedup.ccBuilds.get() - ccB0) +
-        (graft.operators.Graph.projBuilds.get() - pjB0)
+      val (memoL1, memoB1) = CacheHygiene.memoCounts
+      accMemoL(name) = accMemoL(name) + (memoL1 - memoL0)
+      accMemoB(name) = accMemoB(name) + (memoB1 - memoB0)
     }
     val results = wanted.map { case (name, _) =>
       // Median of `reps` runs: the VM shows >2x run-to-run swings, so a

@@ -1,13 +1,16 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dumps the formatted physical plan of every query to a markdown file —
   * the per-round plan-review artifact (SURVEY.md §5: pushdown, pruning,
   * partial aggregation, broadcast choices are checked here, not guessed).
   *
   * Usage: runMain graft.Plans <sfDir> <outFile>
+  *
+  * A query whose plan fails still gets its `ERROR:` section in the
+  * file; the run then exits 1 naming every failed key and stage dump.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -39,6 +42,7 @@ object Plans {
     // LocalTableScan of the final counts. Their per-stage plans are the
     // stage operators' own entries, which ARE dumped.
     val eager = Set("p07_curation_dag")
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val plan =
         if (eager(name))
@@ -48,7 +52,10 @@ object Plans {
         else try {
           fn(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
-        } catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
+        } catch { case NonFatal(e) =>
+          failed += name
+          s"ERROR: ${e.getMessage}"
+        }
       sb.append(s"\n## $name\n\n```\n$plan```\n")
     }
     // p07's stage plans, captured via curateFull's planHook while the
@@ -76,14 +83,22 @@ object Plans {
         planHook = Some { (stage, df) =>
           val plan = try df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
-          catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
+          catch { case NonFatal(e) =>
+            failed += s"p07 stage $stage"
+            s"ERROR: ${e.getMessage}"
+          }
           sb.append(s"\n## p07 stage: $stage\n\n```\n$plan```\n")
         })
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
+      failed += "p07 stage dump"
       sb.append(s"\nERROR running p07 stage dump: ${e.getMessage}\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plans] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

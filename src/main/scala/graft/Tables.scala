@@ -129,12 +129,12 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Cheap corpus snapshot for memo invalidation (the Dedup.clusterTable
-    * contract, generalized): sorted (name, length, mtime) listing of the
-    * named tables' files under `dir`. A dir rewritten in place changes
-    * the listing, so a long-lived session never serves a memoized frame
-    * of data that no longer exists. One filesystem listing per lookup —
-    * no data read.
+  /** Cheap corpus snapshot for memo invalidation in the
+    * [[CacheHygiene.memo]] registry: sorted (name, length, mtime) listing
+    * of the named tables' files under `dir`. A dir rewritten in place
+    * changes the listing, so a long-lived session never serves a memoized
+    * frame of data that no longer exists. One filesystem listing per
+    * lookup — no data read.
     */
   private[graft] def dirFingerprint(s: SparkSession, dir: String,
       tables: Seq[String]): String =

@@ -570,13 +570,6 @@ object Multimodal {
     fp
   }
 
-  /** Batch form of [[phashStub]] — the one-FFI-crossing-per-batch shape
-    * of [[decodeBatchStub]]: a real codec hashes a whole record batch of
-    * decoded frames per call.
-    */
-  def phashBatchStub(payloads: Array[Array[Byte]]): Array[Long] =
-    payloads.map(phashStub)
-
   /** Perceptual hashes out of the batched decode stage: (doc_id, kind,
     * phash). Same partition-streaming batch shape as [[decodeFeaturesOf]]
     * — in production the phash comes out of the SAME decode pass as the

@@ -54,15 +54,6 @@ object Dedup {
   def shingles(text: Column, n: Int = 3): Column =
     org.apache.spark.sql.graft.GraftFunctions.word_shingles(text, n)
 
-  /** MinHash signature: k hash functions via the one-hash construction
-    * (shingle hashed once, k splitmix re-mixes); computed map-side by the
-    * custom MinHashSig Catalyst expression (graft.expressions) — the
-    * equivalent nested transform/aggregate HOF form ran interpreted and
-    * was ~30× slower at sf0.1.
-    */
-  def minhashSignature(shingleCol: Column, k: Int = 64): Column =
-    org.apache.spark.sql.graft.GraftFunctions.minhash_sig(shingleCol, k)
-
   /** d02: MinHash + LSH banding near-duplicate candidates, verified with
     * exact Jaccard. bands=16 × rows=4 over k=64 (s-curve threshold ≈ 0.5).
     */
@@ -1023,13 +1014,6 @@ object Dedup {
       .dropDuplicates("vec_a", "vec_b")
   }
 
-  /** Probe-only accessor for Bench/probes: the candidate frame alone. */
-  private[graft] def semanticMultiprobeCandidates(s: SparkSession,
-      dir: String, planes: Int = 0, dim: Int = 64, maxBucket: Int = 512,
-      nprobe: Int = 3): DataFrame =
-    multiprobeCandFrom(semanticProbed(s, dir,
-      resolvePlanes(s, dir, planes, maxBucket), dim, nprobe), maxBucket)
-
   private def semanticPairsMultiprobeFrom(probed: DataFrame, minCos: Double,
       maxBucket: Int, quantPrefilter: Boolean = true): DataFrame = {
     val s = probed.sparkSession
@@ -1479,65 +1463,12 @@ object Dedup {
     * of the SAME clustering, so the iterative CC — the most expensive
     * step in the dedup family — runs once per (session, corpus dir) and
     * both queries derive from the memoized result (VERDICT r4 #2). The
-    * cached frame is a localCheckpoint (materialized RDD blocks, not
-    * catalog cache — `clearCache()` between bench queries doesn't drop
-    * it). At production scale this is the "write the cluster table once,
-    * query it many times" layout, expressed in-session.
+    * entry lives in the [[graft.CacheHygiene]] registry, rebuilt when the
+    * documents table is rewritten in place (VERDICT r5 #2).
     */
-  private val ccCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]
-  /** Cheap corpus snapshot for memo invalidation: the sorted
-    * (name, length, mtime) listing of the documents table's files. A
-    * corpus dir rewritten in place changes the listing, so a long-lived
-    * session can never serve clusters of a corpus that no longer exists
-    * (VERDICT r5 #2). One filesystem listing per lookup — no data read.
-    */
-  private def corpusFingerprint(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) "absent"
-    else {
-      val it = fs.listFiles(path, true)
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val st = it.next()
-        entries += s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-      }
-      entries.sorted.mkString(";")
-    }
-  }
-  // Memo observability: lookups vs builds, so a bench harness can mark
-  // queries whose timing reflects a cache hit rather than CC work
-  // (lookups - builds > 0 over a query's reps → it consumed the memo).
-  private[graft] val ccLookups = new java.util.concurrent.atomic.AtomicLong
-  private[graft] val ccBuilds = new java.util.concurrent.atomic.AtomicLong
-  def clusterTable(s: SparkSession, dir: String): DataFrame = {
-    ccLookups.incrementAndGet()
-    val fp = corpusFingerprint(s, dir)
-    ccCache.compute((s, dir), (_, old) =>
-      if (old != null && old._1 == fp) old
-      else {
-        ccBuilds.incrementAndGet()
-        (fp, connectedComponents(ngramJaccard(s, dir)))
-      })._2
-  }
-  /** Drop memoized cluster tables (tests; stale entries are otherwise
-    * replaced automatically when the corpus fingerprint changes).
-    */
-  def clearClusterCache(): Unit = ccCache.clear()
-
-  /** Checkpoint-block RDD ids of the live cluster memos — the pinned set
-    * for harness-side transient-checkpoint sweeps (VERDICT r17 #1: the
-    * memo must survive the sweep; everything else checkpointed is a
-    * consume-once result whose blocks are dead weight once consumed).
-    */
-  private[graft] def memoCheckpointRddIds: Set[Int] = {
-    val ids = Set.newBuilder[Int]
-    ccCache.values.forEach(e =>
-      ids ++= org.apache.spark.sql.graft.SparkInternals
-        .checkpointRddIds(e._2))
-    ids.result()
-  }
+  def clusterTable(s: SparkSession, dir: String): DataFrame =
+    graft.CacheHygiene.memo(s, dir, "clusters", Seq("documents"))(
+      Seq(connectedComponents(ngramJaccard(s, dir)))).head
 
   /** d07: transitive dedup clusters as a query — the d04 candidate pairs
     * closed under connectivity via iterative min-label propagation. The
@@ -2938,40 +2869,14 @@ object Dedup {
     */
   def segmentDelta(spark: SparkSession, table: String, delta: DataFrame,
       width: Int = 10, bands: Int = 16, rows: Int = 4,
-      minJaccard: Double = 0.5): DataFrame =
-    segmentDeltaHandle(spark, table, delta, width, bands, rows, minJaccard)._1
-
-  /** [[segmentDelta]] plus its persisted internals (delta segment frame +
-    * the probe's shingle frame) — the minhashPairsHandle contract for
-    * the streaming segment gate.
-    */
-  def segmentDeltaHandle(spark: SparkSession, table: String, delta: DataFrame,
-      width: Int = 10, bands: Int = 16, rows: Int = 4,
-      minJaccard: Double = 0.5): (DataFrame, Seq[DataFrame]) = {
-    val (rollup, meta) =
-      segmentDeltaMetaHandle(spark, table, delta, width, bands, rows, minJaccard)
-    (rollup, Seq(meta))
-  }
-
-  /** [[segmentDeltaHandle]] exposing the persisted fused meta frame
-    * (doc_id, ord, h, h2, sh) itself, so the streaming gate can GROW the
-    * index from the same single tokenization pass that probed it
-    * (filtered to kept docs) instead of re-segmenting the batch —
-    * VERDICT r14 #8: one SegmentShingleHashes pass per batch now serves
-    * probe + rollup + append, where the former path tokenized the batch
-    * three times (segment texts, probe shingles, append shingles) and
-    * persisted segment STRINGS.
-    */
-  def segmentDeltaMetaHandle(spark: SparkSession, table: String,
-      delta: DataFrame, width: Int = 10, bands: Int = 16, rows: Int = 4,
-      minJaccard: Double = 0.5): (DataFrame, DataFrame) = {
+      minJaccard: Double = 0.5): DataFrame = {
     import spark.implicits._
     val meta = segmentHashFrame(delta.select($"doc_id", $"text"), width)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ords = segmentDeltaOrdsFromMeta(spark, table, meta, bands, rows,
       minJaccard)
-    (segmentNeardupRollup(meta.select($"doc_id", $"ord"),
-      ords.withColumn("is_dup", lit(1L))), meta)
+    segmentNeardupRollup(meta.select($"doc_id", $"ord"),
+      ords.withColumn("is_dup", lit(1L)))
   }
 
   /** The stored-index-matched (ord) set behind [[segmentDelta]], over a

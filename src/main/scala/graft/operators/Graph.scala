@@ -219,11 +219,6 @@ object Graph {
     (rankRel(ranks, n), it)
   }
 
-  /** [[pagerankConvergedOf]] over the dir's trading graph. */
-  def pagerankConverged(s: SparkSession, dir: String, eps: Double = 1e-6,
-      maxIters: Int = 50, damping: Double = 0.85): (DataFrame, Int) =
-    pagerankConvergedOf(tradeEdges(s, dir), eps, maxIters, damping)
-
   /** The oracle mirrors pagerank() exactly: same edge construction, same
     * teleport arithmetic, one CTE per iteration.
     */
@@ -360,24 +355,8 @@ object Graph {
   def projectionCommon(pairs: DataFrame, maxFan: Int, minCommon: Long): DataFrame =
     projectionCommonOf(customerArrays(pairs), maxFan, minCommon)
 
-  /** Memoized (supSize, common) projection tables per
-    * (session, dir, maxFan, minCommon) — the Dedup.clusterTable
-    * contract applied to the one-mode projection: g02 and g03 are two
-    * views of the SAME projection (g03's strong edges are a quantile
-    * thinning of g02's common table), and the wedge shuffle behind it is
-    * the most expensive step in the graph family, so it runs once per
-    * (session, corpus) and both queries derive from the materialized
-    * result. localCheckpoint (RDD blocks), not catalog cache — bench
-    * clearCache() between reps doesn't drop it, which is the intent:
-    * at production scale this is the "write the projection table once,
-    * query it many times" layout. The intermediate customer-array cache
-    * is unpersisted as soon as both checkpoints materialize (nothing
-    * leaks into a long-lived session).
-    */
-  private val projCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Long), (String, DataFrame, DataFrame)]
-  private[graft] val projLookups = new java.util.concurrent.atomic.AtomicLong
-  private[graft] val projBuilds = new java.util.concurrent.atomic.AtomicLong
+  /** The tables the trading graph's memo entries are built from. */
+  private val tradeTables = Seq("orders", "lineitem")
 
   /** Memoized per-customer supplier arrays per (session, dir) — the ONE
     * corpus-sized shuffle the whole graph family (g02's wedge
@@ -389,90 +368,36 @@ object Graph {
     * anti-join rewrite was additionally 2-3× slower than the
     * arrays-derived form because its fan side forces a SECOND
     * orders⋈lineitem build and countDistinct's double exchange.
-    * localCheckpoint blocks; replaced entries release them explicitly.
+    * A localCheckpoint held in the [[graft.CacheHygiene]] registry.
     */
-  private val arraysCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, DataFrame)]
+  def tradeArraysTable(s: SparkSession, dir: String): DataFrame =
+    graft.CacheHygiene.memo(s, dir, "tradeArrays", tradeTables)(
+      Seq(customerArrays(tradePairsRaw(s, dir)).localCheckpoint())).head
 
-  /** The memoized [[customerArrays]] frame for the dir's trading graph. */
-  def tradeArraysTable(s: SparkSession, dir: String): DataFrame = {
-    projLookups.incrementAndGet()
-    arraysCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val fp = graft.Tables.dirFingerprint(s, dir, Seq("orders", "lineitem"))
-    arraysCache.compute((s, dir), (_, old) =>
-      if (old != null && old._1 == fp) old
-      else {
-        if (old != null)
-          org.apache.spark.sql.graft.SparkInternals
-            .releaseCheckpointBlocks(old._2)
-        projBuilds.incrementAndGet()
-        (fp, customerArrays(tradePairsRaw(s, dir)).localCheckpoint())
-      })._2
-  }
-
-  /** (supSize, common) for the dir's trading graph — memoized. */
+  /** Memoized (supSize, common) projection tables per
+    * (session, dir, maxFan, minCommon) — the Dedup.clusterTable
+    * contract applied to the one-mode projection: g02 and g03 are two
+    * views of the SAME projection (g03's strong edges are a quantile
+    * thinning of g02's common table), and the wedge shuffle behind it is
+    * the most expensive step in the graph family, so it runs once per
+    * (session, corpus) and both queries derive from the materialized
+    * result, held in the [[graft.CacheHygiene]] registry.
+    */
   def projectionTables(s: SparkSession, dir: String, maxFan: Int = 64,
                        minCommon: Long = 2): (DataFrame, DataFrame) = {
     import s.implicits._
-    projLookups.incrementAndGet()
-    // Evict entries whose SparkSession has stopped: their blocks died
-    // with the context, and the keys would otherwise accumulate forever
-    // in a multi-session JVM (ADVICE r14).
-    projCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val fp = graft.Tables.dirFingerprint(s, dir, Seq("orders", "lineitem"))
-    val entry = projCache.compute((s, dir, maxFan, minCommon), (_, old) =>
-      if (old != null && old._1 == fp) old
-      else {
-        // A dir-fingerprint change replaces the entry: free the OLD
-        // checkpoint blocks explicitly instead of waiting for the
-        // ContextCleaner to GC them (ADVICE r14 — the memo holds strong
-        // references, so GC alone never fires here).
-        if (old != null) {
-          org.apache.spark.sql.graft.SparkInternals.releaseCheckpointBlocks(old._2)
-          org.apache.spark.sql.graft.SparkInternals.releaseCheckpointBlocks(old._3)
-        }
-        projBuilds.incrementAndGet()
-        val arrays = tradeArraysTable(s, dir)
-        // Per-supplier customer-set sizes: re-exploded MAP-SIDE from the
-        // pre-fan-filter arrays (true set sizes — the fan bound only
-        // limits pair GENERATION, not the denominators).
-        val supSize = arrays.select(explode($"sks").as("sk"))
+    val Seq(supSize, common) = graft.CacheHygiene.memo(s, dir,
+        s"projection:$maxFan:$minCommon", tradeTables) {
+      val arrays = tradeArraysTable(s, dir)
+      // Per-supplier customer-set sizes: re-exploded MAP-SIDE from the
+      // pre-fan-filter arrays (true set sizes — the fan bound only
+      // limits pair GENERATION, not the denominators).
+      Seq(arrays.select(explode($"sks").as("sk"))
           .groupBy($"sk").agg(count(lit(1)).as("n_cust"))
-          .localCheckpoint()
-        val common = projectionCommonOf(arrays, maxFan, minCommon)
-          .localCheckpoint()
-        (fp, supSize, common)
-      })
-    (entry._2, entry._3)
-  }
-
-  /** Checkpoint-block RDD ids of the live projection/arrays memos — the
-    * pinned set for harness-side transient-checkpoint sweeps (see
-    * Dedup.memoCheckpointRddIds).
-    */
-  private[graft] def memoCheckpointRddIds: Set[Int] = {
-    val ids = Set.newBuilder[Int]
-    val si = org.apache.spark.sql.graft.SparkInternals
-    projCache.values.forEach { e =>
-      ids ++= si.checkpointRddIds(e._2); ids ++= si.checkpointRddIds(e._3)
+          .localCheckpoint(),
+        projectionCommonOf(arrays, maxFan, minCommon).localCheckpoint())
     }
-    arraysCache.values.forEach(e => ids ++= si.checkpointRddIds(e._2))
-    ids.result()
-  }
-
-  /** Drop memoized projection tables (tests; stale entries are otherwise
-    * replaced automatically when the dir fingerprint changes).
-    */
-  def clearProjectionCache(): Unit = {
-    projCache.values.forEach { e =>
-      org.apache.spark.sql.graft.SparkInternals.releaseCheckpointBlocks(e._2)
-      org.apache.spark.sql.graft.SparkInternals.releaseCheckpointBlocks(e._3)
-    }
-    projCache.clear()
-    arraysCache.values.forEach { e =>
-      org.apache.spark.sql.graft.SparkInternals.releaseCheckpointBlocks(e._2)
-    }
-    arraysCache.clear()
+    (supSize, common)
   }
 
   /** Jaccard ranking over an already-built (supSize, common) pair —

@@ -167,12 +167,6 @@ object StreamingOps {
       .select($"window", explode($"sketch").as(Seq("item", "est_count")))
   }
 
-  /** Streaming ingest into the hash-dedup incremental store: each
-    * micro-batch lands via IncrementalIngest.appendBatch, so replayed or
-    * cross-batch duplicate content is dropped exactly as in the reference's
-    * re-run semantics — but continuously. foreachBatch gives the batch id
-    * for the deterministic store filename.
-    */
   /** Audit-then-admit landing for one micro-batch (verdict r16 #5): run
     * `Relational.admissionAudit` over the batch, dead-letter the
     * violating rows to `<storeDir>_dlq/<bid>.parquet` (with their
@@ -203,6 +197,12 @@ object StreamingOps {
     (n, nBad)
   }
 
+  /** Streaming ingest into the hash-dedup incremental store: each
+    * micro-batch lands via IncrementalIngest.appendBatch, so replayed or
+    * cross-batch duplicate content is dropped exactly as in the reference's
+    * re-run semantics — but continuously. foreachBatch gives the batch id
+    * for the deterministic store filename.
+    */
   def ingestStream(docs: DataFrame, storeDir: String,
       queryName: String = "graft_ingest",
       checkpointDir: Option[String] = None,
@@ -399,8 +399,8 @@ object StreamingOps {
     * replayed batch's segments match themselves in the index or pending
     * buffer → replayed docs gate out, never double-keep) and
     * at-least-once growth whose duplicate rows segmentDelta tolerates.
-    */
-  /** Index growth is DEFERRED exactly as in [[dedupStream]] (r16): kept
+    *
+    * Index growth is DEFERRED exactly as in [[dedupStream]] (r16): kept
     * docs' fused meta rows (ord, h, h2, sh — the same one-tokenization
     * frame the probe used) buffer in
     * `<storeDir>_idx_pending/<bid>.parquet` and fold into the three
@@ -573,8 +573,8 @@ object StreamingOps {
     * id; a replay after partial failure re-appends, leaving at worst
     * duplicate index rows that semanticDelta collapses; probe-before-grow
     * gates a replayed batch's vectors against themselves.
-    */
-  /** `planes` MUST match the value the index was written with — a
+    *
+    * `planes` MUST match the value the index was written with — a
     * mismatched plane count produces signatures from a different bit
     * space that silently never match (near-zero recall, no error). The
     * default 0 resolves it from the index's own `_vecmeta` sidecar

@@ -21,9 +21,9 @@ object SparkInternals {
     * `Dataset.localCheckpoint` wraps the materialized RDD in a
     * `LogicalRDD`; those blocks are otherwise released only when the
     * ContextCleaner GCs the RDD reference — which a long-lived memo
-    * (Graph.projectionTables) defeats by design. Replaced memo entries
-    * call this so a dir-fingerprint refresh doesn't strand the old
-    * corpus's blocks.
+    * (the `graft.CacheHygiene.memo` registry) defeats by design. The
+    * registry calls this on a replaced entry so a dir-fingerprint refresh
+    * doesn't strand the old corpus's blocks.
     */
   def releaseCheckpointBlocks(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
@@ -34,7 +34,7 @@ object SparkInternals {
     }
 
   /** RDD ids of every `LogicalRDD` (= localCheckpoint materialization) in
-    * a frame's analyzed plan — how the memo caches declare which
+    * a frame's analyzed plan — how the memo registry declares which
     * checkpoint blocks are PINNED (meant to outlive the query that built
     * them) to [[freeTransientCheckpoints]].
     */
@@ -52,7 +52,7 @@ object SparkInternals {
     * stacks another generation of dead blocks and later suite neighbors
     * time eviction churn instead of their own work. Harness-side hygiene
     * for the points where nothing is in flight (between bench reps /
-    * verify queries): free everything the memo caches did not pin.
+    * verify queries): free everything the memo registry did not pin.
     * NOT for sessions with concurrent workloads — a co-resident stream's
     * mid-batch persists would be swept too.
     */

@@ -19,7 +19,7 @@ class CacheHygieneSpec extends SparkSpec {
   test("freeTransient drops consume-once checkpoints but pins memo tables") {
     // a memo entry: d07's cluster table (localCheckpoint, cross-query)
     operators.Dedup.clusterTable(spark, sf).count()
-    val memoIds = operators.Dedup.memoCheckpointRddIds
+    val memoIds = CacheHygiene.memoCheckpointRddIds
     assert(memoIds.nonEmpty, "cluster memo must hold checkpoint blocks")
     // a consume-once checkpoint, fully drained
     val transient = Tables.documents(spark, sf)
@@ -33,6 +33,25 @@ class CacheHygieneSpec extends SparkSpec {
     assert(operators.Dedup.clusterTable(spark, sf).count() > 0)
     // and the sweep is idempotent once nothing transient is resident
     assert(CacheHygiene.freeTransient(spark) == 0)
+  }
+
+  test("freeTransient pins Graph's projection and arrays memos too") {
+    val (supSize, common) = operators.Graph.projectionTables(spark, sf)
+    val arrays = operators.Graph.tradeArraysTable(spark, sf)
+    val graphIds = Seq(supSize, common, arrays)
+      .flatMap(org.apache.spark.sql.graft.SparkInternals.checkpointRddIds).toSet
+    assert(graphIds.size == 3, s"one checkpoint per memo frame: $graphIds")
+    assert(graphIds.subsetOf(CacheHygiene.memoCheckpointRddIds))
+    val transient = Tables.orders(spark, sf)
+      .select($"o_orderkey").limit(100).localCheckpoint(true)
+    transient.count()
+    assert(CacheHygiene.freeTransient(spark) >= 1)
+    assert(graphIds.subsetOf(residentIds),
+      "graph memo checkpoint blocks must survive the sweep")
+    // servable after the sweep, and still the same entries
+    assert(common.count() > 0 && supSize.count() > 0 && arrays.count() > 0)
+    assert(operators.Graph.tradeArraysTable(spark, sf) eq arrays)
+    assert(operators.Graph.projectionTables(spark, sf)._2 eq common)
   }
 
   test("a caller-held checkpoint dies under the sweep unless pinned via " +

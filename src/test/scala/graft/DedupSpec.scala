@@ -198,7 +198,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("d07 and d09 share ONE materialized cluster table per (session, dir)") {
-    Dedup.clearClusterCache()
+    CacheHygiene.clearMemos()
     // First call computes CC and runs Spark jobs; the second is a pure
     // map lookup returning the SAME materialized frame — so d07 and d09
     // (both built on clusterTable) execute the iterative CC exactly once.
@@ -667,7 +667,7 @@ class DedupSpec extends SparkSpec {
       .select($"doc_id").as[Long].collect().toSet
     assert(ids1 == Set(1L, 2L), s"corpus-1 cluster members: $ids1")
     // corpus rewritten IN PLACE (same dir string, same session) with
-    // different docs: the memo must notice — NO clearClusterCache() call.
+    // different docs: the memo must notice — NO clearMemos() call.
     write(Seq(10L -> base, 11L -> nearDup))
     val ids2 = Dedup.clusterTable(spark, dir)
       .select($"doc_id").as[Long].collect().toSet
@@ -677,6 +677,24 @@ class DedupSpec extends SparkSpec {
     val again = Dedup.clusterTable(spark, dir)
     val again2 = Dedup.clusterTable(spark, dir)
     assert(again eq again2, "unchanged corpus must still hit the memo")
+  }
+
+  test("a corpus rewrite releases the replaced cluster table's checkpoint blocks") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-release").toString
+    def write(rows: Seq[(Long, String)]): Unit =
+      rows.toDF("doc_id", "text").repartition(1)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def resident: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val si = org.apache.spark.sql.graft.SparkInternals
+    write(Seq(1L -> base, 2L -> nearDup, 3L -> unrelated))
+    val oldIds = si.checkpointRddIds(Dedup.clusterTable(spark, dir)).toSet
+    assert(oldIds.nonEmpty && oldIds.subsetOf(resident),
+      s"the cluster table must hold resident checkpoint blocks: $oldIds")
+    write(Seq(10L -> base, 11L -> nearDup))
+    val newIds = si.checkpointRddIds(Dedup.clusterTable(spark, dir)).toSet
+    assert(newIds.nonEmpty && newIds.subsetOf(resident))
+    assert((oldIds & resident).isEmpty,
+      s"the replaced entry's blocks are still resident: ${oldIds & resident}")
   }
 
   test("d16 bloom decontamination is bit-identical to the exact semi-join") {

@@ -162,6 +162,48 @@ class GraphSpec extends SparkSpec {
       s"g02b bounded-set convention: ${sketch((100L, 101L))}")
   }
 
+  test("g02 then g03 build the projection once; an in-place rewrite rebuilds it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-proj").toString
+    def writeOrders(keep: org.apache.spark.sql.Column): Unit =
+      Tables.orders(spark, sf).filter(keep)
+        .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    Tables.lineitem(spark, sf).write.parquet(s"$dir/lineitem.parquet")
+    writeOrders(lit(true))
+    def builds: Long = CacheHygiene.memoCounts._2
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def drain(): Unit = org.apache.spark.sql.graft.SparkInternals
+      .drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val b0 = builds
+      operators.Graph.copurchase(spark, dir).collect()
+      assert(builds == b0 + 2, "g02 builds the arrays and the projection")
+      operators.Graph.triangles(spark, dir).collect()
+      assert(builds == b0 + 2, "g03 must reuse g02's projection")
+      val first = operators.Graph.projectionTables(spark, dir)
+      drain()
+      val jobs0 = jobs.get()
+      val second = operators.Graph.projectionTables(spark, dir)
+      drain()
+      assert(jobs.get() == jobs0, "a memo hit must run zero Spark jobs")
+      assert((second._1 eq first._1) && (second._2 eq first._2),
+        "a memo hit must return the same frames")
+      val before = first._2.collect().toSet
+      writeOrders($"o_orderkey" % 2 === 0)
+      val rebuilt = operators.Graph.projectionTables(spark, dir)
+      assert(builds == b0 + 4, "the rewrite rebuilds the arrays and the projection")
+      val after = rebuilt._2.collect().toSet
+      assert(after != before, "the rebuilt projection must read the new orders")
+      assert(after == operators.Graph.projectionCommon(
+        operators.Graph.tradePairsRaw(spark, dir), 64, 2).collect().toSet)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("registry graph queries leave no cached frames behind (r14 #3)") {
     for ((name, fn) <- operators.Graph.queries.toSeq.sortBy(_._1)) {
       spark.catalog.clearCache()

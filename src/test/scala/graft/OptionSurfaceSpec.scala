@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The environment variables graft reads are a fixed list. A Spark conf
   * A/B arm is a `-Dspark.*` flag (a `spark.*` JVM system property wins
   * over `GraftSession`'s default), so a new env read has to be added to
-  * this list on purpose.
+  * this list on purpose. Likewise, cross-query memos live in one
+  * registry (`CacheHygiene.memo`), so a private memo map fails here.
   */
 class OptionSurfaceSpec extends AnyFunSuite {
 
@@ -35,5 +36,17 @@ class OptionSurfaceSpec extends AnyFunSuite {
       names
     }
     assert(reads.flatten.toSet == allowed)
+  }
+
+  test("only the CacheHygiene memo registry declares a ConcurrentHashMap") {
+    val files = sources(new java.io.File("src/main/scala"))
+    assert(files.nonEmpty, "run from the repository root")
+    val declaring = files.filter { f =>
+      f.getName != "CacheHygiene.scala" &&
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+          .contains("ConcurrentHashMap")
+    }.map(_.getPath)
+    assert(declaring.isEmpty,
+      s"a memo outside CacheHygiene's registry: ${declaring.mkString(", ")}")
   }
 }
