@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
+import scala.util.control.NonFatal
 
 /** Deduplication family (SURVEY.md §2 d01–d05): the operators a
   * training-data pipeline runs over a 100 TB document corpus.
@@ -1087,7 +1088,7 @@ object Dedup {
     // reps timed eviction churn (d11b read 38–66 s in-suite vs ~17 s
     // isolated across three rounds of artifacts). Eagerly checkpointing
     // the pair-sized verdict lets the operator free its own cache before
-    // returning — same contract as segmentNeardupFullHandle.
+    // returning — same contract as segmentNeardupFullOf.
     val probed = semanticProbed(s, dir,
       resolvePlanes(s, dir, planes, maxBucket), dim, nprobe)
     val out = SelfClean.checkpoint(
@@ -1575,7 +1576,10 @@ object Dedup {
     * segment key carries 16-byte hashes; the keeper choice is a
     * partial-aggregatable min, and the keeper join reuses the same key
     * (no second shuffle layout). The segment frame is persisted because
-    * the agg and the join-back both read it (the t18 lesson).
+    * the agg and the join-back both read it (the t18 lesson). Unlike the
+    * other span-dedup entry points this one does not release that
+    * persist itself: its result is lazy, so the caller clears it
+    * (Bench/Verify `clearCache()`).
     */
   def segmentDedup(s: SparkSession, dir: String, width: Int = 10): DataFrame =
     segmentDedupOf(Tables.documents(s, dir), width)
@@ -1584,12 +1588,7 @@ object Dedup {
   def segmentDedupOf(documents: DataFrame, width: Int): DataFrame = {
     val s = documents.sparkSession
     import s.implicits._
-    val segs = documents
-      .select($"doc_id", split($"text", " ").as("toks"))
-      .select($"doc_id", posexplode(transform(
-        sequence(lit(0),
-          floor((size($"toks") + lit(width - 1)) / lit(width)).cast("int") - 1),
-        i => array_join(slice($"toks", i * width + 1, lit(width)), " "))))
+    val segs = segmentFrame(documents, width)
       // The digest stays the 32-char HEX string here, measured, not
       // assumed: the d19 family's unhex(md5(...)) rewrite was A/B'd on
       // this operator too and shuffled MORE (15.0 → 21.9 MB at sf1) —
@@ -1597,10 +1596,9 @@ object Dedup {
       // compresses it ~2× back to digest entropy, while 16-byte binary
       // (24 B in the UnsafeRow with its offset word) is incompressible.
       // Which representation wins depends on the query's dominant
-      // exchange; d19/q07 measured the other way (Dedup.scala fastGrams
+      // exchange; d19/q07 measured the other way (Dedup.scala md5Grams
       // note), this one keeps hex.
-      .select($"doc_id", md5($"col").as("h"),
-        (shiftleft($"doc_id", 32) + $"pos").as("ord"))
+      .select($"doc_id", md5($"seg").as("h"), $"ord")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keepers = segs.groupBy($"h").agg(min($"ord").as("keeper"))
     segs.join(keepers, "h")
@@ -1674,37 +1672,9 @@ object Dedup {
     substringDedupOf(Tables.documents(s, dir), k)
 
   /** Core of [[substringDedup]] over any (doc_id, text) frame. */
-  def substringDedupOf(documents: DataFrame, k: Int = 20): DataFrame = {
-    val s = documents.sparkSession
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    // null text → empty doc, not a null-propagating row (a scraped
-    // corpus always carries some)
-    val toks = documents
-      .select($"doc_id", split(coalesce($"text", lit("")), " ").as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val grams = toks
-      .filter(size($"toks") >= k)
-      .select($"doc_id", posexplode(transform(
-        sequence(lit(0), (size($"toks") - lit(k)).cast("int")),
-        // 16-byte binary digest, not the 32-char hex: `h` is internal
-        // (keeper choice + flag join only — never output), and this
-        // ~n_tokens-row frame shuffles twice. Measured, not assumed
-        // (lz4 compresses low-entropy hex ~2×, so the win isn't the
-        // naive 2×): 214.7 → 157.4 shuffle MB at sf1, −27%. The same
-        // rewrite LOST on d13 (see segmentDedupOf), which keeps hex.
-        i => unhex(md5(array_join(slice($"toks", i + 1, lit(k)), " "))))))
-      .select($"doc_id", $"pos", $"col".as("h"))
-    val keepers = grams.groupBy($"h")
-      .agg(min(shiftleft($"doc_id", 32) + $"pos").as("keeper"),
-        count(lit(1)).as("n"))
-      .filter($"n" >= 2)
-      .select($"h", $"keeper")
-    val flagged = grams.join(keepers, Seq("h"))
-      .filter(shiftleft($"doc_id", 32) + $"pos" =!= $"keeper")
-      .select($"doc_id", $"pos")
-    substringCleanFromFlagged(toks, flagged, k)
-  }
+  def substringDedupOf(documents: DataFrame, k: Int = 20): DataFrame =
+    substringCleanFromFlagged(documents,
+      substringFlagged(md5Grams(documents, k), Seq("h")), k)
 
   /** d19b: [[substringDedupOf]]'s production form — positional k-gram
     * fingerprints by POLYNOMIAL ROLLING HASH (RollingKgramHashes, a
@@ -1721,14 +1691,37 @@ object Dedup {
     substringDedupFastOf(Tables.documents(s, dir), k)
 
   /** Core of [[substringDedupFast]] over any (doc_id, text) frame. */
-  def substringDedupFastOf(documents: DataFrame, k: Int = 20): DataFrame = {
+  def substringDedupFastOf(documents: DataFrame, k: Int = 20): DataFrame =
+    substringCleanFromFlagged(documents,
+      substringFlagged(fastGrams(documents, k), FastGramKey), k)
+
+  /** The substring family's token array: null text is an empty doc, not
+    * a null-propagating row (a scraped corpus always carries some).
+    */
+  private def spanTokens(text: Column): Column =
+    split(coalesce(text, lit("")), " ")
+
+  /** d19's positional md5 gram frame (doc_id, pos, h). Docs shorter
+    * than k have no gram.
+    */
+  private def md5Grams(documents: DataFrame, k: Int): DataFrame = {
     val s = documents.sparkSession
     import s.implicits._
-    val toks = documents
-      .select($"doc_id", split(coalesce($"text", lit("")), " ").as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    substringCleanFromFlagged(toks, fastFlagged(fastGrams(documents, k)), k)
+    documents.select($"doc_id", spanTokens($"text").as("toks"))
+      .filter(size($"toks") >= k)
+      .select($"doc_id", posexplode(transform(
+        sequence(lit(0), (size($"toks") - lit(k)).cast("int")),
+        // 16-byte binary digest, not the 32-char hex: `h` is internal
+        // (keeper choice + flag join only — never output), and this
+        // ~n_tokens-row frame shuffles twice. Measured, not assumed
+        // (lz4 compresses low-entropy hex ~2×, so the win isn't the
+        // naive 2×): 214.7 → 157.4 shuffle MB at sf1, −27%. The same
+        // rewrite LOST on d13 (see segmentDedupOf), which keeps hex.
+        i => unhex(md5(array_join(slice($"toks", i + 1, lit(k)), " "))))))
+      .select($"doc_id", $"pos", $"col".as("h"))
   }
+
+  private val FastGramKey = Seq("h1", "h2")
 
   /** Positional rolling-fingerprint frame (doc_id, pos, h1, h2) of the
     * fast substring family — two independent 64-bit families paired
@@ -1749,19 +1742,20 @@ object Dedup {
   }
 
   /** Non-keeper occurrences of shared grams: (doc_id, pos) windows to
-    * remove. One partial-agg shuffle (min-ord + count per gram — a hot
+    * remove. `key` names the gram columns (`h` for d19, `h1, h2` for
+    * d19b). One partial-agg shuffle (min-ord + count per gram — a hot
     * verbatim gram's million occurrences partial-aggregate map-side,
     * never a hot reducer) and one join back.
     */
-  private def fastFlagged(grams: DataFrame): DataFrame = {
+  private def substringFlagged(grams: DataFrame, key: Seq[String]): DataFrame = {
     val s = grams.sparkSession
     import s.implicits._
-    val keepers = grams.groupBy($"h1", $"h2")
+    val keepers = grams.groupBy(key.map(col): _*)
       .agg(min(shiftleft($"doc_id", 32) + $"pos").as("keeper"),
         count(lit(1)).as("n"))
       .filter($"n" >= 2)
-      .select($"h1", $"h2", $"keeper")
-    grams.join(keepers, Seq("h1", "h2"))
+      .select((key :+ "keeper").map(col): _*)
+    grams.join(keepers, key)
       .filter(shiftleft($"doc_id", 32) + $"pos" =!= $"keeper")
       .select($"doc_id", $"pos")
   }
@@ -1772,21 +1766,12 @@ object Dedup {
     * substring stage), where the caller wants the text back, not the
     * audit digest.
     */
-  def substringRewriteOf(documents: DataFrame, k: Int = 20): DataFrame =
-    substringRewriteHandle(documents, k)._1
-
-  /** [[substringRewriteOf]] plus its persisted token frame (the
-    * minhashPairsHandle contract for pipeline embedding).
-    */
-  def substringRewriteHandle(documents: DataFrame,
-      k: Int = 20): (DataFrame, DataFrame) = {
+  def substringRewriteOf(documents: DataFrame, k: Int = 20): DataFrame = {
     val s = documents.sparkSession
     import s.implicits._
-    val toks = documents
-      .select($"doc_id", split(coalesce($"text", lit("")), " ").as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (substringCleanCore(toks, fastFlagged(fastGrams(documents, k)), k)
-      .select($"doc_id", $"cleaned"), toks)
+    substringCleanCore(documents,
+      substringFlagged(fastGrams(documents, k), FastGramKey), k)
+      .select($"doc_id", $"cleaned")
   }
 
   /** Materialize the gram store for [[substringRewriteDelta]] probes:
@@ -1794,13 +1779,18 @@ object Dedup {
     * semi-join lands on the stored layout without an exchange. Distinct
     * is enough — a delta gram matching ANY corpus occurrence is a later
     * copy by construction (corpus ords precede the delta's).
+    *
+    * `mode = Append` grows the store with a later batch's grams
+    * (duplicates are harmless — the probe is a semi-join).
     */
   def writeSubstringIndex(documents: DataFrame, table: String,
-      k: Int = 20, buckets: Int = 8): Unit = {
+      k: Int = 20, buckets: Int = 8,
+      mode: org.apache.spark.sql.SaveMode =
+        org.apache.spark.sql.SaveMode.Overwrite): Unit = {
     val s = documents.sparkSession
     import s.implicits._
     fastGrams(documents, k).select($"h1", $"h2").distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .write.mode(mode)
       .bucketBy(buckets, "h1", "h2").sortBy("h1", "h2")
       .format("parquet").saveAsTable(s"${table}_grams")
   }
@@ -1814,27 +1804,24 @@ object Dedup {
       delta: DataFrame, k: Int = 20): DataFrame = {
     import spark.implicits._
     indexRecoverAndRefresh(spark, table, Seq("_grams"))
-    val toks = delta
-      .select($"doc_id", split(coalesce($"text", lit("")), " ").as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val grams = fastGrams(delta, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stored = grams
-      .join(spark.table(s"${table}_grams"), Seq("h1", "h2"), "left_semi")
+      .join(spark.table(s"${table}_grams"), FastGramKey, "left_semi")
       .select($"doc_id", $"pos")
-    val flagged = stored.unionByName(fastFlagged(grams)).distinct()
+    val flagged = stored.unionByName(substringFlagged(grams, FastGramKey))
+      .distinct()
     // Eager localCheckpoint: materializes the result HERE, while the grams
     // persist is serving its two consumers (stored-index probe +
-    // fastFlagged) — an unpersist before a lazy return would silently
+    // substringFlagged) — an unpersist before a lazy return would silently
     // recompute the scan and both rolling-hash passes. It also makes the
-    // function self-cleaning (both internal persists freed on return), so
+    // function self-cleaning (its one internal persist freed on return), so
     // streaming callers (substringDedupStream) don't leak one cached frame
     // per micro-batch. Delta-sized, so the checkpoint write is O(delta).
-    val out = substringCleanCore(toks, flagged, k)
+    val out = substringCleanCore(delta, flagged, k)
       .select($"doc_id", $"cleaned")
       .localCheckpoint()
     grams.unpersist()
-    toks.unpersist()
     out
   }
 
@@ -1864,22 +1851,9 @@ object Dedup {
     top.join(documents.select($"doc_id".as("keeper_doc"), $"text"),
         Seq("keeper_doc"))
       .select($"n_occurrences", $"keeper_doc", $"keeper_pos",
-        array_join(slice(split(coalesce($"text", lit("")), " "),
+        array_join(slice(spanTokens($"text"),
           ($"keeper_pos" + 1).cast("int"), lit(k)), " ").as("span_text"))
       .orderBy($"n_occurrences".desc, $"keeper_doc", $"keeper_pos")
-  }
-
-  /** Grow a [[writeSubstringIndex]] store with a batch's grams
-    * (duplicates are harmless — the probe is a semi-join).
-    */
-  def appendSubstringIndex(documents: DataFrame, table: String,
-      k: Int = 20, buckets: Int = 8): Unit = {
-    val s = documents.sparkSession
-    import s.implicits._
-    fastGrams(documents, k).select($"h1", $"h2").distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(buckets, "h1", "h2").sortBy("h1", "h2")
-      .format("parquet").saveAsTable(s"${table}_grams")
   }
 
   /** Shared tail of the substring-dedup family: merge flagged k-windows
@@ -1887,11 +1861,11 @@ object Dedup {
     * covered token positions, rebuild the cleaned text, emit per-doc
     * stats + cleaned digest.
     */
-  private def substringCleanFromFlagged(toks: DataFrame, flagged: DataFrame,
-      k: Int): DataFrame = {
-    val s = toks.sparkSession
+  private def substringCleanFromFlagged(documents: DataFrame,
+      flagged: DataFrame, k: Int): DataFrame = {
+    val s = documents.sparkSession
     import s.implicits._
-    substringCleanCore(toks, flagged, k)
+    substringCleanCore(documents, flagged, k)
       .select($"doc_id", $"n_tokens", $"n_spans", $"n_removed",
         md5($"cleaned").as("cleaned_digest"))
       .orderBy($"doc_id")
@@ -1913,10 +1887,13 @@ object Dedup {
     * walk row-identical to the composed rebuild (hostile spans: doc
     * fully covered, adjacent/merged islands, span at both ends), and
     * d19's DuckDB oracle hash-checks the digests end-to-end.
+    *
+    * The token frame is split from `documents` here, not persisted:
+    * the grams read `documents` too, so this join is its only reader.
     */
-  private def substringCleanCore(toks: DataFrame, flagged: DataFrame,
+  private def substringCleanCore(documents: DataFrame, flagged: DataFrame,
       k: Int): DataFrame = {
-    val s = toks.sparkSession
+    val s = documents.sparkSession
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val byPos = Window.partitionBy($"doc_id").orderBy($"pos")
@@ -1934,7 +1911,8 @@ object Dedup {
       .agg(count(lit(1)).as("n_spans"), sum($"e" - $"s").as("n_removed"),
         sort_array(collect_list(struct($"s".cast("int").as("s"),
           $"e".cast("int").as("e")))).as("spans"))
-    toks.join(spanAgg, Seq("doc_id"), "left")
+    documents.select($"doc_id", spanTokens($"text").as("toks"))
+      .join(spanAgg, Seq("doc_id"), "left")
       .select($"doc_id", size($"toks").cast("long").as("n_tokens"),
         coalesce($"n_spans", lit(0L)).as("n_spans"),
         coalesce($"n_removed", lit(0L)).as("n_removed"),
@@ -2000,9 +1978,9 @@ object Dedup {
     * (bounds: doc_id < 2^31, < 2^32 segments/doc — ~40B tokens at
     * width 10, far past any real document; the previous 1e6 base
     * overflowed into the next doc's ord space at ~10M tokens). Shared
-    * by both segment near-dup forms. NOT persisted here — each caller
-    * caches exactly the projection it re-reads (d18 the full frame,
-    * d18b a text-free digest frame).
+    * by d13 and d18 (d18b segments through [[segmentHashFrame]]). NOT
+    * persisted here — each caller caches exactly the projection it
+    * re-reads (d13 its digest frame, d18 the full frame).
     */
   private def segmentFrame(documents: DataFrame, width: Int): DataFrame = {
     val s = documents.sparkSession
@@ -2094,7 +2072,6 @@ object Dedup {
       .withColumn("uni", size($"sha") + size($"shb") - $"inter")
       .filter($"uni" > 0 && $"inter" * lit(1.0) / $"uni" >= minJaccard)
       .select($"ord_b".as("ord")).distinct()
-      .withColumn("is_dup", lit(1L))
     segmentNeardupRollup(segs, dupSegs)
   }
 
@@ -2134,55 +2111,56 @@ object Dedup {
     segmentNeardupFullOf(Tables.documents(s, dir), width, bands, rows,
       maxBucket, minJaccard)
 
-  /** Core of [[segmentNeardupFull]] over any (doc_id, text) frame.
+  /** Core of [[segmentNeardupFull]] over any (doc_id, text) frame; p07's
+    * segment stage calls it too.
     *
     * Self-cleaning (the minhashPairsAdaptive contract, r16): the per-doc
-    * rollup is doc-count-sized — materialize it eagerly and release the
-    * two segment-sized caches (meta + keeper aggregate) immediately,
-    * instead of leaving them to the caller's session hygiene. Without
-    * this, back-to-back runs (bench reps, notebook re-evaluation) stack
-    * corpus-sized cache generations and the later runs time eviction
-    * churn, not the operator (the r15 d19b lesson — isolated 13 s vs
-    * 50 s on the third stacked rep). Composed pipelines that want the
-    * lazy form use [[segmentNeardupFullHandle]] and own the lifecycle.
+    * rollup is doc-count-sized — it is materialized eagerly and the two
+    * segment-sized caches (meta + keeper aggregate) are released before
+    * returning, instead of being left to the caller's session hygiene.
+    * Without this, back-to-back runs (bench reps, notebook
+    * re-evaluation) stack corpus-sized cache generations and the later
+    * runs time eviction churn, not the operator (the r15 d19b lesson —
+    * isolated 13 s vs 50 s on the third stacked rep).
     */
   def segmentNeardupFullOf(documents: DataFrame, width: Int = 10,
       bands: Int = 16, rows: Int = 4, maxBucket: Int = 64,
-      minJaccard: Double = 0.5): DataFrame = {
-    val (rollup, caches) = segmentNeardupFullHandle(documents, width,
+      minJaccard: Double = 0.5): DataFrame =
+    segmentRollupCore(documents.sparkSession, documents, None, width,
       bands, rows, maxBucket, minJaccard)
-    val out = SelfClean.checkpoint(rollup)
-    caches.foreach(_.unpersist())
-    out
-  }
 
-  /** [[segmentNeardupFullOf]] plus its persisted internals (digest meta
-    * frame + the keeper-segment shingle cache) — the minhashPairsHandle
-    * contract, so p07 can free the stage's caches once its verdict is
-    * materialized.
+  /** The segment family's one batch/delta core. ONE tokenization pass
+    * ([[segmentHashFrame]]) yields, per segment, BOTH the exact-stage
+    * digest and the banding/verify shingle hashes, and that frame is
+    * the only corpus-sized cache. Dup ords are the within-batch set
+    * ([[segmentDupOrdsFromHashes]]) plus, with `table`, the ords that
+    * match a [[writeSegmentIndex]] store
+    * ([[segmentDeltaOrdsFromMeta]]) — unioned BEFORE one rollup so a
+    * segment dup'd both ways counts once. The doc-sized rollup is
+    * checkpointed and both caches are released before returning.
+    *
+    * The exact digest is the PAIR (h, h2) of independent-seed xxhash64s
+    * — 128 collision bits, matching the md5 contract it replaced (the
+    * d19b two-family discipline; ADVICE r14) — and the shingle hashes
+    * are value-identical to the old keeper-side word_shingle_hashes,
+    * so banding, bucket caps, and the Jaccard verify reproduce the
+    * previous pair set bit-for-bit.
     */
-  def segmentNeardupFullHandle(documents: DataFrame, width: Int = 10,
-      bands: Int = 16, rows: Int = 4, maxBucket: Int = 64,
-      minJaccard: Double = 0.5): (DataFrame, Seq[DataFrame]) = {
-    val s = documents.sparkSession
-    import s.implicits._
-    // ONE tokenization pass (SegmentShingleHashes) yields, per segment,
-    // BOTH the exact-stage digest and the banding/verify shingle hashes
-    // — the former shape segmented the corpus twice (a digest pass and a
-    // keeper-text pass) and paid per-segment md5 string work; this frame
-    // is the only corpus-sized cache and holds nothing but hashes.
-    // The exact digest is the PAIR (h, h2) of independent-seed xxhash64s
-    // — 128 collision bits, matching the md5 contract it replaced (the
-    // d19b two-family discipline; ADVICE r14) — and the shingle hashes
-    // are value-identical to the old keeper-side word_shingle_hashes,
-    // so banding, bucket caps, and the Jaccard verify reproduce the
-    // previous pair set bit-for-bit.
+  private def segmentRollupCore(spark: SparkSession, documents: DataFrame,
+      table: Option[String], width: Int, bands: Int, rows: Int,
+      maxBucket: Int, minJaccard: Double): DataFrame = {
+    import spark.implicits._
     val meta = segmentHashFrame(documents.select($"doc_id", $"text"), width)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (ords, keeperCache) = segmentDupOrdsFromHashes(meta, bands, rows,
+    val (within, keeperAgg) = segmentDupOrdsFromHashes(meta, bands, rows,
       maxBucket, minJaccard)
-    (segmentNeardupRollup(meta, ords.withColumn("is_dup", lit(1L))),
-      Seq(meta, keeperCache))
+    val ords = table.fold(within)(t => within.unionByName(
+      segmentDeltaOrdsFromMeta(spark, t, meta, bands, rows, minJaccard))
+      .distinct())
+    val out = SelfClean.checkpoint(segmentNeardupRollup(meta, ords))
+    keeperAgg.unpersist()
+    meta.unpersist()
+    out
   }
 
   /** d13's segmentation fused to hashes: (doc_id, ord, h, sh) — one row
@@ -2217,6 +2195,20 @@ object Dedup {
         $"col.h".as("h"), $"col.h2".as("h2"), $"col.sh".as("sh"))
   }
 
+  /** Each (h, h2) digest's first occurrence in a [[segmentHashFrame]]:
+    * (h, h2, ord, sh) with ord = min(ord) and sh that row's shingles
+    * (ord is unique per row, so min_by is deterministic). The one
+    * keeper rule of the segment family — batch flagging, the
+    * dropped-bucket diagnostic, and the stored index's write and growth
+    * all select keepers through it.
+    */
+  private def segmentKeepers(meta: DataFrame): DataFrame = {
+    val s = meta.sparkSession
+    import s.implicits._
+    meta.groupBy($"h", $"h2")
+      .agg(min($"ord").as("ord"), min_by($"sh", $"ord").as("sh"))
+  }
+
   /** The flagged (ord) set over a persisted [[segmentHashFrame]]:
     * exact-stage later occurrences (same digest as an earlier segment)
     * plus near-dup later keepers from the minhash band/verify pipeline
@@ -2233,15 +2225,13 @@ object Dedup {
     //
     // ONE (h, h2) exchange settles the whole exact stage (r16): min_by
     // carries each digest's first-occurrence shingles through the
-    // keeper aggregation (ord is unique per row, so min_by is
-    // deterministic), and exact dups fall out of a join against the
+    // keeper aggregation, and exact dups fall out of a join against the
     // persisted keeper frame — replacing keeper-groupBy + ord-anti-join
     // + keeper-ord-join, three meta exchanges. The r15 A/B (CHANGELOG.md)
     // rejected this at ~1.5 s inside the stage's old noise band; the
     // r16 waterfall re-priced the three-exchange form at 5.5 s vs 3.5 s
     // once the banding leg stopped dominating, so it lands now.
-    val keeperAgg = meta.groupBy($"h", $"h2")
-      .agg(min($"ord").as("ord"), min_by($"sh", $"ord").as("sh"))
+    val keeperAgg = segmentKeepers(meta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keepers = keeperAgg.select($"ord".as("doc_id"), $"sh")
     val exactDups = meta.select($"ord", $"h", $"h2")
@@ -2278,9 +2268,7 @@ object Dedup {
     // keeper selection, same banding family as the stage itself.
     val meta = segmentHashFrame(
       Tables.documents(s, dir).select($"doc_id", $"text"), width)
-    val keepers = meta.groupBy($"h", $"h2")
-      .agg(min($"ord").as("doc_id"), min_by($"sh", $"ord").as("sh"))
-      .select($"doc_id", $"sh")
+    val keepers = segmentKeepers(meta).select($"ord".as("doc_id"), $"sh")
     minhashBandedFrom(keepers.filter(size($"sh") > 0), bands, rows)
       .groupBy($"band", $"band_hash")
       .agg(count(lit(1)).as("bucket_n"))
@@ -2839,11 +2827,11 @@ object Dedup {
       maxBucket: Int = 64): Unit = {
     val s = documents.sparkSession
     import s.implicits._
-    val meta = segmentHashFrame(documents.select($"doc_id", $"text"), width)
+    // persisted: the digest write and the three band/shingle reads all
+    // scan the keepers
+    val keepers = segmentKeepers(
+        segmentHashFrame(documents.select($"doc_id", $"text"), width))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keepers = meta.join(
-      meta.groupBy($"h", $"h2").agg(min($"ord").as("ord")).select($"ord"),
-      Seq("ord"))
     keepers.select($"h", $"h2")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .bucketBy(buckets, "h").sortBy("h")
@@ -2851,33 +2839,31 @@ object Dedup {
     writeDedupIndexFromShingles(
       keepers.select($"ord".as("doc_id"), $"sh"),
       table, buckets, bands, rows, maxBucket)
-    meta.unpersist()
+    keepers.unpersist()
     ()
   }
 
   /** Probe a delta batch of documents against a [[writeSegmentIndex]]
-    * keeper store: each delta segment is a dup if its digest is stored
-    * (exact) or [[dedupDelta]] finds a stored keeper at ≥ `minJaccard`
-    * (edited); the per-doc rollup is d18b's
-    * (doc_id, n_seg, n_fuzzy_dup, kept_ratio) contract, computed
-    * O(delta) — the corpus is never rescanned, both join sides land on
-    * the stored tables' bucketed layout.
+    * keeper store — d18b's rollup for the batch, counting BOTH dup
+    * sources the batch form would see on the union corpus (stored
+    * corpus ords all precede delta ords): segments matching a stored
+    * keeper (exact digest or ≥ `minJaccard` edited, via
+    * [[segmentDeltaOrdsFromMeta]]) and within-batch later occurrences
+    * ([[segmentDupOrdsFromHashes]], d18b's own path), unioned before
+    * one (doc_id, n_seg, n_fuzzy_dup, kept_ratio) rollup so a segment
+    * dup'd both ways counts once. O(delta): the corpus is never
+    * rescanned, both join sides land on the stored tables' bucketed
+    * layout, and the batch is tokenized once.
     *
-    * Intra-batch segment dups are NOT counted here (the stored index is
-    * the reference set); run [[segmentNeardupFullOf]] inside the batch
-    * first if within-batch boilerplate matters.
+    * Self-cleaning like [[segmentNeardupFullOf]] (same core): the
+    * doc-sized rollup is materialized and the meta and keeper caches
+    * are released before returning.
     */
   def segmentDelta(spark: SparkSession, table: String, delta: DataFrame,
-      width: Int = 10, bands: Int = 16, rows: Int = 4,
-      minJaccard: Double = 0.5): DataFrame = {
-    import spark.implicits._
-    val meta = segmentHashFrame(delta.select($"doc_id", $"text"), width)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ords = segmentDeltaOrdsFromMeta(spark, table, meta, bands, rows,
-      minJaccard)
-    segmentNeardupRollup(meta.select($"doc_id", $"ord"),
-      ords.withColumn("is_dup", lit(1L)))
-  }
+      width: Int = 10, bands: Int = 16, rows: Int = 4, maxBucket: Int = 64,
+      minJaccard: Double = 0.5): DataFrame =
+    segmentRollupCore(spark, delta, Some(table), width, bands, rows,
+      maxBucket, minJaccard)
 
   /** The stored-index-matched (ord) set behind [[segmentDelta]], over a
     * persisted [[segmentHashFrame]]: exact = (h, h2) digest semi-join
@@ -2898,29 +2884,6 @@ object Dedup {
       meta.select($"ord".as("doc_id"), $"sh"), bands, rows, minJaccard)
       .select($"new_id".as("ord"))
     exact.unionByName(fuzzy).distinct()
-  }
-
-  /** d18b's rollup for a delta batch against a [[writeSegmentIndex]]
-    * store, counting BOTH dup sources the batch form would see on the
-    * union corpus (stored corpus ords all precede delta ords): segments
-    * matching a stored keeper (exact digest or ≥ `minJaccard` edited,
-    * via [[segmentDeltaOrdsFromMeta]]) and within-batch later
-    * occurrences ([[segmentDupOrdsFromHashes]] — d18b's own fused path)
-    * — unioned BEFORE one rollup so a segment dup'd both ways counts
-    * once. One tokenization pass total.
-    */
-  def segmentDeltaFull(spark: SparkSession, table: String, delta: DataFrame,
-      width: Int = 10, bands: Int = 16, rows: Int = 4, maxBucket: Int = 64,
-      minJaccard: Double = 0.5): DataFrame = {
-    import spark.implicits._
-    val meta = segmentHashFrame(delta.select($"doc_id", $"text"), width)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (within, _) = segmentDupOrdsFromHashes(meta, bands, rows,
-      maxBucket, minJaccard)
-    val stored = segmentDeltaOrdsFromMeta(spark, table, meta, bands, rows,
-      minJaccard)
-    segmentNeardupRollup(meta.select($"doc_id", $"ord"),
-      within.unionByName(stored).distinct().withColumn("is_dup", lit(1L)))
   }
 
   /** Grow a [[writeSegmentIndex]] store with a batch's NOVEL keeper
@@ -2955,9 +2918,7 @@ object Dedup {
     // append reads novel again — a cache-miss recompute after the first
     // write would see its own digests and silently append nothing.
     // Checkpointing cuts the lineage so both writes read the same rows.
-    val novel = meta
-      .join(meta.groupBy($"h", $"h2").agg(min($"ord").as("ord"))
-        .select($"ord"), Seq("ord"))
+    val novel = segmentKeepers(meta)
       .join(s.table(s"${table}_segdigests"), Seq("h", "h2"), "left_anti")
       .localCheckpoint()
     novel.select($"h", $"h2")
@@ -3033,7 +2994,7 @@ object Dedup {
     if (!spark.catalog.tableExists(t)) 12
     else try spark.table(t).head().getInt(0)
     catch {
-      case _: Throwable =>
+      case NonFatal(_) =>
         spark.catalog.refreshTable(t)
         spark.table(t).head().getInt(0)
     }

@@ -173,6 +173,71 @@ object CorpusPipeline {
         .hashed_bow_vector($"text", dim).as("v"))
   }
 
+  /** The curation DAG's stage log: each stage is materialized and
+    * counted through [[staged]], and the (stage, n_in, n_out, seconds)
+    * rows become the waterfall. Both DAG forms run through one.
+    */
+  private final class Stages(planHook: Option[(String, DataFrame) => Unit]) {
+    private val rows =
+      scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Double)]
+
+    /** p00: the input, materialized and counted (it kills nothing). */
+    def raw(df: DataFrame): (DataFrame, Long) = {
+      val t0 = System.nanoTime()
+      val p = df.localCheckpoint()
+      val n = p.count()
+      rows += (("p00_raw", n, n, (System.nanoTime() - t0) / 1e9))
+      (p, n)
+    }
+
+    // Eager localCheckpoint between stages, not persist(): each stage's
+    // lineage collapses to a materialized-RDD leaf, so (a) downstream
+    // plans — whose dedup loser sides reference the parent 2–4× — stay
+    // O(stage) instead of compounding ~3× per stage (exponential plan
+    // trees stall the driver in Catalyst/plan-string work long before any
+    // task runs), and (b) a failed stage N retry re-reads stage N-1's
+    // blocks, not the whole upstream DAG. A production run on a real
+    // cluster would make the same cut reliably (checkpoint dir or an
+    // intermediate table per stage); the count() doubles as the stage's
+    // kill-rate measurement. `df` is by name so a self-cleaning stage
+    // operator (which materializes eagerly) runs inside the stage's
+    // clock; planHook still sees the frame before it materializes.
+    def staged(name: String, nIn: Long, df: => DataFrame): (DataFrame, Long) = {
+      val t0 = System.nanoTime()
+      val frame = df
+      planHook.foreach(h => h(name, frame))
+      val p = frame.localCheckpoint()
+      val n = p.count()
+      rows += ((name, nIn, n, (System.nanoTime() - t0) / 1e9))
+      (p, n)
+    }
+
+    // stage_sec: per-stage materialization wall — the variance/runtime
+    // profile travels WITH the waterfall (VERDICT r12 #4). Additive
+    // column; the correctness row is rows-only so timing nondeterminism
+    // is fine.
+    def waterfall(s: SparkSession): DataFrame = {
+      val wf = rows.toSeq.zipWithIndex.map { case ((name, nIn, nOut, sec), i) =>
+        (i, name, nIn, nOut, nIn - nOut,
+          if (nIn == 0) 0.0
+          else math.rint((nIn - nOut).toDouble / nIn * 1e6) / 1e6,
+          math.rint(sec * 1000) / 1000)
+      }
+      s.createDataFrame(wf)
+        .toDF("stage_ord", "stage", "n_in", "n_out", "n_killed", "kill_rate",
+          "stage_sec")
+        .orderBy("stage_ord")
+    }
+  }
+
+  /** The substring stage's output: each doc with its rewritten text
+    * (`rewritten` is (doc_id, cleaned)).
+    */
+  private def withCleaned(docs: DataFrame, rewritten: DataFrame): DataFrame =
+    docs.join(rewritten, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("source"),
+        coalesce(col("cleaned"), col("text")).as("text"))
+
   /** The full curation DAG. `benchmark` is the held-out eval set the
     * decontamination stage guards (any frame with a `text` column).
     *
@@ -194,8 +259,8 @@ object CorpusPipeline {
     * SEQUENCES, not documents — and the PII row kills nothing by
     * construction (it rewrites text). Caller owns the cache lifecycle
     * (Bench/Verify clearCache() per the repo convention).
-    */
-  /** With `stateTable = Some(t)`, [[curateFull]] also persists each
+    *
+    * With `stateTable = Some(t)`, [[curateFull]] also persists each
     * dedup stage's reference state — the stage INPUTS, which is what a
     * later [[curateDelta]] must compare against to reproduce the batch
     * verdicts (a corpus doc killed by the quality gate still owned its
@@ -223,30 +288,8 @@ object CorpusPipeline {
       planHook: Option[(String, DataFrame) => Unit] = None): CurationResult = {
     val s = documents.sparkSession
     import s.implicits._
-    val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Double)]
-    // Eager localCheckpoint between stages, not persist(): each stage's
-    // lineage collapses to a materialized-RDD leaf, so (a) downstream
-    // plans — whose dedup loser sides reference the parent 2–4× — stay
-    // O(stage) instead of compounding ~3× per stage (exponential plan
-    // trees stall the driver in Catalyst/plan-string work long before any
-    // task runs), and (b) a failed stage N retry re-reads stage N-1's
-    // blocks, not the whole upstream DAG. A production run on a real
-    // cluster would make the same cut reliably (checkpoint dir or an
-    // intermediate table per stage); the count() doubles as the stage's
-    // kill-rate measurement.
-    def staged(name: String, nIn: Long, df: DataFrame): (DataFrame, Long) = {
-      planHook.foreach(h => h(name, df))
-      val t0 = System.nanoTime()
-      val p = df.localCheckpoint()
-      val n = p.count()
-      stages += ((name, nIn, n, (System.nanoTime() - t0) / 1e9))
-      (p, n)
-    }
-
-    val rawT0 = System.nanoTime()
-    val raw = documents.select($"doc_id", $"source", $"text").localCheckpoint()
-    val nRaw = raw.count()
-    stages += (("p00_raw", nRaw, nRaw, (System.nanoTime() - rawT0) / 1e9))
+    val st = new Stages(planHook)
+    val (raw, nRaw) = st.raw(documents.select($"doc_id", $"source", $"text"))
     stateTable.foreach { t =>
       raw.select(unhex(sha2($"text", 256)).as("h"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -260,7 +303,7 @@ object CorpusPipeline {
       .agg(min($"doc_id").as("doc_id"))
       .select($"doc_id")
     val (exact, nExact) =
-      staged("d01_exact", nRaw, raw.join(keeper, Seq("doc_id"), "left_semi"))
+      st.staged("d01_exact", nRaw, raw.join(keeper, Seq("doc_id"), "left_semi"))
 
     // d19 (optional): exact substring-span dedup — REWRITES text (later
     // copies of >= k-token runs removed), kills nothing itself; the
@@ -271,37 +314,27 @@ object CorpusPipeline {
       case Some(kk) =>
         stateTable.foreach(t => Dedup.writeSubstringIndex(
           exact.select($"doc_id", $"text"), s"${t}_sub", kk))
-        val (rewritten, toksCache) = Dedup
-          .substringRewriteHandle(exact.select($"doc_id", $"text"), kk)
-        val out = staged("d19_substring_dedup", nExact,
-          exact.join(rewritten, Seq("doc_id"), "left")
-            .select($"doc_id", $"source",
-              coalesce($"cleaned", $"text").as("text")))
-        toksCache.unpersist()
-        out
+        st.staged("d19_substring_dedup", nExact, withCleaned(exact,
+          Dedup.substringRewriteOf(exact.select($"doc_id", $"text"), kk)))
     }
 
     // d18b: drop docs that are mostly duplicated passages (kept_ratio
     // below the floor) — the paragraph-dedup verdict applied doc-level.
-    // Handle form: the stage's internal caches (segment digests +
-    // keeper shingles) are freed as soon as the verdict materializes —
-    // without this every persist lives to end-of-query and, across
-    // bench reps at sf1, stacks into the eviction churn behind p07's
-    // wall-clock spread.
-    val (segRollup, segCaches) = Dedup
-      .segmentNeardupFullHandle(afterSub.select($"doc_id", $"text"),
-        cfg.segWidth, cfg.nearDupBands, cfg.nearDupRows, cfg.maxBucket,
-        cfg.nearDupJaccard)
-    val segKill = segRollup
-      .filter($"kept_ratio" < cfg.segKeptRatioMin)
-      .select($"doc_id")
+    // segmentNeardupFullOf is self-cleaning: its segment caches are
+    // freed as soon as its rollup materializes, inside this stage —
+    // a persist living to end-of-query would, across bench reps at sf1,
+    // stack into the eviction churn behind p07's wall-clock spread.
     stateTable.foreach(t => Dedup.writeSegmentIndex(
       afterSub.select($"doc_id", $"text"), s"${t}_seg", cfg.segWidth,
       bands = cfg.nearDupBands, rows = cfg.nearDupRows,
       maxBucket = cfg.maxBucket))
-    val (afterSeg, nSeg) = staged("d18_segment_neardup", nSub,
-      afterSub.join(segKill, Seq("doc_id"), "left_anti"))
-    segCaches.foreach(_.unpersist())
+    val (afterSeg, nSeg) = st.staged("d18_segment_neardup", nSub,
+      afterSub.join(Dedup
+        .segmentNeardupFullOf(afterSub.select($"doc_id", $"text"),
+          cfg.segWidth, cfg.nearDupBands, cfg.nearDupRows, cfg.maxBucket,
+          cfg.nearDupJaccard)
+        .filter($"kept_ratio" < cfg.segKeptRatioMin)
+        .select($"doc_id"), Seq("doc_id"), "left_anti"))
 
     // d02: whole-doc MinHash near-dup. Drops any doc appearing as the
     // LATER element (doc_b) of a confirmed pair — on transitive chains
@@ -318,7 +351,7 @@ object CorpusPipeline {
       afterSeg.select($"doc_id", $"text"), s"${t}_doc",
       bands = cfg.nearDupBands, rows = cfg.nearDupRows,
       maxBucket = cfg.maxBucket))
-    val (afterNd, nNd) = staged("d02_minhash_neardup", nSeg,
+    val (afterNd, nNd) = st.staged("d02_minhash_neardup", nSeg,
       afterSeg.join(ndLosers, Seq("doc_id"), "left_anti"))
     ndShCache.unpersist()
 
@@ -339,7 +372,7 @@ object CorpusPipeline {
           .semanticOversizedLosersFrom(semBucketed, cfg.semMaxBucket)
           .select($"vec_id".as("doc_id")))
       else semPairLosers).distinct()
-    val (afterSem, nSem) = staged("d12_semantic_dedup", nNd,
+    val (afterSem, nSem) = st.staged("d12_semantic_dedup", nNd,
       afterNd.join(semLosers, Seq("doc_id"), "left_anti"))
     // the staged() count above materialized the losers — the bucketed
     // cache is dead weight from here on (Bench reps would stack copies)
@@ -349,11 +382,21 @@ object CorpusPipeline {
         .select($"vec_id", $"v".as("embedding")),
       s"${t}_sem", planes = semPlanes, maxBucket = cfg.semMaxBucket))
 
+    curationTail(st, afterSem, nSem, benchmark, cfg)
+  }
+
+  /** d16 → p06 and the waterfall: the stateless, per-run stages both
+    * [[curateFull]] and [[curateDelta]] end with.
+    */
+  private def curationTail(st: Stages, afterSem: DataFrame, nSem: Long,
+      benchmark: DataFrame, cfg: FullConfig): CurationResult = {
+    val s = afterSem.sparkSession
+    import s.implicits._
     // d16: Bloom-gated decontamination against the benchmark.
     val contaminated = DocumentPipeline
       .decontaminateBloomAgainst(afterSem.select($"doc_id", $"text"), benchmark)
       .filter($"contaminated").select($"doc_id")
-    val (afterDecon, nDecon) = staged("d16_decontaminate", nSem,
+    val (afterDecon, nDecon) = st.staged("d16_decontaminate", nSem,
       afterSem.join(contaminated, Seq("doc_id"), "left_anti"))
 
     // t22 + t20: Gopher heuristics AND the hashed-unigram classifier —
@@ -362,14 +405,14 @@ object CorpusPipeline {
     // so the former two-operator → two-semi-join shape paid two doc_id
     // exchanges for predicates the scan can evaluate in place. Same
     // predicates, same survivors, zero shuffles.
-    val (afterQ, nQ) = staged("t22_t20_quality", nDecon,
+    val (afterQ, nQ) = st.staged("t22_t20_quality", nDecon,
       afterDecon.filter(
         DocumentPipeline.gopherKeepCol(cfg.minWords, cfg.maxWords,
           cfg.minMeanWordLen, cfg.maxMeanWordLen, cfg.minStopKinds) &&
         DocumentPipeline.classifierProbCol >= cfg.minQualityProb))
 
     // t23: PII redaction — rewrites text, kills nothing.
-    val (afterPii, nPii) = staged("t23_pii_redact", nQ,
+    val (afterPii, nPii) = st.staged("t23_pii_redact", nQ,
       graft.operators.Redact.redactOf(afterQ, "text",
           graft.operators.Redact.corpusRules)
         .select($"doc_id", $"source", $"redacted".as("text")))
@@ -386,37 +429,23 @@ object CorpusPipeline {
           .as("p_keep"))
     val u = conv(substring(md5(concat_ws("@", lit("mix"), $"doc_id")), 1, 15),
       16, 10).cast("double") / lit(math.pow(2.0, 60))
-    val (afterMix, nMix) = staged("p04_temperature_mix", nPii,
+    val (afterMix, nMix) = st.staged("p04_temperature_mix", nPii,
       afterPii.join(broadcast(pKeep), Seq("source"))
         .filter(u < $"p_keep").drop("p_keep"))
 
     // p02: pack into fixed token-budget sequences (granularity change:
     // n_out is sequences).
-    val (packed, nPacked) = staged("p02_sequence_pack", nMix,
+    val (packed, nPacked) = st.staged("p02_sequence_pack", nMix,
       DocumentPipeline.sequencePackOf(afterMix, cfg.packBudget,
         cfg.packShards))
 
     // p06: epoch schedule over the packed sequences.
     val seqKeyed = packed
       .select(concat_ws("/", $"source", $"seq_id").as("doc_id"))
-    val (schedule, _) = staged("p06_epoch_shuffle", nPacked,
+    val (schedule, _) = st.staged("p06_epoch_shuffle", nPacked,
       DocumentPipeline.epochShuffleOf(seqKeyed, cfg.epoch, cfg.epochShards))
 
-    // stage_sec: per-stage materialization wall — the variance/runtime
-    // profile travels WITH the waterfall (VERDICT r12 #4). Additive
-    // column; the correctness row is rows-only so timing nondeterminism
-    // is fine.
-    val wf = stages.toSeq.zipWithIndex.map { case ((name, nIn, nOut, sec), i) =>
-      (i, name, nIn, nOut, nIn - nOut,
-        if (nIn == 0) 0.0
-        else math.rint((nIn - nOut).toDouble / nIn * 1e6) / 1e6,
-        math.rint(sec * 1000) / 1000)
-    }
-    val waterfall = s.createDataFrame(wf)
-      .toDF("stage_ord", "stage", "n_in", "n_out", "n_killed", "kill_rate",
-        "stage_sec")
-      .orderBy("stage_ord")
-    CurationResult(afterPii, packed, schedule, waterfall)
+    CurationResult(afterPii, packed, schedule, st.waterfall(s))
   }
 
   /** Incremental p07: run a delta batch through the FULL curation DAG
@@ -446,19 +475,8 @@ object CorpusPipeline {
       growState: Boolean = false): CurationResult = {
     val s = delta.sparkSession
     import s.implicits._
-    val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Double)]
-    def staged(name: String, nIn: Long, df: DataFrame): (DataFrame, Long) = {
-      val t0 = System.nanoTime()
-      val p = df.localCheckpoint()
-      val n = p.count()
-      stages += ((name, nIn, n, (System.nanoTime() - t0) / 1e9))
-      (p, n)
-    }
-
-    val rawT0 = System.nanoTime()
-    val raw = delta.select($"doc_id", $"source", $"text").localCheckpoint()
-    val nRaw = raw.count()
-    stages += (("p00_raw", nRaw, nRaw, (System.nanoTime() - rawT0) / 1e9))
+    val st = new Stages(None)
+    val (raw, nRaw) = st.raw(delta.select($"doc_id", $"source", $"text"))
 
     // d01: killed if the hash is stored OR an earlier delta doc owns it
     val hashed = raw.select($"doc_id", unhex(sha2($"text", 256)).as("h"))
@@ -467,7 +485,7 @@ object CorpusPipeline {
     val storedHit = hashed
       .join(s.table(s"${stateTable}_docdigests"), Seq("h"), "left_semi")
       .select($"doc_id")
-    val (exact, nExact) = staged("d01_exact", nRaw,
+    val (exact, nExact) = st.staged("d01_exact", nRaw,
       raw.join(withinKeeper, Seq("doc_id"), "left_semi")
         .join(storedHit, Seq("doc_id"), "left_anti"))
 
@@ -475,23 +493,19 @@ object CorpusPipeline {
     val (afterSub, nSub) = cfg.substringK match {
       case None => (exact, nExact)
       case Some(kk) =>
-        val rewritten = Dedup.substringRewriteDelta(s, s"${stateTable}_sub",
-          exact.select($"doc_id", $"text"), kk)
-        staged("d19_substring_dedup", nExact,
-          exact.join(rewritten, Seq("doc_id"), "left")
-            .select($"doc_id", $"source",
-              coalesce($"cleaned", $"text").as("text")))
+        st.staged("d19_substring_dedup", nExact, withCleaned(exact,
+          Dedup.substringRewriteDelta(s, s"${stateTable}_sub",
+            exact.select($"doc_id", $"text"), kk)))
     }
 
     // d18b: stored-keeper ∪ within-delta segment dups, one rollup
-    val segKill = Dedup
-      .segmentDeltaFull(s, s"${stateTable}_seg",
-        afterSub.select($"doc_id", $"text"), cfg.segWidth, cfg.nearDupBands,
-        cfg.nearDupRows, cfg.maxBucket, cfg.nearDupJaccard)
-      .filter($"kept_ratio" < cfg.segKeptRatioMin)
-      .select($"doc_id")
-    val (afterSeg, nSeg) = staged("d18_segment_neardup", nSub,
-      afterSub.join(segKill, Seq("doc_id"), "left_anti"))
+    val (afterSeg, nSeg) = st.staged("d18_segment_neardup", nSub,
+      afterSub.join(Dedup
+        .segmentDelta(s, s"${stateTable}_seg",
+          afterSub.select($"doc_id", $"text"), cfg.segWidth, cfg.nearDupBands,
+          cfg.nearDupRows, cfg.maxBucket, cfg.nearDupJaccard)
+        .filter($"kept_ratio" < cfg.segKeptRatioMin)
+        .select($"doc_id"), Seq("doc_id"), "left_anti"))
 
     // d02: stored-corpus matches (new_id is always the later element —
     // corpus ids precede the delta's) ∪ within-delta pair losers
@@ -506,7 +520,7 @@ object CorpusPipeline {
           oversizedLink = cfg.nearDupStarMode)
         .select($"doc_b".as("doc_id")))
       .distinct()
-    val (afterNd, nNd) = staged("d02_minhash_neardup", nSeg,
+    val (afterNd, nNd) = st.staged("d02_minhash_neardup", nSeg,
       afterSeg.join(ndLosers, Seq("doc_id"), "left_anti"))
 
     // d12: stored-vector matches ∪ within-delta pair losers
@@ -538,54 +552,20 @@ object CorpusPipeline {
       .select($"new_id".as("doc_id"))
       .unionByName(semWithin)
       .distinct()
-    val (afterSem, nSem) = staged("d12_semantic_dedup", nNd,
+    val (afterSem, nSem) = st.staged("d12_semantic_dedup", nNd,
       afterNd.join(semLosers, Seq("doc_id"), "left_anti"))
     semBucketed.unpersist()
 
-    // d16 → p06: stateless / per-run, identical to the batch form
-    val contaminated = DocumentPipeline
-      .decontaminateBloomAgainst(afterSem.select($"doc_id", $"text"), benchmark)
-      .filter($"contaminated").select($"doc_id")
-    val (afterDecon, nDecon) = staged("d16_decontaminate", nSem,
-      afterSem.join(contaminated, Seq("doc_id"), "left_anti"))
-    // same one-pass fused gate as the batch DAG (see curateFull)
-    val (afterQ, nQ) = staged("t22_t20_quality", nDecon,
-      afterDecon.filter(
-        DocumentPipeline.gopherKeepCol(cfg.minWords, cfg.maxWords,
-          cfg.minMeanWordLen, cfg.maxMeanWordLen, cfg.minStopKinds) &&
-        DocumentPipeline.classifierProbCol >= cfg.minQualityProb))
-    val (afterPii, nPii) = staged("t23_pii_redact", nQ,
-      graft.operators.Redact.redactOf(afterQ, "text",
-          graft.operators.Redact.corpusRules)
-        .select($"doc_id", $"source", $"redacted".as("text")))
-    val counts = afterPii.groupBy($"source")
-      .agg(count(lit(1)).as("n_docs"))
-      .withColumn("w", pow($"n_docs".cast("double"), lit(cfg.mixAlpha)))
-    val z = counts.agg(sum($"w").as("z"))
-    val pKeep = counts.crossJoin(z)
-      .select($"source",
-        least(lit(1.0), lit(cfg.mixBudget.toDouble) * $"w" / $"z" / $"n_docs")
-          .as("p_keep"))
-    val u = conv(substring(md5(concat_ws("@", lit("mix"), $"doc_id")), 1, 15),
-      16, 10).cast("double") / lit(math.pow(2.0, 60))
-    val (afterMix, nMix) = staged("p04_temperature_mix", nPii,
-      afterPii.join(broadcast(pKeep), Seq("source"))
-        .filter(u < $"p_keep").drop("p_keep"))
-    val (packed, nPacked) = staged("p02_sequence_pack", nMix,
-      DocumentPipeline.sequencePackOf(afterMix, cfg.packBudget,
-        cfg.packShards))
-    val seqKeyed = packed
-      .select(concat_ws("/", $"source", $"seq_id").as("doc_id"))
-    val (schedule, _) = staged("p06_epoch_shuffle", nPacked,
-      DocumentPipeline.epochShuffleOf(seqKeyed, cfg.epoch, cfg.epochShards))
+    val result = curationTail(st, afterSem, nSem, benchmark, cfg)
 
     if (growState) {
       raw.select(unhex(sha2($"text", 256)).as("h"))
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .bucketBy(8, "h").sortBy("h")
         .format("parquet").saveAsTable(s"${stateTable}_docdigests")
-      cfg.substringK.foreach(kk => Dedup.appendSubstringIndex(
-        exact.select($"doc_id", $"text"), s"${stateTable}_sub", kk))
+      cfg.substringK.foreach(kk => Dedup.writeSubstringIndex(
+        exact.select($"doc_id", $"text"), s"${stateTable}_sub", kk,
+        mode = org.apache.spark.sql.SaveMode.Append))
       Dedup.appendSegmentIndex(afterSub.select($"doc_id", $"text"),
         s"${stateTable}_seg", cfg.segWidth,
         bands = cfg.nearDupBands, rows = cfg.nearDupRows)
@@ -597,18 +577,7 @@ object CorpusPipeline {
           .select($"vec_id", $"v".as("embedding")),
         s"${stateTable}_sem", planes = cfg.semPlanes)
     }
-
-    val wf = stages.toSeq.zipWithIndex.map { case ((name, nIn, nOut, sec), i) =>
-      (i, name, nIn, nOut, nIn - nOut,
-        if (nIn == 0) 0.0
-        else math.rint((nIn - nOut).toDouble / nIn * 1e6) / 1e6,
-        math.rint(sec * 1000) / 1000)
-    }
-    val waterfall = s.createDataFrame(wf)
-      .toDF("stage_ord", "stage", "n_in", "n_out", "n_killed", "kill_rate",
-        "stage_sec")
-      .orderBy("stage_ord")
-    CurationResult(afterPii, packed, schedule, waterfall)
+    result
   }
 
   /** p07 `queries` entry: run [[curateFull]] over the dir's documents

@@ -387,9 +387,10 @@ object StreamingOps {
 
   /** Streaming SEGMENT near-dup gate — [[dedupStream]]'s contract at
     * PARAGRAPH granularity (d18b made streaming): each micro-batch's
-    * docs are probed with `Dedup.segmentDelta` against the stored
-    * segment-keeper index; docs whose kept_ratio (fraction of segments
-    * with no stored exact-or-edited keeper match) falls below
+    * docs are probed against the stored segment-keeper index and the
+    * pending buffer (`Dedup.segmentDeltaOrdsFromMeta`); docs whose
+    * kept_ratio (fraction of segments with no stored exact-or-edited
+    * keeper match) falls below
     * `segKeptRatioMin` are gated — the mostly-boilerplate arrivals a
     * whole-doc gate dilutes below threshold — and survivors' NOVEL
     * keeper segments grow the index so batch N+1's edited boilerplate
@@ -398,7 +399,7 @@ object StreamingOps {
     * Same idempotence story as dedupStream: probe-before-grow (a
     * replayed batch's segments match themselves in the index or pending
     * buffer → replayed docs gate out, never double-keep) and
-    * at-least-once growth whose duplicate rows segmentDelta tolerates.
+    * at-least-once growth whose duplicate rows the probe tolerates.
     *
     * Index growth is DEFERRED exactly as in [[dedupStream]] (r16): kept
     * docs' fused meta rows (ord, h, h2, sh — the same one-tokenization
@@ -544,8 +545,9 @@ object StreamingOps {
             // grow from the ORIGINAL batch text: the keeper copy of a
             // novel run survives the rewrite and must be indexed; using
             // b (not cleaned) also keeps a replay's grams identical
-            graft.operators.Dedup.appendSubstringIndex(
-              b.select($"doc_id", $"text"), indexTable, k)
+            graft.operators.Dedup.writeSubstringIndex(
+              b.select($"doc_id", $"text"), indexTable, k,
+              mode = org.apache.spark.sql.SaveMode.Append)
             touchMarker(spark, marker)
             maybeCompact(spark, indexTable, compactAbove)
           }

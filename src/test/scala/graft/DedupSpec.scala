@@ -966,6 +966,38 @@ class DedupSpec extends SparkSpec {
     assert(fusedMap(1L) == "" && fusedMap(4L) == rows(3)._2.mkString(" "))
   }
 
+  test("span-dedup entry points leave nothing cached behind") {
+    // Each public substring/segment entry point either persists nothing
+    // or releases what it persisted before returning; the stored-index
+    // probes run after their own index writers, which must not leak
+    // either.
+    val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
+    val corpus = docs.filter($"doc_id" < 250)
+    val delta = docs.filter($"doc_id" >= 250)
+    val runs: Seq[(String, () => Unit)] = Seq(
+      "substringDedupOf" -> (() => Dedup.substringDedupOf(docs).collect()),
+      "substringDedupFastOf" ->
+        (() => Dedup.substringDedupFastOf(docs).collect()),
+      "substringRewriteOf" -> (() => Dedup.substringRewriteOf(docs).collect()),
+      "substringRewriteDelta" -> { () =>
+        Dedup.writeSubstringIndex(corpus, "leakspec_sub")
+        Dedup.substringRewriteDelta(spark, "leakspec_sub", delta).collect()
+      },
+      "segmentDelta" -> { () =>
+        Dedup.writeSegmentIndex(corpus, "leakspec_seg")
+        Dedup.segmentDelta(spark, "leakspec_seg", delta).collect()
+      },
+      "segmentNeardupFullOf" ->
+        (() => Dedup.segmentNeardupFullOf(docs).collect()))
+    spark.catalog.clearCache()
+    val leaked = runs.flatMap { case (name, run) =>
+      run()
+      if (org.apache.spark.sql.graft.SparkInternals.cacheIsEmpty(spark)) None
+      else { spark.catalog.clearCache(); Some(name) }
+    }
+    assert(leaked.isEmpty, s"left cached frames behind: ${leaked.mkString(", ")}")
+  }
+
   test("d19b rolling-hash fast path is row-identical to the md5 form") {
     val docs = Tables.documents(spark, sf)
     val slow = operators.Dedup.substringDedupOf(docs).collect().toSeq
