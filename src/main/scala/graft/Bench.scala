@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
 
   /** This box's reference for [[cpuProbeSec]]: the min observed across
@@ -46,7 +47,7 @@ object Bench {
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+        } catch { case NonFatal(_) => -1.0 }
       }.min
     }.getOrElse(-1.0)
     // No clearCache here (ADVICE r17): every measured query already
@@ -164,7 +165,7 @@ object Bench {
       // noop sink: materializes every output column (a count() would let
       // Catalyst prune expensive projections out of the timed work).
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         // A throwing query must NOT bench as ~0 s: record it loudly
         // (stderr + "failed" list + -1 median) instead of swallowing.
         failed = true

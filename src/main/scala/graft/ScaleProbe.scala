@@ -333,10 +333,6 @@ object ScaleProbe {
       time(s"semantic_dedup_x$mult") {
         operators.Dedup.semanticDedup(spark, sfDir).count()
       }
-      // d11's persisted bucketed frame is caller-owned — drop it before
-      // the next probe so later sections aren't measured under its cache
-      // pressure (d12 below re-persists its own).
-      spark.catalog.clearCache()
       // d12 composed end state: kept-vs-dropped mass after CC + min-id
       // survivor — the pruning SemDeDup exists for.
       time(s"semantic_clusters_x$mult") {
@@ -382,7 +378,6 @@ object ScaleProbe {
       }
       locally {
         val basePairs = operators.Dedup.semanticDedup(spark, sfDir).count()
-        spark.catalog.clearCache()
         val mpPairs = operators.Dedup.semanticDedupMultiprobe(spark, sfDir).count()
         println(s"""{"probe":"semantic_multiprobe_gain_x$mult","d11_pairs":$basePairs,"d11b_pairs":$mpPairs}""")
       }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -14,17 +15,19 @@ object Verify {
     // driver passes none → full dump). Unknown names fail fast.
     val unknown = only.filterNot(SparkEntry.queries.contains)
     if (unknown.nonEmpty) sys.error(s"unknown query name(s): ${unknown.mkString(", ")}")
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
+        failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // Same hygiene as Bench: operators persist internal frames (t18's
-      // toks/dfw, d02's shingles, d10's token arrays) whose lifecycle is
-      // caller-owned — drop them so 131 queries don't stack cache blocks;
+      // toks/dfw, d10's token arrays) whose lifecycle is caller-owned —
+      // drop them so 131 queries don't stack cache blocks;
       // consume-once localCheckpoint results likewise (VERDICT r17 #1),
       // with the memo tables pinned.
       spark.catalog.clearCache()
@@ -46,5 +49,11 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // A failed query still let every other key and oracle_sql.json be
+    // written; the run then fails loudly, naming every failed key.
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

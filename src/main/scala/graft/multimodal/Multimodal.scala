@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import scala.util.control.NonFatal
 
 /** Decoded media features. IMAGE payloads decode for real (javax.imageio
   * — PNG/JPEG/BMP/GIF pixel dims, mean luma, pixel-grid dHash); audio /
@@ -89,14 +90,15 @@ object Multimodal {
     * image (PNG vs BMP, or a re-compressed mirror) land 0–few bits
     * apart — the recall property m06's byte-gram stub could not give
     * for re-ENCODED (rather than byte-edited) mirrors. Returns None for
-    * payloads that aren't decodable images (audio/video/text), which
-    * fall back to the deterministic stub family.
+    * payloads that aren't decodable images (audio/video/text), and for
+    * headers declaring more than [[MaxImagePixels]]; both fall back to
+    * the deterministic stub family.
     */
   def decodeImage(payload: Array[Byte]): Option[(MediaFeatures, Long)] = {
     if (!looksLikeImage(payload)) return None
     val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-      catch { case _: Throwable => null }
+      try readImageCapped(payload)
+      catch { case NonFatal(_) => null }
     if (img == null || img.getWidth <= 0 || img.getHeight <= 0) return None
     val gw = 9; val gh = 8
     val (grid, mean) = lumaGrid(img, gw, gh)
@@ -112,6 +114,33 @@ object Multimodal {
       y += 1
     }
     Some((MediaFeatures(img.getWidth, img.getHeight, 1, mean / 255.0), bits))
+  }
+
+  /** The largest raster [[decodeImage]] decodes (2^25 px, 128 MB as
+    * packed ARGB). The reader allocates the whole raster before reading
+    * any pixel data, so a crafted header declaring a huge image would
+    * otherwise end the task with an OutOfMemoryError.
+    */
+  private[graft] val MaxImagePixels: Long = 1L << 25
+
+  /** `ImageIO.read`, except that the declared dimensions are read from
+    * the header first and an image over [[MaxImagePixels]] is null.
+    */
+  private def readImageCapped(
+      payload: Array[Byte]): java.awt.image.BufferedImage = {
+    val in = javax.imageio.ImageIO.createImageInputStream(
+      new java.io.ByteArrayInputStream(payload))
+    if (in == null) return null
+    try {
+      val readers = javax.imageio.ImageIO.getImageReaders(in)
+      if (!readers.hasNext) return null
+      val reader = readers.next()
+      try {
+        reader.setInput(in, true, true)
+        if (reader.getWidth(0).toLong * reader.getHeight(0) > MaxImagePixels) null
+        else reader.read(0)
+      } finally reader.dispose()
+    } finally in.close()
   }
 
   /** RIFF/WAVE magic sniff — the cheap gate before a real WAV parse. */
@@ -203,7 +232,7 @@ object Multimodal {
       val durationMs = (nFrames.toLong * 1000 / fmt.getSampleRate.toLong).toInt
       Some((MediaFeatures(fmt.getSampleRate.toInt, channels, durationMs,
         math.sqrt(totalSs / nFrames)), fp))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
   }
 
   /** Unified per-payload decode through the [[MediaCodec]] SPI: the

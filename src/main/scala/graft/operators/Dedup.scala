@@ -70,34 +70,20 @@ object Dedup {
     * the shingle arrays. The skew-guard + singleton-prune run as a window
     * over that same single shuffle. Shingle sets rejoin only for the
     * (tiny) candidate pair set, keyed by doc_id.
+    *
+    * Self-cleaning ([[SelfClean.releasing]]): the hashed-shingle frame
+    * feeds banding AND both sides of the candidate verification join (3
+    * uses), so it is persisted — the upstream scan + shingle computation
+    * runs once, not three times; at scale the recompute dominates — and
+    * released once the bounded pair set is checkpointed. Shingles are
+    * carried as 64-bit hashes, not strings (WordShingleHashes): ~3× less
+    * cache + verify-join traffic with identical Jaccard counts.
     */
   def minhashPairs(documents: DataFrame,
       bands: Int = 16, rows: Int = 4, maxBucket: Int = 64,
       minJaccard: Double = 0.5, oversizedLink: Boolean = false): DataFrame =
-    minhashPairsHandle(documents, bands, rows, maxBucket, minJaccard,
-      oversizedLink)._1
-
-  /** [[minhashPairs]] plus its persisted shingle frame, so a pipeline
-    * embedding the pair stage (p07) can unpersist the cache as soon as
-    * the stage's output is materialized instead of letting it stack
-    * until the next clearCache() — the semanticPairsHandle contract.
-    */
-  def minhashPairsHandle(documents: DataFrame,
-      bands: Int = 16, rows: Int = 4, maxBucket: Int = 64,
-      minJaccard: Double = 0.5,
-      oversizedLink: Boolean = false): (DataFrame, DataFrame) = {
-    // The shingle frame feeds banding AND both sides of the candidate
-    // verification join (3 uses). Persist it (spilling to disk) so the
-    // upstream scan + shingle computation runs once, not three times —
-    // at scale the recompute dominates; the cache is ~corpus-sized and
-    // spill-safe. Shingles are carried as 64-bit hashes, not strings
-    // (WordShingleHashes): ~3× less cache + verify-join traffic with
-    // identical Jaccard counts.
-    val docs = shingleFrame(documents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (minhashPairsFromShingles(docs, bands, rows, maxBucket, minJaccard,
-      oversizedLink), docs)
-  }
+    SelfClean.releasing(shingleFrame(documents))(minhashPairsFromShingles(_,
+      bands, rows, maxBucket, minJaccard, oversizedLink))
 
   /** The band/verify pipeline over an already-built (and persisted —
     * it's read three times) hashed-shingle frame (doc_id, sh). Shared by
@@ -198,23 +184,14 @@ object Dedup {
       minJaccard, k, wsThresh)
 
   /** Core of d02c over any (doc_id, text) frame — [[minhashPairs]] with
-    * the adaptive shingle frame.
+    * the adaptive shingle frame, same self-cleaning lifecycle.
     */
   def minhashPairsAdaptive(documents: DataFrame,
       bands: Int = 16, rows: Int = 4, maxBucket: Int = 64,
       minJaccard: Double = 0.5, k: Int = 6,
-      wsThresh: Double = 0.05): DataFrame = {
-    val docs = shingleFrameAdaptive(documents, k, wsThresh)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = minhashPairsFromShingles(docs, bands, rows, maxBucket,
-      minJaccard)
-    // same self-cleaning contract as the graph helpers (r14 #3): the
-    // pair set is bounded, materialize it and release the corpus cache
-    // (plan-auditable: pass-through under Plans — VERDICT r17 #2)
-    val local = SelfClean.checkpoint(out)
-    docs.unpersist()
-    local
-  }
+      wsThresh: Double = 0.05): DataFrame =
+    SelfClean.releasing(shingleFrameAdaptive(documents, k, wsThresh))(
+      minhashPairsFromShingles(_, bands, rows, maxBucket, minJaccard))
 
   /** Per-document adaptive hashed-shingle frame: char k-grams below the
     * whitespace-density threshold, word 3-shingles above it. One
@@ -281,15 +258,21 @@ object Dedup {
     * pipeline.
     */
   def minhashDroppedBuckets(documents: DataFrame, bands: Int = 16,
-      rows: Int = 4, maxBucket: Int = 64): DataFrame = {
-    val s = documents.sparkSession
-    import s.implicits._
-    minhashBandedFrom(shingleFrame(documents), bands, rows)
-      .groupBy($"band", $"band_hash")
+      rows: Int = 4, maxBucket: Int = 64): DataFrame =
+    droppedBuckets(minhashBandedFrom(shingleFrame(documents), bands, rows),
+      Seq("band", "band_hash"), maxBucket)
+
+  /** The bucket-cap diagnostic every `*DroppedBuckets` shares: the
+    * `keys` buckets holding more than `maxBucket` rows, with their
+    * populations as `bucket_n`, sorted by key. One partial-aggregatable
+    * groupBy, no window.
+    */
+  private def droppedBuckets(banded: DataFrame, keys: Seq[String],
+      maxBucket: Int): DataFrame =
+    banded.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("bucket_n"))
-      .filter($"bucket_n" > maxBucket)
-      .orderBy($"band", $"band_hash")
-  }
+      .filter(col("bucket_n") > maxBucket)
+      .orderBy(keys.map(col): _*)
 
   /** 64-bit SimHash fingerprint from the token multiset (custom Catalyst
     * expression — one xxhash64 per token + 64 counters in a tight loop;
@@ -527,15 +510,9 @@ object Dedup {
     * partial-aggregatable groupBy, no window.
     */
   def simhashDroppedBuckets(documents: DataFrame,
-      maxBucket: Int = 64): DataFrame = {
-    val s = documents.sparkSession
-    import s.implicits._
-    simhashBanded(documents)
-      .groupBy($"band", $"band_bits")
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter($"bucket_n" > maxBucket)
-      .orderBy($"band", $"band_bits")
-  }
+      maxBucket: Int = 64): DataFrame =
+    droppedBuckets(simhashBanded(documents), Seq("band", "band_bits"),
+      maxBucket)
 
   /** d10: corpus-level duplicated-n-gram masking stats — the
     * "remove duplicated substrings" pass of an LLM dedup pipeline
@@ -696,6 +673,134 @@ object Dedup {
       |SELECT vec_a, vec_b, cos FROM p WHERE cos >= 0.25
       |ORDER BY vec_a, vec_b""".stripMargin
 
+  /** Literal ±1 weight vector of plane `p`: md5-parity family (the one
+    * the DuckDB oracles recompute inline), one hoisted digest instance
+    * per plane — not one per (p, j) — so building a d11/d11b/d12 plan
+    * costs `planes` provider lookups, not planes×dim.
+    */
+  private def planeWeights(p: Int, dim: Int): Column = {
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    def weight(j: Int): Double = {
+      val firstNibble = (md5.digest(s"$p:$j".getBytes("UTF-8"))(0) >> 4) & 0xF
+      if (firstNibble % 2 == 0) 1.0 else -1.0
+    }
+    array((0 until dim).map(j => lit(weight(j))): _*)
+  }
+
+  /** Sign-partition bucket id over a double-array column `v`: bit p =
+    * sign of the projection onto the p-th md5-family ±1 hyperplane
+    * (weights are driver-side literal constants through the codegen'd
+    * DotProduct — the same family the DuckDB oracle recomputes inline).
+    */
+  private def signBucket(v: Column, planes: Int, dim: Int): Column =
+    (0 until planes).map { p =>
+      when(dot(v, planeWeights(p, dim)) > 0, lit(1L << p)).otherwise(lit(0L))
+    }.reduce(_ + _)
+
+  /** The (vec_id, v, bucket) frame the single-probe semantic family
+    * shares over any (vec_id, v: array<double>) frame. Every caller (d11,
+    * d12, [[semanticLosersOf]]) runs over it through
+    * [[SelfClean.releasing]]: the eligibility count and both self-join
+    * sides read it — unpersisted, the scan + `planes` dot-product
+    * projections would run three times (the t18 duplicated-subtree
+    * lesson).
+    */
+  private def semanticBucketed(vecs: DataFrame, planes: Int,
+      dim: Int): DataFrame = {
+    val s = vecs.sparkSession
+    import s.implicits._
+    vecs.select($"vec_id", $"v")
+      .withColumn("bucket", signBucket($"v", planes, dim))
+  }
+
+  /** The embeddings table as the (vec_id, v) frame the semantic family
+    * buckets.
+    */
+  private def embeddingVecs(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Tables.embeddings(s, dir)
+      .select($"vec_id", asDouble($"embedding").as("v"))
+  }
+
+  /** Verified within-bucket (bucket, vec_a, vec_b, cos) pairs over a
+    * [[semanticBucketed]] frame, unsorted — d11 sorts them, d12's
+    * per-bucket clustering keys on the bucket (the component-confinement
+    * key there; a sort would be dead weight under a groupBy).
+    * Bucket eligibility (2 <= population <= maxBucket) is a partial-
+    * aggregatable groupBy — each task emits at most 2^planes rows — with
+    * the tiny result broadcast back onto the stream, NOT a window
+    * partitioned by the bucket key: with planes=8 there are <= 256
+    * distinct buckets, so a window would shuffle EVERY vector onto
+    * <= 256 reducers (a parallelism ceiling no cluster size fixes) just
+    * to be counted. Same reasoning as q26's zscoreOutliers. After this
+    * map-side filter the pair self-join input is bounded at
+    * 2^planes * maxBucket rows by construction, so its bucket-keyed
+    * shuffle is over a vanishing fraction of the corpus.
+    */
+  private def semanticPairsWithBucket(bucketed: DataFrame, minCos: Double,
+      maxBucket: Int): DataFrame = {
+    val s = bucketed.sparkSession
+    import s.implicits._
+    val eligible = bucketed.groupBy($"bucket")
+      .agg(count(lit(1)).as("bn"))
+      .filter($"bn" >= 2 && $"bn" <= maxBucket)
+      .select($"bucket")
+    val sized = bucketed.join(broadcast(eligible), Seq("bucket"))
+    val a = sized.select($"bucket", $"vec_id".as("vec_a"), $"v".as("va"))
+    val b = sized.select($"bucket", $"vec_id".as("vec_b"), $"v".as("vb"))
+    a.join(b, Seq("bucket")).filter($"vec_a" < $"vec_b")
+      .withColumn("cos", round(cosine($"va", $"vb"), 6))
+      .filter($"cos" >= minCos)
+      .select($"bucket", $"vec_a", $"vec_b", $"cos")
+  }
+
+  /** (bucket, keep_id) for every bucket past `maxBucket`, keep_id its
+    * min vec_id — the per-bucket canonical pick d12 and
+    * [[semanticLosersOf]] route over-cap buckets to. The per-bucket
+    * (count, min) is a partial-aggregatable groupBy bounded at 2^planes
+    * rows; callers broadcast it back onto the members, one map-side
+    * filter over the already-persisted bucketed frame.
+    */
+  private def oversizedKeepers(bucketed: DataFrame,
+      maxBucket: Int): DataFrame = {
+    val s = bucketed.sparkSession
+    import s.implicits._
+    bucketed.groupBy($"bucket")
+      .agg(count(lit(1)).as("bn"), min($"vec_id").as("keep_id"))
+      .filter($"bn" > maxBucket)
+      .select($"bucket", $"keep_id")
+  }
+
+  /** The "planes must grow with the corpus" sizing rule, WIRED (VERDICT
+    * r14 #1 — it was documentation-only before): target 2^planes ≈
+    * corpus / targetFill with targetFill = maxBucket/2, floored at
+    * `minPlanes` so the test-scale partition (and the cross-engine
+    * planes=8 oracle that depends on it) is unchanged below ~65k
+    * vectors. At fixed planes the per-bucket population grows linearly
+    * with the corpus: by sf10 (200k vectors, 2^8 buckets) mean fill
+    * ~780 already exceeds maxBucket=512 — a growing fraction of buckets
+    * cap-drops, and at 100× essentially every bucket does, silently
+    * zeroing recall (100M vectors → planes 19 here, ~2k× more buckets).
+    * Every dir-keyed semantic entry point derives planes through this
+    * when the caller passes `planes = 0` (their default); explicit
+    * values pin the partition for oracle parity and A/B probes.
+    */
+  def scaledPlanes(n: Long, maxBucket: Int = 512, minPlanes: Int = 8): Int = {
+    val targetFill = math.max(1.0, maxBucket / 2.0)
+    val needed = math.ceil(
+      math.log(math.max(1.0, n / targetFill)) / math.log(2.0)).toInt
+    math.max(minPlanes, needed)
+  }
+
+  /** planes=0 → corpus-derived via [[scaledPlanes]]; the embeddings
+    * count is parquet-footer metadata, one bounded scalar (the IvfIndex
+    * exception).
+    */
+  private def resolvePlanes(s: SparkSession, dir: String, planes: Int,
+      maxBucket: Int): Int =
+    if (planes > 0) planes
+    else scaledPlanes(Tables.embeddings(s, dir).count(), maxBucket)
+
   /** d11: SemDeDup-style semantic dedup over the embedding space (the
     * pipeline shape of Abbas et al. 2023: partition the space, verify
     * candidates only within parts): every vector gets exactly ONE bucket
@@ -730,184 +835,57 @@ object Dedup {
     * the r15 cliff measurement is in CHANGELOG.md) — planes scales
     * first, maxBucket stays the skew guard.
     */
-  /** Sign-partition bucket id over a double-array column `v`: bit p =
-    * sign of the projection onto the p-th md5-family ±1 hyperplane
-    * (weights are driver-side literal constants through the codegen'd
-    * DotProduct — the same family the DuckDB oracle recomputes inline).
-    */
-  /** Literal ±1 weight vector of plane `p`: md5-parity family (the one
-    * the DuckDB oracles recompute inline), one hoisted digest instance
-    * per plane — not one per (p, j) — so building a d11/d11b/d12 plan
-    * costs `planes` provider lookups, not planes×dim.
-    */
-  private def planeWeights(p: Int, dim: Int): Column = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-    def weight(j: Int): Double = {
-      val firstNibble = (md5.digest(s"$p:$j".getBytes("UTF-8"))(0) >> 4) & 0xF
-      if (firstNibble % 2 == 0) 1.0 else -1.0
-    }
-    array((0 until dim).map(j => lit(weight(j))): _*)
-  }
-
-  private def signBucket(v: Column, planes: Int, dim: Int): Column =
-    (0 until planes).map { p =>
-      when(dot(v, planeWeights(p, dim)) > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
-  /** Persisted (vec_id, v, bucket) frame the semantic family shares: the
-    * eligibility count and both self-join sides read it — unpersisted,
-    * the scan + `planes` dot-product projections run three times (the
-    * t18 duplicated-subtree lesson; d02/d10 use the same pattern). The
-    * caller owns the lifecycle: d11's action populates the cache and
-    * Bench/Verify clearCache() after; d12 unpersists it itself once the
-    * component labels are materialized.
-    */
-  private def semanticBucketed(s: SparkSession, dir: String, planes: Int,
-      dim: Int): DataFrame = {
-    import s.implicits._
-    Tables.embeddings(s, dir)
-      .select($"vec_id", asDouble($"embedding").as("v"))
-      .withColumn("bucket", signBucket($"v", planes, dim))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** Verified within-bucket pairs over a [[semanticBucketed]] frame.
-    * Bucket eligibility (2 <= population <= maxBucket) is a partial-
-    * aggregatable groupBy — each task emits at most 2^planes rows — with
-    * the tiny result broadcast back onto the stream, NOT a window
-    * partitioned by the bucket key: with planes=8 there are <= 256
-    * distinct buckets, so a window would shuffle EVERY vector onto
-    * <= 256 reducers (a parallelism ceiling no cluster size fixes) just
-    * to be counted. Same reasoning as q26's zscoreOutliers. After this
-    * map-side filter the pair self-join input is bounded at
-    * 2^planes * maxBucket rows by construction, so its bucket-keyed
-    * shuffle is over a vanishing fraction of the corpus.
-    */
-  private def semanticPairsFrom(bucketed: DataFrame, minCos: Double,
-      maxBucket: Int): DataFrame = {
-    val s = bucketed.sparkSession
-    import s.implicits._
-    semanticPairsWithBucket(bucketed, minCos, maxBucket)
-      .select($"vec_a", $"vec_b", $"cos")
-      .orderBy($"vec_a", $"vec_b")
-  }
-
-  /** [[semanticPairsFrom]] keeping the bucket key and skipping the
-    * output sort — the internal form d12's per-bucket clustering
-    * consumes (the bucket is the component-confinement key there; the
-    * sort would be dead weight under a groupBy).
-    */
-  private def semanticPairsWithBucket(bucketed: DataFrame, minCos: Double,
-      maxBucket: Int): DataFrame = {
-    val s = bucketed.sparkSession
-    import s.implicits._
-    val eligible = bucketed.groupBy($"bucket")
-      .agg(count(lit(1)).as("bn"))
-      .filter($"bn" >= 2 && $"bn" <= maxBucket)
-      .select($"bucket")
-    val sized = bucketed.join(broadcast(eligible), Seq("bucket"))
-    val a = sized.select($"bucket", $"vec_id".as("vec_a"), $"v".as("va"))
-    val b = sized.select($"bucket", $"vec_id".as("vec_b"), $"v".as("vb"))
-    a.join(b, Seq("bucket")).filter($"vec_a" < $"vec_b")
-      .withColumn("cos", round(cosine($"va", $"vb"), 6))
-      .filter($"cos" >= minCos)
-      .select($"bucket", $"vec_a", $"vec_b", $"cos")
-  }
-
-  /** The "planes must grow with the corpus" sizing rule, WIRED (VERDICT
-    * r14 #1 — it was documentation-only before): target 2^planes ≈
-    * corpus / targetFill with targetFill = maxBucket/2, floored at
-    * `minPlanes` so the test-scale partition (and the cross-engine
-    * planes=8 oracle that depends on it) is unchanged below ~65k
-    * vectors. At fixed planes the per-bucket population grows linearly
-    * with the corpus: by sf10 (200k vectors, 2^8 buckets) mean fill
-    * ~780 already exceeds maxBucket=512 — a growing fraction of buckets
-    * cap-drops, and at 100× essentially every bucket does, silently
-    * zeroing recall (100M vectors → planes 19 here, ~2k× more buckets).
-    * Every dir-keyed semantic entry point derives planes through this
-    * when the caller passes `planes = 0` (their default); explicit
-    * values pin the partition for oracle parity and A/B probes.
-    */
-  def scaledPlanes(n: Long, maxBucket: Int = 512, minPlanes: Int = 8): Int = {
-    val targetFill = math.max(1.0, maxBucket / 2.0)
-    val needed = math.ceil(
-      math.log(math.max(1.0, n / targetFill)) / math.log(2.0)).toInt
-    math.max(minPlanes, needed)
-  }
-
-  /** planes=0 → corpus-derived via [[scaledPlanes]]; the embeddings
-    * count is parquet-footer metadata, one bounded scalar (the IvfIndex
-    * exception).
-    */
-  private def resolvePlanes(s: SparkSession, dir: String, planes: Int,
-      maxBucket: Int): Int =
-    if (planes > 0) planes
-    else scaledPlanes(Tables.embeddings(s, dir).count(), maxBucket)
-
   def semanticDedup(s: SparkSession, dir: String, planes: Int = 0,
       dim: Int = 64, minCos: Double = 0.3, maxBucket: Int = 512): DataFrame = {
-    val p = resolvePlanes(s, dir, planes, maxBucket)
-    semanticPairsFrom(semanticBucketed(s, dir, p, dim), minCos, maxBucket)
+    import s.implicits._
+    // Self-cleaning, the d11b way: the pair set is bounded by the bucket
+    // cap, so checkpoint it and free the corpus-sized bucketed cache.
+    SelfClean.releasing(semanticBucketed(embeddingVecs(s, dir),
+        resolvePlanes(s, dir, planes, maxBucket), dim)) { bucketed =>
+      semanticPairsWithBucket(bucketed, minCos, maxBucket)
+        .select($"vec_a", $"vec_b", $"cos")
+        .orderBy($"vec_a", $"vec_b")
+    }
   }
 
-  /** Public core of the d11 pair stage over any (vec_id, v: array<double>)
-    * frame — p07's doc-granular semantic gate composes this over hashed
-    * doc vectors instead of the embeddings table. Same sign-partition
-    * bucket family, partial-agg eligibility rule, and within-bucket
-    * verify as d11; same persist lifecycle (caller clearCache()s).
+  /** The semantic pair stage as a dedup verdict over any (vec_id, v:
+    * array<double>) frame — p07's doc-granular semantic gate runs it over
+    * hashed doc vectors in both [[graft.pipeline.CorpusPipeline.curateFull]]
+    * and `curateDelta`. Same sign-partition bucket family, partial-agg
+    * eligibility rule and within-bucket verify as d11. Returns the
+    * distinct `vec_id` LOSERS: the later element (vec_b) of every
+    * verified pair, plus — with `oversizedCanonical` — every member of a
+    * bucket past `maxBucket` except its min vec_id.
+    *
+    * The canonical route is d12's `oversizedCanonical` applied to the
+    * pair stage: the eligibility cap EXEMPTS over-cap buckets from
+    * pairing, so without it their members all survive dedup — exactly
+    * the hot template mass a curation pipeline exists to kill. No cosine
+    * verify inside such a bucket, by design: a bucket past the cap at
+    * corpus-scaled planes holds >maxBucket vectors concentrated in one of
+    * 2^planes sign cells — degenerate template/boilerplate mass where
+    * O(n²) verify is unpayable and the bucket IS the cluster (the
+    * SemDeDup pragmatic move; r15, CHANGELOG.md, measured this covering
+    * 100% of a 200k clustered corpus 3–4× FASTER than any pair form,
+    * 5.4 s vs 18–44 s, because giant clusters never expand into pairs).
+    *
+    * Self-cleaning ([[SelfClean.releasing]]): the loser set is
+    * checkpointed and the bucketed cache released before returning.
     */
-  def semanticPairsOf(vecs: DataFrame, planes: Int = 8, dim: Int = 64,
-      minCos: Double = 0.3, maxBucket: Int = 512): DataFrame =
-    semanticPairsHandle(vecs, planes, dim, minCos, maxBucket)._1
-
-  /** [[semanticPairsOf]] plus the persisted bucketed frame, so a caller
-    * embedding this as one stage of a longer pipeline (p07) can
-    * unpersist it as soon as the stage's output is materialized instead
-    * of letting the cache live until the next clearCache().
-    */
-  def semanticPairsHandle(vecs: DataFrame, planes: Int = 8, dim: Int = 64,
-      minCos: Double = 0.3, maxBucket: Int = 512): (DataFrame, DataFrame) = {
+  def semanticLosersOf(vecs: DataFrame, planes: Int = 8, dim: Int = 64,
+      minCos: Double = 0.3, maxBucket: Int = 512,
+      oversizedCanonical: Boolean = false): DataFrame = {
     val s = vecs.sparkSession
     import s.implicits._
-    val bucketed = vecs.select($"vec_id", $"v")
-      .withColumn("bucket", signBucket($"v", planes, dim))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (semanticPairsFrom(bucketed, minCos, maxBucket), bucketed)
-  }
-
-  /** Canonical-pick LOSERS for sign-partition buckets past `maxBucket`
-    * over a bucketed (vec_id, v, bucket) frame — every member except the
-    * bucket's min vec_id. This is d12's `oversizedCanonical` routing
-    * exposed as a composable stage half: the pair generator's
-    * eligibility cap EXEMPTS over-cap buckets from pairing (their
-    * members would otherwise all survive dedup — exactly the hot
-    * template mass a curation pipeline exists to kill), so a pipeline
-    * composing [[semanticPairsHandle]] unions these in as additional
-    * losers. No cosine verify inside the bucket, by design: a bucket
-    * past the cap at corpus-scaled planes holds >maxBucket vectors
-    * concentrated in one of 2^planes sign cells — degenerate
-    * template/boilerplate mass where O(n²) verify is unpayable and the
-    * bucket IS the cluster (the SemDeDup pragmatic move; r15,
-    * CHANGELOG.md, measured this covering 100% of a 200k clustered corpus 3–4×
-    * FASTER than any pair form, 5.4 s vs 18–44 s, because giant
-    * clusters never expand into pairs).
-    *
-    * Shape at 100 TB: the per-bucket (count, min) is a partial-
-    * aggregatable groupBy bounded at 2^planes rows, broadcast back
-    * onto the members — one map-side filter over the already-persisted
-    * bucketed frame, no new shuffle of the corpus.
-    */
-  def semanticOversizedLosersFrom(bucketed: DataFrame,
-      maxBucket: Int): DataFrame = {
-    val s = bucketed.sparkSession
-    import s.implicits._
-    val over = bucketed.groupBy($"bucket")
-      .agg(count(lit(1)).as("bn"), min($"vec_id").as("keep_id"))
-      .filter($"bn" > maxBucket)
-      .select($"bucket", $"keep_id")
-    bucketed.join(broadcast(over), Seq("bucket"))
-      .filter($"vec_id" =!= $"keep_id")
-      .select($"vec_id")
+    SelfClean.releasing(semanticBucketed(vecs, planes, dim)) { bucketed =>
+      val pairLosers = semanticPairsWithBucket(bucketed, minCos, maxBucket)
+        .select($"vec_b".as("vec_id"))
+      (if (!oversizedCanonical) pairLosers
+        else pairLosers.unionByName(bucketed
+          .join(broadcast(oversizedKeepers(bucketed, maxBucket)), Seq("bucket"))
+          .filter($"vec_id" =!= $"keep_id")
+          .select($"vec_id"))).distinct()
+    }
   }
 
   /** Observability for d11's bucket cap (the minhash/simhash contract):
@@ -920,12 +898,9 @@ object Dedup {
       dim: Int = 64, maxBucket: Int = 512): DataFrame = {
     import s.implicits._
     val p = resolvePlanes(s, dir, planes, maxBucket)
-    Tables.embeddings(s, dir)
-      .select(asDouble($"embedding").as("v"))
-      .select(signBucket($"v", p, dim).as("bucket"))
-      .groupBy($"bucket").agg(count(lit(1)).as("bucket_n"))
-      .filter($"bucket_n" > maxBucket)
-      .orderBy($"bucket")
+    droppedBuckets(Tables.embeddings(s, dir)
+      .select(signBucket(asDouble($"embedding"), p, dim).as("bucket")),
+      Seq("bucket"), maxBucket)
   }
 
   /** d11b: multi-probe semantic dedup — d11's single-bucket partition with
@@ -946,20 +921,19 @@ object Dedup {
     * Oversized home buckets stay excluded under the same maxBucket
     * contract as d11 (probes into them are dropped with them).
     */
-  /** Persisted (vec_id, v, bucket, probes) frame the multi-probe family
+  /** The (vec_id, v, bucket, probes) frame the multi-probe family
     * shares — the d11 `semanticBucketed` contract extended with the probe
     * array. One projection pass materializes per-plane margins + home
     * bucket; probes derive from those columns (not re-derived dot
     * products — the d11 lesson about duplicated subtrees, enforced
-    * structurally here). Lifecycle is CALLER-owned, same as
-    * [[semanticBucketed]]: Bench/Verify clearCache() after; the composed
-    * d12-nprobe plain path unpersists it itself once labels materialize.
+    * structurally here). Both callers (d11b, d12 with nprobe > 1) run
+    * over it through [[SelfClean.releasing]], the [[semanticBucketed]]
+    * rule.
     */
   private def semanticProbed(s: SparkSession, dir: String, planes: Int,
       dim: Int, nprobe: Int): DataFrame = {
     import s.implicits._
-    val projected = Tables.embeddings(s, dir)
-      .select($"vec_id", asDouble($"embedding").as("v"))
+    val projected = embeddingVecs(s, dir)
       .withColumn("proj",
         array((0 until planes).map(p => dot($"v", planeWeights(p, dim))): _*))
       .withColumn("bucket",
@@ -975,12 +949,8 @@ object Dedup {
       .withColumn("probes", concat(array($"bucket"),
         transform(slice(ranked, 1, nprobe - 1), pr => pr.getField("fb"))))
       .select($"vec_id", $"v", $"bucket", $"probes")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Verified pairs over a [[semanticProbed]] frame (see
-    * [[semanticDedupMultiprobe]] for the operator contract).
-    */
   /** Canonicalized candidate id pairs over a [[semanticProbed]] frame:
     * home × probe bucket match either direction, bare 16-byte id rows.
     * Candidates travel as BARE ID PAIRS: on a clustered corpus the
@@ -1015,6 +985,9 @@ object Dedup {
       .dropDuplicates("vec_a", "vec_b")
   }
 
+  /** Verified pairs over a [[semanticProbed]] frame (see
+    * [[semanticDedupMultiprobe]] for the operator contract).
+    */
   private def semanticPairsMultiprobeFrom(probed: DataFrame, minCos: Double,
       maxBucket: Int, quantPrefilter: Boolean = true): DataFrame = {
     val s = probed.sparkSession
@@ -1089,12 +1062,9 @@ object Dedup {
     // isolated across three rounds of artifacts). Eagerly checkpointing
     // the pair-sized verdict lets the operator free its own cache before
     // returning — same contract as segmentNeardupFullOf.
-    val probed = semanticProbed(s, dir,
-      resolvePlanes(s, dir, planes, maxBucket), dim, nprobe)
-    val out = SelfClean.checkpoint(
-      semanticPairsMultiprobeFrom(probed, minCos, maxBucket, quantPrefilter))
-    probed.unpersist()
-    out
+    SelfClean.releasing(semanticProbed(s, dir,
+        resolvePlanes(s, dir, planes, maxBucket), dim, nprobe))(
+      semanticPairsMultiprobeFrom(_, minCos, maxBucket, quantPrefilter))
   }
 
   /** Same md5-parity hyperplane family as d11's oracle, extended with the
@@ -1216,58 +1186,52 @@ object Dedup {
     val planesR = resolvePlanes(s, dir, planes, maxBucket)
     // Build ONLY the candidate frame this path reads: the probe frame
     // subsumes the bucketed frame (same bucket family plus the probe
-    // array), so the multi-probe path never builds both.
-    val candidates =
+    // array), so the multi-probe path never builds both. Eager lifecycle
+    // (ADVICE r13): the label table is result-sized (at most one row per
+    // clustered vector), so it is checkpointed and the corpus-sized
+    // candidate cache freed HERE — no persist survives the call.
+    val frame =
       if (nprobe > 1) semanticProbed(s, dir, planesR, dim, nprobe)
-      else semanticBucketed(s, dir, planesR, dim)
-    // Single-probe pairs NEVER cross buckets (both members of every edge
-    // share the bucket join key), so each component is confined to one
-    // bucket and clustering runs as a per-bucket union-find over the
-    // collected edge list — ≤ maxBucket vertices / ≤ maxBucket²/2 edges
-    // per group by the eligibility cap, one codegen'd pass — instead of
-    // the global iterative CC, whose log-rounds of corpus-wide joins +
-    // checkpoints dominated d12 at sf1 (~13 s of 19 s for 1.18M pairs
-    // from 20k clustered vectors). Multi-probe edges DO cross buckets
-    // (that is their purpose), so that path keeps the global CC.
-    val cc =
-      if (nprobe == 1)
-        semanticPairsWithBucket(candidates, minCos, maxBucket)
-          .groupBy($"bucket")
-          .agg(collect_list(struct($"vec_a".as("a"), $"vec_b".as("b")))
-            .as("edges"))
-          .select(explode(org.apache.spark.sql.graft.GraftFunctions
-            .component_labels($"edges")).as("lab"))
-          .select($"lab.vec_id".as("vec_id"), $"lab.cluster_id".as("cluster_id"))
-      else
-        connectedComponents(
-          semanticPairsMultiprobeFrom(candidates, minCos, maxBucket)
-            .select($"vec_a".as("doc_a"), $"vec_b".as("doc_b")))
-          .select($"doc_id".as("vec_id"), $"cluster_id")
-    val assignments = if (oversizedCanonical) {
-      val overBuckets = candidates.groupBy($"bucket")
-        .agg(count(lit(1)).as("bn"), min($"vec_id").as("cluster_id"))
-        .filter($"bn" > maxBucket)
-        .select($"bucket", $"cluster_id")
-      // With nprobe > 1 an oversized-bucket member can ALSO hold a cc
-      // label (its probes reach eligible buckets, pairing it there even
-      // though its home bucket never self-joins). Verified-pair labels
-      // win; the anti-join keeps assignments one-row-per-vector — without
-      // it the final left join would emit such vectors twice with
-      // conflicting cluster ids.
-      cc.unionByName(
-        candidates.join(broadcast(overBuckets), Seq("bucket"))
-          .select($"vec_id", $"cluster_id")
-          .join(cc.select($"vec_id"), Seq("vec_id"), "left_anti"))
-    } else cc
-    // Eager lifecycle (ADVICE r13): the label table is result-sized (at
-    // most one row per clustered vector), so materialize it via
-    // localCheckpoint and free the corpus-sized candidate cache HERE —
-    // no persist survives the call. The previous single-probe path left
-    // `candidates` cached "caller-owned" with no handle exposed, so a
-    // long-lived session could only reclaim it via session-wide
-    // clearCache (evicting co-resident workloads' caches with it).
-    val labels = SelfClean.checkpoint(assignments)
-    candidates.unpersist()
+      else semanticBucketed(embeddingVecs(s, dir), planesR, dim)
+    val labels = SelfClean.releasing(frame) { candidates =>
+      // Single-probe pairs NEVER cross buckets (both members of every edge
+      // share the bucket join key), so each component is confined to one
+      // bucket and clustering runs as a per-bucket union-find over the
+      // collected edge list — ≤ maxBucket vertices / ≤ maxBucket²/2 edges
+      // per group by the eligibility cap, one codegen'd pass — instead of
+      // the global iterative CC, whose log-rounds of corpus-wide joins +
+      // checkpoints dominated d12 at sf1 (~13 s of 19 s for 1.18M pairs
+      // from 20k clustered vectors). Multi-probe edges DO cross buckets
+      // (that is their purpose), so that path keeps the global CC.
+      val cc =
+        if (nprobe == 1)
+          semanticPairsWithBucket(candidates, minCos, maxBucket)
+            .groupBy($"bucket")
+            .agg(collect_list(struct($"vec_a".as("a"), $"vec_b".as("b")))
+              .as("edges"))
+            .select(explode(org.apache.spark.sql.graft.GraftFunctions
+              .component_labels($"edges")).as("lab"))
+            .select($"lab.vec_id".as("vec_id"), $"lab.cluster_id".as("cluster_id"))
+        else
+          connectedComponents(
+            semanticPairsMultiprobeFrom(candidates, minCos, maxBucket)
+              .select($"vec_a".as("doc_a"), $"vec_b".as("doc_b")))
+            .select($"doc_id".as("vec_id"), $"cluster_id")
+      if (oversizedCanonical) {
+        val overBuckets = oversizedKeepers(candidates, maxBucket)
+          .select($"bucket", $"keep_id".as("cluster_id"))
+        // With nprobe > 1 an oversized-bucket member can ALSO hold a cc
+        // label (its probes reach eligible buckets, pairing it there even
+        // though its home bucket never self-joins). Verified-pair labels
+        // win; the anti-join keeps assignments one-row-per-vector — without
+        // it the final left join would emit such vectors twice with
+        // conflicting cluster ids.
+        cc.unionByName(
+          candidates.join(broadcast(overBuckets), Seq("bucket"))
+            .select($"vec_id", $"cluster_id")
+            .join(cc.select($"vec_id"), Seq("vec_id"), "left_anti"))
+      } else cc
+    }
     Tables.embeddings(s, dir).select($"vec_id")
       .join(labels, Seq("vec_id"), "left")
       .select($"vec_id", coalesce($"cluster_id", $"vec_id").as("cluster_id"))
@@ -2269,11 +2233,9 @@ object Dedup {
     val meta = segmentHashFrame(
       Tables.documents(s, dir).select($"doc_id", $"text"), width)
     val keepers = segmentKeepers(meta).select($"ord".as("doc_id"), $"sh")
-    minhashBandedFrom(keepers.filter(size($"sh") > 0), bands, rows)
-      .groupBy($"band", $"band_hash")
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter($"bucket_n" > maxBucket)
-      .orderBy($"band", $"band_hash")
+    droppedBuckets(
+      minhashBandedFrom(keepers.filter(size($"sh") > 0), bands, rows),
+      Seq("band", "band_hash"), maxBucket)
   }
 
   def segmentNeardupSql(width: Int = 10, idBound: Long = 150, k: Int = 16,
@@ -2616,19 +2578,21 @@ object Dedup {
   }
 
   /** [[dedupDelta]] without the final sort — the (corpus_id, new_id,
-    * jaccard) pairs, each once, in no particular order.
+    * jaccard) pairs, each once, in no particular order. Self-cleaning
+    * ([[SelfClean.releasing]]): the delta's shingle frame (read by
+    * banding and verify) is released once the candidate-sized result is
+    * checkpointed.
     */
   private[graft] def dedupDeltaPairs(spark: SparkSession, table: String,
       delta: DataFrame, bands: Int, rows: Int,
       minJaccard: Double): DataFrame = {
-    val dsh = shingleFrame(delta)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    dedupProbeFrames(Seq(storedIndex(spark, table)), dsh, bands, rows,
-      minJaccard)
-      // duplicate index rows (an at-least-once append replay) fan the
-      // verify joins into duplicate output rows — collapse the
-      // result-sized frame so probes stay exactly-once downstream
-      .dropDuplicates("corpus_id", "new_id")
+    SelfClean.releasing(shingleFrame(delta))(
+      dedupProbeFrames(Seq(storedIndex(spark, table)), _, bands, rows,
+        minJaccard)
+        // duplicate index rows (an at-least-once append replay) fan the
+        // verify joins into duplicate output rows — collapse the
+        // result-sized frame so probes stay exactly-once downstream
+        .dropDuplicates("corpus_id", "new_id"))
   }
 
   /** The (bands, shingles) tables of a [[writeDedupIndex]] index as an

@@ -417,48 +417,23 @@ object Graph {
       .limit(top)
   }
 
-  /** Eagerly materialize a small (top-k-bounded) operator result and
-    * release the operator's internal caches — the memo-free graph
-    * helpers' exit discipline (VERDICT r14 #3): the ≤`top`-row output is
-    * localCheckpoint'd (one tiny block, GC-cleaned with the frame), then
-    * every internal persist drops, so nothing outlives the returned
-    * frame in a long-lived session. Bench times construction + sink
-    * together, so moving the work to construction keeps timings honest.
-    */
-  private def finalized(outAndCaches: (DataFrame, Seq[DataFrame])): DataFrame = {
-    val (out, caches) = outAndCaches
-    val materialized = SelfClean.checkpoint(out)
-    caches.foreach(_.unpersist())
-    materialized
-  }
-
   /** Core of [[copurchase]] over any (ck, sk) pair frame — raw
     * (duplicate-bearing) input is fine: the per-customer collect_set
     * dedups in the projection's single corpus shuffle. Memo-free (tests
     * and probes hand in synthetic frames); the dir-keyed [[copurchase]]
-    * rides [[projectionTables]]. Self-cleaning: the internal array cache
-    * is released when the (≤top-row) result materializes; callers that
-    * want to keep the cache across follow-up queries use
-    * [[copurchaseHandle]].
+    * rides [[projectionTables]]. Self-cleaning
+    * ([[SelfClean.releasing]]): the persisted per-customer arrays are
+    * released when the (≤top-row) result materializes.
     */
   def copurchaseOf(pairsRaw: DataFrame,
-                   maxFan: Int = 64, minCommon: Long = 2, top: Int = 50): DataFrame =
-    finalized(copurchaseHandle(pairsRaw, maxFan, minCommon, top))
-
-  /** [[copurchaseOf]] plus its internal cache (the persisted per-customer
-    * arrays) — the minhashPairsHandle contract: the caller unpersists
-    * once the result is materialized.
-    */
-  def copurchaseHandle(pairsRaw: DataFrame,
-                       maxFan: Int = 64, minCommon: Long = 2,
-                       top: Int = 50): (DataFrame, Seq[DataFrame]) = {
+                   maxFan: Int = 64, minCommon: Long = 2, top: Int = 50): DataFrame = {
     val s = pairsRaw.sparkSession
     import s.implicits._
-    val arrays = customerArrays(pairsRaw).persist(StorageLevel.MEMORY_AND_DISK)
-    val supSize = arrays.select(explode($"sks").as("sk"))
-      .groupBy($"sk").agg(count(lit(1)).as("n_cust"))
-    val common = projectionCommonOf(arrays, maxFan, minCommon)
-    (copurchaseFinish(supSize, common, top), Seq(arrays))
+    SelfClean.releasing(customerArrays(pairsRaw)) { arrays =>
+      val supSize = arrays.select(explode($"sks").as("sk"))
+        .groupBy($"sk").agg(count(lit(1)).as("n_cust"))
+      copurchaseFinish(supSize, projectionCommonOf(arrays, maxFan, minCommon), top)
+    }
   }
 
   /** g02b: sketch-triage co-purchase — the documented 100 TB alternative
@@ -514,41 +489,29 @@ object Graph {
                        maxFan: Int = 64, minJaccard: Double = 0.2,
                        top: Int = 50, bands: Int = 32, rows: Int = 2,
                        maxBucket: Int = 64): DataFrame =
-    finalized(sketchFromArrays(tradeArraysTable(s, dir), maxFan,
-      minJaccard, top, bands, rows, maxBucket))
+    sketchFromArrays(tradeArraysTable(s, dir), maxFan,
+      minJaccard, top, bands, rows, maxBucket)
 
-  /** Core of [[copurchaseSketch]] over any (ck, sk) pair frame.
-    * Self-cleaning ([[finalized]]); [[copurchaseSketchHandle]] exposes
-    * the cache for callers composing follow-up queries.
-    */
+  /** Core of [[copurchaseSketch]] over any (ck, sk) pair frame. */
   def copurchaseSketchOf(pairsRaw: DataFrame,
                          maxFan: Int = 64, minJaccard: Double = 0.2,
                          top: Int = 50, bands: Int = 32, rows: Int = 2,
                          maxBucket: Int = 64): DataFrame =
-    finalized(copurchaseSketchHandle(pairsRaw, maxFan, minJaccard, top,
-      bands, rows, maxBucket))
-
-  /** [[copurchaseSketchOf]] plus its internal cache (the persisted
-    * per-supplier customer-hash arrays, read three times by the band /
-    * verify pipeline) — the minhashPairsHandle contract (ADVICE r14).
-    */
-  def copurchaseSketchHandle(pairsRaw: DataFrame,
-                             maxFan: Int = 64, minJaccard: Double = 0.2,
-                             top: Int = 50, bands: Int = 32, rows: Int = 2,
-                             maxBucket: Int = 64): (DataFrame, Seq[DataFrame]) =
-    sketchFromArrays(customerArrays(pairsRaw), maxFan, minJaccard, top,
-      bands, rows, maxBucket)
+    sketchFromArrays(customerArrays(pairsRaw), maxFan, minJaccard,
+      top, bands, rows, maxBucket)
 
   /** The sketch pipeline over a [[customerArrays]] frame (memoized or
     * fresh): hub customers (fan > maxFan) are excluded map-side from the
     * ≤maxFan arrays — the same rule as g02's wedge stage — and the
     * customer ids hash to 8-byte tokens at explode time (the
     * shingle-hash discipline of the text path), so the ONE supplier-side
-    * exchange carries only distinct hashed pairs.
+    * exchange carries only distinct hashed pairs. Self-cleaning
+    * ([[SelfClean.releasing]]): the persisted per-supplier customer-hash
+    * arrays are released when the (≤top-row) result materializes.
     */
   private def sketchFromArrays(arrays: DataFrame, maxFan: Int,
                                minJaccard: Double, top: Int, bands: Int,
-                               rows: Int, maxBucket: Int): (DataFrame, Seq[DataFrame]) = {
+                               rows: Int, maxBucket: Int): DataFrame = {
     val s = arrays.sparkSession
     import s.implicits._
     val supCust = arrays
@@ -556,14 +519,12 @@ object Graph {
       .select($"ck", explode($"sks").as("sk"))
       .groupBy($"sk")
       .agg(sort_array(collect_set(xxhash64($"ck"))).as("sh"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val out = graft.operators.Dedup
-      .minhashPairsFromShingles(supCust.select($"sk".as("doc_id"), $"sh"),
+    SelfClean.releasing(supCust)(cached => graft.operators.Dedup
+      .minhashPairsFromShingles(cached.select($"sk".as("doc_id"), $"sh"),
         bands, rows, maxBucket, minJaccard)
       .select($"doc_a".as("sk_a"), $"doc_b".as("sk_b"), $"jaccard")
       .orderBy($"jaccard".desc, $"sk_a", $"sk_b")
-      .limit(top)
-    (out, Seq(supCust))
+      .limit(top))
   }
 
   def copurchaseSql(maxFan: Int = 64, minCommon: Long = 2, top: Int = 50): String =
@@ -691,51 +652,33 @@ object Graph {
     }
   }
 
-  /** [[strongEdgesFromCommon]] from a raw pair frame, plus the persisted
-    * common table backing the returned edge frame (memo-free — tests and
-    * probes hand in synthetic frames; the dir-keyed [[triangles]] rides
-    * [[projectionTables]] instead). Eager: the percentile histogram
-    * collects when this is called, materializing the cache. The caller
-    * unpersists once done with the edges — the minhashPairsHandle
-    * contract.
-    */
-  def strongEdgesHandle(pairsRaw: DataFrame, maxFan: Int, minCommon: Long,
-                        strengthQ: Double): (DataFrame, Seq[DataFrame]) = {
-    val common = projectionCommon(pairsRaw, maxFan, minCommon)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (strongEdgesFromCommon(common, strengthQ), Seq(common))
-  }
-
-  /** Standalone [[strongEdgesHandle]]: the edge set is checkpointed
-    * eagerly (it is the quantile-thinned projection — a small fraction
-    * of |E|) and the common-table cache released, so nothing internal
-    * outlives the returned frame.
+  /** [[strongEdgesFromCommon]] from a raw pair frame (memo-free — tests
+    * and probes hand in synthetic frames; the dir-keyed [[triangles]]
+    * rides [[projectionTables]] instead). The common table is persisted:
+    * the percentile histogram and the edge filter both read it.
+    * Self-cleaning ([[SelfClean.releasing]]): the edge set is
+    * checkpointed eagerly (it is the quantile-thinned projection — a
+    * small fraction of |E|) and the common-table cache released, so
+    * nothing internal outlives the returned frame.
     */
   def strongEdges(pairsRaw: DataFrame, maxFan: Int, minCommon: Long,
-                  strengthQ: Double): DataFrame = {
-    val (edges, caches) = strongEdgesHandle(pairsRaw, maxFan, minCommon, strengthQ)
-    val materialized = SelfClean.checkpoint(edges)
-    caches.foreach(_.unpersist())
-    materialized
-  }
+                  strengthQ: Double): DataFrame =
+    SelfClean.releasing(projectionCommon(pairsRaw, maxFan, minCommon))(
+      strongEdgesFromCommon(_, strengthQ))
 
   /** Core of [[triangles]] over any distinct (ck, sk) pair frame.
-    * Self-cleaning: the common-table and adjacency caches are released
-    * when the ≤top-row result materializes.
+    * Self-cleaning: [[strongEdges]] and [[trianglesFromEdges]] each
+    * release their caches before returning.
     */
   def trianglesOf(pairsRaw: DataFrame,
                   maxFan: Int = 64, minCommon: Long = 2, top: Int = 50,
-                  strengthQ: Double = 0.9): DataFrame = {
-    val (edges, caches) = strongEdgesHandle(pairsRaw, maxFan, minCommon, strengthQ)
-    val out = trianglesFromEdges(edges, top) // eager + self-cleaning
-    caches.foreach(_.unpersist())
-    out
-  }
+                  strengthQ: Double = 0.9): DataFrame =
+    trianglesFromEdges(strongEdges(pairsRaw, maxFan, minCommon, strengthQ), top)
 
   /** Arithmetic triangle participation over a canonical (u < v) strong-
     * edge frame — see [[triangles]] for the edge-iterator identity.
-    * Self-cleaning ([[finalized]]): the adjacency cache is released when
-    * the ≤top-row result materializes.
+    * Self-cleaning ([[SelfClean.releasing]]): the adjacency cache is
+    * released when the ≤top-row result materializes.
     */
   def trianglesFromEdges(e: DataFrame, top: Int = 50): DataFrame = {
     val s = e.sparkSession
@@ -743,18 +686,17 @@ object Graph {
     val adj = e.select($"u".as("n"), $"v".as("m"))
       .union(e.select($"v".as("n"), $"u".as("m")))
       .groupBy($"n").agg(sort_array(collect_list($"m")).as("nbrs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val out = e.join(adj.select($"n".as("u"), $"nbrs".as("nu")), "u")
-      .join(adj.select($"n".as("v"), $"nbrs".as("nv")), "v")
-      .select($"u", $"v",
-        size(array_intersect($"nu", $"nv")).cast("long").as("c"))
-      .select(explode(array($"u", $"v")).as("node"), $"c")
-      .groupBy($"node")
-      .agg((sum($"c") / 2).cast("long").as("n_tri"))
-      .filter($"n_tri" > 0)
-      .orderBy($"n_tri".desc, $"node")
-      .limit(top)
-    finalized((out, Seq(adj)))
+    SelfClean.releasing(adj)(cached =>
+      e.join(cached.select($"n".as("u"), $"nbrs".as("nu")), "u")
+        .join(cached.select($"n".as("v"), $"nbrs".as("nv")), "v")
+        .select($"u", $"v",
+          size(array_intersect($"nu", $"nv")).cast("long").as("c"))
+        .select(explode(array($"u", $"v")).as("node"), $"c")
+        .groupBy($"node")
+        .agg((sum($"c") / 2).cast("long").as("n_tri"))
+        .filter($"n_tri" > 0)
+        .orderBy($"n_tri".desc, $"node")
+        .limit(top))
   }
 
   def trianglesSql(maxFan: Int = 64, minCommon: Long = 2, top: Int = 50,

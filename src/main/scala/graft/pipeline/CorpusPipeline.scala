@@ -238,6 +238,15 @@ object CorpusPipeline {
       .select(col("doc_id"), col("source"),
         coalesce(col("cleaned"), col("text")).as("text"))
 
+  /** The semantic stage's within-batch losers over (vec_id, v) doc
+    * vectors, as `doc_id`s.
+    */
+  private def semanticLosers(vecs: DataFrame, planes: Int,
+      cfg: FullConfig): DataFrame =
+    Dedup.semanticLosersOf(vecs, planes, cfg.semDim, cfg.semMinCos,
+        cfg.semMaxBucket, cfg.semOversizedCanonical)
+      .select(col("vec_id").as("doc_id"))
+
   /** The full curation DAG. `benchmark` is the held-out eval set the
     * decontamination stage guards (any frame with a `text` column).
     *
@@ -253,12 +262,12 @@ object CorpusPipeline {
     * rank window, so no low-cardinality parallelism ceiling); packing
     * and the epoch schedule are p02/p06 over the survivors.
     *
-    * Kill-rate accounting: each doc-set stage persists its output and
-    * counts it once (the count doubles as the materialization the next
-    * stage reads). The pack row changes granularity — its n_out is
+    * Kill-rate accounting: each doc-set stage checkpoints its output
+    * and counts it once (the count doubles as the materialization the
+    * next stage reads). The pack row changes granularity — its n_out is
     * SEQUENCES, not documents — and the PII row kills nothing by
-    * construction (it rewrites text). Caller owns the cache lifecycle
-    * (Bench/Verify clearCache() per the repo convention).
+    * construction (it rewrites text). Every stage operator is
+    * self-cleaning, so the run leaves nothing cached behind.
     *
     * With `stateTable = Some(t)`, [[curateFull]] also persists each
     * dedup stage's reference state — the stage INPUTS, which is what a
@@ -342,18 +351,16 @@ object CorpusPipeline {
     // conservative direction for a training corpus. Star mode pairs
     // oversized-bucket members against the bucket representative so hot
     // near-identical templates are flagged instead of silently passed.
-    val (ndPairs, ndShCache) = Dedup
-      .minhashPairsHandle(afterSeg.select($"doc_id", $"text"),
-        cfg.nearDupBands, cfg.nearDupRows, cfg.maxBucket,
-        cfg.nearDupJaccard, oversizedLink = cfg.nearDupStarMode)
-    val ndLosers = ndPairs.select($"doc_b".as("doc_id")).distinct()
     stateTable.foreach(t => Dedup.writeDedupIndex(
       afterSeg.select($"doc_id", $"text"), s"${t}_doc",
       bands = cfg.nearDupBands, rows = cfg.nearDupRows,
       maxBucket = cfg.maxBucket))
     val (afterNd, nNd) = st.staged("d02_minhash_neardup", nSeg,
-      afterSeg.join(ndLosers, Seq("doc_id"), "left_anti"))
-    ndShCache.unpersist()
+      afterSeg.join(Dedup
+        .minhashPairs(afterSeg.select($"doc_id", $"text"),
+          cfg.nearDupBands, cfg.nearDupRows, cfg.maxBucket,
+          cfg.nearDupJaccard, oversizedLink = cfg.nearDupStarMode)
+        .select($"doc_b".as("doc_id")).distinct(), Seq("doc_id"), "left_anti"))
 
     // d12-style semantic gate over hashed doc vectors; same
     // drop-the-later-element policy as the d02 stage. Over-cap buckets
@@ -363,20 +370,9 @@ object CorpusPipeline {
     // leak the d02 stage runs star mode to close.
     val semPlanes = if (cfg.semPlanes > 0) cfg.semPlanes
       else Dedup.scaledPlanes(nNd, cfg.semMaxBucket)
-    val (semPairs, semBucketed) = Dedup
-      .semanticPairsHandle(hashedDocVectors(afterNd, cfg.semDim),
-        semPlanes, cfg.semDim, cfg.semMinCos, cfg.semMaxBucket)
-    val semPairLosers = semPairs.select($"vec_b".as("doc_id"))
-    val semLosers = (if (cfg.semOversizedCanonical)
-        semPairLosers.unionByName(Dedup
-          .semanticOversizedLosersFrom(semBucketed, cfg.semMaxBucket)
-          .select($"vec_id".as("doc_id")))
-      else semPairLosers).distinct()
     val (afterSem, nSem) = st.staged("d12_semantic_dedup", nNd,
-      afterNd.join(semLosers, Seq("doc_id"), "left_anti"))
-    // the staged() count above materialized the losers — the bucketed
-    // cache is dead weight from here on (Bench reps would stack copies)
-    semBucketed.unpersist()
+      afterNd.join(semanticLosers(hashedDocVectors(afterNd, cfg.semDim),
+        semPlanes, cfg), Seq("doc_id"), "left_anti"))
     stateTable.foreach(t => Dedup.writeSemanticIndex(
       hashedDocVectors(afterNd, cfg.semDim)
         .select($"vec_id", $"v".as("embedding")),
@@ -509,52 +505,43 @@ object CorpusPipeline {
 
     // d02: stored-corpus matches (new_id is always the later element —
     // corpus ids precede the delta's) ∪ within-delta pair losers
-    val ndLosers = Dedup
-      .dedupDeltaPairs(s, s"${stateTable}_doc",
-        afterSeg.select($"doc_id", $"text"), cfg.nearDupBands,
-        cfg.nearDupRows, cfg.nearDupJaccard)
-      .select($"new_id".as("doc_id"))
-      .unionByName(Dedup
-        .minhashPairs(afterSeg.select($"doc_id", $"text"), cfg.nearDupBands,
-          cfg.nearDupRows, cfg.maxBucket, cfg.nearDupJaccard,
-          oversizedLink = cfg.nearDupStarMode)
-        .select($"doc_b".as("doc_id")))
-      .distinct()
-    val (afterNd, nNd) = st.staged("d02_minhash_neardup", nSeg,
-      afterSeg.join(ndLosers, Seq("doc_id"), "left_anti"))
+    val (afterNd, nNd) = st.staged("d02_minhash_neardup", nSeg, {
+      val ndLosers = Dedup
+        .dedupDeltaPairs(s, s"${stateTable}_doc",
+          afterSeg.select($"doc_id", $"text"), cfg.nearDupBands,
+          cfg.nearDupRows, cfg.nearDupJaccard)
+        .select($"new_id".as("doc_id"))
+        .unionByName(Dedup
+          .minhashPairs(afterSeg.select($"doc_id", $"text"),
+            cfg.nearDupBands, cfg.nearDupRows, cfg.maxBucket,
+            cfg.nearDupJaccard, oversizedLink = cfg.nearDupStarMode)
+          .select($"doc_b".as("doc_id")))
+        .distinct()
+      afterSeg.join(ndLosers, Seq("doc_id"), "left_anti")
+    })
 
-    // d12: stored-vector matches ∪ within-delta pair losers
-    val vecs = hashedDocVectors(afterNd, cfg.semDim).localCheckpoint()
-    // within-delta pairing sizes planes to the DELTA (small → floor 8);
-    // the stored-index probe at planes=0 reads the partition the index
-    // was WRITTEN with from its _vecmeta sidecar — probe and store must
-    // agree even when the full DAG derived a bigger value
+    // d12: stored-vector matches ∪ within-delta losers. Within-delta
+    // pairing sizes planes to the DELTA (small → floor 8); the
+    // stored-index probe at planes=0 reads the partition the index was
+    // WRITTEN with from its _vecmeta sidecar — probe and store must
+    // agree even when the full DAG derived a bigger value. Within-delta
+    // over-cap buckets route to canonical, same as the batch DAG; the
+    // cap stays per-side (the documented LSH-cap divergence — a bucket
+    // over-cap only when corpus+delta combine is handled at the side
+    // that sees it).
     val semPlanes = if (cfg.semPlanes > 0) cfg.semPlanes
       else Dedup.scaledPlanes(nNd, cfg.semMaxBucket)
-    val (semPairs, semBucketed) = Dedup.semanticPairsHandle(vecs,
-      semPlanes, cfg.semDim, cfg.semMinCos, cfg.semMaxBucket)
-    // within-delta over-cap buckets route to canonical, same as the
-    // batch DAG; the cap stays per-side (the documented LSH-cap
-    // divergence — a bucket over-cap only when corpus+delta combine is
-    // handled at the side that sees it)
-    val semWithin = {
-      val pairLosers = semPairs.select($"vec_b".as("doc_id"))
-      if (cfg.semOversizedCanonical)
-        pairLosers.unionByName(Dedup
-          .semanticOversizedLosersFrom(semBucketed, cfg.semMaxBucket)
-          .select($"vec_id".as("doc_id")))
-      else pairLosers
-    }
-    val semLosers = Dedup
-      .semanticDelta(s, s"${stateTable}_sem",
-        vecs.select($"vec_id", $"v".as("embedding")),
-        planes = cfg.semPlanes, minCos = cfg.semMinCos)
-      .select($"new_id".as("doc_id"))
-      .unionByName(semWithin)
-      .distinct()
-    val (afterSem, nSem) = st.staged("d12_semantic_dedup", nNd,
-      afterNd.join(semLosers, Seq("doc_id"), "left_anti"))
-    semBucketed.unpersist()
+    val (afterSem, nSem) = st.staged("d12_semantic_dedup", nNd, {
+      val vecs = hashedDocVectors(afterNd, cfg.semDim).localCheckpoint()
+      val semLosers = Dedup
+        .semanticDelta(s, s"${stateTable}_sem",
+          vecs.select($"vec_id", $"v".as("embedding")),
+          planes = cfg.semPlanes, minCos = cfg.semMinCos)
+        .select($"new_id".as("doc_id"))
+        .unionByName(semanticLosers(vecs, semPlanes, cfg))
+        .distinct()
+      afterNd.join(semLosers, Seq("doc_id"), "left_anti")
+    })
 
     val result = curationTail(st, afterSem, nSem, benchmark, cfg)
 

@@ -178,13 +178,15 @@ object DocumentPipeline {
     (conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
       .cast("long") % shards).cast("int")
 
-  /** Core of p02 over any (doc_id, source, text) frame. */
-  /** `tokenCount`: the per-document token-count column the budget packs
-    * against. Default is the oracled whitespace count; pass
-    * `Bpe`-backed counting (see [[sequencePackBpe]]) to make budgets
-    * production-true against a trained tokenizer (VERDICT r14 #5) —
-    * the packing plan is identical either way (the counter is one
-    * map-side codegen'd expression).
+  /** Core of p02 over any (doc_id, source, text) frame. `tokenCount`:
+    * the per-document token-count column the budget packs against.
+    * Default is the oracled whitespace count; pass `Bpe`-backed counting
+    * (see [[sequencePackBpe]]) to make budgets production-true against a
+    * trained tokenizer (VERDICT r14 #5) — the packing plan is identical
+    * either way (the counter is one map-side codegen'd expression).
+    * Self-cleaning ([[graft.operators.SelfClean.releasing]]): the
+    * sequence rollup (one row per packed sequence) is checkpointed and
+    * the token-count cache released before returning.
     */
   def sequencePackOf(documents: DataFrame, budget: Int = 512,
       shards: Int = 8,
@@ -194,38 +196,38 @@ object DocumentPipeline {
     val s = documents.sparkSession
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    // Persisted: the tokenize projection feeds BOTH the window pass and
-    // the per-shard totals — without the (narrow, 4-column) cache the
-    // corpus would be scanned and split() twice.
-    val docs = documents
+    // Persisted (SelfClean.releasing): the tokenize projection feeds BOTH
+    // the window pass and the per-shard totals — without the (narrow,
+    // 4-column) cache the corpus would be scanned and split() twice.
+    graft.operators.SelfClean.releasing(documents
       .select($"doc_id", $"source",
         tokenCount($"text").cast("long").as("n_tokens"),
-        packShard(shards).as("shard"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Pass 1: prefix sum local to the (source, shard) pack group.
-    val w = Window.partitionBy($"source", $"shard").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = docs
-      .withColumn("local_before", coalesce(sum($"n_tokens").over(w), lit(0L)))
-    // Pass 2: per-shard totals (|sources|×shards rows) → cumulative base
-    // offsets. The window here runs over the tiny aggregate, not the
-    // corpus; broadcast is bounded by |sources|×shards by construction.
-    val wb = Window.partitionBy($"source").orderBy($"shard")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bases = docs.groupBy($"source", $"shard")
-      .agg(sum($"n_tokens").as("shard_tokens"))
-      .withColumn("base", coalesce(sum($"shard_tokens").over(wb), lit(0L)))
-      .select($"source", $"shard", $"base")
-    local.join(broadcast(bases), Seq("source", "shard"))
-      .withColumn("cum_before", $"base" + $"local_before")
-      .withColumn("seq_id", floor($"cum_before" / budget).cast("long"))
-      .withColumn("crosses",
-        floor(($"cum_before" + $"n_tokens" - 1) / budget).cast("long") =!= $"seq_id")
-      .groupBy($"source", $"seq_id")
-      .agg(count(lit(1)).as("n_docs"),
-        sum($"n_tokens").as("seq_tokens"),
-        sum($"crosses".cast("long")).as("n_boundary_crossers"))
-      .orderBy($"source", $"seq_id")
+        packShard(shards).as("shard"))) { docs =>
+      // Pass 1: prefix sum local to the (source, shard) pack group.
+      val w = Window.partitionBy($"source", $"shard").orderBy($"doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val local = docs
+        .withColumn("local_before", coalesce(sum($"n_tokens").over(w), lit(0L)))
+      // Pass 2: per-shard totals (|sources|×shards rows) → cumulative base
+      // offsets. The window here runs over the tiny aggregate, not the
+      // corpus; broadcast is bounded by |sources|×shards by construction.
+      val wb = Window.partitionBy($"source").orderBy($"shard")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val bases = docs.groupBy($"source", $"shard")
+        .agg(sum($"n_tokens").as("shard_tokens"))
+        .withColumn("base", coalesce(sum($"shard_tokens").over(wb), lit(0L)))
+        .select($"source", $"shard", $"base")
+      local.join(broadcast(bases), Seq("source", "shard"))
+        .withColumn("cum_before", $"base" + $"local_before")
+        .withColumn("seq_id", floor($"cum_before" / budget).cast("long"))
+        .withColumn("crosses",
+          floor(($"cum_before" + $"n_tokens" - 1) / budget).cast("long") =!= $"seq_id")
+        .groupBy($"source", $"seq_id")
+        .agg(count(lit(1)).as("n_docs"),
+          sum($"n_tokens").as("seq_tokens"),
+          sum($"crosses".cast("long")).as("n_boundary_crossers"))
+        .orderBy($"source", $"seq_id")
+    }
   }
 
   /** [[sequencePackOf]] budgeting by TRAINED-tokenizer counts: packs

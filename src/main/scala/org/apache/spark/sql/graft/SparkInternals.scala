@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
+import scala.util.control.NonFatal
 
 /** Narrow bridge to `private[spark]` surfaces (this package lives under
   * org.apache.spark for exactly this reason — same pattern as the
@@ -29,7 +30,7 @@ object SparkInternals {
     df.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         try l.rdd.unpersist(blocking = false)
-        catch { case _: Throwable => () } // context already stopped
+        catch { case NonFatal(_) => () } // context already stopped
       case _ => ()
     }
 
@@ -67,7 +68,7 @@ object SparkInternals {
     // is being timed.
     stale.foreach(r =>
       try r.unpersist(blocking)
-      catch { case _: Throwable => () })
+      catch { case NonFatal(_) => () })
     stale.size
   }
 

@@ -530,8 +530,16 @@ class DedupSpec extends SparkSpec {
     // scan and its first join (candidate-sized shuffles above the joins
     // are fine; so is broadcasting the small side at this scale). AQE
     // wraps the plan, so unwrap before traversing — a collect on the
-    // wrapper sees no exchanges at all and would pass vacuously.
-    val plan = got.queryExecution.executedPlan match {
+    // wrapper sees no exchanges at all and would pass vacuously. `got`
+    // is checkpointed (a bare `Scan ExistingRDD`), so walk the probe as
+    // plan mode builds it, with the checkpoint a pass-through.
+    val probePlan = {
+      graft.operators.SelfClean.planMode = true
+      try Dedup.dedupDelta(spark, "inc_idx_spec", delta)
+        .queryExecution.executedPlan
+      finally graft.operators.SelfClean.planMode = false
+    }
+    val plan = probePlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.executedPlan
       case p => p
@@ -541,6 +549,12 @@ class DedupSpec extends SparkSpec {
     }
     assert(allShuffles.nonEmpty,
       "traversal found no exchanges anywhere - plan walk is broken")
+    val storedScans = plan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.tableIdentifier.exists(_.table.startsWith("inc_idx_spec")) => f
+    }
+    assert(storedScans.nonEmpty,
+      "traversal found no stored index scan - plan walk is broken")
     val reshuffledStore = allShuffles.filter { e =>
       val scans = e.child.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
@@ -967,13 +981,17 @@ class DedupSpec extends SparkSpec {
   }
 
   test("span-dedup entry points leave nothing cached behind") {
-    // Each public substring/segment entry point either persists nothing
-    // or releases what it persisted before returning; the stored-index
-    // probes run after their own index writers, which must not leak
-    // either.
-    val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
+    // Each public substring/segment, minhash and semantic entry point
+    // either persists nothing or releases what it persisted before
+    // returning; the stored-index probes run after their own index
+    // writers, which must not leak either, and so does p07's delta run
+    // after the batch run that writes its state.
+    val all = Tables.documents(spark, sf)
+    val docs = all.select($"doc_id", $"text")
     val corpus = docs.filter($"doc_id" < 250)
     val delta = docs.filter($"doc_id" >= 250)
+    val vecs = Tables.embeddings(spark, sf).select($"vec_id",
+      graft.functions.VectorFunctions.asDouble($"embedding").as("v"))
     val runs: Seq[(String, () => Unit)] = Seq(
       "substringDedupOf" -> (() => Dedup.substringDedupOf(docs).collect()),
       "substringDedupFastOf" ->
@@ -988,7 +1006,23 @@ class DedupSpec extends SparkSpec {
         Dedup.segmentDelta(spark, "leakspec_seg", delta).collect()
       },
       "segmentNeardupFullOf" ->
-        (() => Dedup.segmentNeardupFullOf(docs).collect()))
+        (() => Dedup.segmentNeardupFullOf(docs).collect()),
+      "minhashPairs" -> (() => Dedup.minhashPairs(docs).collect()),
+      "minhashPairsAdaptive" ->
+        (() => Dedup.minhashPairsAdaptive(docs).collect()),
+      "dedupGroups" -> (() => Dedup.dedupGroups(docs).collect()),
+      "dedupMinhash" -> (() => Dedup.dedupMinhash(spark, sf).collect()),
+      "semanticDedup" -> (() => Dedup.semanticDedup(spark, sf).collect()),
+      "semanticLosersOf" -> (() => Dedup.semanticLosersOf(vecs, maxBucket = 4,
+        oversizedCanonical = true).collect()),
+      "curateDelta" -> { () =>
+        val bench = all.filter($"doc_id" < 5)
+        pipeline.CorpusPipeline.curateFull(
+          all.filter($"doc_id" >= 5 && $"doc_id" < 250), bench,
+          stateTable = Some("leakspec_p07"))
+        pipeline.CorpusPipeline.curateDelta(all.filter($"doc_id" >= 250),
+          bench, "leakspec_p07").docs.collect()
+      })
     spark.catalog.clearCache()
     val leaked = runs.flatMap { case (name, run) =>
       run()
@@ -996,6 +1030,27 @@ class DedupSpec extends SparkSpec {
       else { spark.catalog.clearCache(); Some(name) }
     }
     assert(leaked.isEmpty, s"left cached frames behind: ${leaked.mkString(", ")}")
+  }
+
+  test("semanticLosersOf: d11's pair losers, plus every non-min member " +
+      "of an over-cap bucket when canonical") {
+    val vecs = Tables.embeddings(spark, sf).select($"vec_id",
+      graft.functions.VectorFunctions.asDouble($"embedding").as("v"))
+    def ids(df: org.apache.spark.sql.DataFrame, c: String): Set[Long] =
+      df.select(col(c)).as[Long].collect().toSet
+    val pairLosers =
+      ids(Dedup.semanticDedup(spark, sf, planes = 8, maxBucket = 4), "vec_b")
+    assert(ids(Dedup.semanticLosersOf(vecs, maxBucket = 4), "vec_id") ==
+      pairLosers)
+    // over-cap buckets never pair, so their members add to the pair
+    // losers disjointly: bucket_n - 1 each (the min id keeps)
+    val overCapLosers = Dedup.semanticDroppedBuckets(spark, sf, planes = 8,
+      maxBucket = 4).select($"bucket_n").as[Long].collect().map(_ - 1).sum
+    assert(overCapLosers > 0, "the sample must hold an over-cap bucket")
+    val canonical = ids(Dedup.semanticLosersOf(vecs, maxBucket = 4,
+      oversizedCanonical = true), "vec_id")
+    assert(pairLosers.subsetOf(canonical) &&
+      canonical.size == pairLosers.size + overCapLosers)
   }
 
   test("d19b rolling-hash fast path is row-identical to the md5 form") {

@@ -205,9 +205,18 @@ class GraphSpec extends SparkSpec {
   }
 
   test("registry graph queries leave no cached frames behind (r14 #3)") {
-    for ((name, fn) <- operators.Graph.queries.toSeq.sortBy(_._1)) {
+    // the registry entries plus the memo-free cores over a pair frame
+    val pairs = operators.Graph.tradePairsRaw(spark, sf)
+    val runs = operators.Graph.queries.toSeq.sortBy(_._1)
+      .map { case (name, fn) => name -> (() => fn(spark, sf)) } ++ Seq(
+      "copurchaseOf" -> (() => operators.Graph.copurchaseOf(pairs)),
+      "copurchaseSketchOf" -> (() => operators.Graph.copurchaseSketchOf(pairs)),
+      "strongEdges" -> (() => operators.Graph.strongEdges(pairs, maxFan = 64,
+        minCommon = 2, strengthQ = 0.9)),
+      "trianglesOf" -> (() => operators.Graph.trianglesOf(pairs)))
+    for ((name, run) <- runs) {
       spark.catalog.clearCache()
-      fn(spark, sf).write.format("noop").mode("overwrite").save()
+      run().write.format("noop").mode("overwrite").save()
       assert(org.apache.spark.sql.graft.SparkInternals.cacheIsEmpty(spark),
         s"$name leaked persisted frames into the session")
     }

@@ -250,6 +250,24 @@ class MultimodalSpec extends SparkSpec {
     bos.toByteArray
   }
 
+  test("image decode: a header declaring more than the pixel cap decodes to None") {
+    // a valid PNG just over the cap (1-bit, so its raster is only 4 MB):
+    // it decodes without the cap, so None here shows the cap is read
+    val side = math.ceil(math.sqrt(Multimodal.MaxImagePixels.toDouble)).toInt + 1
+    val overCap = encodeImage(new java.awt.image.BufferedImage(
+      side, side, java.awt.image.BufferedImage.TYPE_BYTE_BINARY), "png")
+    assert(overCap.length < 64 * 1024)
+    assert(Multimodal.decodeImage(overCap).isEmpty)
+    // a small PNG whose IHDR declares 60000 × 60000 (the pixel data stays
+    // 64 × 48): rejected from the header, before any raster is allocated
+    val huge = encodeImage(syntheticImage(1), "png")
+    java.nio.ByteBuffer.wrap(huge, 16, 8).putInt(60000).putInt(60000)
+    val crc = new java.util.zip.CRC32
+    crc.update(huge, 12, 17) // chunk type + 13-byte IHDR data
+    java.nio.ByteBuffer.wrap(huge, 29, 4).putInt(crc.getValue.toInt)
+    assert(Multimodal.decodeImage(huge).isEmpty)
+  }
+
   test("real image decode: true dims + mean luma from pixels") {
     val png = encodeImage(syntheticImage(1), "png")
     val Some((f, _)) = Multimodal.decodeImage(png)

@@ -324,8 +324,15 @@ class StreamingSpec extends SparkSpec {
     // the production-scale invariant survives the rewrite: no
     // ShuffleExchange between a compacted stored scan and its first join
     val probe = (Seq((3000L, text(3000L))).toDF("doc_id", "text"))
-    val got = graft.operators.Dedup.dedupDelta(spark, "cmp_idx", probe)
-    val plan = got.queryExecution.executedPlan match {
+    // dedupDelta checkpoints its pairs, which hides the probe from the
+    // plan; build it in plan mode, where the checkpoint is a pass-through
+    val probePlan = {
+      graft.operators.SelfClean.planMode = true
+      try graft.operators.Dedup.dedupDelta(spark, "cmp_idx", probe)
+        .queryExecution.executedPlan
+      finally graft.operators.SelfClean.planMode = false
+    }
+    val plan = probePlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.executedPlan
       case p => p
@@ -335,6 +342,10 @@ class StreamingSpec extends SparkSpec {
     }
     assert(allShuffles.nonEmpty,
       "traversal found no exchanges anywhere - plan walk is broken")
+    assert(plan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.tableIdentifier.exists(_.table.startsWith("cmp_idx")) => f
+    }.nonEmpty, "traversal found no stored index scan - plan walk is broken")
     val reshuffledStore = allShuffles.filter { e =>
       val scans = e.child.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
