@@ -50,10 +50,9 @@ object Bench {
         } catch { case NonFatal(_) => -1.0 }
       }.min
     }.getOrElse(-1.0)
-    // No clearCache here (ADVICE r17): every measured query already
-    // clears the catalog cache after each of its own reps, so a clear at
-    // the mid-suite checkpoint only re-wiped an already-clean cache while
-    // making the methodology read as if mid-suite state were being reset.
+    // No cache reset here (ADVICE r17): every query releases its own
+    // caches, so a reset at the mid-suite checkpoint would only make the
+    // methodology read as if mid-suite state were being reset.
     // q01's three probe reps stay — note the probe itself pre-warms q01's
     // paths when q01 is in the measured suite (start checkpoint runs
     // before it), a constant of this methodology since r17.
@@ -172,19 +171,8 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      // Clear operator-internal persists BETWEEN runs, not just between
-      // queries: each run builds a fresh DataFrame whose persists are
-      // new cache entries, so without this a multi-rep run of a
-      // cache-heavy query (d19b's gram frames, d02's shingles) holds
-      // reps× the blocks and the later reps time EVICTION CHURN, not
-      // the query — at sf10 d19b measured 108 s in-suite vs 3.6 s
-      // isolated before this fix. Every run now pays its own cache
-      // population (honest cold-ish numbers) and memory pressure stops
-      // compounding. Memoized cluster tables survive (localCheckpoint,
-      // not catalog cache) — which is their intent.
-      spark.catalog.clearCache()
-      // …and clear consume-once CHECKPOINT blocks too (VERDICT r17 #1):
-      // clearCache only drops catalog-cached frames; a localCheckpoint'd
+      // Free consume-once CHECKPOINT blocks BETWEEN runs (VERDICT r17
+      // #1): every query releases its own caches, but a localCheckpoint'd
       // result (d11b/d12's pair verdicts, g01's iteration frames) keeps
       // its blocks until the ContextCleaner GCs the reference — on this
       // heap, effectively never within a suite — so each run stacked a

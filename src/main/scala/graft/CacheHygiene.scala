@@ -9,9 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * by several queries — the "write once, query many times" layout,
   * expressed in-session: Dedup's cluster table (d07, d09) and Graph's
   * customer arrays and one-mode projection (g02, g02b, g03). Each is a
-  * `localCheckpoint` (block-manager RDD blocks, not catalog cache, so
-  * `clearCache()` between bench queries does not drop it). [[memo]]
-  * keeps them, keyed by (session, dir, key):
+  * `localCheckpoint` (block-manager RDD blocks, not catalog cache).
+  * [[memo]] keeps them, keyed by (session, dir, key):
   *   - an entry is served while `Tables.dirFingerprint` over the tables
   *     it was built from is unchanged (one filesystem listing per
   *     lookup, no data read); a dir rewritten in place rebuilds it, and

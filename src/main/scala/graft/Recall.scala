@@ -119,7 +119,6 @@ object Recall {
       // keep = truth: it is scored against every method, and sweeping a
       // localCheckpoint is destructive (truncated lineage, no recompute)
       CacheHygiene.freeTransientKeeping(spark, Seq(truth))
-      spark.catalog.clearCache()
       f""""$name":{"recall_at_$k":$r%.4f,"max_sim_delta":$d%.6f,"n_queries":$nq}"""
     }
     val (found, truePairs) = storedIndexPairRecall(spark, sfDir)

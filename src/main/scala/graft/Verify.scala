@@ -25,12 +25,9 @@ object Verify {
         failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Same hygiene as Bench: operators persist internal frames (t18's
-      // toks/dfw, d10's token arrays) whose lifecycle is caller-owned —
-      // drop them so 131 queries don't stack cache blocks;
-      // consume-once localCheckpoint results likewise (VERDICT r17 #1),
-      // with the memo tables pinned.
-      spark.catalog.clearCache()
+      // Same hygiene as Bench: free consume-once localCheckpoint results
+      // so 131 queries don't stack their blocks (VERDICT r17 #1), with
+      // the memo tables pinned.
       CacheHygiene.freeTransient(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftFunctions
-import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 
@@ -53,7 +52,11 @@ object Apss {
     cosineApssOf(Tables.documents(s, dir).filter(col("doc_id") < idBound),
       minCos)
 
-  /** Core of [[cosineApss]] over any (doc_id, text) frame. */
+  /** Core of [[cosineApss]] over any (doc_id, text) frame. Self-cleaning
+    * ([[SelfClean.releasing]]): the unit-weight frame feeds the prefix,
+    * candidate and vector branches; the pair result is checkpointed and
+    * the frame released before returning.
+    */
   def cosineApssOf(docs: DataFrame, minCos: Double = 0.9): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -79,45 +82,43 @@ object Apss {
     val w = tf.join(dfw, Seq("term")).crossJoin(broadcast(nDocs))
       .withColumn("w", $"tf" * log($"n_docs".cast("double") / $"df"))
     val nrm = w.groupBy($"doc_id").agg(sqrt(sum($"w" * $"w")).as("nrm"))
-    val wn = w.join(nrm, Seq("doc_id")).filter($"nrm" > 0)
-      .select($"doc_id", $"term", ($"w" / $"nrm").as("wn"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    SelfClean.releasing(w.join(nrm, Seq("doc_id")).filter($"nrm" > 0)
+      .select($"doc_id", $"term", ($"w" / $"nrm").as("wn"))) { wn =>
+      // Suffix = maximal ascending-weight run with squared mass strictly
+      // under the (slacked) threshold; everything else is the indexed
+      // prefix. One window per document — partitioned by the corpus-sized
+      // doc_id key, no low-cardinality shuffle.
+      val slacked = minCos - 1e-3
+      val cum = sum($"wn" * $"wn").over(
+        Window.partitionBy($"doc_id").orderBy($"wn".asc, $"term".asc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+      val prefix = wn.withColumn("cum", cum)
+        .filter($"cum" >= slacked * slacked)
+        .select($"doc_id".as("doc_b"), $"term")
 
-    // Suffix = maximal ascending-weight run with squared mass strictly
-    // under the (slacked) threshold; everything else is the indexed
-    // prefix. One window per document — partitioned by the corpus-sized
-    // doc_id key, no low-cardinality shuffle.
-    val slacked = minCos - 1e-3
-    val cum = sum($"wn" * $"wn").over(
-      Window.partitionBy($"doc_id").orderBy($"wn".asc, $"term".asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    val prefix = wn.withColumn("cum", cum)
-      .filter($"cum" >= slacked * slacked)
-      .select($"doc_id".as("doc_b"), $"term")
+      val cand = wn.select($"doc_id".as("doc_a"), $"term")
+        .join(prefix, Seq("term"))
+        .filter($"doc_a" =!= $"doc_b")
+        .select(least($"doc_a", $"doc_b").as("doc_a"),
+          greatest($"doc_a", $"doc_b").as("doc_b"))
+        .distinct()
 
-    val cand = wn.select($"doc_id".as("doc_a"), $"term")
-      .join(prefix, Seq("term"))
-      .filter($"doc_a" =!= $"doc_b")
-      .select(least($"doc_a", $"doc_b").as("doc_a"),
-        greatest($"doc_a", $"doc_b").as("doc_b"))
-      .distinct()
-
-    val vecs = wn
-      .groupBy($"doc_id")
-      .agg(sort_array(collect_list(struct($"term", $"wn"))).as("tw"))
-      .select($"doc_id", $"tw.term".as("terms"), $"tw.wn".as("weights"))
-    val pairs = cand
-      .join(vecs.select($"doc_id".as("doc_a"), $"terms".as("ta"),
-        $"weights".as("wa")), Seq("doc_a"))
-      .join(vecs.select($"doc_id".as("doc_b"), $"terms".as("tb"),
-        $"weights".as("wb")), Seq("doc_b"))
-      .withColumn("cos", round(
-        GraftFunctions.sorted_weighted_dot($"ta", $"wa", $"tb", $"wb")
-          + lit(1e-9), 6))
-      .filter($"cos" >= minCos)
-      .select($"doc_a", $"doc_b", $"cos")
-      .orderBy($"doc_a", $"doc_b")
-    pairs
+      val vecs = wn
+        .groupBy($"doc_id")
+        .agg(sort_array(collect_list(struct($"term", $"wn"))).as("tw"))
+        .select($"doc_id", $"tw.term".as("terms"), $"tw.wn".as("weights"))
+      cand
+        .join(vecs.select($"doc_id".as("doc_a"), $"terms".as("ta"),
+          $"weights".as("wa")), Seq("doc_a"))
+        .join(vecs.select($"doc_id".as("doc_b"), $"terms".as("tb"),
+          $"weights".as("wb")), Seq("doc_b"))
+        .withColumn("cos", round(
+          GraftFunctions.sorted_weighted_dot($"ta", $"wa", $"tb", $"wb")
+            + lit(1e-9), 6))
+        .filter($"cos" >= minCos)
+        .select($"doc_a", $"doc_b", $"cos")
+        .orderBy($"doc_a", $"doc_b")
+    }
   }
 
   /** Brute-force mirror (no prefix filter, exact pair join on shared

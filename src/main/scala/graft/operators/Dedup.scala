@@ -550,42 +550,46 @@ object Dedup {
     * hot rows, replacing the n× position explode + countDistinct (which
     * also buffered a monster doc's full position set). Value-identical
     * to counting distinct covered positions.
+    *
+    * Self-cleaning ([[SelfClean.releasing]]): the per-doc hash frame is
+    * read by the gram explode and the final join; the doc-sized result
+    * is checkpointed and the frame released before returning.
     */
   def hotNgramMaskOf(documents: DataFrame, n: Int = 8,
       minDf: Int = 2): DataFrame = {
     val s = documents.sparkSession
     import s.implicits._
-    val t = documents
+    SelfClean.releasing(documents
       .select($"doc_id", org.apache.spark.sql.graft.GraftFunctions
         .space_token_count($"text").cast("long").as("n_tokens"),
         org.apache.spark.sql.graft.GraftFunctions
-          .rolling_kgram_hashes($"text", n, 42L).as("gh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val grams = t
-      .filter(size($"gh") > 0)
-      .select($"doc_id", posexplode($"gh"))
-      .toDF("doc_id", "i", "gram")
-    val hot = grams.groupBy($"gram")
-      .agg(countDistinct($"doc_id").as("df"))
-      .filter($"df" >= minDf)
-      .select($"gram")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"doc_id").orderBy($"i")
-    val masked = grams.join(hot, Seq("gram"))
-      .select($"doc_id", $"i")
-      .withColumn("_prev", lag($"i", 1).over(w))
-      .select($"doc_id",
-        when($"_prev".isNull, lit(n.toLong))
-          .otherwise(least($"i" - $"_prev", lit(n.toLong))).as("_cov"))
-      .groupBy($"doc_id")
-      .agg(sum($"_cov").as("n_masked"))
-    t.select($"doc_id", $"n_tokens")
-      .join(masked, Seq("doc_id"), "left")
-      .select($"doc_id", $"n_tokens",
-        coalesce($"n_masked", lit(0L)).as("n_masked"),
-        round(coalesce($"n_masked", lit(0L)) / $"n_tokens" + lit(1e-9), 6)
-          .as("masked_frac"))
-      .orderBy($"doc_id")
+          .rolling_kgram_hashes($"text", n, 42L).as("gh"))) { t =>
+      val grams = t
+        .filter(size($"gh") > 0)
+        .select($"doc_id", posexplode($"gh"))
+        .toDF("doc_id", "i", "gram")
+      val hot = grams.groupBy($"gram")
+        .agg(countDistinct($"doc_id").as("df"))
+        .filter($"df" >= minDf)
+        .select($"gram")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy($"doc_id").orderBy($"i")
+      val masked = grams.join(hot, Seq("gram"))
+        .select($"doc_id", $"i")
+        .withColumn("_prev", lag($"i", 1).over(w))
+        .select($"doc_id",
+          when($"_prev".isNull, lit(n.toLong))
+            .otherwise(least($"i" - $"_prev", lit(n.toLong))).as("_cov"))
+        .groupBy($"doc_id")
+        .agg(sum($"_cov").as("n_masked"))
+      t.select($"doc_id", $"n_tokens")
+        .join(masked, Seq("doc_id"), "left")
+        .select($"doc_id", $"n_tokens",
+          coalesce($"n_masked", lit(0L)).as("n_masked"),
+          round(coalesce($"n_masked", lit(0L)) / $"n_tokens" + lit(1e-9), 6)
+            .as("masked_frac"))
+        .orderBy($"doc_id")
+    }
   }
 
   val hotNgramMaskSql: String =
@@ -1301,76 +1305,76 @@ object Dedup {
     val s = pairs.sparkSession
     import s.implicits._
     // The edge set is re-read every iteration (propagation join + the
-    // convergence check): persist it, or the whole upstream pair pipeline
-    // (LSH banding / Jaccard verification) re-executes per round.
-    val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .unionByName(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (edges.count() <= smallGraph) {
-      val out = edges.as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        // union-find with path halving; component id = min member id
-        // (deterministic regardless of union order)
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x0: Long): Long = {
-          var x = x0
-          while (parent.getOrElse(x, x) != x) {
-            val p = parent(x)
-            parent(x) = parent.getOrElse(p, p)
-            x = parent(x)
+    // convergence check): keep it, or the whole upstream pair pipeline
+    // (LSH banding / Jaccard verification) re-executes per round. Both
+    // paths return materialized labels, so the scope may release it.
+    SelfClean.scope { keep =>
+      val edges = keep(pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
+        .unionByName(pairs.select($"doc_b".as("src"), $"doc_a".as("dst"))))
+      if (edges.count() <= smallGraph) {
+        val out = edges.as[(Long, Long)].coalesce(1).mapPartitions { it =>
+          // union-find with path halving; component id = min member id
+          // (deterministic regardless of union order)
+          val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+          def find(x0: Long): Long = {
+            var x = x0
+            while (parent.getOrElse(x, x) != x) {
+              val p = parent(x)
+              parent(x) = parent.getOrElse(p, p)
+              x = parent(x)
+            }
+            x
           }
-          x
+          it.foreach { case (a, b) =>
+            parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+            val (ra, rb) = (find(a), find(b))
+            if (ra != rb) parent(ra) = rb
+          }
+          val minOfRoot = scala.collection.mutable.HashMap.empty[Long, Long]
+          parent.keysIterator.foreach { n =>
+            val r = find(n)
+            minOfRoot(r) = math.min(minOfRoot.getOrElse(r, n), n)
+          }
+          parent.keysIterator.map(n => (n, minOfRoot(find(n)))).toSeq.iterator
+        }.toDF("doc_id", "cluster_id")
+        out.localCheckpoint(eager = true)
+      } else {
+        val nodes = edges.select($"src".as("doc_id")).distinct()
+        var labels = nodes.withColumn("cluster_id", $"doc_id")
+        var converged = false
+        var iter = 0
+        while (!converged && iter < maxIters) {
+          val msgs = edges
+            .join(labels, $"src" === $"doc_id")
+            .select($"dst".as("doc_id"), $"cluster_id")
+          val prop = labels.unionByName(msgs)
+            .groupBy($"doc_id")
+            .agg(min($"cluster_id").as("cluster_id"))
+          // Pointer-jump: also adopt the label of the node the label points to
+          // (labels only decrease and stay in-component, so this is safe) —
+          // propagation+jump converges in O(log n) rounds vs O(diameter).
+          val parents = prop
+            .select($"doc_id".as("p_id"), $"cluster_id".as("p_cluster"))
+          val next = prop.join(parents, $"cluster_id" === $"p_id", "left")
+            .select($"doc_id",
+              least($"cluster_id", coalesce($"p_cluster", $"cluster_id"))
+                .as("cluster_id"))
+          // Lazy local checkpoint: it materializes inside the convergence-check
+          // job below, so each round costs ONE Spark action (the eager form plus
+          // a separate count was 2-3 jobs of pure scheduling overhead per round
+          // on a small candidate graph).
+          val nextCk = next.localCheckpoint(eager = false)
+          val changed = nextCk.as("n")
+            .join(labels.as("o"), "doc_id")
+            .filter($"n.cluster_id" =!= $"o.cluster_id")
+            .limit(1).count()
+          labels = nextCk
+          converged = changed == 0
+          iter += 1
         }
-        it.foreach { case (a, b) =>
-          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(ra) = rb
-        }
-        val minOfRoot = scala.collection.mutable.HashMap.empty[Long, Long]
-        parent.keysIterator.foreach { n =>
-          val r = find(n)
-          minOfRoot(r) = math.min(minOfRoot.getOrElse(r, n), n)
-        }
-        parent.keysIterator.map(n => (n, minOfRoot(find(n)))).toSeq.iterator
-      }.toDF("doc_id", "cluster_id")
-      val materialized = out.localCheckpoint(eager = true)
-      edges.unpersist()
-      return materialized
+        labels
+      }
     }
-    val nodes = edges.select($"src".as("doc_id")).distinct()
-    var labels = nodes.withColumn("cluster_id", $"doc_id")
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val msgs = edges
-        .join(labels, $"src" === $"doc_id")
-        .select($"dst".as("doc_id"), $"cluster_id")
-      val prop = labels.unionByName(msgs)
-        .groupBy($"doc_id")
-        .agg(min($"cluster_id").as("cluster_id"))
-      // Pointer-jump: also adopt the label of the node the label points to
-      // (labels only decrease and stay in-component, so this is safe) —
-      // propagation+jump converges in O(log n) rounds vs O(diameter).
-      val parents = prop
-        .select($"doc_id".as("p_id"), $"cluster_id".as("p_cluster"))
-      val next = prop.join(parents, $"cluster_id" === $"p_id", "left")
-        .select($"doc_id",
-          least($"cluster_id", coalesce($"p_cluster", $"cluster_id"))
-            .as("cluster_id"))
-      // Lazy local checkpoint: it materializes inside the convergence-check
-      // job below, so each round costs ONE Spark action (the eager form plus
-      // a separate count was 2-3 jobs of pure scheduling overhead per round
-      // on a small candidate graph).
-      val nextCk = next.localCheckpoint(eager = false)
-      val changed = nextCk.as("n")
-        .join(labels.as("o"), "doc_id")
-        .filter($"n.cluster_id" =!= $"o.cluster_id")
-        .limit(1).count()
-      labels = nextCk
-      converged = changed == 0
-      iter += 1
-    }
-    edges.unpersist()
-    labels
   }
 
   /** Full transitive near-dup grouping: LSH pairs → components → per-doc
@@ -1540,10 +1544,9 @@ object Dedup {
     * segment key carries 16-byte hashes; the keeper choice is a
     * partial-aggregatable min, and the keeper join reuses the same key
     * (no second shuffle layout). The segment frame is persisted because
-    * the agg and the join-back both read it (the t18 lesson). Unlike the
-    * other span-dedup entry points this one does not release that
-    * persist itself: its result is lazy, so the caller clears it
-    * (Bench/Verify `clearCache()`).
+    * the agg and the join-back both read it (the t18 lesson); the
+    * doc-sized result is checkpointed and the frame released before
+    * returning ([[SelfClean.releasing]]).
     */
   def segmentDedup(s: SparkSession, dir: String, width: Int = 10): DataFrame =
     segmentDedupOf(Tables.documents(s, dir), width)
@@ -1552,7 +1555,7 @@ object Dedup {
   def segmentDedupOf(documents: DataFrame, width: Int): DataFrame = {
     val s = documents.sparkSession
     import s.implicits._
-    val segs = segmentFrame(documents, width)
+    SelfClean.releasing(segmentFrame(documents, width)
       // The digest stays the 32-char HEX string here, measured, not
       // assumed: the d19 family's unhex(md5(...)) rewrite was A/B'd on
       // this operator too and shuffled MORE (15.0 → 21.9 MB at sf1) —
@@ -1562,16 +1565,16 @@ object Dedup {
       // Which representation wins depends on the query's dominant
       // exchange; d19/q07 measured the other way (Dedup.scala md5Grams
       // note), this one keeps hex.
-      .select($"doc_id", md5($"seg").as("h"), $"ord")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keepers = segs.groupBy($"h").agg(min($"ord").as("keeper"))
-    segs.join(keepers, "h")
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_seg"),
-        sum(when($"ord" === $"keeper", 1L).otherwise(0L)).as("n_kept"),
-        round(sum(when($"ord" === $"keeper", 1L).otherwise(0L)) * lit(1.0)
-          / count(lit(1)) + lit(1e-9), 6).as("kept_ratio"))
-      .orderBy($"doc_id")
+      .select($"doc_id", md5($"seg").as("h"), $"ord")) { segs =>
+      val keepers = segs.groupBy($"h").agg(min($"ord").as("keeper"))
+      segs.join(keepers, "h")
+        .groupBy($"doc_id")
+        .agg(count(lit(1)).as("n_seg"),
+          sum(when($"ord" === $"keeper", 1L).otherwise(0L)).as("n_kept"),
+          round(sum(when($"ord" === $"keeper", 1L).otherwise(0L)) * lit(1.0)
+            / count(lit(1)) + lit(1e-9), 6).as("kept_ratio"))
+        .orderBy($"doc_id")
+    }
   }
 
   def segmentDedupSql(width: Int = 10): String =
@@ -1768,25 +1771,18 @@ object Dedup {
       delta: DataFrame, k: Int = 20): DataFrame = {
     import spark.implicits._
     indexRecoverAndRefresh(spark, table, Seq("_grams"))
-    val grams = fastGrams(delta, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stored = grams
-      .join(spark.table(s"${table}_grams"), FastGramKey, "left_semi")
-      .select($"doc_id", $"pos")
-    val flagged = stored.unionByName(substringFlagged(grams, FastGramKey))
-      .distinct()
-    // Eager localCheckpoint: materializes the result HERE, while the grams
-    // persist is serving its two consumers (stored-index probe +
-    // substringFlagged) — an unpersist before a lazy return would silently
-    // recompute the scan and both rolling-hash passes. It also makes the
-    // function self-cleaning (its one internal persist freed on return), so
-    // streaming callers (substringDedupStream) don't leak one cached frame
-    // per micro-batch. Delta-sized, so the checkpoint write is O(delta).
-    val out = substringCleanCore(delta, flagged, k)
-      .select($"doc_id", $"cleaned")
-      .localCheckpoint()
-    grams.unpersist()
-    out
+    // Self-cleaning: the grams serve two consumers (stored-index probe +
+    // substringFlagged), and the delta-sized result is checkpointed while
+    // they are cached, so streaming callers (substringDedupStream) don't
+    // leak one cached frame per micro-batch.
+    SelfClean.releasing(fastGrams(delta, k)) { grams =>
+      val stored = grams
+        .join(spark.table(s"${table}_grams"), FastGramKey, "left_semi")
+        .select($"doc_id", $"pos")
+      val flagged = stored.unionByName(substringFlagged(grams, FastGramKey))
+        .distinct()
+      substringCleanCore(delta, flagged, k).select($"doc_id", $"cleaned")
+    }
   }
 
   /** Observability for the substring-dedup family (the
@@ -2014,29 +2010,29 @@ object Dedup {
       idBound: Long = 150, k: Int = 16, rows: Int = 2,
       minJaccard: Double = 0.5): DataFrame = {
     import s.implicits._
-    val segs = segmentFrame(
+    SelfClean.releasing(segmentFrame(
       Tables.documents(s, dir).filter($"doc_id" < idBound)
-        .select($"doc_id", $"text"), width)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the banding core treats (ord, seg) as a tiny document
-    val banded = portableBands(
-      segs.select($"ord".as("doc_id"), $"seg".as("text")), k, rows)
-      .select($"doc_id".as("ord"), $"band", $"band_hash")
-    val a = banded.select($"band", $"band_hash", $"ord".as("ord_a"))
-    val b = banded.select($"band", $"band_hash", $"ord".as("ord_b"))
-    val cand = a.join(b, Seq("band", "band_hash"))
-      .filter($"ord_a" < $"ord_b")
-      .select($"ord_a", $"ord_b").distinct()
-    // exact verify on the candidate set: distinct-shingle Jaccard
-    val shArr = segs.select($"ord", shingles($"seg", 3).as("sh"))
-    val dupSegs = cand
-      .join(shArr.select($"ord".as("ord_a"), $"sh".as("sha")), Seq("ord_a"))
-      .join(shArr.select($"ord".as("ord_b"), $"sh".as("shb")), Seq("ord_b"))
-      .withColumn("inter", size(array_intersect($"sha", $"shb")))
-      .withColumn("uni", size($"sha") + size($"shb") - $"inter")
-      .filter($"uni" > 0 && $"inter" * lit(1.0) / $"uni" >= minJaccard)
-      .select($"ord_b".as("ord")).distinct()
-    segmentNeardupRollup(segs, dupSegs)
+        .select($"doc_id", $"text"), width)) { segs =>
+      // the banding core treats (ord, seg) as a tiny document
+      val banded = portableBands(
+        segs.select($"ord".as("doc_id"), $"seg".as("text")), k, rows)
+        .select($"doc_id".as("ord"), $"band", $"band_hash")
+      val a = banded.select($"band", $"band_hash", $"ord".as("ord_a"))
+      val b = banded.select($"band", $"band_hash", $"ord".as("ord_b"))
+      val cand = a.join(b, Seq("band", "band_hash"))
+        .filter($"ord_a" < $"ord_b")
+        .select($"ord_a", $"ord_b").distinct()
+      // exact verify on the candidate set: distinct-shingle Jaccard
+      val shArr = segs.select($"ord", shingles($"seg", 3).as("sh"))
+      val dupSegs = cand
+        .join(shArr.select($"ord".as("ord_a"), $"sh".as("sha")), Seq("ord_a"))
+        .join(shArr.select($"ord".as("ord_b"), $"sh".as("shb")), Seq("ord_b"))
+        .withColumn("inter", size(array_intersect($"sha", $"shb")))
+        .withColumn("uni", size($"sha") + size($"shb") - $"inter")
+        .filter($"uni" > 0 && $"inter" * lit(1.0) / $"uni" >= minJaccard)
+        .select($"ord_b".as("ord")).distinct()
+      segmentNeardupRollup(segs, dupSegs)
+    }
   }
 
   /** Corpus-wide production form of [[segmentNeardup]]: the same
@@ -2101,7 +2097,8 @@ object Dedup {
     * match a [[writeSegmentIndex]] store
     * ([[segmentDeltaOrdsFromMeta]]) — unioned BEFORE one rollup so a
     * segment dup'd both ways counts once. The doc-sized rollup is
-    * checkpointed and both caches are released before returning.
+    * checkpointed and both caches (meta and the keeper aggregate) are
+    * released by this scope before returning.
     *
     * The exact digest is the PAIR (h, h2) of independent-seed xxhash64s
     * — 128 collision bits, matching the md5 contract it replaced (the
@@ -2114,17 +2111,16 @@ object Dedup {
       table: Option[String], width: Int, bands: Int, rows: Int,
       maxBucket: Int, minJaccard: Double): DataFrame = {
     import spark.implicits._
-    val meta = segmentHashFrame(documents.select($"doc_id", $"text"), width)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (within, keeperAgg) = segmentDupOrdsFromHashes(meta, bands, rows,
-      maxBucket, minJaccard)
-    val ords = table.fold(within)(t => within.unionByName(
-      segmentDeltaOrdsFromMeta(spark, t, meta, bands, rows, minJaccard))
-      .distinct())
-    val out = SelfClean.checkpoint(segmentNeardupRollup(meta, ords))
-    keeperAgg.unpersist()
-    meta.unpersist()
-    out
+    SelfClean.scope { keep =>
+      val meta = keep(
+        segmentHashFrame(documents.select($"doc_id", $"text"), width))
+      val within = segmentDupOrdsFromHashes(meta, keep, bands, rows,
+        maxBucket, minJaccard)
+      val ords = table.fold(within)(t => within.unionByName(
+        segmentDeltaOrdsFromMeta(spark, t, meta, bands, rows, minJaccard))
+        .distinct())
+      SelfClean.checkpoint(segmentNeardupRollup(meta, ords))
+    }
   }
 
   /** d13's segmentation fused to hashes: (doc_id, ord, h, sh) — one row
@@ -2176,10 +2172,13 @@ object Dedup {
   /** The flagged (ord) set over a persisted [[segmentHashFrame]]:
     * exact-stage later occurrences (same digest as an earlier segment)
     * plus near-dup later keepers from the minhash band/verify pipeline
-    * run directly over the keeper segments' pre-hashed shingles.
+    * run directly over the keeper segments' pre-hashed shingles. The
+    * keeper aggregate is cached in the caller's scope (`keep`), which
+    * releases it once the lazy result has been materialized.
     */
-  private[graft] def segmentDupOrdsFromHashes(meta: DataFrame, bands: Int,
-      rows: Int, maxBucket: Int, minJaccard: Double): (DataFrame, DataFrame) = {
+  private def segmentDupOrdsFromHashes(meta: DataFrame,
+      keep: DataFrame => DataFrame, bands: Int, rows: Int, maxBucket: Int,
+      minJaccard: Double): DataFrame = {
     val s = meta.sparkSession
     import s.implicits._
     // Exact-equality key is the independent-seed digest PAIR (h, h2) —
@@ -2195,8 +2194,7 @@ object Dedup {
     // rejected this at ~1.5 s inside the stage's old noise band; the
     // r16 waterfall re-priced the three-exchange form at 5.5 s vs 3.5 s
     // once the banding leg stopped dominating, so it lands now.
-    val keeperAgg = segmentKeepers(meta)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val keeperAgg = keep(segmentKeepers(meta))
     val keepers = keeperAgg.select($"ord".as("doc_id"), $"sh")
     val exactDups = meta.select($"ord", $"h", $"h2")
       .join(keeperAgg.select($"h", $"h2", $"ord".as("_kord")), Seq("h", "h2"))
@@ -2210,9 +2208,7 @@ object Dedup {
     // ords — disjoint by construction — so only the pair side (where
     // one keeper can lose to several partners) needs a distinct, never
     // the segment-sized union the former shape deduped.
-    (exactDups.unionByName(
-        nearPairs.select($"doc_b".as("ord")).distinct()),
-      keeperAgg)
+    exactDups.unionByName(nearPairs.select($"doc_b".as("ord")).distinct())
   }
 
   /** Observability for [[segmentNeardupFull]]'s bucket cap: the keeper
@@ -2524,13 +2520,9 @@ object Dedup {
     * corpus frame lists exactly what was excluded.
     */
   def writeDedupIndex(documents: DataFrame, table: String, buckets: Int = 8,
-      bands: Int = 16, rows: Int = 4, maxBucket: Int = 64): Unit = {
-    val s = documents.sparkSession
-    val sh = shingleFrame(documents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    writeDedupIndexFromShingles(sh, table, buckets, bands, rows, maxBucket)
-    sh.unpersist()
-  }
+      bands: Int = 16, rows: Int = 4, maxBucket: Int = 64): Unit =
+    SelfClean.scope(keep => writeDedupIndexFromShingles(
+      keep(shingleFrame(documents)), table, buckets, bands, rows, maxBucket))
 
   /** [[writeDedupIndex]] core over an already-hashed (doc_id, sh) frame
     * (caller persists it — it's read twice) — the segment index writes
@@ -2667,12 +2659,9 @@ object Dedup {
     * duplicate candidates they produce, so growth can run at-least-once.
     */
   def appendDedupIndex(documents: DataFrame, table: String, buckets: Int = 8,
-      bands: Int = 16, rows: Int = 4): Unit = {
-    val sh = shingleFrame(documents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    appendDedupIndexFromShingles(sh, table, buckets, bands, rows)
-    sh.unpersist()
-  }
+      bands: Int = 16, rows: Int = 4): Unit =
+    SelfClean.scope(keep => appendDedupIndexFromShingles(
+      keep(shingleFrame(documents)), table, buckets, bands, rows))
 
   /** [[appendDedupIndex]] core over an already-hashed (doc_id, sh) frame
     * (caller persists it — read twice). Each table is repartitioned on
@@ -2791,20 +2780,19 @@ object Dedup {
       maxBucket: Int = 64): Unit = {
     val s = documents.sparkSession
     import s.implicits._
-    // persisted: the digest write and the three band/shingle reads all
-    // scan the keepers
-    val keepers = segmentKeepers(
-        segmentHashFrame(documents.select($"doc_id", $"text"), width))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    keepers.select($"h", $"h2")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(buckets, "h").sortBy("h")
-      .format("parquet").saveAsTable(s"${table}_segdigests")
-    writeDedupIndexFromShingles(
-      keepers.select($"ord".as("doc_id"), $"sh"),
-      table, buckets, bands, rows, maxBucket)
-    keepers.unpersist()
-    ()
+    // kept: the digest write and the three band/shingle reads all scan
+    // the keepers
+    SelfClean.scope { keep =>
+      val keepers = keep(segmentKeepers(
+        segmentHashFrame(documents.select($"doc_id", $"text"), width)))
+      keepers.select($"h", $"h2")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .bucketBy(buckets, "h").sortBy("h")
+        .format("parquet").saveAsTable(s"${table}_segdigests")
+      writeDedupIndexFromShingles(
+        keepers.select($"ord".as("doc_id"), $"sh"),
+        table, buckets, bands, rows, maxBucket)
+    }
   }
 
   /** Probe a delta batch of documents against a [[writeSegmentIndex]]
@@ -2860,13 +2848,10 @@ object Dedup {
     */
   def appendSegmentIndex(documents: DataFrame, table: String,
       width: Int = 10, buckets: Int = 8, bands: Int = 16,
-      rows: Int = 4): Unit = {
-    val meta = segmentHashFrame(documents.select("doc_id", "text"), width)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    appendSegmentIndexFromMeta(meta, table, buckets, bands, rows)
-    meta.unpersist()
-    ()
-  }
+      rows: Int = 4): Unit =
+    SelfClean.scope(keep => appendSegmentIndexFromMeta(
+      keep(segmentHashFrame(documents.select("doc_id", "text"), width)),
+      table, buckets, bands, rows))
 
   /** [[appendSegmentIndex]] core over a persisted [[segmentHashFrame]]
     * — the streaming gate feeds the probe pass's meta (filtered to kept
@@ -2924,24 +2909,23 @@ object Dedup {
     // same partition without the caller re-supplying it.
     val p = if (planes > 0) planes
       else scaledPlanes(vectors.count(), maxBucket, minPlanes = 12)
-    val bucketed = vectors
-      .select($"vec_id", graft.functions.VectorFunctions.asDouble($"embedding").as("v"))
-      .withColumn("bucket",
-        org.apache.spark.sql.graft.GraftFunctions.hyperplane_sig($"v", p))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val eligible = bucketed.groupBy($"bucket")
-      .agg(count(lit(1)).as("bn")).filter($"bn" <= maxBucket)
-      .select($"bucket")
-    bucketed.join(broadcast(eligible), Seq("bucket"))
-      .select($"vec_id", $"v", $"bucket")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(buckets, "bucket").sortBy("bucket")
-      .format("parquet").saveAsTable(s"${table}_vecs")
+    SelfClean.scope { keep =>
+      val bucketed = keep(vectors
+        .select($"vec_id", graft.functions.VectorFunctions.asDouble($"embedding").as("v"))
+        .withColumn("bucket",
+          org.apache.spark.sql.graft.GraftFunctions.hyperplane_sig($"v", p)))
+      val eligible = bucketed.groupBy($"bucket")
+        .agg(count(lit(1)).as("bn")).filter($"bn" <= maxBucket)
+        .select($"bucket")
+      bucketed.join(broadcast(eligible), Seq("bucket"))
+        .select($"vec_id", $"v", $"bucket")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .bucketBy(buckets, "bucket").sortBy("bucket")
+        .format("parquet").saveAsTable(s"${table}_vecs")
+    }
     Seq((p, maxBucket)).toDF("planes", "max_bucket")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(s"${table}_vecmeta")
-    bucketed.unpersist()
-    ()
   }
 
   /** The plane count a [[writeSemanticIndex]] table was written with —

@@ -37,17 +37,15 @@ object IvfIndex {
     import s.implicits._
     // structurallyUsable: a NULL-component vector crashes the typed
     // Seq[Double] collect (hostile-gate finding) — see VectorFunctions
-    // Persisted for the training loop: every Lloyd iteration is its own
+    // Kept for the training loop: every Lloyd iteration is its own
     // action, and without the cache each one replays the input lineage
     // from the scan (for PQ training that lineage includes the coarse
     // assign + residual subtraction). Values are unchanged — same rows,
-    // same fold order — only the replays go away; released before return.
-    val v = vectors.filter(structurallyUsable($"embedding"))
-      .select($"vec_id", asDouble($"embedding").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // try/finally (ADVICE r18): any exception in the seed collect or the
-    // Lloyd loop would otherwise leak the fully materialized cache block.
-    try {
+    // same fold order — only the replays go away; the scope releases it
+    // on return and on a failed collect alike.
+    SelfClean.scope { keep =>
+      val v = keep(vectors.filter(structurallyUsable($"embedding"))
+        .select($"vec_id", asDouble($"embedding").as("v")))
       var centroids: Seq[(Int, Seq[Double])] = v
         .orderBy(xxhash64($"vec_id"), $"vec_id").limit(k)
         .select($"v").as[Seq[Double]].collect().toSeq.zipWithIndex.map(_.swap)
@@ -72,7 +70,7 @@ object IvfIndex {
           .as[(Int, Seq[Double])].collect().toSeq.sortBy(_._1)
       }
       centroids
-    } finally v.unpersist()
+    }
   }
 
   /** Assign every vector to its nearest centroid — the IVF index column.
@@ -88,13 +86,9 @@ object IvfIndex {
   }
 
   /** s04: IVF top-k — probe the nprobe nearest clusters per query, exact
-    * cosine re-rank of only those members.
-    *
-    * Cache lifecycle contract (ADVICE r18): persists the assigned index
-    * frame the returned plan reads on both join sides — the CALLER owns
-    * its release, via `spark.catalog.clearCache()` (the Bench/Verify
-    * convention) or `CacheHygiene.freeTransient` once the result is
-    * consumed.
+    * cosine re-rank of only those members. Self-cleaning
+    * ([[SelfClean.releasing]]): the queries × k result is checkpointed
+    * and the assigned index frame released before returning.
     */
   def knnIvf(s: SparkSession, dir: String,
       queryBound: Int = 32, k: Int = 5, clusters: Int = 16,
@@ -102,37 +96,35 @@ object IvfIndex {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
     val centroids = train(emb, clusters, iters)
-    // Persisted: the final join reads `indexed` on BOTH sides (queries +
+    // Kept: the final join reads `indexed` on BOTH sides (queries +
     // members), so without the cache the scan + argmax assignment runs
-    // twice inside the one search job. Caller owns the lifecycle (the
-    // Bench/Verify clearCache() convention).
-    val indexed = assign(emb, centroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // twice inside the one search job.
+    SelfClean.releasing(assign(emb, centroids)) { indexed =>
+      val queries = indexed.filter($"vec_id" < queryBound)
+        .select($"vec_id".as("query_id"), $"v".as("qv"))
+      val cDf = s.createDataFrame(centroids).toDF("cluster_id", "centroid")
+      val wProbe = Window.partitionBy($"query_id").orderBy($"csim".desc, $"cluster_id")
+      val probes = queries.crossJoin(broadcast(cDf))
+        .withColumn("csim", cosine($"qv", $"centroid"))
+        .withColumn("rn", row_number().over(wProbe))
+        .filter($"rn" <= nprobe)
+        .select($"query_id", $"qv", $"cluster_id")
 
-    val queries = indexed.filter($"vec_id" < queryBound)
-      .select($"vec_id".as("query_id"), $"v".as("qv"))
-    val cDf = s.createDataFrame(centroids).toDF("cluster_id", "centroid")
-    val wProbe = Window.partitionBy($"query_id").orderBy($"csim".desc, $"cluster_id")
-    val probes = queries.crossJoin(broadcast(cDf))
-      .withColumn("csim", cosine($"qv", $"centroid"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter($"rn" <= nprobe)
-      .select($"query_id", $"qv", $"cluster_id")
-
-    val members = indexed.select($"cluster_id",
-      $"vec_id".as("neighbor_id"), $"v".as("nv"))
-    val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
-    // broadcast(probes): queries × nprobe rows, bounded by the query
-    // batch at any corpus size — keeps the member side un-shuffled (the
-    // PqIndex.adcTopK rationale; cluster_id has only K distinct values,
-    // the worst possible sort-merge key).
-    broadcast(probes).join(members, Seq("cluster_id"))
-      .filter($"query_id" =!= $"neighbor_id")
-      .withColumn("cos", cosine($"qv", $"nv"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= k)
-      .select($"query_id", $"rank", $"neighbor_id", round($"cos", 6).as("sim"))
-      .orderBy($"query_id", $"rank")
+      val members = indexed.select($"cluster_id",
+        $"vec_id".as("neighbor_id"), $"v".as("nv"))
+      val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
+      // broadcast(probes): queries × nprobe rows, bounded by the query
+      // batch at any corpus size — keeps the member side un-shuffled (the
+      // PqIndex.adcTopK rationale; cluster_id has only K distinct values,
+      // the worst possible sort-merge key).
+      broadcast(probes).join(members, Seq("cluster_id"))
+        .filter($"query_id" =!= $"neighbor_id")
+        .withColumn("cos", cosine($"qv", $"nv"))
+        .withColumn("rank", row_number().over(w).cast("long"))
+        .filter($"rank" <= k)
+        .select($"query_id", $"rank", $"neighbor_id", round($"cos", 6).as("sim"))
+        .orderBy($"query_id", $"rank")
+    }
   }
 
   /** Persist the IVF index for query-time serving — the production form
@@ -154,14 +146,13 @@ object IvfIndex {
       .coalesce(1) // K rows of kilobytes — one file IS the right layout
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(path + "/centroids")
-    val assigned = assign(vectors, centroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cluster_id").parquet(path + "/members")
-    writeTrainStats(assigned, centroids, path)
-    assigned.unpersist()
-    ()
+    SelfClean.scope { keep =>
+      val assigned = keep(assign(vectors, centroids))
+      assigned
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("cluster_id").parquet(path + "/members")
+      writeTrainStats(assigned, centroids, path)
+    }
   }
 
   private def readCentroids(s: SparkSession,

@@ -57,16 +57,14 @@ object PqIndex {
     // collect (hostile-gate finding) — same contract as IvfIndex.train.
     // dim is inferred from the FILTERED frame too: an all-NULL embedding
     // at head() would NPE the getInt before the filter ever ran
-    // Persisted for the joint-Lloyd loop (the IvfIndex.train rationale):
+    // Kept for the joint-Lloyd loop (the IvfIndex.train rationale):
     // dim probe + seed collect + every iteration each replay the input
     // lineage otherwise — for knnPq that lineage is scan → coarse assign
-    // → residual per action. Released before return.
-    val v = vectors.filter(structurallyUsable($"embedding"))
-      .select($"vec_id", asDouble($"embedding").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // try/finally (ADVICE r18): the dim probe, the divisibility require,
-    // and any Lloyd-loop failure would otherwise leak the cache block.
-    try {
+    // → residual per action. The scope releases it on return and when the
+    // dim probe, the divisibility require or a Lloyd round fails.
+    SelfClean.scope { keep =>
+      val v = keep(vectors.filter(structurallyUsable($"embedding"))
+        .select($"vec_id", asDouble($"embedding").as("v")))
       val dim = v.select(size($"v")).head().getInt(0)
       require(dim % m == 0, s"dim $dim must divide into m=$m sub-spaces")
       val d = dim / m
@@ -104,7 +102,7 @@ object PqIndex {
         }
       }
       books
-    } finally v.unpersist()
+    }
   }
 
   /** Encode every vector as its m-entry code array — map-only, ONE fused
@@ -137,12 +135,9 @@ object PqIndex {
     * and the codes are the 32×-compressed scan payload; the raw store
     * is touched only for queries × shortlist re-rank rows.
     *
-    * Cache lifecycle contract (ADVICE r18): this method persists an
-    * internal assignment frame that the returned plan reads — the CALLER
-    * owns its release, via `spark.catalog.clearCache()` (the
-    * Bench/Verify convention) or `CacheHygiene.freeTransient` once the
-    * result is consumed. A long-lived session invoking this repeatedly
-    * without either accumulates one cache entry per call.
+    * Self-cleaning ([[SelfClean.releasing]]): the queries × k result is
+    * checkpointed and the coarse assignment frame released before
+    * returning.
     */
   def knnPq(s: SparkSession, dir: String, queryBound: Int = 32, k: Int = 5,
       m: Int = 8, kCode: Int = 256, iters: Int = 2,
@@ -153,22 +148,21 @@ object PqIndex {
     // every lookup below is position-indexed)
     val coarse = IvfIndex.train(emb, coarseK, iters)
       .zipWithIndex.map { case ((_, c), i) => (i, c) }
-    // Persisted: assigned feeds the PQ training loop (via residuals),
-    // the encode pass, AND the cluster_id join below — 4+ actions that
-    // otherwise each replay scan + coarse argmax. Caller owns the
-    // lifecycle (the Bench/Verify clearCache() convention).
-    val assigned = IvfIndex.assign(emb, coarse)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val resid = residuals(assigned, coarse)
-    val books = train(resid, m, kCode, iters)
-    val indexed = encode(resid, books)
-      .join(assigned.select($"vec_id", $"cluster_id"), "vec_id")
-    val queries = emb.filter($"vec_id" < queryBound)
-      .select($"vec_id".as("query_id"), asDouble($"embedding").as("qv"))
-    adcTopK(probeCells(queries, coarse, nprobe),
-      indexed.select($"cluster_id", $"vec_id".as("neighbor_id"), $"code"),
-      emb.select($"vec_id".as("neighbor_id"), asDouble($"embedding").as("nv")),
-      coarse, books, k, shortlist)
+    // Kept: assigned feeds the PQ training loop (via residuals), the
+    // encode pass, AND the cluster_id join below — 4+ actions that
+    // otherwise each replay scan + coarse argmax.
+    SelfClean.releasing(IvfIndex.assign(emb, coarse)) { assigned =>
+      val resid = residuals(assigned, coarse)
+      val books = train(resid, m, kCode, iters)
+      val indexed = encode(resid, books)
+        .join(assigned.select($"vec_id", $"cluster_id"), "vec_id")
+      val queries = emb.filter($"vec_id" < queryBound)
+        .select($"vec_id".as("query_id"), asDouble($"embedding").as("qv"))
+      adcTopK(probeCells(queries, coarse, nprobe),
+        indexed.select($"cluster_id", $"vec_id".as("neighbor_id"), $"code"),
+        emb.select($"vec_id".as("neighbor_id"), asDouble($"embedding").as("nv")),
+        coarse, books, k, shortlist)
+    }
   }
 
   /** Residual frame (v − coarse centroid) under the `embedding` name
@@ -284,29 +278,28 @@ object PqIndex {
       .coalesce(1) // K rows of kilobytes — one file IS the right layout
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(path + "/centroids")
-    val assigned = IvfIndex.assign(vectors, coarse)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val resid = residuals(assigned, coarse)
-    val books = train(resid, m, kCode, iters)
-    s.createDataFrame(for {
-      (book, sub) <- books.zipWithIndex
-      (cid, c) <- book
-    } yield (sub, cid, c)).toDF("sub", "cid", "centroid")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(path + "/codebooks")
-    encode(resid, books)
-      .join(assigned.select($"vec_id", $"cluster_id"), "vec_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cluster_id").parquet(path + "/members")
-    assigned.select($"vec_id", $"v".as("nv"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(path + "/raw")
-    // drift baseline over the SAME coarse residuals the codebooks were
-    // trained on — IvfIndex.driftReport works against either store
-    IvfIndex.writeTrainStats(assigned, coarse, path)
-    assigned.unpersist()
-    ()
+    SelfClean.scope { keep =>
+      val assigned = keep(IvfIndex.assign(vectors, coarse))
+      val resid = residuals(assigned, coarse)
+      val books = train(resid, m, kCode, iters)
+      s.createDataFrame(for {
+        (book, sub) <- books.zipWithIndex
+        (cid, c) <- book
+      } yield (sub, cid, c)).toDF("sub", "cid", "centroid")
+        .coalesce(1)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(path + "/codebooks")
+      encode(resid, books)
+        .join(assigned.select($"vec_id", $"cluster_id"), "vec_id")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("cluster_id").parquet(path + "/members")
+      assigned.select($"vec_id", $"v".as("nv"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(path + "/raw")
+      // drift baseline over the SAME coarse residuals the codebooks were
+      // trained on — IvfIndex.driftReport works against either store
+      IvfIndex.writeTrainStats(assigned, coarse, path)
+    }
   }
 
   /** [[appendPqVectors]] with the drift gate (IvfIndex.retrainIfDrifted
@@ -385,16 +378,15 @@ object PqIndex {
     import s.implicits._
     val coarse = readCoarse(s, path)
     val books = readBooks(s, path)
-    val assigned = IvfIndex.assign(newVectors, coarse)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    encode(residuals(assigned, coarse), books)
-      .join(assigned.select($"vec_id", $"cluster_id"), "vec_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("cluster_id").parquet(path + "/members")
-    assigned.select($"vec_id", $"v".as("nv"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(path + "/raw")
-    assigned.unpersist()
-    ()
+    SelfClean.scope { keep =>
+      val assigned = keep(IvfIndex.assign(newVectors, coarse))
+      encode(residuals(assigned, coarse), books)
+        .join(assigned.select($"vec_id", $"cluster_id"), "vec_id")
+        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .partitionBy("cluster_id").parquet(path + "/members")
+      assigned.select($"vec_id", $"v".as("nv"))
+        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .parquet(path + "/raw")
+    }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, SelfClean}
 
 /** End-to-end corpus curation: the composed pipeline a training-data user
   * actually runs — quality gate → exact dedup → near-dup removal → language
@@ -32,7 +32,10 @@ object CorpusPipeline {
       // curation exists to kill.
       nearDupStarMode: Boolean = true)
 
-  /** Returns the curated corpus with per-doc annotations. */
+  /** Returns the curated corpus with per-doc annotations, checkpointed:
+    * the exact-deduped frame both later stages read is released before
+    * returning ([[SelfClean.releasing]]).
+    */
   def curate(documents: DataFrame, cfg: Config = Config()): DataFrame = {
     val s = documents.sparkSession
     import s.implicits._
@@ -46,26 +49,26 @@ object CorpusPipeline {
       .filter($"n_tokens" >= cfg.minTokens &&
         $"stopword_ratio" >= cfg.minStopwordRatio)
 
-    // 2. exact dedup: keep min doc_id per content hash. Persisted: the
-    // deduped frame feeds the near-dup pair generation AND the final
-    // anti-join — without it the regex-heavy scoring scan reruns per use.
+    // 2. exact dedup: keep min doc_id per content hash. The deduped frame
+    // feeds the near-dup pair generation AND the final anti-join, so it
+    // is cached — else the regex-heavy scoring scan reruns per use.
     val keeper = scored
       .groupBy(unhex(sha2($"text", 256)).as("_h"))
       .agg(min($"doc_id").as("doc_id"))
       .select($"doc_id")
-    val exactDeduped = scored.join(keeper, Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // 3. near-dup removal: drop any doc appearing as the LATER element
-    // (doc_b) of a confirmed pair. On a transitive chain A~B, B~C with
-    // A≁C this also drops C (whose only match, B, was itself dropped) —
-    // stricter than connected-component canonical-pick, the conservative
-    // bias a training corpus wants (never keeps both ends of a chain).
-    val nearDupLosers = Dedup
-      .minhashPairs(exactDeduped.select($"doc_id", $"text"),
-        minJaccard = cfg.nearDupJaccard, oversizedLink = cfg.nearDupStarMode)
-      .select($"doc_b".as("doc_id")).distinct()
-    exactDeduped.join(nearDupLosers, Seq("doc_id"), "left_anti")
+    SelfClean.releasing(
+        scored.join(keeper, Seq("doc_id"), "left_semi")) { exactDeduped =>
+      // 3. near-dup removal: drop any doc appearing as the LATER element
+      // (doc_b) of a confirmed pair. On a transitive chain A~B, B~C with
+      // A≁C this also drops C (whose only match, B, was itself dropped) —
+      // stricter than connected-component canonical-pick, the conservative
+      // bias a training corpus wants (never keeps both ends of a chain).
+      val nearDupLosers = Dedup
+        .minhashPairs(exactDeduped.select($"doc_id", $"text"),
+          minJaccard = cfg.nearDupJaccard, oversizedLink = cfg.nearDupStarMode)
+        .select($"doc_b".as("doc_id")).distinct()
+      exactDeduped.join(nearDupLosers, Seq("doc_id"), "left_anti")
+    }
   }
 
   /** Corpus-level curation report. */

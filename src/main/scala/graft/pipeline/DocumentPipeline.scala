@@ -430,40 +430,43 @@ object DocumentPipeline {
     * ordering window, which IS the sharded ordered write's work.
     * Scores are 6-dp-rounded in both engines BEFORE the percentile so
     * interpolated cutoffs never straddle an fp representation gap
-    * (t19's tie-break discipline).
+    * (t19's tie-break discipline). Self-cleaning
+    * ([[graft.operators.SelfClean.releasing]]): the score frame feeds the
+    * cutoffs and the banding; the schedule is checkpointed and the frame
+    * released before returning.
     */
   def curriculumSchedule(s: SparkSession, dir: String, bands: Int = 4,
       epoch: Int = 1, shards: Int = 8): DataFrame = {
     import s.implicits._
-    val docs = Tables.documents(s, dir)
-      .select($"doc_id", stopwordRatio($"text").as("score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cutExprs = (1 until bands).map(i =>
-      expr(s"percentile(score, ${i.toDouble / bands})").as(s"c$i"))
-    val cuts = docs.agg(cutExprs.head, cutExprs.tail: _*)
-    // An unscoreable doc (NULL text → NULL ratio) still gets PLACED:
-    // every null comparison falls to otherwise(0), i.e. band 1 — the
-    // lowest tier, the conservative slot for unknown quality. The
-    // oracle coalesces its ::INT casts to the same rule; a curriculum
-    // that silently dropped rows would desync the epoch schedule.
-    val banded = docs.crossJoin(broadcast(cuts))
-      .withColumn("band",
-        (1 until bands).map(i =>
-          when($"score" > col(s"c$i"), 1).otherwise(0)).reduce(_ + _) + 1)
-    val shard = pmod(conv(substring(
-        md5(concat_ws("#", lit(epoch), $"band", $"doc_id")), 1, 15), 16, 10)
-      .cast("long"), lit(shards.toLong)).cast("int")
-    val ordKey = conv(substring(
-        md5(concat_ws(":", lit(epoch), $"band", $"doc_id")), 1, 15), 16, 10)
-      .cast("long")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"band", $"shard").orderBy($"ord_key", $"doc_id")
-    banded
-      .select($"doc_id", $"score", $"band",
-        shard.as("shard"), ordKey.as("ord_key"))
-      .withColumn("pos", row_number().over(w).cast("long"))
-      .select($"doc_id", $"score", $"band", $"shard", $"pos")
-      .orderBy($"band", $"shard", $"pos", $"doc_id")
+    graft.operators.SelfClean.releasing(Tables.documents(s, dir)
+      .select($"doc_id", stopwordRatio($"text").as("score"))) { docs =>
+      val cutExprs = (1 until bands).map(i =>
+        expr(s"percentile(score, ${i.toDouble / bands})").as(s"c$i"))
+      val cuts = docs.agg(cutExprs.head, cutExprs.tail: _*)
+      // An unscoreable doc (NULL text → NULL ratio) still gets PLACED:
+      // every null comparison falls to otherwise(0), i.e. band 1 — the
+      // lowest tier, the conservative slot for unknown quality. The
+      // oracle coalesces its ::INT casts to the same rule; a curriculum
+      // that silently dropped rows would desync the epoch schedule.
+      val banded = docs.crossJoin(broadcast(cuts))
+        .withColumn("band",
+          (1 until bands).map(i =>
+            when($"score" > col(s"c$i"), 1).otherwise(0)).reduce(_ + _) + 1)
+      val shard = pmod(conv(substring(
+          md5(concat_ws("#", lit(epoch), $"band", $"doc_id")), 1, 15), 16, 10)
+        .cast("long"), lit(shards.toLong)).cast("int")
+      val ordKey = conv(substring(
+          md5(concat_ws(":", lit(epoch), $"band", $"doc_id")), 1, 15), 16, 10)
+        .cast("long")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy($"band", $"shard").orderBy($"ord_key", $"doc_id")
+      banded
+        .select($"doc_id", $"score", $"band",
+          shard.as("shard"), ordKey.as("ord_key"))
+        .withColumn("pos", row_number().over(w).cast("long"))
+        .select($"doc_id", $"score", $"band", $"shard", $"pos")
+        .orderBy($"band", $"shard", $"pos", $"doc_id")
+    }
   }
 
   val curriculumScheduleSql: String =
@@ -602,47 +605,50 @@ object DocumentPipeline {
     * (28 MB shuffle). Counts are exact longs; logw now sums n·lr per
     * distinct (doc, bucket) instead of lr per token — the SQL twin
     * groups identically so both engines round the same sums.
+    *
+    * Self-cleaning ([[graft.operators.SelfClean.scope]]): the three
+    * frames below are cached in one scope, the per-doc result is
+    * checkpointed, and the scope releases them before returning.
     */
   def importanceResampleOf(documents: DataFrame, target: String = "src0",
       buckets: Int = 1024, keepFrac: Double = 0.1): DataFrame = {
     val s = documents.sparkSession
     import s.implicits._
-    val hist = documents
-      .select($"doc_id", $"source",
-        org.apache.spark.sql.graft.GraftFunctions
-          .md5_bucket_counts($"text", buckets).as("bc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ex = hist.select($"doc_id", $"source", explode($"bc").as("x"))
-      .select($"doc_id", $"source", $"x.bkt".as("bkt"), $"x.n".as("n"))
-    // ≤`buckets` rows; persisted so the normalizer and log-ratio branches
-    // read the cache instead of re-running the corpus count pipeline
-    // (without this the plan scans the corpus once per derived branch).
-    val cc = ex.groupBy($"bkt").agg(sum($"n").as("n_c"),
-      sum(when($"source" === target, $"n").otherwise(0L)).as("n_t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tot = cc.agg(sum($"n_c").as("nc"), sum($"n_t").as("nt"))
-    val lr = cc.crossJoin(tot).select($"bkt",
-      (log(($"n_t" + 1.0) / ($"nt" + buckets.toDouble)) -
-        log(($"n_c" + 1.0) / ($"nc" + buckets.toDouble))).as("lr"))
-    val scored = ex.join(broadcast(lr), Seq("bkt"))
-      .groupBy($"doc_id")
-      .agg(sum($"n").as("n_tokens"),
-        round(sum($"n" * $"lr") + lit(1e-9), 6).as("logw"))
-    val u = (pmod(conv(substring(md5($"doc_id".cast("string")), 1, 15),
-      16, 10).cast("long"), lit(1000000L)).cast("double") + 0.5) / 1000000.0
-    // per-doc narrow frame (id + 3 numbers); persisted so the threshold
-    // aggregate and the final join both read it — the corpus is scanned
-    // exactly twice end-to-end (LM count pass + scoring pass), the DSIR
-    // minimum.
-    val keyed = scored.withColumn("samp_key",
-      round($"logw" - log(-log(u)) + lit(1e-9), 6))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val thr = keyed.agg(
-      expr(s"percentile(samp_key, ${1.0 - keepFrac})").as("thr"))
-    keyed.crossJoin(thr)
-      .select($"doc_id", $"n_tokens", $"logw", $"samp_key",
-        ($"samp_key" > $"thr" + lit(1e-9)).as("kept"))
-      .orderBy($"doc_id")
+    graft.operators.SelfClean.scope { keep =>
+      val hist = keep(documents
+        .select($"doc_id", $"source",
+          org.apache.spark.sql.graft.GraftFunctions
+            .md5_bucket_counts($"text", buckets).as("bc")))
+      val ex = hist.select($"doc_id", $"source", explode($"bc").as("x"))
+        .select($"doc_id", $"source", $"x.bkt".as("bkt"), $"x.n".as("n"))
+      // ≤`buckets` rows; kept so the normalizer and log-ratio branches
+      // read the cache instead of re-running the corpus count pipeline
+      // (without this the plan scans the corpus once per derived branch).
+      val cc = keep(ex.groupBy($"bkt").agg(sum($"n").as("n_c"),
+        sum(when($"source" === target, $"n").otherwise(0L)).as("n_t")))
+      val tot = cc.agg(sum($"n_c").as("nc"), sum($"n_t").as("nt"))
+      val lr = cc.crossJoin(tot).select($"bkt",
+        (log(($"n_t" + 1.0) / ($"nt" + buckets.toDouble)) -
+          log(($"n_c" + 1.0) / ($"nc" + buckets.toDouble))).as("lr"))
+      val scored = ex.join(broadcast(lr), Seq("bkt"))
+        .groupBy($"doc_id")
+        .agg(sum($"n").as("n_tokens"),
+          round(sum($"n" * $"lr") + lit(1e-9), 6).as("logw"))
+      val u = (pmod(conv(substring(md5($"doc_id".cast("string")), 1, 15),
+        16, 10).cast("long"), lit(1000000L)).cast("double") + 0.5) / 1000000.0
+      // per-doc narrow frame (id + 3 numbers); kept so the threshold
+      // aggregate and the final join both read it — the corpus is scanned
+      // exactly twice end-to-end (LM count pass + scoring pass), the DSIR
+      // minimum.
+      val keyed = keep(scored.withColumn("samp_key",
+        round($"logw" - log(-log(u)) + lit(1e-9), 6)))
+      val thr = keyed.agg(
+        expr(s"percentile(samp_key, ${1.0 - keepFrac})").as("thr"))
+      graft.operators.SelfClean.checkpoint(keyed.crossJoin(thr)
+        .select($"doc_id", $"n_tokens", $"logw", $"samp_key",
+          ($"samp_key" > $"thr" + lit(1e-9)).as("kept"))
+        .orderBy($"doc_id"))
+    }
   }
 
   val importanceResampleSql: String =
@@ -1730,7 +1736,7 @@ object DocumentPipeline {
 
   /** t18's tokenize step: per-doc distinct tokens. Factored so the
     * expensive scan→split→explode→distinct pipeline has exactly one
-    * definition — pmiCooccurOf persists its output and every downstream
+    * definition — pmiCooccurOf caches its output and every downstream
     * branch (df counts, vocab cutoff, both self-join sides) reads the
     * cached frame instead of re-deriving it from `documents`.
     */
@@ -1769,41 +1775,44 @@ object DocumentPipeline {
     pmiVocabTokensFrom(toks, dfw, vocab)
   }
 
-  /** Core of t18 over any (doc_id, text) frame. */
+  /** Core of t18 over any (doc_id, text) frame. Self-cleaning
+    * ([[graft.operators.SelfClean.scope]]): the top-`top` result is
+    * checkpointed and the two cached frames released before returning.
+    */
   def pmiCooccurOf(documents: DataFrame, minPairDf: Int = 5,
       top: Int = 50, vocab: Int = 2000): DataFrame = {
     val s = documents.sparkSession
     import s.implicits._
     // Tokenize ONCE: toks feeds dfw, the vocab cutoff, and both sides of
-    // the pair self-join — unpersisted, the scan→explode→distinct
-    // pipeline recomputes ~6x per run (r5's 4.2x regression). dfw is
-    // likewise read three times (cutoff + n_a + n_b joins). The caller's
-    // action populates the cache; Bench/Verify clearCache() afterwards.
-    val toks = pmiTokens(documents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dfw = toks.groupBy($"w").agg(count(lit(1)).as("n_w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bounded = pmiVocabTokensFrom(toks, dfw, vocab)
-    // n_docs counts ALL documents (even token-less ones) — must come from
-    // `documents`, not toks; a count-only scan reads no columns, so the
-    // extra pass is footer-cheap.
-    val nDocs = documents.agg(count(lit(1)).as("n_docs"))
-    val a = bounded.select($"doc_id", $"w".as("w_a"))
-    val b = bounded.select($"doc_id", $"w".as("w_b"))
-    a.join(b, Seq("doc_id")).filter($"w_a" < $"w_b")
-      .groupBy($"w_a", $"w_b").agg(count(lit(1)).as("n_ab"))
-      .filter($"n_ab" >= minPairDf)
-      // no broadcast hint: dfw grows with the real vocabulary — AQE
-      // decides (the t08 rule: never force-broadcast an SF-scaled table)
-      .join(dfw.select($"w".as("w_a"), $"n_w".as("n_a")), Seq("w_a"))
-      .join(dfw.select($"w".as("w_b"), $"n_w".as("n_b")), Seq("w_b"))
-      .crossJoin(nDocs)
-      .select($"w_a", $"w_b", $"n_ab",
-        round(log(($"n_ab".cast("double") * $"n_docs") /
-          ($"n_a".cast("double") * $"n_b")) + lit(1e-9), 6)
-          .as("pmi"))
-      .orderBy($"pmi".desc, $"w_a", $"w_b")
-      .limit(top)
+    // the pair self-join — uncached, the scan→explode→distinct pipeline
+    // recomputes ~6x per run (r5's 4.2x regression). dfw is likewise
+    // read three times (cutoff + n_a + n_b joins).
+    graft.operators.SelfClean.scope { keep =>
+      val toks = keep(pmiTokens(documents))
+      val dfw = keep(toks.groupBy($"w").agg(count(lit(1)).as("n_w")))
+      val bounded = pmiVocabTokensFrom(toks, dfw, vocab)
+      // n_docs counts ALL documents (even token-less ones) — must come from
+      // `documents`, not toks; a count-only scan reads no columns, so the
+      // extra pass is footer-cheap.
+      val nDocs = documents.agg(count(lit(1)).as("n_docs"))
+      val a = bounded.select($"doc_id", $"w".as("w_a"))
+      val b = bounded.select($"doc_id", $"w".as("w_b"))
+      graft.operators.SelfClean.checkpoint(a.join(b, Seq("doc_id"))
+        .filter($"w_a" < $"w_b")
+        .groupBy($"w_a", $"w_b").agg(count(lit(1)).as("n_ab"))
+        .filter($"n_ab" >= minPairDf)
+        // no broadcast hint: dfw grows with the real vocabulary — AQE
+        // decides (the t08 rule: never force-broadcast an SF-scaled table)
+        .join(dfw.select($"w".as("w_a"), $"n_w".as("n_a")), Seq("w_a"))
+        .join(dfw.select($"w".as("w_b"), $"n_w".as("n_b")), Seq("w_b"))
+        .crossJoin(nDocs)
+        .select($"w_a", $"w_b", $"n_ab",
+          round(log(($"n_ab".cast("double") * $"n_docs") /
+            ($"n_a".cast("double") * $"n_b")) + lit(1e-9), 6)
+            .as("pmi"))
+        .orderBy($"pmi".desc, $"w_a", $"w_b")
+        .limit(top))
+    }
   }
 
   val pmiCooccurSql: String =

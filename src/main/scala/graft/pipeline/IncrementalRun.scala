@@ -152,80 +152,77 @@ object IncrementalRun {
     // is one row per id forever.
     val idw = org.apache.spark.sql.expressions.Window
       .partitionBy($"doc_id").orderBy($"source", $"text")
-    val f = feed.select($"doc_id", $"source", $"text")
-      .withColumn("_rn", row_number().over(idw))
-      .filter($"_rn" === 1).drop("_rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nFeed = f.count()
-    val meta = readOrEmpty(spark, metaPath, metaSchema)
+    graft.operators.SelfClean.scope { keep =>
+      val f = keep(feed.select($"doc_id", $"source", $"text")
+        .withColumn("_rn", row_number().over(idw))
+        .filter($"_rn" === 1).drop("_rn"))
+      val nFeed = f.count()
+      val meta = readOrEmpty(spark, metaPath, metaSchema)
 
-    // 1. Detect-new (q04 shape): feed ids the metadata doesn't know.
-    //    Metadata is id-keyed and metadata-sized — never the corpus.
-    val newRecords = f.join(meta.select($"doc_id"), Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nNewIds = newRecords.count()
+      // 1. Detect-new (q04 shape): feed ids the metadata doesn't know.
+      //    Metadata is id-keyed and metadata-sized — never the corpus.
+      val newRecords =
+        keep(f.join(meta.select($"doc_id"), Seq("doc_id"), "left_anti"))
+      val nNewIds = newRecords.count()
 
-    // 2. Backfill (q13 shape): known rows missing sha256 take it from the
-    //    feed's content — "backfilled_existing", not re-ingested.
-    val feedSha = f.select($"doc_id".as("f_id"), sha2($"text", 256).as("f_sha"))
-    val backfilled = meta.join(feedSha, $"doc_id" === $"f_id", "left")
-      .select($"doc_id", $"source",
-        coalesce($"sha256", $"f_sha").as("sha256"),
-        when($"sha256".isNull && $"f_sha".isNotNull, lit("backfilled_existing"))
-          .otherwise($"status").as("status"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nBackfilled =
-      backfilled.filter($"status" === "backfilled_existing").count() -
-        meta.filter($"status" === "backfilled_existing").count()
+      // 2. Backfill (q13 shape): known rows missing sha256 take it from the
+      //    feed's content — "backfilled_existing", not re-ingested.
+      val feedSha = f.select($"doc_id".as("f_id"), sha2($"text", 256).as("f_sha"))
+      val backfilled = keep(meta.join(feedSha, $"doc_id" === $"f_id", "left")
+        .select($"doc_id", $"source",
+          coalesce($"sha256", $"f_sha").as("sha256"),
+          when($"sha256".isNull && $"f_sha".isNotNull, lit("backfilled_existing"))
+            .otherwise($"status").as("status")))
+      val nBackfilled =
+        backfilled.filter($"status" === "backfilled_existing").count() -
+          meta.filter($"status" === "backfilled_existing").count()
 
-    // 3. Ingest the genuinely new records; content-hash dedup against the
-    //    store's column-pruned hash projection lives in appendBatch.
-    //    The effective batch id skips every already-MERGED id in the
-    //    family (post-repair, every existing batch file is marked), so
-    //    appendBatch only ever (re)writes a file the rollup hasn't
-    //    consumed — a replayed-and-grown feed's extra docs reach the
-    //    rollup through the sub-batch instead of vanishing into a
-    //    marked file.
-    val effBatchId = (Iterator(batchId) ++
-      Iterator.from(1).map(k => s"$batchId.$k"))
-      .find(id => !new java.io.File(s"${rollupPath}_merged/$id").exists())
-      .get
-    val batchFile = s"$storeDir/$effBatchId.parquet"
-    val nIngested =
-      IncrementalIngest.appendBatch(newRecords, storeDir, effBatchId)
+      // 3. Ingest the genuinely new records; content-hash dedup against the
+      //    store's column-pruned hash projection lives in appendBatch.
+      //    The effective batch id skips every already-MERGED id in the
+      //    family (post-repair, every existing batch file is marked), so
+      //    appendBatch only ever (re)writes a file the rollup hasn't
+      //    consumed — a replayed-and-grown feed's extra docs reach the
+      //    rollup through the sub-batch instead of vanishing into a
+      //    marked file.
+      val effBatchId = (Iterator(batchId) ++
+        Iterator.from(1).map(k => s"$batchId.$k"))
+        .find(id => !new java.io.File(s"${rollupPath}_merged/$id").exists())
+        .get
+      val batchFile = s"$storeDir/$effBatchId.parquet"
+      val nIngested =
+        IncrementalIngest.appendBatch(newRecords, storeDir, effBatchId)
 
-    // 4. Cumulative metadata: every new id gets a row so the NEXT run's
-    //    detect-new skips it — the resumability contract. Status comes
-    //    from the STORE, not from this attempt's write: an id whose row
-    //    exists in any batch file is 'ingested' (covers a prior crash
-    //    between append and this rewrite — possibly under an older
-    //    batchId); an id absent from the store duplicated another
-    //    record's content and is 'skipped_duplicate'.
-    val inStore = IncrementalIngest.storedIds(spark, storeDir)
-      .withColumn("status", lit("ingested"))
-    val newMeta = newRecords
-      .join(inStore, Seq("doc_id"), "left")
-      .select($"doc_id", $"source", sha2($"text", 256).as("sha256"),
-        coalesce($"status", lit("skipped_duplicate")).as("status"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nSkippedDuplicate =
-      newMeta.filter($"status" === "skipped_duplicate").count()
-    rewrite(backfilled.unionByName(newMeta), metaPath)
+      // 4. Cumulative metadata: every new id gets a row so the NEXT run's
+      //    detect-new skips it — the resumability contract. Status comes
+      //    from the STORE, not from this attempt's write: an id whose row
+      //    exists in any batch file is 'ingested' (covers a prior crash
+      //    between append and this rewrite — possibly under an older
+      //    batchId); an id absent from the store duplicated another
+      //    record's content and is 'skipped_duplicate'.
+      val inStore = IncrementalIngest.storedIds(spark, storeDir)
+        .withColumn("status", lit("ingested"))
+      val newMeta = keep(newRecords
+        .join(inStore, Seq("doc_id"), "left")
+        .select($"doc_id", $"source", sha2($"text", 256).as("sha256"),
+          coalesce($"status", lit("skipped_duplicate")).as("status")))
+      val nSkippedDuplicate =
+        newMeta.filter($"status" === "skipped_duplicate").count()
+      rewrite(backfilled.unionByName(newMeta), metaPath)
 
-    // 5. Rollup: prior rollup (rollup-sized) merged with ONLY this run's
-    //    batch file — the delta, not the store — via the marker-tracked
-    //    idempotent commit.
-    val nRollupDeltaRows =
-      if (nIngested > 0) spark.read.parquet(batchFile).count() else 0L
-    commitBatch(spark, storeDir, rollupPath, effBatchId)
-    // An empty first run must still leave a readable (empty) rollup.
-    if (!new java.io.File(rollupPath).exists())
-      mergeRollup(spark,
-        Seq.empty[(String, Long)].toDF("source", "n_chars"), rollupPath)
+      // 5. Rollup: prior rollup (rollup-sized) merged with ONLY this run's
+      //    batch file — the delta, not the store — via the marker-tracked
+      //    idempotent commit.
+      val nRollupDeltaRows =
+        if (nIngested > 0) spark.read.parquet(batchFile).count() else 0L
+      commitBatch(spark, storeDir, rollupPath, effBatchId)
+      // An empty first run must still leave a readable (empty) rollup.
+      if (!new java.io.File(rollupPath).exists())
+        mergeRollup(spark,
+          Seq.empty[(String, Long)].toDF("source", "n_chars"), rollupPath)
 
-    f.unpersist(); newRecords.unpersist(); backfilled.unpersist()
-    newMeta.unpersist()
-    Summary(nFeed, nNewIds, nBackfilled, nIngested, nSkippedDuplicate,
-      nRollupDeltaRows)
+      Summary(nFeed, nNewIds, nBackfilled, nIngested, nSkippedDuplicate,
+        nRollupDeltaRows)
+    }
   }
 }

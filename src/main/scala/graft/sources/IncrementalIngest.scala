@@ -84,14 +84,14 @@ object IncrementalIngest {
     * once: the count and the write both read them.
     */
   def appendBatch(records: DataFrame, storeDir: String, batchId: String,
-      idCol: String = "doc_id", contentCol: String = "text"): Long = {
-    val flagged = flagFresh(records, storeDir, batchId, idCol, contentCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = flagged.filter(col(freshCol)).count()
-    if (n > 0) landBatch(flagged, storeDir, batchId)
-    flagged.unpersist()
-    n
-  }
+      idCol: String = "doc_id", contentCol: String = "text"): Long =
+    graft.operators.SelfClean.scope { keep =>
+      val flagged =
+        keep(flagFresh(records, storeDir, batchId, idCol, contentCol))
+      val n = flagged.filter(col(freshCol)).count()
+      if (n > 0) landBatch(flagged, storeDir, batchId)
+      n
+    }
 
   /** The boolean column [[flagFresh]] adds. */
   private[graft] val freshCol = "_fresh"

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.SelfClean
 
 /** Event shape for the stateful operators. */
 case class Ev(user_id: Long, ts: Timestamp, event_type: String, value: Double)
@@ -181,21 +182,20 @@ object StreamingOps {
     * double-admits or double-dead-letters.
     */
   def auditAndLand(batch: DataFrame, bid: String, storeDir: String,
-      checks: graft.pipeline.Relational.AdmissionChecks): (Long, Long) = {
-    val audited = graft.pipeline.Relational.admissionAudit(batch, checks)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bad = audited.filter(size(col("_violations")) > 0)
-    val nBad = bad.count()
-    if (nBad > 0)
-      bad.coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"${storeDir}_dlq/$bid.parquet")
-    val n = graft.sources.IncrementalIngest.appendBatch(
-      audited.filter(size(col("_violations")) === 0).drop("_violations"),
-      storeDir, bid)
-    audited.unpersist()
-    (n, nBad)
-  }
+      checks: graft.pipeline.Relational.AdmissionChecks): (Long, Long) =
+    SelfClean.scope { keep =>
+      val audited = keep(graft.pipeline.Relational.admissionAudit(batch, checks))
+      val bad = audited.filter(size(col("_violations")) > 0)
+      val nBad = bad.count()
+      if (nBad > 0)
+        bad.coalesce(1)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"${storeDir}_dlq/$bid.parquet")
+      val n = graft.sources.IncrementalIngest.appendBatch(
+        audited.filter(size(col("_violations")) === 0).drop("_violations"),
+        storeDir, bid)
+      (n, nBad)
+    }
 
   /** Streaming ingest into the hash-dedup incremental store: each
     * micro-batch lands via IncrementalIngest.appendBatch, so replayed or
@@ -323,64 +323,61 @@ object StreamingOps {
         val spark = batch.sparkSession
         import spark.implicits._
         val bid = f"batch$batchId%06d"
-        val b = batch.toDF()
-          .withColumn("_sh", graft.operators.Dedup.shingleHashes($"text"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val shingled = b.select($"doc_id", $"_sh".as("sh"))
-        // the pending files' schema is the one this gate writes them with
-        def readShingles(files: Seq[String]): DataFrame =
-          spark.read.schema(shingled.schema).parquet(files: _*)
-        // what the two writes will land, counted by the checkpoint itself
-        val counts = org.apache.spark.sql.Observation(s"$queryName-$bid")
-        val kept = step(spark, "gate probe") {
-          val pending = pendingFiles(spark, pendingDir)
-          val index = graft.operators.Dedup.storedIndex(spark, indexTable) +:
-            (if (pending.isEmpty) Nil
-             else Seq(graft.operators.Dedup
-               .bufferIndex(readShingles(pending), 16, 4)))
-          val dups = graft.operators.Dedup
-            .dedupProbeFrames(index, shingled, 16, 4, minJaccard)
-          // flagged over the whole batch: docs sharing a content hash
-          // share their shingles, hence their verdict, so this equals
-          // flagging the survivors — and runs beside the probe
-          val flagged = graft.sources.IncrementalIngest
-            .flagFresh(b, storeDir, bid)
-          flagged.join(dups, flagged("doc_id") === dups("new_id"), "left_anti")
-            .observe(counts,
-              count(when(col(graft.sources.IncrementalIngest.freshCol), 1))
-                .as("land"),
-              count(when(size($"_sh") > 0, 1)).as("pending"))
-            .localCheckpoint()
-        }
-        val toWrite = counts.get.view.mapValues(_.asInstanceOf[Long]).toMap
-        if (toWrite("land") > 0)
-          landOnce(spark, storeDir, bid, checkpointDir, "gate land") {
-            graft.sources.IncrementalIngest.landBatch(kept.drop("_sh"),
-              storeDir, bid)
+        // The batch's caches belong to this trigger's scope: released when
+        // it ends, failed or not — never a session-wide clearCache, which
+        // would evict a co-resident workload's frames (ADVICE r13).
+        SelfClean.scope { keep =>
+          val b = keep(batch.toDF()
+            .withColumn("_sh", graft.operators.Dedup.shingleHashes($"text")))
+          val shingled = b.select($"doc_id", $"_sh".as("sh"))
+          // the pending files' schema is the one this gate writes them with
+          def readShingles(files: Seq[String]): DataFrame =
+            spark.read.schema(shingled.schema).parquet(files: _*)
+          // what the two writes will land, counted by the checkpoint itself
+          val counts = org.apache.spark.sql.Observation(s"$queryName-$bid")
+          val kept = step(spark, "gate probe") {
+            val pending = pendingFiles(spark, pendingDir)
+            val index = graft.operators.Dedup.storedIndex(spark, indexTable) +:
+              (if (pending.isEmpty) Nil
+               else Seq(graft.operators.Dedup
+                 .bufferIndex(readShingles(pending), 16, 4)))
+            val dups = graft.operators.Dedup
+              .dedupProbeFrames(index, shingled, 16, 4, minJaccard)
+            // flagged over the whole batch: docs sharing a content hash
+            // share their shingles, hence their verdict, so this equals
+            // flagging the survivors — and runs beside the probe
+            val flagged = graft.sources.IncrementalIngest
+              .flagFresh(b, storeDir, bid)
+            flagged.join(dups, flagged("doc_id") === dups("new_id"), "left_anti")
+              .observe(counts,
+                count(when(col(graft.sources.IncrementalIngest.freshCol), 1))
+                  .as("land"),
+                count(when(size($"_sh") > 0, 1)).as("pending"))
+              .localCheckpoint()
           }
-        if (toWrite("pending") > 0) step(spark, "gate pending") {
-          kept.filter(size($"_sh") > 0).select($"doc_id", $"_sh".as("sh"))
-            .coalesce(1)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$pendingDir/$bid.parquet")
-        }
-        val toFold = pendingFiles(spark, pendingDir)
-        if (toFold.size >= growEvery) {
-          step(spark, "gate fold") {
-            graft.operators.Dedup.appendDedupIndexFromShingles(
-              readShingles(toFold), indexTable, 8, 16, 4)
-            deletePath(spark, pendingDir)
+          val toWrite = counts.get.view.mapValues(_.asInstanceOf[Long]).toMap
+          if (toWrite("land") > 0)
+            landOnce(spark, storeDir, bid, checkpointDir, "gate land") {
+              graft.sources.IncrementalIngest.landBatch(kept.drop("_sh"),
+                storeDir, bid)
+            }
+          if (toWrite("pending") > 0) step(spark, "gate pending") {
+            kept.filter(size($"_sh") > 0).select($"doc_id", $"_sh".as("sh"))
+              .coalesce(1)
+              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+              .parquet(s"$pendingDir/$bid.parquet")
           }
-          maybeCompact(spark, indexTable, compactAbove)
+          val toFold = pendingFiles(spark, pendingDir)
+          if (toFold.size >= growEvery) {
+            step(spark, "gate fold") {
+              graft.operators.Dedup.appendDedupIndexFromShingles(
+                readShingles(toFold), indexTable, 8, 16, 4)
+              deletePath(spark, pendingDir)
+            }
+            maybeCompact(spark, indexTable, compactAbove)
+          }
+          org.apache.spark.sql.graft.SparkInternals.releaseCheckpointBlocks(kept)
         }
-        // Self-cleaning (ADVICE r13): unpersist exactly the frame THIS
-        // operator persisted once the batch's actions have run — never a
-        // session-wide clearCache, which would evict a co-resident
-        // workload's persisted frames mid-flight (two gates sharing one
-        // SparkSession is a plausible deployment).
-        b.unpersist()
-        org.apache.spark.sql.graft.SparkInternals.releaseCheckpointBlocks(kept)
-        ()
       }
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
   }
@@ -429,69 +426,62 @@ object StreamingOps {
         val spark = batch.sparkSession
         import spark.implicits._
         val bid = f"batch$batchId%06d"
-        val b = batch.toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // ONE fused SegmentShingleHashes pass per batch serves probe,
-        // rollup AND index growth (VERDICT r14 #8): the meta frame the
-        // probe persisted is filtered to kept docs for the append —
-        // formerly the batch was segmented + tokenized three times.
-        val meta = graft.operators.Dedup
-          .segmentHashFrame(b.select($"doc_id", $"text"), width)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // the pending files' schema is the one this gate writes them with
-        val pend = Some(pendingFiles(spark, pendingDir)).filter(_.nonEmpty)
-          .map(files => spark.read.schema(meta.schema).parquet(files: _*))
-        // stored index and pending buffer: one exact semi-join each, one
-        // shared fuzzy probe over both (Dedup.dedupProbeFrames)
-        val storedOrds = graft.operators.Dedup
-          .segmentDeltaOrdsFromMeta(spark, indexTable, meta, 16, 4,
-            minJaccard, pend.toSeq.map(p => graft.operators.Dedup
-              .bufferIndex(p.select($"ord".as("doc_id"), $"sh"), 16, 4)))
-        val pendOrds = pend.fold(spark.emptyDataset[Long].toDF("ord"))(p =>
-          meta.join(p.select($"h", $"h2"), Seq("h", "h2"), "left_semi")
-            .select($"ord"))
-        val rollup = graft.operators.Dedup.segmentNeardupRollup(
-          meta.select($"doc_id", $"ord"),
-          storedOrds.unionByName(pendOrds).distinct())
-        // ONE probe execution per trigger (see dedupStream): the gated
-        // verdict is doc_id-sized; checkpointing it keeps the ingest
-        // actions and the pending write from each replaying the
-        // stored-table exact+fuzzy probe joins.
-        val gated = step(spark, "segment gate probe") {
-          rollup.filter($"kept_ratio" < segKeptRatioMin)
-            .select($"doc_id").localCheckpoint()
+        SelfClean.scope { keep =>
+          val b = keep(batch.toDF())
+          // ONE fused SegmentShingleHashes pass per batch serves probe,
+          // rollup AND index growth (VERDICT r14 #8): the meta frame the
+          // probe persisted is filtered to kept docs for the append —
+          // formerly the batch was segmented + tokenized three times.
+          val meta = keep(graft.operators.Dedup
+            .segmentHashFrame(b.select($"doc_id", $"text"), width))
+          // the pending files' schema is the one this gate writes them with
+          val pend = Some(pendingFiles(spark, pendingDir)).filter(_.nonEmpty)
+            .map(files => spark.read.schema(meta.schema).parquet(files: _*))
+          // stored index and pending buffer: one exact semi-join each, one
+          // shared fuzzy probe over both (Dedup.dedupProbeFrames)
+          val storedOrds = graft.operators.Dedup
+            .segmentDeltaOrdsFromMeta(spark, indexTable, meta, 16, 4,
+              minJaccard, pend.toSeq.map(p => graft.operators.Dedup
+                .bufferIndex(p.select($"ord".as("doc_id"), $"sh"), 16, 4)))
+          val pendOrds = pend.fold(spark.emptyDataset[Long].toDF("ord"))(p =>
+            meta.join(p.select($"h", $"h2"), Seq("h", "h2"), "left_semi")
+              .select($"ord"))
+          val rollup = graft.operators.Dedup.segmentNeardupRollup(
+            meta.select($"doc_id", $"ord"),
+            storedOrds.unionByName(pendOrds).distinct())
+          // ONE probe execution per trigger (see dedupStream): the gated
+          // verdict is doc_id-sized; checkpointing it keeps the ingest
+          // actions and the pending write from each replaying the
+          // stored-table exact+fuzzy probe joins.
+          val gated = step(spark, "segment gate probe") {
+            rollup.filter($"kept_ratio" < segKeptRatioMin)
+              .select($"doc_id").localCheckpoint()
+          }
+          val flagged = keep(graft.sources.IncrementalIngest
+            .flagFresh(b.join(gated, Seq("doc_id"), "left_anti"), storeDir, bid))
+          if (!flagged.filter(col(graft.sources.IncrementalIngest.freshCol)).isEmpty)
+            landOnce(spark, storeDir, bid, checkpointDir, "segment gate land") {
+              graft.sources.IncrementalIngest.landBatch(flagged, storeDir, bid)
+            }
+          // the kept docs' segments; a replay's are none (its docs match
+          // themselves), so it leaves the batch's pending file as it was
+          val keptMeta = meta.join(gated, Seq("doc_id"), "left_anti")
+          if (!keptMeta.isEmpty)
+            step(spark, "segment gate pending") {
+              keptMeta.coalesce(1)
+                .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+                .parquet(s"$pendingDir/$bid.parquet")
+            }
+          val toFold = pendingFiles(spark, pendingDir)
+          if (toFold.size >= growEvery) {
+            step(spark, "segment gate fold") {
+              graft.operators.Dedup.appendSegmentIndexFromMeta(
+                spark.read.schema(meta.schema).parquet(toFold: _*), indexTable)
+              deletePath(spark, pendingDir)
+            }
+            maybeCompact(spark, indexTable, compactAbove)
+          }
         }
-        val flagged = graft.sources.IncrementalIngest
-          .flagFresh(b.join(gated, Seq("doc_id"), "left_anti"), storeDir, bid)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (!flagged.filter(col(graft.sources.IncrementalIngest.freshCol)).isEmpty)
-          landOnce(spark, storeDir, bid, checkpointDir, "segment gate land") {
-            graft.sources.IncrementalIngest.landBatch(flagged, storeDir, bid)
-          }
-        // the kept docs' segments; a replay's are none (its docs match
-        // themselves), so it leaves the batch's pending file as it was
-        val keptMeta = meta.join(gated, Seq("doc_id"), "left_anti")
-        if (!keptMeta.isEmpty)
-          step(spark, "segment gate pending") {
-            keptMeta.coalesce(1)
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$pendingDir/$bid.parquet")
-          }
-        val toFold = pendingFiles(spark, pendingDir)
-        if (toFold.size >= growEvery) {
-          step(spark, "segment gate fold") {
-            graft.operators.Dedup.appendSegmentIndexFromMeta(
-              spark.read.schema(meta.schema).parquet(toFold: _*), indexTable)
-            deletePath(spark, pendingDir)
-          }
-          maybeCompact(spark, indexTable, compactAbove)
-        }
-        // Self-cleaning via the handle (the fused meta frame), not
-        // session-wide clearCache — see dedupStream.
-        flagged.unpersist()
-        b.unpersist()
-        meta.unpersist()
-        ()
       }
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
   }
@@ -526,38 +516,32 @@ object StreamingOps {
         val spark = batch.sparkSession
         import spark.implicits._
         val bid = f"batch$batchId%06d"
-        val b = batch.toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val rewritten = graft.operators.Dedup
-          .substringRewriteDelta(spark, indexTable,
-            b.select($"doc_id", $"text"), k)
-        val cleaned = b.drop("text")
-          .join(rewritten.select($"doc_id", $"cleaned".as("text")),
-            Seq("doc_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (!cleaned.isEmpty) {
-          landOnce(spark, storeDir, bid, checkpointDir, "substring gate land") {
-            cleaned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$storeDir/$bid.parquet")
-          }
-          val marker = s"${storeDir}_idx_marked/$bid"
-          if (!pathExists(spark, marker)) {
-            // grow from the ORIGINAL batch text: the keeper copy of a
-            // novel run survives the rewrite and must be indexed; using
-            // b (not cleaned) also keeps a replay's grams identical
-            graft.operators.Dedup.writeSubstringIndex(
-              b.select($"doc_id", $"text"), indexTable, k,
-              mode = org.apache.spark.sql.SaveMode.Append)
-            touchMarker(spark, marker)
-            maybeCompact(spark, indexTable, compactAbove)
+        SelfClean.scope { keep =>
+          val b = keep(batch.toDF())
+          val rewritten = graft.operators.Dedup
+            .substringRewriteDelta(spark, indexTable,
+              b.select($"doc_id", $"text"), k)
+          val cleaned = keep(b.drop("text")
+            .join(rewritten.select($"doc_id", $"cleaned".as("text")),
+              Seq("doc_id")))
+          if (!cleaned.isEmpty) {
+            landOnce(spark, storeDir, bid, checkpointDir, "substring gate land") {
+              cleaned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+                .parquet(s"$storeDir/$bid.parquet")
+            }
+            val marker = s"${storeDir}_idx_marked/$bid"
+            if (!pathExists(spark, marker)) {
+              // grow from the ORIGINAL batch text: the keeper copy of a
+              // novel run survives the rewrite and must be indexed; using
+              // b (not cleaned) also keeps a replay's grams identical
+              graft.operators.Dedup.writeSubstringIndex(
+                b.select($"doc_id", $"text"), indexTable, k,
+                mode = org.apache.spark.sql.SaveMode.Append)
+              touchMarker(spark, marker)
+              maybeCompact(spark, indexTable, compactAbove)
+            }
           }
         }
-        // substringRewriteDelta is self-cleaning (eager localCheckpoint +
-        // internal unpersists), so freeing this operator's own two
-        // persists is the complete cleanup — no session-wide clearCache.
-        cleaned.unpersist()
-        b.unpersist()
-        ()
       }
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
   }
@@ -604,45 +588,40 @@ object StreamingOps {
         // dead-letter per batch id with their tags; clean vectors flow
         // to the probe. DLQ write is bid-keyed Overwrite → replay
         // rewrites the identical file.
-        val b = audit.fold(batch.toDF()) { checks =>
-          val audited = graft.pipeline.Relational
-            .admissionAudit(batch.toDF(), checks)
-          val bad = audited.filter(size($"_violations") > 0)
-          if (!bad.isEmpty)
-            bad.coalesce(1)
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"${storeDir}_dlq/$bid.parquet")
-          audited.filter(size($"_violations") === 0).drop("_violations")
-        }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val dupIds = graft.operators.Dedup
-          .semanticDelta(spark, indexTable, b,
-            planes = planes, nprobe = nprobe, minCos = minCos)
-          .select($"new_id".as("vec_id")).distinct()
-        val kept = b.join(dupIds, Seq("vec_id"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val marker = s"${storeDir}_idx_marked/$bid"
-        if (!kept.isEmpty) {
-          // after a partial index append, the replayed batch's kept set
-          // SHRINKS (probe-before-grow gates vectors against their own
-          // partial index rows), hence the write-once landing
-          landOnce(spark, storeDir, bid, checkpointDir, "semantic gate land") {
-            kept.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$storeDir/$bid.parquet")
-          }
-          if (!pathExists(spark, marker)) {
-            graft.operators.Dedup.appendSemanticIndex(
-              kept.select($"vec_id", $"embedding"), indexTable,
-              planes = planes)
-            touchMarker(spark, marker)
-            maybeCompact(spark, indexTable, compactAbove)
+        SelfClean.scope { keep =>
+          val b = keep(audit.fold(batch.toDF()) { checks =>
+            val audited = graft.pipeline.Relational
+              .admissionAudit(batch.toDF(), checks)
+            val bad = audited.filter(size($"_violations") > 0)
+            if (!bad.isEmpty)
+              bad.coalesce(1)
+                .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+                .parquet(s"${storeDir}_dlq/$bid.parquet")
+            audited.filter(size($"_violations") === 0).drop("_violations")
+          })
+          val dupIds = graft.operators.Dedup
+            .semanticDelta(spark, indexTable, b,
+              planes = planes, nprobe = nprobe, minCos = minCos)
+            .select($"new_id".as("vec_id")).distinct()
+          val kept = keep(b.join(dupIds, Seq("vec_id"), "left_anti"))
+          val marker = s"${storeDir}_idx_marked/$bid"
+          if (!kept.isEmpty) {
+            // after a partial index append, the replayed batch's kept set
+            // SHRINKS (probe-before-grow gates vectors against their own
+            // partial index rows), hence the write-once landing
+            landOnce(spark, storeDir, bid, checkpointDir, "semantic gate land") {
+              kept.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+                .parquet(s"$storeDir/$bid.parquet")
+            }
+            if (!pathExists(spark, marker)) {
+              graft.operators.Dedup.appendSemanticIndex(
+                kept.select($"vec_id", $"embedding"), indexTable,
+                planes = planes)
+              touchMarker(spark, marker)
+              maybeCompact(spark, indexTable, compactAbove)
+            }
           }
         }
-        // semanticDelta persists nothing (its probe frame streams through
-        // one join), so freeing this operator's own two persists is the
-        // complete cleanup — no session-wide clearCache.
-        kept.unpersist()
-        b.unpersist()
-        ()
       }
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
   }

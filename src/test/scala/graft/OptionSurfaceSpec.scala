@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * A/B arm is a `-Dspark.*` flag (a `spark.*` JVM system property wins
   * over `GraftSession`'s default), so a new env read has to be added to
   * this list on purpose. Likewise, cross-query memos live in one
-  * registry (`CacheHygiene.memo`), so a private memo map fails here.
+  * registry (`CacheHygiene.memo`), so a private memo map fails here, and
+  * frames are persisted only by `SelfClean.scope`, which releases them
+  * when it exits, so a raw persist fails here too.
   */
 class OptionSurfaceSpec extends AnyFunSuite {
 
@@ -48,5 +50,25 @@ class OptionSurfaceSpec extends AnyFunSuite {
     }.map(_.getPath)
     assert(declaring.isEmpty,
       s"a memo outside CacheHygiene's registry: ${declaring.mkString(", ")}")
+  }
+
+  test("only SelfClean persists or releases a frame") {
+    val files = sources(new java.io.File("src/main/scala"))
+    assert(files.nonEmpty, "run from the repository root")
+    // file name -> why it may persist or release
+    val exempt = Map(
+      "SelfClean.scala" -> "the scope: keep persists, its finally unpersists",
+      "SparkInternals.scala" -> "the checkpoint-block sweep behind freeTransient",
+      "ScaleProbe.scala" -> "the scale harness holds its inputs across timed sections")
+    val raw = """\.persist\(|\.cache\(\)|\.unpersist\(""".r
+    val calling = files.filter { f =>
+      !exempt.contains(f.getName) &&
+        raw.findFirstIn(new String(
+          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).isDefined
+    }.map(_.getPath)
+    // with every persist inside a scope that frees it on exit, no def can
+    // hand a live cache back to its caller
+    assert(calling.isEmpty,
+      s"a persist outside SelfClean.scope: ${calling.mkString(", ")}")
   }
 }

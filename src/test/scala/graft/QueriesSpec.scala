@@ -1,7 +1,8 @@
 package graft
 
-/** Every declared query runs end-to-end on sf0.001 and is consistent with
-  * its declaration (an oracle entry implies a queries entry).
+/** Every declared query runs end-to-end on sf0.001, is consistent with
+  * its declaration (an oracle entry implies a queries entry), and leaves
+  * nothing cached: each persist is released by the scope that made it.
   */
 class QueriesSpec extends SparkSpec {
 
@@ -14,11 +15,36 @@ class QueriesSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
+  test("plan mode shows the self-cleaning keys' real pipelines") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // each returns a checkpoint, whose runtime plan is one RDD scan; in
+    // plan mode the checkpoint passes the real pipeline through, which
+    // reads the corpus
+    val selfCleaning = Seq("d10_hot_ngram_mask", "d13_segment_dedup",
+      "d18_segment_neardup", "t18_pmi_cooccur", "t24_cosine_apss",
+      "s04_knn_ivf", "s06_knn_pq", "p01_corpus_curate",
+      "p05_importance_resample", "p08_curriculum")
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case s: FileSourceScanExec => Seq(s)
+    }.flatten
+    val blind = try {
+      graft.operators.SelfClean.planMode = true
+      selfCleaning.filter(name => scans(SparkEntry.queries(name)(spark, sf)
+        .queryExecution.executedPlan).isEmpty)
+    } finally graft.operators.SelfClean.planMode = false
+    assert(blind.isEmpty, s"no table scan in the plan of ${blind.mkString(", ")}")
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs on sf0.001") {
+      spark.catalog.clearCache()
       val df = fn(spark, sf)
       val n = df.count()
       assert(n >= 0)
+      assert(org.apache.spark.sql.graft.SparkInternals.cacheIsEmpty(spark),
+        s"$name left a frame cached")
       // queries that must be non-empty on any sf
       val mustHaveRows = !Set("d02_dedup_minhash", "d02c_minhash_adaptive",
         "d03_dedup_simhash",

@@ -252,6 +252,7 @@ class StreamingSpec extends SparkSpec {
 
   test("gate restarted over an existing store without its checkpoint fails instead of dropping survivors") {
     implicit val sqlCtx = spark.sqlContext
+    spark.catalog.clearCache()
     val dir = java.nio.file.Files.createTempDirectory("graft_nockpt_").toString
     def text(i: Long): String =
       (0 until 40).map(j => s"k${i}_$j").mkString(" ")
@@ -273,6 +274,8 @@ class StreamingSpec extends SparkSpec {
     assert(e.getMessage.contains("checkpointDir"), e.getMessage)
     assert(spark.read.parquet(s"$dir/store/*.parquet").select("doc_id")
       .as[Long].collect().toSeq == Seq(1L), "the first run's batch changed")
+    assert(org.apache.spark.sql.graft.SparkInternals.cacheIsEmpty(spark),
+      "the failed trigger left its batch cached")
     Seq("_bands", "_shingles").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS nockpt_idx$t"))
     spark.catalog.clearCache()
@@ -575,14 +578,15 @@ class StreamingSpec extends SparkSpec {
 
   /** Runs `gate` without a checkpoint over `first`, then again over
     * `second` on the same store: the second run starts again at
-    * batch000000, whose file the first run committed, so it must fail and
-    * leave that file as it was.
+    * batch000000, whose file the first run committed, so it must fail,
+    * leave that file as it was, and leave nothing cached.
     */
   private def assertRestartWithoutCheckpointFails[T: org.apache.spark.sql.Encoder](
       store: String, idCol: String, first: T, second: T)(
       gate: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     implicit val sqlCtx = spark.sqlContext
+    spark.catalog.clearCache()
     def run(row: T): Unit = {
       val mem = MemoryStream[T]
       val q = gate(mem.toDF())
@@ -598,6 +602,9 @@ class StreamingSpec extends SparkSpec {
       run(second))
     assert(e.getMessage.contains("checkpointDir"), e.getMessage)
     assert(storeRows() == landed, "the first run's batch changed")
+    // the failed trigger released its batch caches on the way out
+    assert(org.apache.spark.sql.graft.SparkInternals.cacheIsEmpty(spark),
+      "the failed trigger left its batch cached")
   }
 
   test("semantic gate restarted without its checkpoint fails instead of dropping survivors") {
