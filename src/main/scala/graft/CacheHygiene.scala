@@ -103,11 +103,10 @@ object CacheHygiene {
 
   /** Unpersist all non-memo-pinned persistent RDDs; returns how many
     * were freed (0 = nothing was resident — the hygiene assertion).
-    * Blocking by default so eviction IO cannot backwash into whatever
-    * runs next (the A/B showed async frees slowing the NEXT query 3×).
+    * The frees block, so eviction IO cannot backwash into whatever runs
+    * next (the A/B showed async frees slowing the NEXT query 3×).
     */
-  def freeTransient(spark: SparkSession, blocking: Boolean = true): Int =
-    freeTransientKeeping(spark, Nil, blocking)
+  def freeTransient(spark: SparkSession): Int = freeTransientKeeping(spark, Nil)
 
   /** [[freeTransient]] with extra caller-held frames pinned: a harness
     * that keeps a checkpointed frame alive ACROSS sweeps (Recall's
@@ -116,8 +115,7 @@ object CacheHygiene {
     * is truncated, so the next read is CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
     * not a recompute.
     */
-  def freeTransientKeeping(spark: SparkSession, keep: Seq[DataFrame],
-      blocking: Boolean = true): Int =
+  def freeTransientKeeping(spark: SparkSession, keep: Seq[DataFrame]): Int =
     si.freeTransientCheckpoints(spark,
-      memoCheckpointRddIds ++ keep.flatMap(si.checkpointRddIds), blocking)
+      memoCheckpointRddIds ++ keep.flatMap(si.checkpointRddIds))
 }

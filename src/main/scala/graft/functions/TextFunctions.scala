@@ -54,7 +54,7 @@ object TextFunctions {
     }._1
   }
 
-  /** Whitespace token count — the codegen'd WsTokenCount byte scan,
+  /** Whitespace token count — the codegen'd hashing.wsTokenCount byte scan,
     * value-identical to `size(split(text, "\\s+"))` (spec-pinned in
     * TokenCountSpec) without materializing the word-string array that
     * form allocated per row just to take its length.
@@ -67,7 +67,7 @@ object TextFunctions {
     * unsegmented scripts sit near 0; segmented prose sits near 0.15–0.2.
     * (Code points on both engines: Spark `length` counts code points,
     * DuckDB `length` likewise.) The numerator is the codegen'd
-    * WhitespaceCount byte scan — value-identical to the former
+    * hashing.whitespaceCount byte scan — value-identical to the former
     * `length(text) - length(regexp_replace(text, "\\s", ""))` (spec-pinned
     * in CjkSpec), which allocated a full copy of every document per row
     * and cost 1.4–3 s of d02c's/t26's sf10 wall on its own.
@@ -85,7 +85,7 @@ object TextFunctions {
 
   /** Han / kana (hiragana+katakana) / hangul char counts — the three
     * signals behind the script-aware language fallback (t26). One fused
-    * CjkScriptCounts decode pass (value-identical to three
+    * hashing.cjkScriptCounts decode pass (value-identical to three
     * [[scriptCharCount]] regexp_replace copies — CjkSpec pins it; Java
     * `\p{IsHan}` IS `Character.UnicodeScript.HAN` membership).
     */
@@ -112,7 +112,7 @@ object TextFunctions {
 
   /** BPE-ish pre-tokenizer count: letter runs, digit runs, single
     * punctuation — the standard GPT-2-style pre-split shape. The
-    * codegen'd BpeishTokenCount byte scan, value-identical to
+    * codegen'd hashing.bpeishTokenCount byte scan, value-identical to
     * `size(regexp_extract_all(text, "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"))`
     * (spec-pinned in TokenCountSpec) without the regex engine or the
     * per-row array of matched token strings that form allocated just to

@@ -17,8 +17,8 @@ object VectorFunctions {
   /** Element-wise cast to double (exact for float32 inputs). */
   def asDouble(v: Column): Column = v.cast("array<double>")
 
-  /** Sequential-sum dot product — custom codegen'd Catalyst expression
-    * (graft.expressions.DotProduct); same left-fold order as the HOF
+  /** Sequential-sum dot product — the hashing.dotProduct kernel, called
+    * from generated code; same left-fold order as the HOF
     * `aggregate(zip_with(...))` form and the DuckDB oracle's list_sum, so
     * results stay bit-identical, but it stays inside whole-stage codegen.
     */

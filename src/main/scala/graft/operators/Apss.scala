@@ -34,7 +34,7 @@ import graft.Tables
   *    small prefix table, never an O(n²) pair space.
   *  - Verify is candidate-sized: two doc-keyed joins fetch the term-sorted
   *    (terms, weights) arrays and a codegen'd merge walk
-  *    ([[org.apache.spark.sql.graft.SortedWeightedDot]]) computes the
+  *    ([[org.apache.spark.sql.graft.hashing.sortedWeightedDot]]) computes the
   *    exact cosine with no per-pair hash map.
   *
   * The prefix bound is taken at (minCos − 1e-3): the emitted cosine is

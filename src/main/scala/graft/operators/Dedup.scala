@@ -49,8 +49,8 @@ object Dedup {
       |GROUP BY sha256(text)
       |ORDER BY content_hash""".stripMargin
 
-  /** Distinct word n-gram shingles (custom single-pass Catalyst
-    * expression — see WordShingles in org.apache.spark.sql.graft).
+  /** Distinct word n-gram shingles (the single-pass kernel
+    * org.apache.spark.sql.graft.hashing.wordShingles).
     */
   def shingles(text: Column, n: Int = 3): Column =
     org.apache.spark.sql.graft.GraftFunctions.word_shingles(text, n)
@@ -76,7 +76,7 @@ object Dedup {
     * uses), so it is persisted — the upstream scan + shingle computation
     * runs once, not three times; at scale the recompute dominates — and
     * released once the bounded pair set is checkpointed. Shingles are
-    * carried as 64-bit hashes, not strings (WordShingleHashes): ~3× less
+    * carried as 64-bit hashes, not strings (hashing.wordShingleHashes): ~3× less
     * cache + verify-join traffic with identical Jaccard counts.
     */
   def minhashPairs(documents: DataFrame,
@@ -88,7 +88,8 @@ object Dedup {
   /** The band/verify pipeline over an already-built (and persisted —
     * it's read three times) hashed-shingle frame (doc_id, sh). Shared by
     * the text path above and d18b's fused segment path, whose shingle
-    * hashes come out of [[org.apache.spark.sql.graft.SegmentShingleHashes]]
+    * hashes come out of
+    * [[org.apache.spark.sql.graft.hashing.segmentShingleHashes]]
     * value-identical to [[shingleFrame]]'s, so both feed the same
     * machinery.
     */
@@ -147,7 +148,7 @@ object Dedup {
       .join(docs.select($"doc_id".as("doc_a"), $"sh".as("sh_a")), Seq("doc_a"))
       .join(docs.select($"doc_id".as("doc_b"), $"sh".as("sh_b")), Seq("doc_b"))
 
-    // shingle-hash arrays are sorted (WordShingleHashes) → merge-walk
+    // shingle-hash arrays are sorted (hashing.wordShingleHashes) → merge-walk
     // intersection instead of array_intersect's per-pair hash set
     val ni = org.apache.spark.sql.graft.GraftFunctions
       .sorted_intersection_size($"sh_a", $"sh_b")
@@ -165,7 +166,7 @@ object Dedup {
     * zero 3-shingles, and is silently dropped from near-dup entirely.
     * Here each document picks its shingle family by whitespace density —
     * word 3-shingles where whitespace segments, char `k`-gram shingles
-    * (CharShingleHashes, same sorted-distinct array<long> contract)
+    * (hashing.charShingleHashes, same sorted-distinct array<long> contract)
     * where it doesn't — and BOTH feed the identical single-shuffle
     * banding + merge-walk-verify machinery. Cross-family candidate pairs
     * can only arise from band-hash collisions and die at verify (the two
@@ -231,7 +232,7 @@ object Dedup {
   /** MinHash band hashes exploded into (doc_id, band, band_hash) —
     * shared by the pair generator and the dropped-bucket diagnostic so
     * both always see exactly the same buckets. ONE fused codegen'd pass
-    * (MinHashBandHashes: signature minima folded straight into per-band
+    * (hashing.minhashBandHashes: signature minima folded straight into per-band
     * XXH64 digests, bit-identical to the former
     * xxhash64(slice(sig, …)) form — DedupSpec pins the equality) — the
     * d18 stage probe at sf10 named the former shape's map side (64-long
@@ -352,7 +353,7 @@ object Dedup {
     * MECHANICS (per-seed min over shingles → banded signature digest →
     * bucket self-join → candidate pairs) get an exact cross-engine DuckDB
     * check, not just statistical spec coverage (VERDICT r4 #5). d02
-    * remains the production path: its one-hash MinHashSig expression is
+    * remains the production path: its one-hash hashing.minhashSig kernel is
     * ~k× cheaper per shingle; this variant's |shingles|×k explode is the
     * price of portability, paid only inside the bounded window.
     * bands=8 × rows=2 over k=16 (s-curve threshold ≈0.35 — tuned so the
@@ -539,7 +540,7 @@ object Dedup {
     *
     * Scale shape (r16): positional gram fingerprints come from ONE
     * rolling-hash pass ([[org.apache.spark.sql.graft
-    * .RollingKgramHashes]] — O(n_tokens) hashing) instead of a
+    * .hashing.rollingKgramHashes]] — O(n_tokens) hashing) instead of a
     * slice+concat STRING build per position (each token copied n times,
     * the allocate-to-count disease at corpus scale); the gram hash is
     * operator-internal (the oracle compares the masked-coverage output,
@@ -694,7 +695,7 @@ object Dedup {
   /** Sign-partition bucket id over a double-array column `v`: bit p =
     * sign of the projection onto the p-th md5-family ±1 hyperplane
     * (weights are driver-side literal constants through the codegen'd
-    * DotProduct — the same family the DuckDB oracle recomputes inline).
+    * hashing.dotProduct — the same family the DuckDB oracle recomputes inline).
     */
   private def signBucket(v: Column, planes: Int, dim: Int): Column =
     (0 until planes).map { p =>
@@ -821,7 +822,7 @@ object Dedup {
     * sign of md5("p:j")'s first nibble parity), materialized driver-side
     * as planes×dim literal constants — so the whole pipeline is
     * cross-engine checkable (DuckDB recomputes the same family inline)
-    * while the projection itself runs through the codegen'd DotProduct.
+    * while the projection itself runs through the codegen'd hashing.dotProduct.
     * At production scale the family swaps for the fused one-pass
     * hyperplane_sig expression (s02's) without changing the shape.
     * Oversized buckets (boilerplate/degenerate embeddings) are capped at
@@ -1644,7 +1645,7 @@ object Dedup {
       substringFlagged(md5Grams(documents, k), Seq("h")), k)
 
   /** d19b: [[substringDedupOf]]'s production form — positional k-gram
-    * fingerprints by POLYNOMIAL ROLLING HASH (RollingKgramHashes, a
+    * fingerprints by POLYNOMIAL ROLLING HASH (hashing.rollingKgramHashes, a
     * codegen'd single-pass expression: each token hashed once, O(1) per
     * position) instead of md5 over every k-token window (O(k · n)
     * hashed bytes — ~20× the work at k=20). Two independent 64-bit
@@ -1838,7 +1839,7 @@ object Dedup {
     * Rebuild shape (guide §2.4, r19): the cleaned text comes from ONE
     * per-doc span aggregation + a left join back to the token frame +
     * a codegen'd merge walk
-    * ([[org.apache.spark.sql.graft.RemoveSpans]]). The composed form
+    * ([[org.apache.spark.sql.graft.hashing.removeSpans]]). The composed form
     * this replaces posexploded EVERY corpus token into a row, exploded
     * every covered position, anti-joined the two on (doc_id, pos) and
     * re-collected each doc with a position sort — two corpus-token-scale
@@ -2132,7 +2133,7 @@ object Dedup {
     * swap, VERDICT r15 #4): documents whose whitespace density clears
     * `wsThresh` segment by `width` WORDS with word-3-gram shingles —
     * bit-identical rows to the former
-    * [[org.apache.spark.sql.graft.SegmentShingleHashes]]-only frame, so
+    * [[org.apache.spark.sql.graft.hashing.segmentShingleHashes]]-only frame, so
     * every existing consumer (d18b, the p07 segment stage, the stored
     * segment index, the streaming segment gate) reproduces its previous
     * output exactly on segmented corpora (CjkSpec pins the equality) —
@@ -2508,7 +2509,7 @@ object Dedup {
        |ORDER BY src_lo, src_hi""".stripMargin
 
   /** Materialize a corpus dedup index for [[dedupDelta]] probes: the
-    * production-family (xxhash64 MinHashSig) band table bucketed by
+    * production-family (xxhash64 hashing.minhashSig) band table bucketed by
     * band_hash, plus the hashed-shingle store bucketed by doc_id — both
     * laid out so a delta probe joins them WITHOUT an exchange on the
     * stored side (the scan's bucket partitioning satisfies the join's
@@ -2526,7 +2527,7 @@ object Dedup {
 
   /** [[writeDedupIndex]] core over an already-hashed (doc_id, sh) frame
     * (caller persists it — it's read twice) — the segment index writes
-    * through here so the fused SegmentShingleHashes pass is hashed once
+    * through here so the fused hashing.segmentShingleHashes pass is hashed once
     * (VERDICT r14 #8: the former path re-tokenized keeper segments).
     */
   private[graft] def writeDedupIndexFromShingles(shingled: DataFrame,
@@ -2764,7 +2765,8 @@ object Dedup {
     *    shingle-verify path that catches EDITED boilerplate — a header
     *    with a date swapped — which digests miss.
     *
-    * The whole family runs off ONE fused [[SegmentShingleHashes]] pass
+    * The whole family runs off ONE fused
+    * [[org.apache.spark.sql.graft.hashing.segmentShingleHashes]] pass
     * (VERDICT r14 #8): digests and shingle hashes come out of the same
     * tokenization, so writer, grower and prober never re-tokenize a
     * segment and no segment TEXT is ever persisted or shuffled —
@@ -2888,8 +2890,9 @@ object Dedup {
     * The bucket family is the production fused `hyperplane_sig`
     * expression (xxhash64 ±1 planes — one tight loop per vector), not
     * d11's md5-literal family: a stored serving path has no oracle to
-    * stay portable for, and [[HyperplaneProbes]] shares the same family
-    * by construction, so delta-side probes address stored buckets
+    * stay portable for, and
+    * [[org.apache.spark.sql.graft.hashing.hyperplaneProbes]] shares the
+    * same family by construction, so delta-side probes address stored buckets
     * directly. Oversized buckets (degenerate/template embeddings) are
     * dropped AT WRITE TIME — they would tax every future probe with the
     * same skew (the [[writeDedupIndex]] rationale); eligibility is an

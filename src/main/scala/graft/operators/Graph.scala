@@ -255,7 +255,7 @@ object Graph {
     * array in the same pass — r12 spent two additional |pairs| exchanges
     * on a separate distinct() and a partial-set collect). Pairs expand
     * per CUSTOMER map-side from the ≤maxFan array via one codegen'd
-    * OrderedPairs pass, so the blow-up factor is each customer's
+    * hashing.orderedPairs pass, so the blow-up factor is each customer's
     * supplier-list size, NOT the supplier count, and is bounded IN CODE:
     * customers whose supplier list exceeds `maxFan` are excluded from
     * pair generation (a hub customer that trades with everyone carries
@@ -318,7 +318,7 @@ object Graph {
 
   /** Wedge counting over a [[customerArrays]] frame: the ≤maxFan arrays
     * expand to ordered pairs MAP-SIDE via one codegen'd expression
-    * ([[org.apache.spark.sql.graft.OrderedPairs]] — n(n-1)/2 structs, no
+    * ([[org.apache.spark.sql.graft.hashing.orderedPairs]] — n(n-1)/2 structs, no
     * double-explode generating n² rows and filtering half).
     *
     * The wedge stream is DELIBERATELY repartitioned on the pair key

@@ -24,7 +24,7 @@ import graft.functions.VectorFunctions._
   * is m bytes per row instead of dim floats, which is the point: at
   * 100 TB the ANN working set shrinks 32× and rides entirely through
   * scan + codegen'd arithmetic. The ADC sum compiles to a STATIC sum
-  * of m DotProduct expressions against `element_at` of literal
+  * of m hashing.dotProduct kernel calls against `element_at` of literal
   * codebook arrays — no interpreted HOF in the hot path (the round-1
   * SimHash lesson). [[knnPq]] runs the full IVF-PQ composition:
   * coarse cells prune the scan, residual codes carry within-cell

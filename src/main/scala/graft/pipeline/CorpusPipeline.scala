@@ -164,7 +164,7 @@ object CorpusPipeline {
     * embedding that keeps the semantic stage runnable (and bit-stable)
     * on a text-only corpus. ZERO shuffles: the whole vector is document-
     * local, so it's one codegen'd pass per row
-    * ([[org.apache.spark.sql.graft.HashedBowVector]], bit-identical to
+    * ([[org.apache.spark.sql.graft.hashing.hashedBowVector]], bit-identical to
     * the explode → double-groupBy form it replaces, whose token-stream
     * exchanges were the t11-class disease inside the semantic stage).
     */
@@ -400,7 +400,7 @@ object CorpusPipeline {
 
     // t22 + t20: Gopher heuristics AND the hashed-unigram classifier —
     // ONE map-side filter (r16): both gates are document-local column
-    // predicates (the t20 score went map-side with ClassifierTokenScore),
+    // predicates (the t20 score went map-side with hashing.classifierTokenScore),
     // so the former two-operator → two-semi-join shape paid two doc_id
     // exchanges for predicates the scan can evaluate in place. Same
     // predicates, same survivors, zero shuffles.

@@ -595,7 +595,7 @@ object DocumentPipeline {
   /** Core of [[importanceResample]] over any (doc_id, source, text) frame.
     *
     * Scale shape (r16): the per-token hashing is ONE codegen'd pass
-    * ([[org.apache.spark.sql.graft.Md5BucketCounts]] — a per-doc
+    * ([[org.apache.spark.sql.graft.hashing.md5BucketCounts]] — a per-doc
     * (bucket, n) histogram, exactly the md5-prefix family the oracle
     * replays), persisted once; both the LM count pass and the scoring
     * pass explode the bounded histogram (≤ min(tokens, buckets) rows
@@ -1161,7 +1161,7 @@ object DocumentPipeline {
 
   /** t09: within-document repetition ratio (Gopher-style quality rule):
     * 1 − |distinct bigrams| / |bigrams|. High ratio = boilerplate/spam.
-    * Map-only; bigram sets via the WordShingles expression.
+    * Map-only; bigram sets via the hashing.wordShingles kernel.
     */
   def repetition(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1354,7 +1354,7 @@ object DocumentPipeline {
     * size, hapax legomena, type-token ratio. Lexical-diversity quality
     * signals (a Gopher-style repetition complement). Per-doc stats are
     * document-LOCAL, so they're computed map-side in one codegen'd pass
-    * ([[org.apache.spark.sql.graft.TokenVocabStats]]) — ZERO shuffles
+    * ([[org.apache.spark.sql.graft.hashing.tokenVocabStats]]) — ZERO shuffles
     * (the r12 form exploded the token stream through a (doc, word)
     * groupBy and scaled 17.8× for 10× data; this is flat). The
     * isNotNull filter replicates the exploded form's semantics, where a
@@ -1396,7 +1396,7 @@ object DocumentPipeline {
   def entropy(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // Document-local like t11: H = log2(N) - Σ n·log2(n)/N from the
-    // map-side TokenVocabStats pass — no token-stream shuffle. The
+    // map-side hashing.tokenVocabStats pass — no token-stream shuffle. The
     // kernel's Σ n·log2(n) uses the same log(x)/log(2) arithmetic as
     // Spark's log2; summation-order ulp drift is absorbed by the
     // +1e-9 round guard (as it already was between Spark and DuckDB).
@@ -1453,7 +1453,7 @@ object DocumentPipeline {
   def lmPerplexity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // Every shuffle here carries per-doc WORD COUNTS (map-side
-    // WordCounts pass), not the raw token stream — the r12 form exploded
+    // hashing.wordCounts pass), not the raw token stream — the r12 form exploded
     // one row per token into both the LM build and the doc⋈LM join and
     // scaled 7.5× for 10× data. Aggregates weight by n, so values are
     // identical: avg over tokens ≡ Σ n·term / Σ n.
@@ -1849,7 +1849,7 @@ object DocumentPipeline {
     *
     * Scale shape (r16): ZERO shuffles — the score is document-local, so
     * one codegen'd pass ([[org.apache.spark.sql.graft
-    * .ClassifierTokenScore]]) emits each doc's (Σ token weights, token
+    * .hashing.classifierTokenScore]]) emits each doc's (Σ token weights, token
     * count) and the sigmoid is plain column math. Value-identical to
     * the former explode → groupBy(doc, token) → groupBy(doc) pipeline
     * (both Σ are LONG sums, so the division sees the exact operands the

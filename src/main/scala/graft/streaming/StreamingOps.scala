@@ -355,28 +355,34 @@ object StreamingOps {
                 count(when(size($"_sh") > 0, 1)).as("pending"))
               .localCheckpoint()
           }
-          val toWrite = counts.get.view.mapValues(_.asInstanceOf[Long]).toMap
-          if (toWrite("land") > 0)
-            landOnce(spark, storeDir, bid, checkpointDir, "gate land") {
-              graft.sources.IncrementalIngest.landBatch(kept.drop("_sh"),
-                storeDir, bid)
+          // the checkpoint's blocks are freed when the trigger ends, failed
+          // or not: the session-wide sweep (CacheHygiene.freeTransient)
+          // must not run beside a live stream, and the ContextCleaner frees
+          // them only when it collects the RDD
+          try {
+            val toWrite = counts.get.view.mapValues(_.asInstanceOf[Long]).toMap
+            if (toWrite("land") > 0)
+              landOnce(spark, storeDir, bid, checkpointDir, "gate land") {
+                graft.sources.IncrementalIngest.landBatch(kept.drop("_sh"),
+                  storeDir, bid)
+              }
+            if (toWrite("pending") > 0) step(spark, "gate pending") {
+              kept.filter(size($"_sh") > 0).select($"doc_id", $"_sh".as("sh"))
+                .coalesce(1)
+                .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+                .parquet(s"$pendingDir/$bid.parquet")
             }
-          if (toWrite("pending") > 0) step(spark, "gate pending") {
-            kept.filter(size($"_sh") > 0).select($"doc_id", $"_sh".as("sh"))
-              .coalesce(1)
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$pendingDir/$bid.parquet")
-          }
-          val toFold = pendingFiles(spark, pendingDir)
-          if (toFold.size >= growEvery) {
-            step(spark, "gate fold") {
-              graft.operators.Dedup.appendDedupIndexFromShingles(
-                readShingles(toFold), indexTable, 8, 16, 4)
-              deletePath(spark, pendingDir)
+            val toFold = pendingFiles(spark, pendingDir)
+            if (toFold.size >= growEvery) {
+              step(spark, "gate fold") {
+                graft.operators.Dedup.appendDedupIndexFromShingles(
+                  readShingles(toFold), indexTable, 8, 16, 4)
+                deletePath(spark, pendingDir)
+              }
+              maybeCompact(spark, indexTable, compactAbove)
             }
-            maybeCompact(spark, indexTable, compactAbove)
-          }
-          org.apache.spark.sql.graft.SparkInternals.releaseCheckpointBlocks(kept)
+          } finally org.apache.spark.sql.graft.SparkInternals
+            .releaseCheckpointBlocks(kept)
         }
       }
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
@@ -428,7 +434,7 @@ object StreamingOps {
         val bid = f"batch$batchId%06d"
         SelfClean.scope { keep =>
           val b = keep(batch.toDF())
-          // ONE fused SegmentShingleHashes pass per batch serves probe,
+          // ONE fused hashing.segmentShingleHashes pass per batch serves probe,
           // rollup AND index growth (VERDICT r14 #8): the meta frame the
           // probe persisted is filtered to kept docs for the append —
           // formerly the batch was segmented + tokenized three times.
@@ -457,30 +463,33 @@ object StreamingOps {
             rollup.filter($"kept_ratio" < segKeptRatioMin)
               .select($"doc_id").localCheckpoint()
           }
-          val flagged = keep(graft.sources.IncrementalIngest
-            .flagFresh(b.join(gated, Seq("doc_id"), "left_anti"), storeDir, bid))
-          if (!flagged.filter(col(graft.sources.IncrementalIngest.freshCol)).isEmpty)
-            landOnce(spark, storeDir, bid, checkpointDir, "segment gate land") {
-              graft.sources.IncrementalIngest.landBatch(flagged, storeDir, bid)
+          try {
+            val flagged = keep(graft.sources.IncrementalIngest
+              .flagFresh(b.join(gated, Seq("doc_id"), "left_anti"), storeDir, bid))
+            if (!flagged.filter(col(graft.sources.IncrementalIngest.freshCol)).isEmpty)
+              landOnce(spark, storeDir, bid, checkpointDir, "segment gate land") {
+                graft.sources.IncrementalIngest.landBatch(flagged, storeDir, bid)
+              }
+            // the kept docs' segments; a replay's are none (its docs match
+            // themselves), so it leaves the batch's pending file as it was
+            val keptMeta = meta.join(gated, Seq("doc_id"), "left_anti")
+            if (!keptMeta.isEmpty)
+              step(spark, "segment gate pending") {
+                keptMeta.coalesce(1)
+                  .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+                  .parquet(s"$pendingDir/$bid.parquet")
+              }
+            val toFold = pendingFiles(spark, pendingDir)
+            if (toFold.size >= growEvery) {
+              step(spark, "segment gate fold") {
+                graft.operators.Dedup.appendSegmentIndexFromMeta(
+                  spark.read.schema(meta.schema).parquet(toFold: _*), indexTable)
+                deletePath(spark, pendingDir)
+              }
+              maybeCompact(spark, indexTable, compactAbove)
             }
-          // the kept docs' segments; a replay's are none (its docs match
-          // themselves), so it leaves the batch's pending file as it was
-          val keptMeta = meta.join(gated, Seq("doc_id"), "left_anti")
-          if (!keptMeta.isEmpty)
-            step(spark, "segment gate pending") {
-              keptMeta.coalesce(1)
-                .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$pendingDir/$bid.parquet")
-            }
-          val toFold = pendingFiles(spark, pendingDir)
-          if (toFold.size >= growEvery) {
-            step(spark, "segment gate fold") {
-              graft.operators.Dedup.appendSegmentIndexFromMeta(
-                spark.read.schema(meta.schema).parquet(toFold: _*), indexTable)
-              deletePath(spark, pendingDir)
-            }
-            maybeCompact(spark, indexTable, compactAbove)
-          }
+          } finally org.apache.spark.sql.graft.SparkInternals
+            .releaseCheckpointBlocks(gated)
         }
       }
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
@@ -521,26 +530,29 @@ object StreamingOps {
           val rewritten = graft.operators.Dedup
             .substringRewriteDelta(spark, indexTable,
               b.select($"doc_id", $"text"), k)
-          val cleaned = keep(b.drop("text")
-            .join(rewritten.select($"doc_id", $"cleaned".as("text")),
-              Seq("doc_id")))
-          if (!cleaned.isEmpty) {
-            landOnce(spark, storeDir, bid, checkpointDir, "substring gate land") {
-              cleaned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$storeDir/$bid.parquet")
+          try {
+            val cleaned = keep(b.drop("text")
+              .join(rewritten.select($"doc_id", $"cleaned".as("text")),
+                Seq("doc_id")))
+            if (!cleaned.isEmpty) {
+              landOnce(spark, storeDir, bid, checkpointDir, "substring gate land") {
+                cleaned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+                  .parquet(s"$storeDir/$bid.parquet")
+              }
+              val marker = s"${storeDir}_idx_marked/$bid"
+              if (!pathExists(spark, marker)) {
+                // grow from the ORIGINAL batch text: the keeper copy of a
+                // novel run survives the rewrite and must be indexed; using
+                // b (not cleaned) also keeps a replay's grams identical
+                graft.operators.Dedup.writeSubstringIndex(
+                  b.select($"doc_id", $"text"), indexTable, k,
+                  mode = org.apache.spark.sql.SaveMode.Append)
+                touchMarker(spark, marker)
+                maybeCompact(spark, indexTable, compactAbove)
+              }
             }
-            val marker = s"${storeDir}_idx_marked/$bid"
-            if (!pathExists(spark, marker)) {
-              // grow from the ORIGINAL batch text: the keeper copy of a
-              // novel run survives the rewrite and must be indexed; using
-              // b (not cleaned) also keeps a replay's grams identical
-              graft.operators.Dedup.writeSubstringIndex(
-                b.select($"doc_id", $"text"), indexTable, k,
-                mode = org.apache.spark.sql.SaveMode.Append)
-              touchMarker(spark, marker)
-              maybeCompact(spark, indexTable, compactAbove)
-            }
-          }
+          } finally org.apache.spark.sql.graft.SparkInternals
+            .releaseCheckpointBlocks(rewritten)
         }
       }
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()

@@ -1,21 +1,28 @@
 package org.apache.spark.sql.graft
 
+import java.util.Locale
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, GenericInternalRow, QuaternaryExpression, TernaryExpression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpectsInputTypes, GenericInternalRow, Literal, RuntimeReplaceable, TernaryExpression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for graft's hot paths (SURVEY.md §7).
+/** Custom kernels for graft's hot paths (SURVEY.md §3, §7).
   *
   * The pure-`functions._` versions of these operators (nested
   * `transform`/`aggregate` lambdas) are semantically right but run in the
   * interpreted higher-order-function path — at sf0.1 SimHash cost 385 s.
-  * These expressions do the same math in tight JVM loops; DotProduct
-  * additionally participates in whole-stage codegen via doGenCode.
+  * The kernels do the same math in tight JVM loops. Each is a static
+  * method of [[hashing]], reached from a column through one expression
+  * class, [[KernelCall]]; generated code calls the method directly, so the
+  * surrounding operators stay inside whole-stage codegen. A hand-written
+  * `Expression` remains only where a kernel needs caller-built state (a
+  * profile table, centroids, codebooks, compiled patterns) or aggregates.
   */
 object hashing {
   /** splitmix64 finalizer — cheap per-seed re-mix so each MinHash function
@@ -31,12 +38,33 @@ object hashing {
   @inline def hashUtf8(s: UTF8String, seed: Long): Long =
     XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), seed)
 
-  // Static entry points for generated code (doGenCode emits calls to these
-  // instead of falling back to interpreted evaluation — the loop itself is
-  // already a tight JVM loop, so a static call keeps the surrounding
-  // operators inside whole-stage codegen at zero extra cost).
+  // The kernels below are the static methods KernelCall invokes: every
+  // argument is non-null (a null input yields null before the call), and
+  // the result's Catalyst type is the one its GraftFunctions entry declares.
 
-  /** Keep the first token of every adjacent run of equal tokens. */
+  /** Sequential dot product over the common prefix of two double arrays —
+    * the same left-to-right summation as the DuckDB oracle's `list_sum`,
+    * so results are bit-reproducible.
+    */
+  def dotProduct(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a.getDouble(i) * b.getDouble(i); i += 1 }
+    acc
+  }
+
+  /** Keep the first token of every adjacent run of equal tokens
+    * (boilerplate collapse, t16) in one walk. The indexed-lambda HOF form
+    * (`filter(toks, (x, i) -> x != element_at(toks, i))`) re-evaluates
+    * `toks` per element — O(tokens²) per document (t16: 3.7 s → 0.3 s).
+    *
+    * Null contract (differs from that form, whose null comparison yields
+    * NULL and so DROPS the element after a null): null elements are
+    * values — a run of adjacent nulls collapses to one null, and a
+    * non-null token following a null is KEPT. t16 feeds `split()`
+    * output, which never contains nulls, so the two forms agree there.
+    */
   def collapseAdjacentRepeats(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return new GenericArrayData(Array.empty[Any])
@@ -53,6 +81,10 @@ object hashing {
     new GenericArrayData(out.toArray)
   }
 
+  /** MinHash signature: k minima. Each shingle is xxhash64'd once; the k
+    * hash functions are splitmix64 re-mixes of that base hash (the
+    * standard one-hash MinHash construction).
+    */
   def minhashSig(arr: ArrayData, k: Int): ArrayData = {
     val n = arr.numElements()
     val mins = Array.fill(k)(Long.MaxValue)
@@ -70,6 +102,9 @@ object hashing {
     new GenericArrayData(mins)
   }
 
+  /** 64-bit SimHash over a token array: one xxhash64 per token, 64 bit
+    * counters, sign → fingerprint.
+    */
   def simhash64(arr: ArrayData): Long = {
     val n = arr.numElements()
     val counts = new Array[Int](64)
@@ -89,6 +124,10 @@ object hashing {
     fp
   }
 
+  /** Random-hyperplane LSH signature: bit p = sign of <v, h_p>, where
+    * h_p's components are ±1 derived from xxhash64(p << 32 | d, 7) —
+    * deterministic, no stored model.
+    */
   def hyperplaneSig(v: ArrayData, planes: Int): Long = {
     val dim = v.numElements()
     var sig = 0L
@@ -113,7 +152,8 @@ object hashing {
     * order of |projection| — the planes the vector sits closest to, i.e.
     * the boundaries a near-neighbor most plausibly straddles. Same
     * xxhash64(p<<32|d, 7) ±1 family as hyperplaneSig, so probe sigs join
-    * directly against home sigs.
+    * directly against home sigs, and only the probing side of a candidate
+    * join pays the nprobe× row expansion.
     */
   def hyperplaneProbes(v: ArrayData, planes: Int, nprobe: Int): ArrayData = {
     val dim = v.numElements()
@@ -169,7 +209,8 @@ object hashing {
     * composition `array_distinct(transform(sequence(0, greatest(n-w, 0)),
     * i -> array_min(slice(hashes, i+1, w))))` — including the n<w case
     * (one window over the whole array) — but run O(n·w) in a tight loop
-    * instead of interpreted lambdas with per-window array copies.
+    * instead of interpreted lambdas with per-window array copies (t10:
+    * 8.2 s → sub-second at sf0.1).
     */
   def winnowFingerprints(arr: ArrayData, window: Int): ArrayData = {
     val n = arr.numElements()
@@ -363,22 +404,14 @@ object hashing {
     new GenericArrayData(mins)
   }
 
-  /** MinHash LSH band hashes in ONE pass: the k = bands×rows signature
-    * minima (identical loop to [[minhashSigFromHashes]]) folded straight
-    * into per-band XXH64 digests — bit-identical to
-    * `xxhash64(slice(minhash_sig_from_hashes(sh), b·rows+1, rows))`
-    * (Spark's XxHash64 over array<long> folds elements with the running
-    * hash as seed, init 42), pinned in DedupSpec. Fusing kills the
-    * 64-long signature column the banding exchange input used to
-    * materialize per row plus 16 per-band slice allocations + generic
-    * array hashing — the d18 probe named this map side as 80%+ of the
-    * segment near-dup stage at sf10 (3M keeper segments × 16 bands).
-    */
   /** Count of Java-regex `\s` chars ([ \t\n\x0B\f\r] — the default,
     * non-UNICODE_CHARACTER_CLASS definition) in one UTF-8 byte scan.
     * Exact on any input: these are ASCII values, and ASCII byte values
     * never occur inside a multi-byte UTF-8 sequence (continuation bytes
-    * are ≥ 0x80), so counting bytes counts code points.
+    * are ≥ 0x80), so counting bytes counts code points. The map side of
+    * every whitespace-density route (d02c, t26, adaptive token budgets):
+    * value-identical to `length(text) - length(regexp_replace(text, "\\s",
+    * ""))` without the regex engine or the per-row document copy.
     */
   def whitespaceCount(text: UTF8String): Int = {
     val n = text.numBytes()
@@ -507,6 +540,17 @@ object hashing {
     c
   }
 
+  /** MinHash LSH band hashes in ONE pass: the k = bands×rows signature
+    * minima (identical loop to [[minhashSigFromHashes]]) folded straight
+    * into per-band XXH64 digests — bit-identical to
+    * `xxhash64(slice(minhash_sig_from_hashes(sh), b·rows+1, rows))`
+    * (Spark's XxHash64 over array<long> folds elements with the running
+    * hash as seed, init 42), pinned in DedupSpec. Fusing kills the
+    * 64-long signature column the banding exchange input used to
+    * materialize per row plus 16 per-band slice allocations + generic
+    * array hashing — the d18 probe named this map side as 80%+ of the
+    * segment near-dup stage at sf10 (3M keeper segments × 16 bands).
+    */
   def minhashBandHashes(arr: ArrayData, bands: Int, rows: Int): ArrayData = {
     val k = bands * rows
     val mins = new Array[Long](k)
@@ -559,6 +603,12 @@ object hashing {
     acc
   }
 
+  /** Distinct word n-gram shingles of a space-separated text in one pass
+    * (split → slide → concat → dedup), first-occurrence order. The
+    * composed `transform(sequence(...), concat_ws(...))` +
+    * `array_distinct` HOF form is interpreted and dominated MinHash
+    * wall-clock when recomputed on both sides of the candidate join.
+    */
   def wordShingles(text: UTF8String, n: Int): ArrayData = {
     val words = text.split(space, -1)
     val m = words.length - n + 1
@@ -1080,337 +1130,36 @@ object hashing {
   }
 }
 
-/** Sequential dot product of two array<double> columns. Same summation
-  * order as the DuckDB oracle's list_sum — bit-reproducible.
+/** The one expression class for graft's pure kernels: the call
+  * `hashing.<fn>(children…, params…)`, replaced at optimization by Spark's
+  * own `StaticInvoke`, so generated code calls the static method and
+  * interpreted evaluation invokes the same method reflectively. A null
+  * child yields null without calling the kernel; the kernel itself never
+  * returns null.
+  *
+  * The wrapper does what a bare `StaticInvoke` does not:
+  *   - it checks `inputTypes` at analysis and fails a wrong-typed
+  *     argument (`StaticInvoke` would implicit-cast, e.g. array<int> to
+  *     array<string>);
+  *   - the unaliased column name stays `<fn lowercased>(children)`, not
+  *     `static_invoke(…)`;
+  *   - the literal `params` stay out of `children`, so they neither rename
+  *     the column nor take part in type checks.
+  * Each [[GraftFunctions]] entry names the kernel, its result type, its
+  * input types, its column arguments and its literal parameters.
   */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
-    acc
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+case class KernelCall(fn: String, override val dataType: DataType,
+    override val inputTypes: Seq[AbstractDataType],
+    override val children: Seq[Expression], params: Seq[Any])
+    extends RuntimeReplaceable with ExpectsInputTypes {
+  override def prettyName: String = fn.toLowerCase(Locale.ROOT)
+  override def stringArgs: Iterator[Any] = (children ++ params).iterator
+  override lazy val replacement: Expression = StaticInvoke(hashing.getClass,
+    dataType, fn, children ++ params.map(Literal(_)), propagateNull = true,
+    returnNullable = false)
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** MinHash signature: array<long> of k minima. Each shingle is xxhash64'd
-  * once; the k hash functions are splitmix64 re-mixes of that base hash
-  * (standard one-hash MinHash construction).
-  */
-case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.minhashSig(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.minhashSig($a, $k);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** 64-bit SimHash over a token array: one xxhash64 per token, 64 bit
-  * counters, sign → fingerprint.
-  */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    java.lang.Long.valueOf(hashing.simhash64(input.asInstanceOf[ArrayData]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.simhash64($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Random-hyperplane LSH signature over array<double>: bit p = sign of
-  * <v, h_p> where h_p's components are ±1 derived from xxhash64(p, d) —
-  * deterministic, no stored model.
-  */
-case class HyperplaneSig(child: Expression, planes: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    java.lang.Long.valueOf(
-      hashing.hyperplaneSig(input.asInstanceOf[ArrayData], planes))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.hyperplaneSig($a, $planes);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Multi-probe hyperplane LSH probe set over array<double>: home signature
-  * plus nprobe-1 single-bit perturbations of the lowest-|margin| planes
-  * (see hashing.hyperplaneProbes). Probing is one-sided: join probe sigs
-  * against home sigs, so only one side of a candidate join pays the
-  * nprobe× row expansion.
-  */
-case class HyperplaneProbes(child: Expression, planes: Int, nprobe: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(planes >= 1 && planes <= 64 && nprobe >= 1)
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.hyperplaneProbes(input.asInstanceOf[ArrayData], planes, nprobe)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.hyperplaneProbes($a, $planes, $nprobe);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Distinct word n-gram shingles of a space-separated text column in one
-  * pass (split → slide → concat → dedup in a tight loop). The composed
-  * `transform(sequence(...), concat_ws(...))` + `array_distinct` HOF form
-  * is interpreted and dominated MinHash wall-clock when recomputed on both
-  * sides of the candidate join.
-  */
-case class WordShingles(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1)
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.wordShingles(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.wordShingles($a, $n);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Remove sorted disjoint token spans [s, e) from a token array and
-  * rejoin with single spaces (see hashing.removeSpans) — the fused tail
-  * of the substring-dedup family. Replaces a posexplode of EVERY corpus
-  * token, a (doc_id, pos)-keyed anti-join against the exploded covered
-  * positions, and a position-sorted collect_list/array_join
-  * re-collection — two corpus-token-scale exchanges plus a per-doc
-  * struct sort — with one per-row merge walk. Callers coalesce a
-  * missing spans side to the typed empty array (no spans → identity
-  * rejoin).
-  */
-case class RemoveSpans(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType), ArrayType(StructType(Seq(
-      StructField("s", IntegerType), StructField("e", IntegerType)))))
-  override def dataType: DataType = StringType
-  override def nullSafeEval(t: Any, sp: Any): Any =
-    hashing.removeSpans(t.asInstanceOf[ArrayData], sp.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, sp) =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.removeSpans($t, $sp);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** |a ∩ b| of two sorted array<long> columns (merge walk, codegen'd). */
-case class SortedIntersectionSize(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    hashing.sortedIntersectionSize(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.sortedIntersectionSize($a, $b);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Sparse dot of two (terms, weights) vectors, both term-sorted ascending
-  * (merge walk, codegen'd — see hashing.sortedWeightedDot).
-  */
-case class SortedWeightedDot(first: Expression, second: Expression,
-    third: Expression, fourth: Expression)
-    extends QuaternaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType), ArrayType(DoubleType),
-      ArrayType(StringType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(ta: Any, wa: Any, tb: Any, wb: Any): Any =
-    hashing.sortedWeightedDot(ta.asInstanceOf[ArrayData],
-      wa.asInstanceOf[ArrayData], tb.asInstanceOf[ArrayData],
-      wb.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (ta, wa, tb, wb) =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.sortedWeightedDot($ta, $wa, $tb, $wb);")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression, q: Expression): Expression =
-    copy(first = f, second = s, third = t, fourth = q)
-}
-
-/** Distinct hashed word n-gram shingles (see hashing.wordShingleHashes). */
-case class WordShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1)
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.wordShingleHashes(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.wordShingleHashes($a, $n);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Distinct char n-gram shingle hashes (see hashing.charShingleHashes) —
-  * the whitespace-free twin of WordShingleHashes.
-  */
-case class CharShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1)
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.charShingleHashes(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.charShingleHashes($a, $n);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Positional rolling k-gram fingerprints (see
-  * hashing.rollingKgramHashes) — element i fingerprints tokens [i, i+k).
-  */
-case class RollingKgramHashes(child: Expression, k: Int, seed: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(k >= 1)
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.rollingKgramHashes(input.asInstanceOf[UTF8String], k, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.rollingKgramHashes($a, $k, ${seed}L);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Count of Java-regex `\s` characters (see hashing.whitespaceCount) —
-  * the map side of every whitespace-density route (d02c, t26, adaptive
-  * token budgets). Value-identical to
-  * `length(text) - length(regexp_replace(text, "\\s", ""))`, without the
-  * regex engine or the full-document copy that form allocates per row
-  * (measured 1.4–3 s of pure density cost over 500k sf10 docs).
-  */
-case class WhitespaceCount(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    hashing.whitespaceCount(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.whitespaceCount($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Whitespace-token count (see hashing.wsTokenCount) — value-identical
-  * to `size(split(text, "\\s+"))` without materializing the word-string
-  * array it threw away. The count sits in every quality/stats operator
-  * (t02/t03/t22, the p01/p07 gate, the stopword-ratio langid family).
-  */
-case class WsTokenCount(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    hashing.wsTokenCount(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.wsTokenCount($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Fused CJK script profile (see hashing.cjkScriptCounts) — array<int>
-  * of (Han, kana, Hangul) code-point counts in one decode pass, replacing
-  * three per-script `length(regexp_replace(text, "[^\p{IsXxx}]", ""))`
-  * full-copy columns in the t26 map side (CjkSpec pins equality).
-  */
-case class CjkScriptCounts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.cjkScriptCounts(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.cjkScriptCounts($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** GPT-2-style pre-tokenizer match count (see hashing.bpeishTokenCount)
-  * — value-identical to `size(regexp_extract_all(text,
-  * "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"))` without running the regex
-  * engine or allocating every matched token string per row.
-  */
-case class BpeishTokenCount(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    hashing.bpeishTokenCount(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.bpeishTokenCount($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** One-pass fused MinHash band hashes (see hashing.minhashBandHashes) —
-  * bit-identical to xxhash64-over-signature-slices, without ever
-  * materializing the signature column.
-  */
-case class MinHashBandHashes(child: Expression, bands: Int, rows: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(bands >= 1 && rows >= 1)
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.minhashBandHashes(input.asInstanceOf[ArrayData], bands, rows)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.minhashBandHashes($a, $bands, $rows);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** MinHash signature from pre-hashed shingles (array<long>). */
-case class MinHashSigFromHashes(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.minhashSigFromHashes(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.minhashSigFromHashes($a, $k);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(children = newChildren)
 }
 
 /** One-pass multi-profile token counting: output[i] = number of tokens in
@@ -1772,141 +1521,6 @@ case class PqAdcCosine(qv: Expression, clusterId: Expression,
       t: Expression): Expression = copy(qv = f, clusterId = s, code = t)
 }
 
-/** Keep the first token of each adjacent run of equal tokens (boilerplate
-  * collapse, t16). One tight walk per row. The indexed-lambda HOF form
-  * (`filter(toks, (x, i) -> x != element_at(toks, i))`) re-evaluates the
-  * `toks` child per element inside the lambda — O(tokens²) per document,
-  * which made t16 the second-slowest query in the suite (3.7 s → 0.3 s).
-  *
-  * Null contract (differs from the indexed-lambda form, whose null
-  * comparison yields NULL and so DROPS the element after a null): null
-  * elements are values — a run of adjacent nulls collapses to one null,
-  * and a non-null token following a null is KEPT. t16 feeds `split()`
-  * output, which never contains nulls, so the two forms agree there.
-  */
-case class CollapseAdjacentRepeats(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullSafeEval(input: Any): Any =
-    hashing.collapseAdjacentRepeats(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.collapseAdjacentRepeats($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Winnowing fingerprint set of a shingle array (see hashing
-  * .winnowFingerprints). Replaces a nested HOF pipeline that dominated
-  * t10's wall-clock (8.2 s → sub-second at sf0.1).
-  */
-case class WinnowFingerprints(child: Expression, window: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(window >= 1)
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.winnowFingerprints(input.asInstanceOf[ArrayData], window)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.winnowFingerprints($a, $window);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Per-document vocabulary statistics (see hashing.tokenVocabStats) —
-  * struct<n_tokens, vocab_size, n_hapax, sum_n_log2n>, computed map-side.
-  * Replaces t11/t12's exploded groupBy((doc, word)) pipeline, whose
-  * full-token-stream shuffle scaled superlinearly (17.8× for 10× data at
-  * r12) for what is a document-local computation.
-  */
-case class TokenVocabStats(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("vocab_size", LongType, nullable = false),
-    StructField("n_hapax", LongType, nullable = false),
-    StructField("sum_n_log2n", DoubleType, nullable = false)))
-  override def nullSafeEval(input: Any): Any =
-    hashing.tokenVocabStats(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.tokenVocabStats($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Per-document word counts (see hashing.wordCounts) —
-  * array<struct<w, n>> in first-occurrence order.
-  */
-case class WordCounts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("w", StringType, nullable = false),
-    StructField("n", LongType, nullable = false))), containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.wordCounts(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.wordCounts($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Per-document adjacent-bigram counts (see hashing.bigramCounts) —
-  * array<struct<w1, w2, n>> in first-occurrence order; empty for docs
-  * with fewer than two tokens.
-  */
-case class BigramCounts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("w1", StringType, nullable = false),
-    StructField("w2", StringType, nullable = false),
-    StructField("n", LongType, nullable = false))), containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.bigramCounts(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.bigramCounts($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Hashed bag-of-words vector of a document (see hashing.hashedBowVector)
-  * — array<double> of length `dim`, computed map-side.
-  */
-case class HashedBowVector(child: Expression, dim: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(dim >= 1)
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.hashedBowVector(input.asInstanceOf[UTF8String], dim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.hashedBowVector($a, $dim);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Min-label connected components of a bounded edge list (see
-  * hashing.componentLabels) — array<struct<vec_id, cluster_id>>.
-  */
-case class ComponentLabels(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StructType(Seq(
-      StructField("a", LongType, nullable = false),
-      StructField("b", LongType, nullable = false)))))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("vec_id", LongType, nullable = false),
-    StructField("cluster_id", LongType, nullable = false))), containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.componentLabels(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.componentLabels($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** Mutable buffer for [[CappedCollectLong]]: exact count + exact min +
   * the first `cap` values seen (complete whenever count <= cap).
   */
@@ -2005,186 +1619,89 @@ case class CappedCollectLong(
     copy(child = newChildren.head)
 }
 
-/** Ordered element pairs of an ascending long array (see
-  * hashing.orderedPairs) — array<struct<a, b>> with a < b.
-  */
-case class OrderedPairs(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("a", LongType, nullable = false),
-    StructField("b", LongType, nullable = false))), containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.orderedPairs(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.orderedPairs($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** One-pass int8 quantization of a double vector (see hashing.quantizeVec)
-  * — struct<q: binary, scale, norm, l1>, the per-vector scalars a
-  * quantized-dot error bound needs.
-  */
-case class QuantizeVec(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = StructType(Seq(
-    StructField("q", BinaryType, nullable = false),
-    StructField("scale", DoubleType, nullable = false),
-    StructField("norm", DoubleType, nullable = false),
-    StructField("l1", DoubleType, nullable = false)))
-  override def nullSafeEval(input: Any): Any =
-    hashing.quantizeVec(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.quantizeVec($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Exact integer dot product of two int8-as-binary vectors (see
-  * hashing.int8Dot).
-  */
-case class Int8Dot(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    hashing.int8Dot(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.int8Dot($a, $b);")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** Per-segment digest + shingle hashes in one tokenization pass (see
-  * hashing.segmentShingleHashes) — array<struct<h, sh>>, element index =
-  * segment position.
-  */
-case class SegmentShingleHashes(child: Expression, width: Int, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("h", LongType, nullable = false),
-    StructField("h2", LongType, nullable = false),
-    StructField("sh", ArrayType(LongType, containsNull = false),
-      nullable = false))), containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.segmentShingleHashes(input.asInstanceOf[UTF8String], width, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.segmentShingleHashes($a, $width, $n);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Per-doc md5-bucket histogram (see hashing.md5BucketCounts) —
-  * array<struct<bkt, n>> ascending by bucket, one map-side pass.
-  */
-case class Md5BucketCounts(child: Expression, buckets: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(buckets >= 1)
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("bkt", IntegerType, nullable = false),
-    StructField("n", LongType, nullable = false))), containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.md5BucketCounts(input.asInstanceOf[UTF8String], buckets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.md5BucketCounts($a, $buckets);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Space-token count (see hashing.spaceTokenCount) — value-identical
-  * to `size(split(text, ' '))` without the token-string array.
-  */
-case class SpaceTokenCount(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    hashing.spaceTokenCount(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.spaceTokenCount($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** t20 classifier sums (see hashing.classifierTokenScore) —
-  * struct<s, n> per document, one map-side pass.
-  */
-case class ClassifierTokenScore(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("s", LongType, nullable = false),
-    StructField("n", LongType, nullable = false)))
-  override def nullSafeEval(input: Any): Any =
-    hashing.classifierTokenScore(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing.classifierTokenScore($a);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Script-adaptive per-segment digest + shingle hashes (see
-  * hashing.segmentShingleHashesAdaptive) — SegmentShingleHashes where
-  * whitespace segments the document, code-point segments + char k-gram
-  * shingles where it doesn't. Same array<struct<h, h2, sh>> shape.
-  */
-case class SegmentShingleHashesAdaptive(child: Expression, width: Int,
-    n: Int, k: Int, wsThresh: Double)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("h", LongType, nullable = false),
-    StructField("h2", LongType, nullable = false),
-    StructField("sh", ArrayType(LongType, containsNull = false),
-      nullable = false))), containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    hashing.segmentShingleHashesAdaptive(
-      input.asInstanceOf[UTF8String], width, n, k, wsThresh)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.hashing" +
-        s".segmentShingleHashesAdaptive($a, $width, $n, $k, $wsThresh);")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** Column-API wrappers (classic-API bridge: Column ↔ catalyst Expression). */
 object GraftFunctions {
   private def e(c: Column) = ExpressionUtils.expression(c)
   private def col(x: Expression): Column = ExpressionUtils.column(x)
-  def dot_product(a: Column, b: Column): Column = col(DotProduct(e(a), e(b)))
-  def minhash_sig(shingles: Column, k: Int = 64): Column = col(MinHashSig(e(shingles), k))
-  def simhash64(tokens: Column): Column = col(SimHash64(e(tokens)))
-  def hyperplane_sig(v: Column, planes: Int): Column = col(HyperplaneSig(e(v), planes))
-  def hyperplane_probes(v: Column, planes: Int, nprobe: Int): Column =
-    col(HyperplaneProbes(e(v), planes, nprobe))
-  def word_shingles(text: Column, n: Int): Column = col(WordShingles(e(text), n))
-  def winnow_fingerprints(shingles: Column, window: Int): Column =
-    col(WinnowFingerprints(e(shingles), window))
-  def word_shingle_hashes(text: Column, n: Int): Column =
-    col(WordShingleHashes(e(text), n))
-  def char_shingle_hashes(text: Column, n: Int): Column =
-    col(CharShingleHashes(e(text), n))
-  def rolling_kgram_hashes(text: Column, k: Int, seed: Long): Column =
-    col(RollingKgramHashes(e(text), k, seed))
+
+  /** One kernel entry: `hashing.<fn>(args…, params…)` typed `dataType`,
+    * with `inputTypes` checked against `args` (see [[KernelCall]]).
+    */
+  private def kernel(fn: String, dataType: DataType,
+      inputTypes: Seq[AbstractDataType], args: Seq[Column],
+      params: Any*): Column =
+    col(KernelCall(fn, dataType, inputTypes, args.map(e), params))
+
+  private val Strings = ArrayType(StringType)
+  private val Doubles = ArrayType(DoubleType)
+  private val Longs = ArrayType(LongType)
+  private def nonNull(t: DataType): ArrayType = ArrayType(t, containsNull = false)
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+  private val Segments = nonNull(struct(
+    "h" -> LongType, "h2" -> LongType, "sh" -> nonNull(LongType)))
+
+  def dot_product(a: Column, b: Column): Column =
+    kernel("dotProduct", DoubleType, Seq(Doubles, Doubles), Seq(a, b))
+  def minhash_sig(shingles: Column, k: Int = 64): Column =
+    kernel("minhashSig", nonNull(LongType), Seq(Strings), Seq(shingles), k)
+  def simhash64(tokens: Column): Column =
+    kernel("simhash64", LongType, Seq(Strings), Seq(tokens))
+  def hyperplane_sig(v: Column, planes: Int): Column =
+    kernel("hyperplaneSig", LongType, Seq(Doubles), Seq(v), planes)
+  def hyperplane_probes(v: Column, planes: Int, nprobe: Int): Column = {
+    require(planes >= 1 && planes <= 64 && nprobe >= 1)
+    kernel("hyperplaneProbes", nonNull(LongType), Seq(Doubles), Seq(v),
+      planes, nprobe)
+  }
+  def word_shingles(text: Column, n: Int): Column = {
+    require(n >= 1)
+    kernel("wordShingles", nonNull(StringType), Seq(StringType), Seq(text), n)
+  }
+  def winnow_fingerprints(shingles: Column, window: Int): Column = {
+    require(window >= 1)
+    kernel("winnowFingerprints", nonNull(LongType), Seq(Strings),
+      Seq(shingles), window)
+  }
+  def word_shingle_hashes(text: Column, n: Int): Column = {
+    require(n >= 1)
+    kernel("wordShingleHashes", nonNull(LongType), Seq(StringType),
+      Seq(text), n)
+  }
+  def char_shingle_hashes(text: Column, n: Int): Column = {
+    require(n >= 1)
+    kernel("charShingleHashes", nonNull(LongType), Seq(StringType),
+      Seq(text), n)
+  }
+  def rolling_kgram_hashes(text: Column, k: Int, seed: Long): Column = {
+    require(k >= 1)
+    kernel("rollingKgramHashes", nonNull(LongType), Seq(StringType),
+      Seq(text), k, seed)
+  }
   def minhash_sig_from_hashes(hashes: Column, k: Int = 64): Column =
-    col(MinHashSigFromHashes(e(hashes), k))
-  def minhash_band_hashes(hashes: Column, bands: Int, rows: Int): Column =
-    col(MinHashBandHashes(e(hashes), bands, rows))
-  def whitespace_count(text: Column): Column = col(WhitespaceCount(e(text)))
-  def ws_token_count(text: Column): Column = col(WsTokenCount(e(text)))
-  def cjk_script_counts(text: Column): Column = col(CjkScriptCounts(e(text)))
-  def bpeish_token_count(text: Column): Column = col(BpeishTokenCount(e(text)))
+    kernel("minhashSigFromHashes", nonNull(LongType), Seq(Longs), Seq(hashes), k)
+  def minhash_band_hashes(hashes: Column, bands: Int, rows: Int): Column = {
+    require(bands >= 1 && rows >= 1)
+    kernel("minhashBandHashes", nonNull(LongType), Seq(Longs), Seq(hashes),
+      bands, rows)
+  }
+  def whitespace_count(text: Column): Column =
+    kernel("whitespaceCount", IntegerType, Seq(StringType), Seq(text))
+  def ws_token_count(text: Column): Column =
+    kernel("wsTokenCount", IntegerType, Seq(StringType), Seq(text))
+  def cjk_script_counts(text: Column): Column =
+    kernel("cjkScriptCounts", nonNull(IntegerType), Seq(StringType), Seq(text))
+  def bpeish_token_count(text: Column): Column =
+    kernel("bpeishTokenCount", IntegerType, Seq(StringType), Seq(text))
   def sorted_intersection_size(a: Column, b: Column): Column =
-    col(SortedIntersectionSize(e(a), e(b)))
+    kernel("sortedIntersectionSize", IntegerType, Seq(Longs, Longs), Seq(a, b))
   def remove_spans(toks: Column, spans: Column): Column =
-    col(RemoveSpans(e(toks), e(spans)))
+    kernel("removeSpans", StringType, Seq(Strings, ArrayType(StructType(Seq(
+      StructField("s", IntegerType), StructField("e", IntegerType))))),
+      Seq(toks, spans))
   def sorted_weighted_dot(ta: Column, wa: Column, tb: Column, wb: Column): Column =
-    col(SortedWeightedDot(e(ta), e(wa), e(tb), e(wb)))
+    kernel("sortedWeightedDot", DoubleType,
+      Seq(Strings, Doubles, Strings, Doubles), Seq(ta, wa, tb, wb))
   def token_profile_counts(text: Column, profiles: Seq[Seq[String]]): Column =
     col(TokenProfileCounts(e(text), profiles))
   def nearest_centroid(v: Column, centroids: Seq[(Int, Seq[Double])]): Column =
@@ -2198,33 +1715,58 @@ object GraftFunctions {
       repls: Seq[String]): Column =
     col(RedactChain(e(text), patterns, repls))
   def collapse_adjacent_repeats(tokens: Column): Column =
-    col(CollapseAdjacentRepeats(e(tokens)))
-  def token_vocab_stats(text: Column): Column = col(TokenVocabStats(e(text)))
-  def quantize_vec(v: Column): Column = col(QuantizeVec(e(v)))
-  def int8_dot(a: Column, b: Column): Column = col(Int8Dot(e(a), e(b)))
+    kernel("collapseAdjacentRepeats", ArrayType(StringType, containsNull = true),
+      Seq(Strings), Seq(tokens))
+  def token_vocab_stats(text: Column): Column =
+    kernel("tokenVocabStats", struct("n_tokens" -> LongType,
+      "vocab_size" -> LongType, "n_hapax" -> LongType,
+      "sum_n_log2n" -> DoubleType), Seq(StringType), Seq(text))
+  def quantize_vec(v: Column): Column =
+    kernel("quantizeVec", struct("q" -> BinaryType, "scale" -> DoubleType,
+      "norm" -> DoubleType, "l1" -> DoubleType), Seq(Doubles), Seq(v))
+  def int8_dot(a: Column, b: Column): Column =
+    kernel("int8Dot", LongType, Seq(BinaryType, BinaryType), Seq(a, b))
   def segment_shingle_hashes(text: Column, width: Int, n: Int): Column =
-    col(SegmentShingleHashes(e(text), width, n))
+    kernel("segmentShingleHashes", Segments, Seq(StringType), Seq(text),
+      width, n)
   def segment_shingle_hashes_adaptive(text: Column, width: Int, n: Int,
       k: Int, wsThresh: Double): Column =
-    col(SegmentShingleHashesAdaptive(e(text), width, n, k, wsThresh))
+    kernel("segmentShingleHashesAdaptive", Segments, Seq(StringType),
+      Seq(text), width, n, k, wsThresh)
   def classifier_token_score(text: Column): Column =
-    col(ClassifierTokenScore(e(text)))
+    kernel("classifierTokenScore", struct("s" -> LongType, "n" -> LongType),
+      Seq(StringType), Seq(text))
   def space_token_count(text: Column): Column =
-    col(SpaceTokenCount(e(text)))
-  def md5_bucket_counts(text: Column, buckets: Int): Column =
-    col(Md5BucketCounts(e(text), buckets))
+    kernel("spaceTokenCount", IntegerType, Seq(StringType), Seq(text))
+  def md5_bucket_counts(text: Column, buckets: Int): Column = {
+    require(buckets >= 1)
+    kernel("md5BucketCounts", nonNull(struct("bkt" -> IntegerType,
+      "n" -> LongType)), Seq(StringType), Seq(text), buckets)
+  }
   def bpe_token_count(text: Column, merges: Seq[(String, String)]): Column =
     col(BpeTokenCount(e(text), merges))
   def bpe_tokens(text: Column, merges: Seq[(String, String)]): Column =
     col(BpeTokens(e(text), merges))
-  def ordered_pairs(arr: Column): Column = col(OrderedPairs(e(arr)))
-  def component_labels(edges: Column): Column = col(ComponentLabels(e(edges)))
-  def word_counts(text: Column): Column = col(WordCounts(e(text)))
-  def hashed_bow_vector(text: Column, dim: Int): Column =
-    col(HashedBowVector(e(text), dim))
+  def ordered_pairs(arr: Column): Column =
+    kernel("orderedPairs", nonNull(struct("a" -> LongType, "b" -> LongType)),
+      Seq(Longs), Seq(arr))
+  def component_labels(edges: Column): Column =
+    kernel("componentLabels", nonNull(struct("vec_id" -> LongType,
+      "cluster_id" -> LongType)),
+      Seq(ArrayType(struct("a" -> LongType, "b" -> LongType))), Seq(edges))
+  def word_counts(text: Column): Column =
+    kernel("wordCounts", nonNull(struct("w" -> StringType, "n" -> LongType)),
+      Seq(StringType), Seq(text))
+  def hashed_bow_vector(text: Column, dim: Int): Column = {
+    require(dim >= 1)
+    kernel("hashedBowVector", nonNull(DoubleType), Seq(StringType), Seq(text),
+      dim)
+  }
   def capped_collect_long(c: Column, cap: Int): Column =
     col(CappedCollectLong(e(c), cap).toAggregateExpression())
-  def bigram_counts(text: Column): Column = col(BigramCounts(e(text)))
+  def bigram_counts(text: Column): Column =
+    kernel("bigramCounts", nonNull(struct("w1" -> StringType,
+      "w2" -> StringType, "n" -> LongType)), Seq(StringType), Seq(text))
 
   /** Spark's internal Bloom pair (the machinery behind its own runtime
     * join filters), surfaced for explicit use: a distributed

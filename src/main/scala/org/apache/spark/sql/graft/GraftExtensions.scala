@@ -1,9 +1,10 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.classic.ExpressionUtils
 
 /** SQL surface for graft's custom expressions.
   *
@@ -22,6 +23,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  import GraftFunctions._
 
   private def intArg(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v
@@ -29,52 +31,40 @@ object GraftExtensions {
       s"$what must be an integer literal, got: $other")
   }
 
+  private def c(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** `name`, built by its [[GraftFunctions]] entry over the SQL arguments. */
+  private def fn(name: String)(build: Seq[Expression] => Column)
+      : (String, (ExpressionInfo, Seq[Expression] => Expression)) =
+    name -> ((new ExpressionInfo(classOf[KernelCall].getName, name),
+      (args: Seq[Expression]) => ExpressionUtils.expression(build(args))))
+
   val builders: Map[String, (ExpressionInfo, Seq[Expression] => Expression)] = Map(
-    "graft_dot_product" -> (
-      (new ExpressionInfo(classOf[DotProduct].getName, "graft_dot_product"),
-        (args: Seq[Expression]) => DotProduct(args(0), args(1)))),
-    "graft_minhash_sig" -> (
-      (new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-        (args: Seq[Expression]) =>
-          MinHashSig(args(0), if (args.size > 1) intArg(args(1), "k") else 64))),
-    "graft_simhash64" -> (
-      (new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-        (args: Seq[Expression]) => SimHash64(args(0)))),
-    "graft_hyperplane_sig" -> (
-      (new ExpressionInfo(classOf[HyperplaneSig].getName, "graft_hyperplane_sig"),
-        (args: Seq[Expression]) => HyperplaneSig(args(0), intArg(args(1), "planes")))),
+    fn("graft_dot_product")(a => dot_product(c(a(0)), c(a(1)))),
+    fn("graft_minhash_sig")(a =>
+      minhash_sig(c(a(0)), if (a.size > 1) intArg(a(1), "k") else 64)),
+    fn("graft_simhash64")(a => simhash64(c(a(0)))),
+    fn("graft_hyperplane_sig")(a =>
+      hyperplane_sig(c(a(0)), intArg(a(1), "planes"))),
     // nprobe is REQUIRED: the Scala callers use different values (s02b 8,
     // d11b 3), so a silent SQL default would quietly under-probe.
-    "graft_hyperplane_probes" -> (
-      (new ExpressionInfo(classOf[HyperplaneProbes].getName, "graft_hyperplane_probes"),
-        (args: Seq[Expression]) => {
-          if (args.size < 3) throw new IllegalArgumentException(
-            "graft_hyperplane_probes(v, planes, nprobe) requires all three arguments")
-          HyperplaneProbes(args(0), intArg(args(1), "planes"),
-            intArg(args(2), "nprobe"))
-        })),
-    "graft_word_shingles" -> (
-      (new ExpressionInfo(classOf[WordShingles].getName, "graft_word_shingles"),
-        (args: Seq[Expression]) =>
-          WordShingles(args(0), if (args.size > 1) intArg(args(1), "n") else 3))),
-    "graft_winnow_fingerprints" -> (
-      (new ExpressionInfo(classOf[WinnowFingerprints].getName, "graft_winnow_fingerprints"),
-        (args: Seq[Expression]) =>
-          WinnowFingerprints(args(0), if (args.size > 1) intArg(args(1), "window") else 4))),
-    "graft_word_shingle_hashes" -> (
-      (new ExpressionInfo(classOf[WordShingleHashes].getName, "graft_word_shingle_hashes"),
-        (args: Seq[Expression]) =>
-          WordShingleHashes(args(0), if (args.size > 1) intArg(args(1), "n") else 3))),
-    "graft_minhash_sig_from_hashes" -> (
-      (new ExpressionInfo(classOf[MinHashSigFromHashes].getName, "graft_minhash_sig_from_hashes"),
-        (args: Seq[Expression]) =>
-          MinHashSigFromHashes(args(0), if (args.size > 1) intArg(args(1), "k") else 64))),
-    "graft_sorted_intersection_size" -> (
-      (new ExpressionInfo(classOf[SortedIntersectionSize].getName, "graft_sorted_intersection_size"),
-        (args: Seq[Expression]) => SortedIntersectionSize(args(0), args(1)))),
-    "graft_collapse_adjacent_repeats" -> (
-      (new ExpressionInfo(classOf[CollapseAdjacentRepeats].getName, "graft_collapse_adjacent_repeats"),
-        (args: Seq[Expression]) => CollapseAdjacentRepeats(args(0)))))
+    fn("graft_hyperplane_probes") { a =>
+      if (a.size < 3) throw new IllegalArgumentException(
+        "graft_hyperplane_probes(v, planes, nprobe) requires all three arguments")
+      hyperplane_probes(c(a(0)), intArg(a(1), "planes"), intArg(a(2), "nprobe"))
+    },
+    fn("graft_word_shingles")(a =>
+      word_shingles(c(a(0)), if (a.size > 1) intArg(a(1), "n") else 3)),
+    fn("graft_winnow_fingerprints")(a =>
+      winnow_fingerprints(c(a(0)), if (a.size > 1) intArg(a(1), "window") else 4)),
+    fn("graft_word_shingle_hashes")(a =>
+      word_shingle_hashes(c(a(0)), if (a.size > 1) intArg(a(1), "n") else 3)),
+    fn("graft_minhash_sig_from_hashes")(a =>
+      minhash_sig_from_hashes(c(a(0)), if (a.size > 1) intArg(a(1), "k") else 64)),
+    fn("graft_sorted_intersection_size")(a =>
+      sorted_intersection_size(c(a(0)), c(a(1)))),
+    fn("graft_collapse_adjacent_repeats")(a =>
+      collapse_adjacent_repeats(c(a(0)))))
 
   /** Register all graft functions into an existing session. */
   def register(spark: SparkSession): Unit =

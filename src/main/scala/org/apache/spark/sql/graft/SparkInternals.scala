@@ -58,16 +58,15 @@ object SparkInternals {
     * mid-batch persists would be swept too.
     */
   def freeTransientCheckpoints(spark: org.apache.spark.sql.SparkSession,
-      pinned: Set[Int], blocking: Boolean = true): Int = {
+      pinned: Set[Int]): Int = {
     val stale = spark.sparkContext.getPersistentRDDs.valuesIterator
       .filterNot(r => pinned.contains(r.id)).toList
-    // blocking by default: an async unpersist of multi-GB checkpoint
-    // generations drains CONCURRENTLY with the next measured query (the
-    // sf10 A/B read d12 3× slower from d11b's eviction backwash); a
-    // blocking free lands the removal cost between reps, where nothing
-    // is being timed.
+    // blocking: an async unpersist of multi-GB checkpoint generations
+    // drains CONCURRENTLY with the next measured query (the sf10 A/B
+    // read d12 3× slower from d11b's eviction backwash); a blocking free
+    // lands the removal cost between reps, where nothing is being timed.
     stale.foreach(r =>
-      try r.unpersist(blocking)
+      try r.unpersist(blocking = true)
       catch { case NonFatal(_) => () })
     stale.size
   }

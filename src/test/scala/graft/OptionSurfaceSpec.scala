@@ -8,7 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * this list on purpose. Likewise, cross-query memos live in one
   * registry (`CacheHygiene.memo`), so a private memo map fails here, and
   * frames are persisted only by `SelfClean.scope`, which releases them
-  * when it exits, so a raw persist fails here too.
+  * when it exits, so a raw persist fails here too. And a pure kernel is
+  * a static method reached through `KernelCall`, so a new hand-written
+  * Catalyst expression class has to be added to an allow-list on
+  * purpose.
   */
 class OptionSurfaceSpec extends AnyFunSuite {
 
@@ -70,5 +73,33 @@ class OptionSurfaceSpec extends AnyFunSuite {
     // hand a live cache back to its caller
     assert(calling.isEmpty,
       s"a persist outside SelfClean.scope: ${calling.mkString(", ")}")
+  }
+
+  test("org.apache.spark.sql.graft declares only the allowed Expression classes") {
+    // class name -> why it is a hand-written expression
+    val allowed = Map(
+      "KernelCall" -> "the one call shape for every pure kernel in hashing",
+      "TokenProfileCounts" -> "caller-built state: the profile lookup table",
+      "NearestCentroid" -> "caller-built state: the centroid matrix and norms",
+      "PqCodes" -> "caller-built state: the PQ codebooks",
+      "PqAdcCosine" -> "caller-built state: coarse centroids and codebooks",
+      "RedactChain" -> "caller-built state: the compiled pattern chain",
+      "BpeTokenCount" -> "caller-built state: the BPE merge-rank map",
+      "BpeTokens" -> "caller-built state: the BPE merge-rank map",
+      "CappedCollectLong" -> "an aggregate with a bounded typed buffer")
+    val files = sources(new java.io.File("src/main/scala/org/apache/spark/sql/graft"))
+    assert(files.nonEmpty, "run from the repository root")
+    val declared = """(?m)^\s*(?:(?:final|abstract|sealed|private\S*)\s+)*(?:case\s+)?class\s+(\w+)""".r
+    val expressions = files.flatMap { f =>
+      declared.findAllMatchIn(new String(
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).map(_.group(1))
+    }.filter { name =>
+      classOf[org.apache.spark.sql.catalyst.expressions.Expression].isAssignableFrom(
+        Class.forName(s"org.apache.spark.sql.graft.$name", false, getClass.getClassLoader))
+    }
+    assert(expressions.contains("KernelCall"), expressions)
+    val extra = expressions.filterNot(allowed.contains)
+    assert(extra.isEmpty, s"an Expression class outside the allow-list: " +
+      s"${extra.mkString(", ")} (a pure kernel is a GraftFunctions entry)")
   }
 }

@@ -654,6 +654,48 @@ class StreamingSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("text gates free their trigger checkpoints after a run of triggers and after a failed trigger") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckleak_").toString
+    def ws(tag: String, n: Int): String = (0 until n).map(i => s"$tag$i").mkString(" ")
+    val seed = Seq(0L -> ws("s", 40)).toDF("doc_id", "text")
+    graft.operators.Dedup.writeDedupIndex(seed, "ckleak_doc")
+    graft.operators.Dedup.writeSegmentIndex(seed, "ckleak_seg")
+    graft.operators.Dedup.writeSubstringIndex(seed, "ckleak_sub", k = 20)
+    val gates: Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.streaming.StreamingQuery)] = Seq(
+      "dedupStream" -> (StreamingOps.dedupStream(_, "ckleak_doc", s"$dir/doc")),
+      "segmentDedupStream" ->
+        (StreamingOps.segmentDedupStream(_, "ckleak_seg", s"$dir/seg")),
+      "substringDedupStream" ->
+        (StreamingOps.substringDedupStream(_, "ckleak_sub", s"$dir/sub", k = 20)))
+    def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val leaks = gates.flatMap { case (name, gate) =>
+      val before = persistentRdds
+      def run(batches: Seq[(Long, String)]*): Unit = {
+        val mem = MemoryStream[(Long, String)]
+        val q = gate(mem.toDF().toDF("doc_id", "text"))
+        try batches.foreach { rows => mem.addData(rows: _*); q.processAllAvailable() }
+        finally q.stop()
+      }
+      // three triggers: two novel batches and a copy of the first
+      run(Seq(1L -> ws("a", 40)), Seq(2L -> ws("b", 40)), Seq(3L -> ws("a", 40)))
+      val afterRun = persistentRdds -- before
+      // a second run without its checkpointDir fails its first trigger
+      // (batch000000 is committed) after the probe's checkpoint is made
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        run(Seq(4L -> ws("c", 40))))
+      val afterFailure = persistentRdds -- before -- afterRun
+      Seq(s"$name after a run of triggers: $afterRun",
+        s"$name after a failed trigger: $afterFailure")
+        .zip(Seq(afterRun, afterFailure)).collect { case (m, l) if l.nonEmpty => m }
+    }
+    assert(leaks.isEmpty, s"persistent RDDs left behind: ${leaks.mkString("; ")}")
+    Seq("ckleak_doc_bands", "ckleak_doc_shingles", "ckleak_seg_bands",
+      "ckleak_seg_shingles", "ckleak_seg_segdigests", "ckleak_sub_grams")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("segment gate replay of an uncommitted batch leaves the store and the pending buffer unchanged") {
     val root = java.nio.file.Files.createTempDirectory("graft_sreplay_").toString
     val inDir = s"$root/in"
