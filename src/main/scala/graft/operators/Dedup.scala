@@ -1769,21 +1769,27 @@ object Dedup {
     * owns it — the union-batch rule at O(delta) cost.
     */
   def substringRewriteDelta(spark: SparkSession, table: String,
-      delta: DataFrame, k: Int = 20): DataFrame = {
+      delta: DataFrame, k: Int = 20): DataFrame =
+    SelfClean.scope(keep => SelfClean.checkpoint(
+      substringRewriteIn(spark, table, delta, k, keep)))
+
+  /** [[substringRewriteDelta]]'s lazy core: the grams serve two consumers
+    * (stored-index probe + substringFlagged), so they are kept in the
+    * caller's scope, and the caller materializes the delta-sized result
+    * before that scope ends — the streaming substring gate checkpoints
+    * it as its probe.
+    */
+  private[graft] def substringRewriteIn(spark: SparkSession, table: String,
+      delta: DataFrame, k: Int, keep: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
     indexRecoverAndRefresh(spark, table, Seq("_grams"))
-    // Self-cleaning: the grams serve two consumers (stored-index probe +
-    // substringFlagged), and the delta-sized result is checkpointed while
-    // they are cached, so streaming callers (substringDedupStream) don't
-    // leak one cached frame per micro-batch.
-    SelfClean.releasing(fastGrams(delta, k)) { grams =>
-      val stored = grams
-        .join(spark.table(s"${table}_grams"), FastGramKey, "left_semi")
-        .select($"doc_id", $"pos")
-      val flagged = stored.unionByName(substringFlagged(grams, FastGramKey))
-        .distinct()
-      substringCleanCore(delta, flagged, k).select($"doc_id", $"cleaned")
-    }
+    val grams = keep(fastGrams(delta, k))
+    val stored = grams
+      .join(spark.table(s"${table}_grams"), FastGramKey, "left_semi")
+      .select($"doc_id", $"pos")
+    val flagged = stored.unionByName(substringFlagged(grams, FastGramKey))
+      .distinct()
+    substringCleanCore(delta, flagged, k).select($"doc_id", $"cleaned")
   }
 
   /** Observability for the substring-dedup family (the

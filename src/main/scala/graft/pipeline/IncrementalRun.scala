@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import graft.sources.IncrementalIngest
+import graft.sources.{IncrementalIngest, StorePaths}
 
 /** The composed end-to-end incremental pass (run_full_pipeline.py:353-431:
   * detect-new → backfill missing hashes on already-known records → ingest
@@ -41,7 +41,7 @@ object IncrementalRun {
 
   private def readOrEmpty(spark: SparkSession, path: String,
       schema: StructType): DataFrame =
-    if (new java.io.File(path).exists()) spark.read.parquet(path)
+    if (StorePaths.exists(spark, path)) spark.read.parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
@@ -53,12 +53,7 @@ object IncrementalRun {
     df.write.mode(SaveMode.Overwrite).parquet(tmp)
     val spark = df.sparkSession
     spark.read.parquet(tmp).write.mode(SaveMode.Overwrite).parquet(path)
-    deleteRec(new java.io.File(tmp))
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete()
+    StorePaths.delete(spark, tmp)
   }
 
   private val rollupSchema = StructType(Seq(
@@ -91,14 +86,14 @@ object IncrementalRun {
   def commitBatch(spark: SparkSession, storeDir: String, rollupPath: String,
       batchId: String): Boolean = {
     import spark.implicits._
-    val batchDir = new java.io.File(s"$storeDir/$batchId.parquet")
-    val marker = new java.io.File(s"${rollupPath}_merged/$batchId")
-    if (!batchDir.exists() || marker.exists()) return false
-    val delta = spark.read.parquet(batchDir.getPath)
+    val batchFile = s"$storeDir/$batchId.parquet"
+    val marker = s"${rollupPath}_merged/$batchId"
+    if (!StorePaths.exists(spark, batchFile) ||
+        StorePaths.exists(spark, marker)) return false
+    val delta = spark.read.parquet(batchFile)
       .select($"source", length($"text").cast("long").as("n_chars"))
     mergeRollup(spark, delta, rollupPath)
-    marker.getParentFile.mkdirs()
-    marker.createNewFile()
+    StorePaths.touch(spark, marker)
     true
   }
 
@@ -110,16 +105,15 @@ object IncrementalRun {
     */
   def repairRollup(spark: SparkSession, storeDir: String,
       rollupPath: String): Int = {
-    val files = Option(new java.io.File(storeDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.endsWith(".parquet"))
-      .map(_.getName.stripSuffix(".parquet")).sorted
-    files.count(bid => commitBatch(spark, storeDir, rollupPath, bid))
+    StorePaths.parquetEntries(spark, storeDir).map(_._1).sorted
+      .count(bid => commitBatch(spark, storeDir, rollupPath, bid))
   }
 
   /** One incremental pass over `feed` (doc_id, source, text columns).
     * State: `storeDir` (IncrementalIngest batch store), `metaPath`
-    * (cumulative per-id metadata), `rollupPath` (per-source rollup).
+    * (cumulative per-id metadata), `rollupPath` (per-source rollup) —
+    * plain paths or `file://`, HDFS and S3 URIs alike: every existence
+    * probe, listing and delete goes through [[StorePaths]].
     *
     * Crash-replay contract: re-running after a crash is safe with the
     * SAME batchId, whether or not the feed grew in between. The repair
@@ -187,7 +181,7 @@ object IncrementalRun {
       //    marked file.
       val effBatchId = (Iterator(batchId) ++
         Iterator.from(1).map(k => s"$batchId.$k"))
-        .find(id => !new java.io.File(s"${rollupPath}_merged/$id").exists())
+        .find(id => !StorePaths.exists(spark, s"${rollupPath}_merged/$id"))
         .get
       val batchFile = s"$storeDir/$effBatchId.parquet"
       val nIngested =
@@ -217,7 +211,7 @@ object IncrementalRun {
         if (nIngested > 0) spark.read.parquet(batchFile).count() else 0L
       commitBatch(spark, storeDir, rollupPath, effBatchId)
       // An empty first run must still leave a readable (empty) rollup.
-      if (!new java.io.File(rollupPath).exists())
+      if (!StorePaths.exists(spark, rollupPath))
         mergeRollup(spark,
           Seq.empty[(String, Long)].toDF("source", "n_chars"), rollupPath)
 

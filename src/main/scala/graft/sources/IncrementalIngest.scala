@@ -20,21 +20,14 @@ object IncrementalIngest {
 
   val hashCol = "content_hash"
 
-  /** The store's batch files, listed through the Hadoop FileSystem of
-    * the path itself, so `file://`, HDFS and S3 stores list like plain
-    * local paths (java.io.File would see none of them, and dedup would
-    * silently stop).
+  /** The store's batch files, listed through [[StorePaths]] so `file://`,
+    * HDFS and S3 stores list like plain local paths (java.io.File would
+    * see none of them, and dedup would silently stop).
     */
   private def batchFiles(spark: SparkSession, storeDir: String,
-      excludeBatchId: Option[String]): Array[String] = {
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Array.empty
-    else fs.listStatus(dir).map(_.getPath)
-      .filter(f => f.getName.endsWith(".parquet") &&
-        !excludeBatchId.contains(f.getName.stripSuffix(".parquet")))
-      .map(_.toString)
-  }
+      excludeBatchId: Option[String]): Seq[String] =
+    StorePaths.parquetEntries(spark, storeDir)
+      .collect { case (id, f) if !excludeBatchId.contains(id) => f }
 
   /** All content hashes currently in the store (empty frame if none).
     * `excludeBatchId` leaves one batch's own file out of the scan — the
@@ -48,7 +41,7 @@ object IncrementalIngest {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else // the hash column's known type: no schema-inference job
-      spark.read.schema(schema).parquet(files.toIndexedSeq: _*).distinct()
+      spark.read.schema(schema).parquet(files: _*).distinct()
   }
 
   /** Distinct record ids currently in the store (column-pruned scan,
@@ -65,7 +58,7 @@ object IncrementalIngest {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(StructField(idCol, org.apache.spark.sql.types.LongType))))
     else
-      spark.read.parquet(files.toIndexedSeq: _*).select(col(idCol)).distinct()
+      spark.read.parquet(files: _*).select(col(idCol)).distinct()
   }
 
   /** Append one ingest batch: hash the content column, drop records whose

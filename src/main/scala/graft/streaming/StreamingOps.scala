@@ -1,10 +1,13 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.operators.SelfClean
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.StructType
+import graft.operators.{Dedup, SelfClean}
+import graft.pipeline.Relational.AdmissionChecks
+import graft.sources.{IncrementalIngest, StorePaths}
 
 /** Event shape for the stateful operators. */
 case class Ev(user_id: Long, ts: Timestamp, event_type: String, value: Double)
@@ -35,55 +38,31 @@ case class CusumOut(event_type: String, day: java.sql.Date, n: Long,
   */
 object StreamingOps {
 
-  /** Replay markers and _SUCCESS probes resolved through the Hadoop
-    * FileSystem of the path itself — NOT java.io.File, which on
-    * HDFS/S3 always reports "absent", so a replay after a partial
-    * index append would rewrite the batch's store file with the
-    * shrunken kept set (probe-before-grow gates replayed vectors
-    * against their own partial index rows) and silently lose
-    * already-landed data. The same resolution the parquet writer uses.
+  /** The trigger scope every `foreachBatch` stream here shares (the
+    * ingest and rollup streams and the four dedup gates): each
+    * micro-batch runs `body(batch, bid, keep)`, where `bid` =
+    * `batch%06d` names the batch's store files deterministically and
+    * `keep` persists into a [[SelfClean.scope]] released when the
+    * trigger ends, failed or not — never a session-wide clearCache,
+    * which would evict a co-resident workload's frames (ADVICE r13).
+    * With a `checkpointDir` the query restarts from the committed
+    * offset, so each source file lands in exactly one micro-batch
+    * across restarts.
     */
-  private def hadoopPath(spark: SparkSession, path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  private def eachBatch(in: DataFrame, queryName: String,
+      checkpointDir: Option[String])(
+      body: (DataFrame, String, DataFrame => DataFrame) => Unit): StreamingQuery = {
+    val w = in.writeStream
+      .queryName(queryName)
+      .outputMode(OutputMode.Append)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        SelfClean.scope(keep => body(batch.toDF(), f"batch$batchId%06d", keep))
+      }
+    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
   }
 
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val (fs, p) = hadoopPath(spark, path)
-    fs.exists(p)
-  }
-
-  /** Create an empty marker file (parent dirs implicit in Hadoop FS). */
-  private def touchMarker(spark: SparkSession, path: String): Unit = {
-    val (fs, p) = hadoopPath(spark, path)
-    fs.create(p, true).close()
-  }
-
-  private def deletePath(spark: SparkSession, path: String): Unit = {
-    val (fs, p) = hadoopPath(spark, path)
-    fs.delete(p, true)
-    ()
-  }
-
-  /** The pending buffer's COMMITTED batch files (parquet dirs under
-    * `dir` whose _SUCCESS landed) — empty when the buffer doesn't exist
-    * or was just folded. A crash mid-write leaves a dir without
-    * _SUCCESS; excluding it is correct, not lossy: that batch's
-    * checkpoint never committed, so its replay rewrites the file
-    * (Overwrite) before anything probes it.
-    */
-  private def pendingFiles(spark: SparkSession, dir: String): Seq[String] = {
-    val (fs, p) = hadoopPath(spark, dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.getPath.getName.endsWith(".parquet") &&
-        fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.toString)
-  }
-
-  /** Run one step of a gate under a call-site label (`gate probe`,
-    * `gate land`, …): the label names the step's Spark jobs and stages,
+  /** Run one step of a gate under a call-site label (`<gate> probe`,
+    * `<gate> land`, …): the label names the step's Spark jobs and stages,
     * so a listener or trace attributes each trigger's time to its steps.
     */
   private def step[T](spark: SparkSession, label: String)(f: => T): T = {
@@ -100,11 +79,13 @@ object StreamingOps {
     * so on stderr. Without a `checkpointDir`, batch ids start again at 0
     * on every run, so a committed file is an earlier run's batch, not
     * this batch's replay: the trigger fails rather than drop its
-    * survivors.
+    * survivors. The `_SUCCESS` probe resolves through [[StorePaths]]:
+    * java.io.File reports an HDFS/S3 file absent, so the replay would
+    * rewrite the batch's store file with its shrunken kept set.
     */
   private def landOnce(spark: SparkSession, storeDir: String, bid: String,
       checkpointDir: Option[String], label: String)(land: => Unit): Unit =
-    if (!pathExists(spark, s"$storeDir/$bid.parquet/_SUCCESS"))
+    if (!StorePaths.exists(spark, s"$storeDir/$bid.parquet/_SUCCESS"))
       step(spark, label)(land)
     else if (checkpointDir.isEmpty)
       throw new IllegalStateException(s"$storeDir/$bid.parquet exists: " +
@@ -113,21 +94,125 @@ object StreamingOps {
     else System.err.println(s"[gate] $bid replayed: its store file is " +
       "committed, its survivors are not re-landed")
 
-  /** Keep a gate's stored-index file counts bounded over an unbounded
-    * stream (verdict r16 #3): after a fold/grow step, any index table
-    * whose data-file count exceeds `compactAbove` is rewritten through
-    * its own bucket spec (Layout.compactBucketedTable — bucketing
-    * preserved, so probe plans keep their exchange-free stored side).
-    * Runs inside foreachBatch, i.e. never concurrent with a probe of the
-    * same store. `compactAbove = 0` disables.
+  /** The pending buffer's COMMITTED batch files (parquet dirs under
+    * `<storeDir>_idx_pending` whose _SUCCESS landed) — empty when the
+    * buffer doesn't exist or was just folded. A crash mid-write leaves a
+    * dir without _SUCCESS; excluding it is correct, not lossy: that
+    * batch's checkpoint never committed, so its replay rewrites the file
+    * (Overwrite) before anything probes it.
     */
-  private def maybeCompact(spark: org.apache.spark.sql.SparkSession,
-      indexTable: String, compactAbove: Int): Unit =
-    if (compactAbove > 0) step(spark, "gate compact") {
-      graft.operators.Dedup.compactIndex(spark, indexTable, compactAbove)
-        .toSeq.sortBy(_._1).foreach { case (t, (bef, aft)) =>
-          System.err.println(s"[gate] compacted $t: $bef -> $aft files")
+  private def pendingFiles(spark: SparkSession, storeDir: String): Seq[String] =
+    StorePaths.parquetEntries(spark, s"${storeDir}_idx_pending").map(_._2)
+      .filter(f => StorePaths.exists(spark, s"$f/_SUCCESS"))
+
+  /** The pending buffer as one frame, read with the schema its gate
+    * writes it with; None when it holds no committed file.
+    */
+  private def pendingBuffer(spark: SparkSession, storeDir: String,
+      schema: StructType): Option[DataFrame] =
+    Some(pendingFiles(spark, storeDir)).filter(_.nonEmpty)
+      .map(files => spark.read.schema(schema).parquet(files: _*))
+
+  /** How a gate grows its index from its trigger's checkpoint. */
+  private sealed trait Growth
+
+  /** Pending buffer + fold (doc and segment gates): `rows` of the
+    * checkpoint land in `<storeDir>_idx_pending/<bid>.parquet` (one
+    * file, Overwrite); once `every` committed files accumulate, `fold`
+    * appends the buffer (read with `schema`) to the bucketed index
+    * tables and the buffer is deleted. The fold is at-least-once
+    * (append → delete): the duplicate index rows a crash between the two
+    * leaves collapse in the probe.
+    */
+  private final case class Pending(schema: StructType, every: Int,
+      rows: DataFrame => DataFrame, fold: DataFrame => Unit) extends Growth
+
+  /** Marker-guarded append (substring and semantic gates): `append`
+    * grows the index from the checkpoint, then `<storeDir>_idx_marked/<bid>`
+    * is touched, so a replayed batch does not grow it twice; a crash
+    * between the two leaves duplicate index rows the probe collapses.
+    */
+  private final case class Marked(append: DataFrame => Unit) extends Growth
+
+  /** One gate trigger as its gate plans it: `probe` is the lazy frame the
+    * trigger materialises once; `land` and `grow` count, over it, the
+    * rows the store write and the index growth will take; `landed`
+    * writes `<storeDir>/<bid>.parquet` from the materialised rows.
+    */
+  private final case class Trigger(probe: DataFrame, land: Column,
+      grow: Column, landed: DataFrame => Unit, growth: Growth)
+
+  /** The trigger skeleton of the four dedup gates. Each trigger:
+    *
+    *  - `probe`: plans the trigger over the kept batch and materialises
+    *    its probe in ONE `localCheckpoint`, whose Observation counts
+    *    what the land and grow steps will write — no probe join, store
+    *    scan or hash runs twice, and no action runs just to count;
+    *  - `land`: lands the store file once per batch id ([[landOnce]]),
+    *    skipped when nothing would land;
+    *  - grows the index — `pending` then `fold` ([[Pending]]), or
+    *    `grow` ([[Marked]]) — and then `compact`s it
+    *    ([[Dedup.compactIndex]]) when `compactAbove` > 0 and some index
+    *    table holds more data files than that. Compaction rewrites a
+    *    table through its own bucket spec, so probe plans keep their
+    *    exchange-free stored side, and it never runs concurrently with
+    *    a probe of the same store.
+    *
+    * The store lands BEFORE the index grows (probe-before-grow: a
+    * replayed batch's rows match themselves in the index, so its replay
+    * neither keeps a row twice nor grows the index twice). Each step
+    * runs under the call-site label `<gate> <step>`. The checkpoint's
+    * blocks are freed when the trigger ends, failed or not: the
+    * session-wide sweep (CacheHygiene.freeTransient) must not run
+    * beside a live stream, and the ContextCleaner frees them only when
+    * it collects the RDD.
+    */
+  private def gateStream(in: DataFrame, gate: String, indexTable: String,
+      storeDir: String, queryName: String, checkpointDir: Option[String],
+      compactAbove: Int)(
+      plan: (DataFrame, String, DataFrame => DataFrame) => Trigger): StreamingQuery =
+    eachBatch(in, queryName, checkpointDir) { (batch, bid, keep) =>
+      val spark = batch.sparkSession
+      val counts = Observation(s"$queryName-$bid")
+      val (t, kept) = step(spark, s"$gate probe") {
+        val t = plan(batch, bid, keep)
+        (t, t.probe.observe(counts, t.land.as("land"), t.grow.as("grow"))
+          .localCheckpoint())
+      }
+      try {
+        val n = counts.get.view.mapValues(_.asInstanceOf[Long]).toMap
+        if (n("land") > 0)
+          landOnce(spark, storeDir, bid, checkpointDir, s"$gate land")(t.landed(kept))
+        val grown = t.growth match {
+          case Pending(schema, every, rows, fold) =>
+            if (n("grow") > 0) step(spark, s"$gate pending") {
+              rows(kept).coalesce(1).write.mode(SaveMode.Overwrite)
+                .parquet(s"${storeDir}_idx_pending/$bid.parquet")
+            }
+            val toFold = pendingFiles(spark, storeDir)
+            if (toFold.size < every) false
+            else step(spark, s"$gate fold") {
+              fold(spark.read.schema(schema).parquet(toFold: _*))
+              StorePaths.delete(spark, s"${storeDir}_idx_pending")
+              true
+            }
+          case Marked(append) =>
+            val marker = s"${storeDir}_idx_marked/$bid"
+            if (n("grow") == 0 || StorePaths.exists(spark, marker)) false
+            else step(spark, s"$gate grow") {
+              append(kept)
+              StorePaths.touch(spark, marker)
+              true
+            }
         }
+        if (grown && compactAbove > 0) step(spark, s"$gate compact") {
+          Dedup.compactIndex(spark, indexTable, compactAbove)
+            .toSeq.sortBy(_._1).foreach { case (table, (bef, aft)) =>
+              System.err.println(s"[gate] compacted $table: $bef -> $aft files")
+            }
+        }
+      } finally org.apache.spark.sql.graft.SparkInternals
+        .releaseCheckpointBlocks(kept)
     }
 
   /** Watermarked tumbling-window aggregation — streaming form of
@@ -168,33 +253,62 @@ object StreamingOps {
       .select($"window", explode($"sketch").as(Seq("item", "est_count")))
   }
 
-  /** Audit-then-admit landing for one micro-batch (verdict r16 #5): run
-    * `Relational.admissionAudit` over the batch, dead-letter the
-    * violating rows to `<storeDir>_dlq/<bid>.parquet` (with their
+  /** Audit-then-admit for one micro-batch (verdict r16 #5):
+    * `Relational.admissionAudit` tags the batch (kept: the count, the
+    * dead-letter write and the clean rows all read it), the violating
+    * rows dead-letter to `<storeDir>_dlq/<bid>.parquet` with their
     * `_violations` tags — the operational record of WHY each row was
-    * refused), admit the clean rows through the content-hash-deduped
-    * store append. Returns (admitted, dead_lettered) counts.
-    *
-    * Replay idempotent by construction: the DLQ write is keyed by batch
-    * id with Overwrite (a replayed batch rewrites the identical file)
-    * and appendBatch's content-hash dedup makes the clean landing
+    * refused — as one file, keyed by batch id with Overwrite, so a
+    * replayed batch rewrites the identical file. Returns the clean rows
+    * and the dead-lettered count.
+    */
+  private def admit(batch: DataFrame, bid: String, storeDir: String,
+      checks: AdmissionChecks, keep: DataFrame => DataFrame): (DataFrame, Long) = {
+    val audited = keep(graft.pipeline.Relational.admissionAudit(batch, checks))
+    val bad = audited.filter(size(col("_violations")) > 0)
+    val nBad = bad.count()
+    if (nBad > 0)
+      bad.coalesce(1).write.mode(SaveMode.Overwrite)
+        .parquet(s"${storeDir}_dlq/$bid.parquet")
+    (audited.filter(size(col("_violations")) === 0).drop("_violations"), nBad)
+  }
+
+  /** Audit-then-admit landing for one micro-batch: [[admit]], then the
+    * clean rows land through the content-hash-deduped store append.
+    * Returns (admitted, dead_lettered) counts. Replay idempotent by
+    * construction: the DLQ file is rewritten identically and
+    * appendBatch's content-hash dedup makes the clean landing
     * replay-stable — so at-least-once foreachBatch delivery never
     * double-admits or double-dead-letters.
     */
   def auditAndLand(batch: DataFrame, bid: String, storeDir: String,
-      checks: graft.pipeline.Relational.AdmissionChecks): (Long, Long) =
+      checks: AdmissionChecks): (Long, Long) =
     SelfClean.scope { keep =>
-      val audited = keep(graft.pipeline.Relational.admissionAudit(batch, checks))
-      val bad = audited.filter(size(col("_violations")) > 0)
-      val nBad = bad.count()
-      if (nBad > 0)
-        bad.coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"${storeDir}_dlq/$bid.parquet")
-      val n = graft.sources.IncrementalIngest.appendBatch(
-        audited.filter(size(col("_violations")) === 0).drop("_violations"),
-        storeDir, bid)
-      (n, nBad)
+      val (clean, nBad) = admit(batch, bid, storeDir, checks, keep)
+      (IncrementalIngest.appendBatch(clean, storeDir, bid), nBad)
+    }
+
+  /** [[ingestStream]] and [[rollupStream]]: each micro-batch lands via
+    * IncrementalIngest.appendBatch (through [[auditAndLand]] under an
+    * `audit`), then, given a `rollupPath`, merges that batch file into
+    * the rollup. appendBatch's content-hash dedup makes replays
+    * idempotent on top of the checkpoint's committed offsets — the
+    * belt-and-braces exactly-once pattern.
+    */
+  private def storeStream(docs: DataFrame, storeDir: String,
+      rollupPath: Option[String], queryName: String,
+      checkpointDir: Option[String],
+      audit: Option[AdmissionChecks]): StreamingQuery =
+    eachBatch(docs, queryName, checkpointDir) { (batch, bid, _) =>
+      audit.fold(IncrementalIngest.appendBatch(batch, storeDir, bid))(
+        auditAndLand(batch, bid, storeDir, _)._1)
+      // Marker-tracked idempotent merge: foreachBatch is at-least-once,
+      // and a replayed epoch ingests 0 rows (content dedup) — keying
+      // the merge off this attempt's ingest count would permanently
+      // drop the batch from the rollup. commitBatch merges iff the
+      // batch file exists and is unmarked, so replays heal instead.
+      rollupPath.foreach(graft.pipeline.IncrementalRun
+        .commitBatch(batch.sparkSession, storeDir, _, bid))
     }
 
   /** Streaming ingest into the hash-dedup incremental store: each
@@ -206,27 +320,8 @@ object StreamingOps {
   def ingestStream(docs: DataFrame, storeDir: String,
       queryName: String = "graft_ingest",
       checkpointDir: Option[String] = None,
-      audit: Option[graft.pipeline.Relational.AdmissionChecks] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val bid = f"batch$batchId%06d"
-        audit match {
-          case Some(checks) =>
-            auditAndLand(batch.toDF(), bid, storeDir, checks)
-          case None =>
-            graft.sources.IncrementalIngest.appendBatch(
-              batch.toDF(), storeDir, bid)
-        }
-        ()
-      }
-    // With a checkpoint the query restarts from the committed offset (each
-    // source file lands in exactly one micro-batch across restarts);
-    // appendBatch's content-hash dedup additionally makes replays
-    // idempotent — the belt-and-braces exactly-once pattern.
-    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
-  }
+      audit: Option[AdmissionChecks] = None): StreamingQuery =
+    storeStream(docs, storeDir, None, queryName, checkpointDir, audit)
 
   /** Continuous form of IncrementalRun's store + rollup maintenance: every
     * micro-batch appends to the hash-dedup store, then merges ONLY the
@@ -239,30 +334,9 @@ object StreamingOps {
   def rollupStream(docs: DataFrame, storeDir: String, rollupPath: String,
       queryName: String = "graft_rollup",
       checkpointDir: Option[String] = None,
-      audit: Option[graft.pipeline.Relational.AdmissionChecks] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val bid = f"batch$batchId%06d"
-        audit match {
-          case Some(checks) =>
-            auditAndLand(batch.toDF(), bid, storeDir, checks)
-          case None =>
-            graft.sources.IncrementalIngest.appendBatch(batch.toDF(), storeDir, bid)
-        }
-        // Marker-tracked idempotent merge: foreachBatch is at-least-once,
-        // and a replayed epoch ingests 0 rows (content dedup) — keying
-        // the merge off this attempt's ingest count would permanently
-        // drop the batch from the rollup. commitBatch merges iff the
-        // batch file exists and is unmarked, so replays heal instead.
-        graft.pipeline.IncrementalRun.commitBatch(
-          spark, storeDir, rollupPath, bid)
-        ()
-      }
-    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
-  }
+      audit: Option[AdmissionChecks] = None): StreamingQuery =
+    storeStream(docs, storeDir, Some(rollupPath), queryName, checkpointDir,
+      audit)
 
   /** Streaming NEAR-dup gate — dedup-on-arrival over the stored band
     * index: each micro-batch is probed against the `indexTable` pair
@@ -281,19 +355,17 @@ object StreamingOps {
     * stored index ∪ pending buffer, so batch N+1 still dedups against
     * batch N inside the fold window.
     *
-    * ONE execution per trigger decides both verdicts. The batch is
-    * persisted with its shingle hashes; a single band join and verify
-    * over two index parts — the stored tables and the pending buffer
-    * (`Dedup.dedupProbeFrames`) — finds the near-dups;
+    * ONE execution per trigger decides both verdicts ([[gateStream]]).
+    * The batch is persisted with its shingle hashes; a single band join
+    * and verify over two index parts — the stored tables and the pending
+    * buffer (`Dedup.dedupProbeFrames`) — finds the near-dups;
     * `IncrementalIngest.flagFresh` flags the survivors the content-hash
-    * store would land; and one localCheckpoint materialises the flagged
-    * survivors, shingles included, counting (an Observation) what each
-    * write will land. The store file and the pending file are then
-    * map-only writes of the checkpointed rows, each skipped when it
-    * would be empty: no join, store scan or shingle hash runs twice,
-    * and no action runs just to count. Each step runs under a call-site
-    * label (`gate probe`, `gate land`, `gate pending`, `gate fold`,
-    * `gate compact`) that names its Spark jobs and stages.
+    * store would land; and the trigger's checkpoint materialises the
+    * flagged survivors, shingles included. The store file and the
+    * pending file are then map-only writes of the checkpointed rows,
+    * each skipped when it would be empty. Steps run under the labels
+    * `gate probe`, `gate land`, `gate pending`, `gate fold` and
+    * `gate compact`.
     *
     * Idempotence, in replay order: the store file lands BEFORE the
     * pending write, once per batch id (a committed `_SUCCESS` is never
@@ -314,79 +386,29 @@ object StreamingOps {
       queryName: String = "graft_dedup_gate",
       checkpointDir: Option[String] = None,
       growEvery: Int = 8,
-      compactAbove: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    val pendingDir = s"${storeDir}_idx_pending"
-    val w = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val bid = f"batch$batchId%06d"
-        // The batch's caches belong to this trigger's scope: released when
-        // it ends, failed or not — never a session-wide clearCache, which
-        // would evict a co-resident workload's frames (ADVICE r13).
-        SelfClean.scope { keep =>
-          val b = keep(batch.toDF()
-            .withColumn("_sh", graft.operators.Dedup.shingleHashes($"text")))
-          val shingled = b.select($"doc_id", $"_sh".as("sh"))
-          // the pending files' schema is the one this gate writes them with
-          def readShingles(files: Seq[String]): DataFrame =
-            spark.read.schema(shingled.schema).parquet(files: _*)
-          // what the two writes will land, counted by the checkpoint itself
-          val counts = org.apache.spark.sql.Observation(s"$queryName-$bid")
-          val kept = step(spark, "gate probe") {
-            val pending = pendingFiles(spark, pendingDir)
-            val index = graft.operators.Dedup.storedIndex(spark, indexTable) +:
-              (if (pending.isEmpty) Nil
-               else Seq(graft.operators.Dedup
-                 .bufferIndex(readShingles(pending), 16, 4)))
-            val dups = graft.operators.Dedup
-              .dedupProbeFrames(index, shingled, 16, 4, minJaccard)
-            // flagged over the whole batch: docs sharing a content hash
-            // share their shingles, hence their verdict, so this equals
-            // flagging the survivors — and runs beside the probe
-            val flagged = graft.sources.IncrementalIngest
-              .flagFresh(b, storeDir, bid)
-            flagged.join(dups, flagged("doc_id") === dups("new_id"), "left_anti")
-              .observe(counts,
-                count(when(col(graft.sources.IncrementalIngest.freshCol), 1))
-                  .as("land"),
-                count(when(size($"_sh") > 0, 1)).as("pending"))
-              .localCheckpoint()
-          }
-          // the checkpoint's blocks are freed when the trigger ends, failed
-          // or not: the session-wide sweep (CacheHygiene.freeTransient)
-          // must not run beside a live stream, and the ContextCleaner frees
-          // them only when it collects the RDD
-          try {
-            val toWrite = counts.get.view.mapValues(_.asInstanceOf[Long]).toMap
-            if (toWrite("land") > 0)
-              landOnce(spark, storeDir, bid, checkpointDir, "gate land") {
-                graft.sources.IncrementalIngest.landBatch(kept.drop("_sh"),
-                  storeDir, bid)
-              }
-            if (toWrite("pending") > 0) step(spark, "gate pending") {
-              kept.filter(size($"_sh") > 0).select($"doc_id", $"_sh".as("sh"))
-                .coalesce(1)
-                .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$pendingDir/$bid.parquet")
-            }
-            val toFold = pendingFiles(spark, pendingDir)
-            if (toFold.size >= growEvery) {
-              step(spark, "gate fold") {
-                graft.operators.Dedup.appendDedupIndexFromShingles(
-                  readShingles(toFold), indexTable, 8, 16, 4)
-                deletePath(spark, pendingDir)
-              }
-              maybeCompact(spark, indexTable, compactAbove)
-            }
-          } finally org.apache.spark.sql.graft.SparkInternals
-            .releaseCheckpointBlocks(kept)
-        }
-      }
-    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
-  }
+      compactAbove: Int = 0): StreamingQuery =
+    gateStream(docs, "gate", indexTable, storeDir, queryName, checkpointDir,
+        compactAbove) { (batch, bid, keep) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val b = keep(batch.withColumn("_sh", Dedup.shingleHashes($"text")))
+      val shingled = b.select($"doc_id", $"_sh".as("sh"))
+      val pending = pendingBuffer(spark, storeDir, shingled.schema)
+      val dups = Dedup.dedupProbeFrames(Dedup.storedIndex(spark, indexTable) +:
+        pending.toSeq.map(Dedup.bufferIndex(_, 16, 4)), shingled, 16, 4, minJaccard)
+      // flagged over the whole batch: docs sharing a content hash share
+      // their shingles, hence their verdict, so this equals flagging the
+      // survivors — and runs beside the probe
+      val flagged = IncrementalIngest.flagFresh(b, storeDir, bid)
+      Trigger(flagged.join(dups, flagged("doc_id") === dups("new_id"), "left_anti"),
+        land = count(when(col(IncrementalIngest.freshCol), 1)),
+        grow = count(when(size($"_sh") > 0, 1)),
+        landed = kept =>
+          IncrementalIngest.landBatch(kept.drop("_sh"), storeDir, bid),
+        growth = Pending(shingled.schema, growEvery,
+          _.filter(size($"_sh") > 0).select($"doc_id", $"_sh".as("sh")),
+          Dedup.appendDedupIndexFromShingles(_, indexTable, 8, 16, 4)))
+    }
 
   /** Streaming SEGMENT near-dup gate — [[dedupStream]]'s contract at
     * PARAGRAPH granularity (d18b made streaming): each micro-batch's
@@ -415,7 +437,9 @@ object StreamingOps {
     * Same replay story: the store lands once per batch id
     * ([[landOnce]]) before the pending write, a replay's docs match
     * themselves so no pending file is rewritten, and the fold is
-    * at-least-once.
+    * at-least-once. The trigger's one checkpoint holds the kept docs,
+    * flagged for the store and tagged with their kept_ratio (null for a
+    * doc with no segment, which has no pending rows either).
     */
   def segmentDedupStream(docs: DataFrame, indexTable: String,
       storeDir: String, width: Int = 10, segKeptRatioMin: Double = 0.5,
@@ -423,87 +447,50 @@ object StreamingOps {
       queryName: String = "graft_segment_gate",
       checkpointDir: Option[String] = None,
       growEvery: Int = 8,
-      compactAbove: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    val pendingDir = s"${storeDir}_idx_pending"
-    val w = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val bid = f"batch$batchId%06d"
-        SelfClean.scope { keep =>
-          val b = keep(batch.toDF())
-          // ONE fused hashing.segmentShingleHashes pass per batch serves probe,
-          // rollup AND index growth (VERDICT r14 #8): the meta frame the
-          // probe persisted is filtered to kept docs for the append —
-          // formerly the batch was segmented + tokenized three times.
-          val meta = keep(graft.operators.Dedup
-            .segmentHashFrame(b.select($"doc_id", $"text"), width))
-          // the pending files' schema is the one this gate writes them with
-          val pend = Some(pendingFiles(spark, pendingDir)).filter(_.nonEmpty)
-            .map(files => spark.read.schema(meta.schema).parquet(files: _*))
-          // stored index and pending buffer: one exact semi-join each, one
-          // shared fuzzy probe over both (Dedup.dedupProbeFrames)
-          val storedOrds = graft.operators.Dedup
-            .segmentDeltaOrdsFromMeta(spark, indexTable, meta, 16, 4,
-              minJaccard, pend.toSeq.map(p => graft.operators.Dedup
-                .bufferIndex(p.select($"ord".as("doc_id"), $"sh"), 16, 4)))
-          val pendOrds = pend.fold(spark.emptyDataset[Long].toDF("ord"))(p =>
-            meta.join(p.select($"h", $"h2"), Seq("h", "h2"), "left_semi")
-              .select($"ord"))
-          val rollup = graft.operators.Dedup.segmentNeardupRollup(
-            meta.select($"doc_id", $"ord"),
-            storedOrds.unionByName(pendOrds).distinct())
-          // ONE probe execution per trigger (see dedupStream): the gated
-          // verdict is doc_id-sized; checkpointing it keeps the ingest
-          // actions and the pending write from each replaying the
-          // stored-table exact+fuzzy probe joins.
-          val gated = step(spark, "segment gate probe") {
-            rollup.filter($"kept_ratio" < segKeptRatioMin)
-              .select($"doc_id").localCheckpoint()
-          }
-          try {
-            val flagged = keep(graft.sources.IncrementalIngest
-              .flagFresh(b.join(gated, Seq("doc_id"), "left_anti"), storeDir, bid))
-            if (!flagged.filter(col(graft.sources.IncrementalIngest.freshCol)).isEmpty)
-              landOnce(spark, storeDir, bid, checkpointDir, "segment gate land") {
-                graft.sources.IncrementalIngest.landBatch(flagged, storeDir, bid)
-              }
-            // the kept docs' segments; a replay's are none (its docs match
-            // themselves), so it leaves the batch's pending file as it was
-            val keptMeta = meta.join(gated, Seq("doc_id"), "left_anti")
-            if (!keptMeta.isEmpty)
-              step(spark, "segment gate pending") {
-                keptMeta.coalesce(1)
-                  .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                  .parquet(s"$pendingDir/$bid.parquet")
-              }
-            val toFold = pendingFiles(spark, pendingDir)
-            if (toFold.size >= growEvery) {
-              step(spark, "segment gate fold") {
-                graft.operators.Dedup.appendSegmentIndexFromMeta(
-                  spark.read.schema(meta.schema).parquet(toFold: _*), indexTable)
-                deletePath(spark, pendingDir)
-              }
-              maybeCompact(spark, indexTable, compactAbove)
-            }
-          } finally org.apache.spark.sql.graft.SparkInternals
-            .releaseCheckpointBlocks(gated)
-        }
-      }
-    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
-  }
+      compactAbove: Int = 0): StreamingQuery =
+    gateStream(docs, "segment gate", indexTable, storeDir, queryName,
+        checkpointDir, compactAbove) { (batch, bid, keep) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val b = keep(batch)
+      // ONE fused hashing.segmentShingleHashes pass per batch serves probe,
+      // rollup AND index growth (VERDICT r14 #8): the meta frame the
+      // probe persisted is filtered to kept docs for the append —
+      // formerly the batch was segmented + tokenized three times.
+      val meta = keep(Dedup.segmentHashFrame(b.select($"doc_id", $"text"), width))
+      val pend = pendingBuffer(spark, storeDir, meta.schema)
+      // stored index and pending buffer: one exact semi-join each, one
+      // shared fuzzy probe over both (Dedup.dedupProbeFrames)
+      val storedOrds = Dedup.segmentDeltaOrdsFromMeta(spark, indexTable, meta,
+        16, 4, minJaccard, pend.toSeq.map(p =>
+          Dedup.bufferIndex(p.select($"ord".as("doc_id"), $"sh"), 16, 4)))
+      val pendOrds = pend.fold(spark.emptyDataset[Long].toDF("ord"))(p =>
+        meta.join(p.select($"h", $"h2"), Seq("h", "h2"), "left_semi")
+          .select($"ord"))
+      val ratio = Dedup.segmentNeardupRollup(meta.select($"doc_id", $"ord"),
+        storedOrds.unionByName(pendOrds).distinct())
+        .select($"doc_id", $"kept_ratio".as("_kr"))
+      val kept = b.join(ratio, Seq("doc_id"), "left")
+        .filter($"_kr".isNull || $"_kr" >= segKeptRatioMin)
+      Trigger(IncrementalIngest.flagFresh(kept, storeDir, bid),
+        land = count(when(col(IncrementalIngest.freshCol), 1)),
+        grow = count($"_kr"),
+        landed = k => IncrementalIngest.landBatch(k.drop("_kr"), storeDir, bid),
+        growth = Pending(meta.schema, growEvery,
+          k => meta.join(k.filter($"_kr".isNotNull).select($"doc_id"),
+            Seq("doc_id"), "left_semi"),
+          Dedup.appendSegmentIndexFromMeta(_, indexTable)))
+    }
 
   /** Streaming SUBSTRING-SPAN dedup — the rewrite member of the
     * streaming dedup family (doc gate [[dedupStream]], paragraph gate
     * [[segmentDedupStream]], vector gate [[semanticDedupStream]]):
-    * each micro-batch's docs are REWRITTEN via
-    * `Dedup.substringRewriteDelta` — every ≥ k-token run already owned
-    * by the stored gram index (or by an earlier occurrence within the
-    * batch) is stripped — then land in the store; their own grams grow
-    * the index (marker-guarded) so batch N+1's copies of batch N's text
-    * are stripped too. Docs are never dropped here; a downstream
+    * each micro-batch's docs are REWRITTEN as
+    * `Dedup.substringRewriteDelta` does — every ≥ k-token run already
+    * owned by the stored gram index (or by an earlier occurrence within
+    * the batch) is stripped — then land in the store; their own grams
+    * grow the index (marker-guarded) so batch N+1's copies of batch N's
+    * text are stripped too. Docs are never dropped here; a downstream
     * quality gate owns docs gutted below its floor.
     *
     * Idempotence: rewrite-before-grow means a REPLAYED batch's text
@@ -517,46 +504,24 @@ object StreamingOps {
       storeDir: String, k: Int = 20,
       queryName: String = "graft_substring_gate",
       checkpointDir: Option[String] = None,
-      compactAbove: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val bid = f"batch$batchId%06d"
-        SelfClean.scope { keep =>
-          val b = keep(batch.toDF())
-          val rewritten = graft.operators.Dedup
-            .substringRewriteDelta(spark, indexTable,
-              b.select($"doc_id", $"text"), k)
-          try {
-            val cleaned = keep(b.drop("text")
-              .join(rewritten.select($"doc_id", $"cleaned".as("text")),
-                Seq("doc_id")))
-            if (!cleaned.isEmpty) {
-              landOnce(spark, storeDir, bid, checkpointDir, "substring gate land") {
-                cleaned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                  .parquet(s"$storeDir/$bid.parquet")
-              }
-              val marker = s"${storeDir}_idx_marked/$bid"
-              if (!pathExists(spark, marker)) {
-                // grow from the ORIGINAL batch text: the keeper copy of a
-                // novel run survives the rewrite and must be indexed; using
-                // b (not cleaned) also keeps a replay's grams identical
-                graft.operators.Dedup.writeSubstringIndex(
-                  b.select($"doc_id", $"text"), indexTable, k,
-                  mode = org.apache.spark.sql.SaveMode.Append)
-                touchMarker(spark, marker)
-                maybeCompact(spark, indexTable, compactAbove)
-              }
-            }
-          } finally org.apache.spark.sql.graft.SparkInternals
-            .releaseCheckpointBlocks(rewritten)
-        }
-      }
-    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
-  }
+      compactAbove: Int = 0): StreamingQuery =
+    gateStream(docs, "substring gate", indexTable, storeDir, queryName,
+        checkpointDir, compactAbove) { (batch, bid, keep) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val b = keep(batch)
+      val rewritten = Dedup.substringRewriteIn(spark, indexTable,
+        b.select($"doc_id", $"text"), k, keep)
+      Trigger(b.drop("text")
+          .join(rewritten.select($"doc_id", $"cleaned".as("text")), Seq("doc_id")),
+        land = count(lit(1)), grow = count(lit(1)),
+        landed = _.write.mode(SaveMode.Overwrite).parquet(s"$storeDir/$bid.parquet"),
+        // grow from the ORIGINAL batch text: the keeper copy of a novel
+        // run survives the rewrite and must be indexed; using b (not the
+        // rewrite) also keeps a replay's grams identical
+        growth = Marked(_ => Dedup.writeSubstringIndex(
+          b.select($"doc_id", $"text"), indexTable, k, mode = SaveMode.Append)))
+    }
 
   /** Streaming SEMANTIC dedup gate — [[dedupStream]]'s contract for
     * embedding batches: each micro-batch is probed with
@@ -570,7 +535,11 @@ object StreamingOps {
     * batch id ([[landOnce]]); index growth is marker-guarded per batch
     * id; a replay after partial failure re-appends, leaving at worst
     * duplicate index rows that semanticDelta collapses; probe-before-grow
-    * gates a replayed batch's vectors against themselves.
+    * gates a replayed batch's vectors against themselves — after a
+    * partial index append the replayed kept set SHRINKS, hence the
+    * write-once landing. The stored-index probe runs once per trigger:
+    * the trigger's checkpoint holds the kept vectors that the store
+    * write and the index append both read.
     *
     * `planes` MUST match the value the index was written with — a
     * mismatched plane count produces signatures from a different bit
@@ -579,6 +548,11 @@ object StreamingOps {
     * (written by writeSemanticIndex, r15) so probe and growth append
     * agree by construction; an explicit value pins it for pre-sidecar
     * indexes.
+    *
+    * Under an `audit` (the q39 embeddings block as an admission gate),
+    * degenerate vectors — NULL components (crash typed training),
+    * non-finite, zero, ragged — dead-letter per batch id with their tags
+    * ([[admit]]) and only the clean vectors reach the probe.
     */
   def semanticDedupStream(vectors: DataFrame, indexTable: String,
       storeDir: String, minCos: Double = 0.99,
@@ -586,57 +560,21 @@ object StreamingOps {
       queryName: String = "graft_semantic_gate",
       checkpointDir: Option[String] = None,
       compactAbove: Int = 0,
-      audit: Option[graft.pipeline.Relational.AdmissionChecks] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = vectors.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val bid = f"batch$batchId%06d"
-        // audit-then-admit for the VECTOR stream (the q39 embeddings
-        // block as an admission gate): degenerate vectors — NULL
-        // components (crash typed training), non-finite, zero, ragged —
-        // dead-letter per batch id with their tags; clean vectors flow
-        // to the probe. DLQ write is bid-keyed Overwrite → replay
-        // rewrites the identical file.
-        SelfClean.scope { keep =>
-          val b = keep(audit.fold(batch.toDF()) { checks =>
-            val audited = graft.pipeline.Relational
-              .admissionAudit(batch.toDF(), checks)
-            val bad = audited.filter(size($"_violations") > 0)
-            if (!bad.isEmpty)
-              bad.coalesce(1)
-                .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"${storeDir}_dlq/$bid.parquet")
-            audited.filter(size($"_violations") === 0).drop("_violations")
-          })
-          val dupIds = graft.operators.Dedup
-            .semanticDelta(spark, indexTable, b,
-              planes = planes, nprobe = nprobe, minCos = minCos)
-            .select($"new_id".as("vec_id")).distinct()
-          val kept = keep(b.join(dupIds, Seq("vec_id"), "left_anti"))
-          val marker = s"${storeDir}_idx_marked/$bid"
-          if (!kept.isEmpty) {
-            // after a partial index append, the replayed batch's kept set
-            // SHRINKS (probe-before-grow gates vectors against their own
-            // partial index rows), hence the write-once landing
-            landOnce(spark, storeDir, bid, checkpointDir, "semantic gate land") {
-              kept.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .parquet(s"$storeDir/$bid.parquet")
-            }
-            if (!pathExists(spark, marker)) {
-              graft.operators.Dedup.appendSemanticIndex(
-                kept.select($"vec_id", $"embedding"), indexTable,
-                planes = planes)
-              touchMarker(spark, marker)
-              maybeCompact(spark, indexTable, compactAbove)
-            }
-          }
-        }
-      }
-    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
-  }
+      audit: Option[AdmissionChecks] = None): StreamingQuery =
+    gateStream(vectors, "semantic gate", indexTable, storeDir, queryName,
+        checkpointDir, compactAbove) { (batch, bid, keep) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val b = audit.fold(keep(batch))(admit(batch, bid, storeDir, _, keep)._1)
+      val dupIds = Dedup.semanticDelta(spark, indexTable, b,
+          planes = planes, nprobe = nprobe, minCos = minCos)
+        .select($"new_id".as("vec_id")).distinct()
+      Trigger(b.join(dupIds, Seq("vec_id"), "left_anti"),
+        land = count(lit(1)), grow = count(lit(1)),
+        landed = _.write.mode(SaveMode.Overwrite).parquet(s"$storeDir/$bid.parquet"),
+        growth = Marked(kept => Dedup.appendSemanticIndex(
+          kept.select($"vec_id", $"embedding"), indexTable, planes = planes)))
+    }
 
   /** File-source ingest: watch a directory for new parquet drops (the
     * streaming form of the reference's "scan the download folder each run"
@@ -647,7 +585,7 @@ object StreamingOps {
   def fileIngest(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, sourceWhitelist: DataFrame,
       minChars: Int = 10,
-      audit: Option[graft.pipeline.Relational.AdmissionChecks] = None): org.apache.spark.sql.streaming.StreamingQuery = {
+      audit: Option[AdmissionChecks] = None): StreamingQuery = {
     import spark.implicits._
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
@@ -669,7 +607,7 @@ object StreamingOps {
         gated.writeStream
           .outputMode(OutputMode.Append)
           .option("checkpointLocation", checkpointDir)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
             auditAndLand(batch.toDF(), f"batch$batchId%06d", outDir, checks)
             ()
           }

@@ -41,6 +41,8 @@ object hashing {
   // The kernels below are the static methods KernelCall invokes: every
   // argument is non-null (a null input yields null before the call), and
   // the result's Catalyst type is the one its GraftFunctions entry declares.
+  // A null ELEMENT of a hashed token array is skipped, so each hashing
+  // kernel f keeps f(arr) == f(filter(arr, x -> x IS NOT NULL)).
 
   /** Sequential dot product over the common prefix of two double arrays —
     * the same left-to-right summation as the DuckDB oracle's `list_sum`,
@@ -90,12 +92,14 @@ object hashing {
     val mins = Array.fill(k)(Long.MaxValue)
     var j = 0
     while (j < n) {
-      val base = hashUtf8(arr.getUTF8String(j), 42L)
-      var i = 0
-      while (i < k) {
-        val h = mix64(base ^ (i.toLong * 0x9e3779b97f4a7c15L))
-        if (h < mins(i)) mins(i) = h
-        i += 1
+      if (!arr.isNullAt(j)) {
+        val base = hashUtf8(arr.getUTF8String(j), 42L)
+        var i = 0
+        while (i < k) {
+          val h = mix64(base ^ (i.toLong * 0x9e3779b97f4a7c15L))
+          if (h < mins(i)) mins(i) = h
+          i += 1
+        }
       }
       j += 1
     }
@@ -110,11 +114,13 @@ object hashing {
     val counts = new Array[Int](64)
     var j = 0
     while (j < n) {
-      val h = hashUtf8(arr.getUTF8String(j), 42L)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        b += 1
+      if (!arr.isNullAt(j)) {
+        val h = hashUtf8(arr.getUTF8String(j), 42L)
+        var b = 0
+        while (b < 64) {
+          if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
+          b += 1
+        }
       }
       j += 1
     }
@@ -213,11 +219,14 @@ object hashing {
     * 8.2 s → sub-second at sf0.1).
     */
   def winnowFingerprints(arr: ArrayData, window: Int): ArrayData = {
-    val n = arr.numElements()
-    if (n == 0) return new GenericArrayData(Array.empty[Any])
-    val hashes = new Array[Long](n)
+    val hashes = new Array[Long](arr.numElements())
+    var n = 0
     var i = 0
-    while (i < n) { hashes(i) = hashUtf8(arr.getUTF8String(i), 42L); i += 1 }
+    while (i < hashes.length) {
+      if (!arr.isNullAt(i)) { hashes(n) = hashUtf8(arr.getUTF8String(i), 42L); n += 1 }
+      i += 1
+    }
+    if (n == 0) return new GenericArrayData(Array.empty[Any])
     val m = math.max(n - window + 1, 1)
     val seen = new java.util.LinkedHashSet[java.lang.Long](m)
     i = 0
@@ -588,17 +597,22 @@ object hashing {
     * via a linear merge walk on the term strings — the verify stage of
     * all-pairs similarity search calls this once per candidate pair, so
     * no per-pair hash map is ever built. Terms must be sorted ascending
-    * (binary UTF8 order, the same order sort_array produces).
+    * (binary UTF8 order, the same order sort_array produces); a null term
+    * is skipped with its weight.
     */
   def sortedWeightedDot(ta: ArrayData, wa: ArrayData,
       tb: ArrayData, wb: ArrayData): Double = {
     val na = ta.numElements(); val nb = tb.numElements()
     var i = 0; var j = 0; var acc = 0.0
     while (i < na && j < nb) {
-      val c = ta.getUTF8String(i).compareTo(tb.getUTF8String(j))
-      if (c == 0) { acc += wa.getDouble(i) * wb.getDouble(j); i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
+      if (ta.isNullAt(i)) i += 1
+      else if (tb.isNullAt(j)) j += 1
+      else {
+        val c = ta.getUTF8String(i).compareTo(tb.getUTF8String(j))
+        if (c == 0) { acc += wa.getDouble(i) * wb.getDouble(j); i += 1; j += 1 }
+        else if (c < 0) i += 1
+        else j += 1
+      }
     }
     acc
   }

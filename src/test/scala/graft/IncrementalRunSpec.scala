@@ -223,4 +223,32 @@ class IncrementalRunSpec extends SparkSpec {
     assert(s2.nNewIds == 0 && s2.nIngested == 0)
     assert(spark.read.parquet(rollup).collect().toSeq == before)
   }
+
+  test("two passes over file:// store, meta and rollup URIs give the plain-path state") {
+    def feed(ids: Seq[Long]) = ids.map(i => doc(i, if (i % 2 == 0) "A" else "B"))
+      .toDF("doc_id", "source", "text")
+    // pass 2 re-sends pass 1's ids, adds five, and one id whose content
+    // duplicates a stored doc
+    val feed2 = feed(1L to 15L).unionByName(
+      Seq((99L, "A", "unique content 3")).toDF("doc_id", "source", "text"))
+    def passes(prefix: String) = {
+      val root = Files.createTempDirectory("graft_irun_uri_").toString
+      val (store, meta, rollup) =
+        (s"$prefix$root/store", s"$prefix$root/meta", s"$prefix$root/rollup")
+      val summaries = Seq(
+        IncrementalRun.run(spark, feed(1L to 10L), store, meta, rollup, "b0001"),
+        IncrementalRun.run(spark, feed2, store, meta, rollup, "b0002"))
+      (summaries,
+        spark.read.parquet(meta).as[(Long, String, String, String)]
+          .collect().toSeq.sorted,
+        spark.read.parquet(s"$store/*.parquet")
+          .select("doc_id", "source", "text", "content_hash", "date_processed")
+          .as[(Long, String, String, String, String)].collect().toSeq.sorted,
+        spark.read.parquet(rollup).as[(String, Long, Long)].collect().toSeq.sorted)
+    }
+    val plain = passes("")
+    assert(plain._1.map(_.nNewIds) == Seq(10L, 6L) && plain._4.map(_._2).sum == 15L,
+      s"plain-path run: $plain")
+    assert(passes("file://") == plain)
+  }
 }

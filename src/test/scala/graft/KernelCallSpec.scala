@@ -29,7 +29,8 @@ class KernelCallSpec extends SparkSpec {
   private val tokenArrays: Seq[Seq[String]] = Seq(null, Seq(), Seq(""),
     Seq("", ""), Seq("a", "a", "b", "b", "a"), Seq("😀", "e\u0301", "😀"),
     Seq(longToken, longToken, "y"), Seq(" ", "\t", " "),
-    "the quick brown fox jumps over the lazy dog".split(" ").toSeq)
+    "the quick brown fox jumps over the lazy dog".split(" ").toSeq,
+    Seq("a", null, "b"), Seq(null), Seq(null, null, "a", null))
   private val vectors: Seq[Seq[Double]] = Seq(null, Seq(), Seq(Double.NaN),
     Seq(0.0, -0.0), Seq(-0.0), Seq(Double.PositiveInfinity,
       Double.NegativeInfinity, 1.0), Seq(1e308, 1e308, -1e308),
@@ -48,7 +49,8 @@ class KernelCallSpec extends SparkSpec {
   private val termVectors: Seq[(Seq[String], Seq[Double])] = Seq((null, null),
     (Seq(), Seq()), (Seq("a", "b", "😀"), Seq(Double.NaN, -0.0, 1.5)),
     (Seq("a", "c"), Seq(Double.PositiveInfinity, 2.0)),
-    (Seq("", "b", "c"), Seq(-0.0, 0.25, Double.NegativeInfinity)))
+    (Seq("", "b", "c"), Seq(-0.0, 0.25, Double.NegativeInfinity)),
+    (Seq(null, "a", "c"), Seq(5.0, 1.0, 2.0)), (Seq(null), Seq(3.0)))
 
   /** One row per hostile text; every other column cycles through its own
     * hostile values, offset so different combinations meet. The frame is
@@ -226,6 +228,37 @@ class KernelCallSpec extends SparkSpec {
       assert(field.name == name)
       assert(shape(field.dataType) == dataType, field.name)
     }
+  }
+
+  test("hashing kernels skip null elements: f(arr) == f(filter(arr, x -> x IS NOT NULL))") {
+    GraftExtensions.register(spark)
+    val arrays = Seq("array('a', null)", "array(null, 'a', 'b', null, 'c', 'a')",
+      "array(cast(null AS string))", "array(cast(null AS string), null, null)",
+      "array('u', 'v', null, 'w', 'x', null, 'y')")
+    val calls = Seq("graft_minhash_sig(%s, 8)", "graft_simhash64(%s)",
+      "graft_winnow_fingerprints(%s, 2)")
+    for (a <- arrays; call <- calls) {
+      def eval(arg: String) = bits(spark.sql(s"SELECT ${call.format(arg)}").head().get(0))
+      assert(eval(a) == eval(s"filter($a, x -> x IS NOT NULL)"), call.format(a))
+    }
+    // sorted_weighted_dot has no SQL name: through its Column function,
+    // where filtering drops a null term together with its weight
+    def terms(t: String*): Seq[String] = t
+    val vecs = Seq(
+      (terms(null, "a", "b"), Seq(5.0, 1.0, 2.0), terms(null, "a", "c"), Seq(7.0, 3.0, 4.0)),
+      (terms(null), Seq(2.0), terms("a"), Seq(1.0)),
+      (terms("a", "b"), Seq(1.5, 2.5), terms(null, null, "b"), Seq(9.0, 9.0, 2.0)))
+    def nonNull(t: Seq[String], w: Seq[Double]) = t.zip(w).filter(_._1 != null).unzip
+    val rows = vecs.map { case (ta, wa, tb, wb) =>
+      val ((fa, fwa), (fb, fwb)) = (nonNull(ta, wa), nonNull(tb, wb))
+      (ta, wa, tb, wb, fa, fwa, fb, fwb)
+    }
+    val got = rows.toDF("ta", "wa", "tb", "wb", "fa", "fwa", "fb", "fwb")
+      .select(sorted_weighted_dot($"ta", $"wa", $"tb", $"wb"),
+        sorted_weighted_dot($"fa", $"fwa", $"fb", $"fwb"))
+      .as[(Double, Double)].collect().toSeq
+    assert(got.map(_._1) == Seq(3.0, 0.0, 5.0), got)
+    got.foreach { case (withNulls, filtered) => assert(bits(withNulls) == bits(filtered)) }
   }
 
   test("every registered graft_* SQL function rejects a wrong-typed argument") {

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * when it exits, so a raw persist fails here too. And a pure kernel is
   * a static method reached through `KernelCall`, so a new hand-written
   * Catalyst expression class has to be added to an allow-list on
-  * purpose.
+  * purpose. And every streaming trigger runs through StreamingOps' one
+  * trigger skeleton, so a hand-rolled `foreachBatch` fails here.
   */
 class OptionSurfaceSpec extends AnyFunSuite {
 
@@ -73,6 +74,31 @@ class OptionSurfaceSpec extends AnyFunSuite {
     // hand a live cache back to its caller
     assert(calling.isEmpty,
       s"a persist outside SelfClean.scope: ${calling.mkString(", ")}")
+  }
+
+  test("only the trigger skeleton and fileIngest's audit branch call foreachBatch") {
+    val files = sources(new java.io.File("src/main/scala"))
+    assert(files.nonEmpty, "run from the repository root")
+    // enclosing def -> why it may start a foreachBatch stream
+    val allowed = Map(
+      "eachBatch" -> "the trigger scope of the ingest, rollup and gate streams",
+      "fileIngest" -> "its audit branch, a stream with no query name")
+    val call = """\.foreachBatch\s*[({]""".r
+    val defn = """\bdef\s+(\w+)""".r
+    def read(f: java.io.File) =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val callers = files.flatMap { f =>
+      val src = read(f)
+      call.findAllMatchIn(src).map(m => f.getName ->
+        defn.findAllMatchIn(src.take(m.start)).map(_.group(1)).toSeq.lastOption
+          .getOrElse("")).toSeq
+    }
+    assert(callers.sorted == allowed.keys.toSeq.sorted.map("StreamingOps.scala" -> _),
+      s"a foreachBatch outside the trigger skeleton: ${callers.mkString(", ")}")
+    // the gate skeleton's finally is the one place a trigger checkpoint is freed
+    val ops = files.find(_.getName == "StreamingOps.scala").map(read).get
+    assert("""releaseCheckpointBlocks\(""".r.findAllMatchIn(ops).toList.size == 1,
+      "StreamingOps frees a trigger checkpoint outside the gate skeleton")
   }
 
   test("org.apache.spark.sql.graft declares only the allowed Expression classes") {

@@ -208,7 +208,8 @@ class SimilaritySpec extends SparkSpec {
       "slice/element_at ADC column") {
     // r18 optimization pin: the fused per-row loop must reproduce the
     // former composed expression EXACTLY (same dots, same fold order) —
-    // java.lang.Double.doubleToRawLongBits-level equality via ===.
+    // java.lang.Double.doubleToRawLongBits-level equality, compared on the
+    // driver below.
     import org.apache.spark.sql.graft.GraftFunctions
     val emb = Tables.embeddings(spark, sf)
     val coarse = graft.operators.IvfIndex.train(emb, 8, 1)

@@ -658,41 +658,57 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_ckleak_").toString
     def ws(tag: String, n: Int): String = (0 until n).map(i => s"$tag$i").mkString(" ")
+    def oneHot(d: Int): Seq[Float] = Seq.tabulate(64)(j => if (j == d) 1f else 0f)
     val seed = Seq(0L -> ws("s", 40)).toDF("doc_id", "text")
     graft.operators.Dedup.writeDedupIndex(seed, "ckleak_doc")
     graft.operators.Dedup.writeSegmentIndex(seed, "ckleak_seg")
     graft.operators.Dedup.writeSubstringIndex(seed, "ckleak_sub", k = 20)
-    val gates: Seq[(String, org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.streaming.StreamingQuery)] = Seq(
-      "dedupStream" -> (StreamingOps.dedupStream(_, "ckleak_doc", s"$dir/doc")),
-      "segmentDedupStream" ->
-        (StreamingOps.segmentDedupStream(_, "ckleak_seg", s"$dir/seg")),
-      "substringDedupStream" ->
-        (StreamingOps.substringDedupStream(_, "ckleak_sub", s"$dir/sub", k = 20)))
+    graft.operators.Dedup.writeSemanticIndex(
+      GenCorpus.generateEmbeddings(spark, 10), "ckleak_sem")
     def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val leaks = gates.flatMap { case (name, gate) =>
+    /** Runs `gate` over batches of the ids given, as `row(id)` each. */
+    def leaksOf[T: org.apache.spark.sql.Encoder](name: String, row: Long => T)(
+        gate: org.apache.spark.sql.DataFrame =>
+          org.apache.spark.sql.streaming.StreamingQuery): Seq[String] = {
       val before = persistentRdds
-      def run(batches: Seq[(Long, String)]*): Unit = {
-        val mem = MemoryStream[(Long, String)]
-        val q = gate(mem.toDF().toDF("doc_id", "text"))
-        try batches.foreach { rows => mem.addData(rows: _*); q.processAllAvailable() }
+      def run(batches: Seq[Long]*): Unit = {
+        val mem = MemoryStream[T]
+        val q = gate(mem.toDF())
+        try batches.foreach { ids => mem.addData(ids.map(row): _*); q.processAllAvailable() }
         finally q.stop()
       }
       // three triggers: two novel batches and a copy of the first
-      run(Seq(1L -> ws("a", 40)), Seq(2L -> ws("b", 40)), Seq(3L -> ws("a", 40)))
+      run(Seq(1L), Seq(2L), Seq(3L))
       val afterRun = persistentRdds -- before
+      assert(org.apache.spark.sql.graft.SparkInternals.cacheIsEmpty(spark),
+        s"$name left a frame cached after a run of triggers")
       // a second run without its checkpointDir fails its first trigger
       // (batch000000 is committed) after the probe's checkpoint is made
       intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-        run(Seq(4L -> ws("c", 40))))
+        run(Seq(4L)))
       val afterFailure = persistentRdds -- before -- afterRun
+      assert(org.apache.spark.sql.graft.SparkInternals.cacheIsEmpty(spark),
+        s"$name left a frame cached after a failed trigger")
       Seq(s"$name after a run of triggers: $afterRun",
         s"$name after a failed trigger: $afterFailure")
         .zip(Seq(afterRun, afterFailure)).collect { case (m, l) if l.nonEmpty => m }
     }
+    // id 3 copies id 1's content
+    val tag = Map(1L -> 1, 2L -> 2, 3L -> 1, 4L -> 4)
+    val text = (id: Long) => id -> ws(s"t${tag(id)}_", 40)
+    val vec = (id: Long) => id -> oneHot(tag(id))
+    val leaks = leaksOf("dedupStream", text)(df => StreamingOps.dedupStream(
+        df.toDF("doc_id", "text"), "ckleak_doc", s"$dir/doc")) ++
+      leaksOf("segmentDedupStream", text)(df => StreamingOps.segmentDedupStream(
+        df.toDF("doc_id", "text"), "ckleak_seg", s"$dir/seg")) ++
+      leaksOf("substringDedupStream", text)(df => StreamingOps.substringDedupStream(
+        df.toDF("doc_id", "text"), "ckleak_sub", s"$dir/sub", k = 20)) ++
+      leaksOf("semanticDedupStream", vec)(df => StreamingOps.semanticDedupStream(
+        df.toDF("vec_id", "embedding"), "ckleak_sem", s"$dir/sem"))
     assert(leaks.isEmpty, s"persistent RDDs left behind: ${leaks.mkString("; ")}")
     Seq("ckleak_doc_bands", "ckleak_doc_shingles", "ckleak_seg_bands",
-      "ckleak_seg_shingles", "ckleak_seg_segdigests", "ckleak_sub_grams")
+      "ckleak_seg_shingles", "ckleak_seg_segdigests", "ckleak_sub_grams",
+      "ckleak_sem_vecs", "ckleak_sem_vecmeta")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
@@ -760,6 +776,115 @@ class StreamingSpec extends SparkSpec {
     assert(pendingRows() == pending, "the replay changed the pending buffer")
     Seq("bands", "shingles", "segdigests").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS sreplay_idx_$t"))
+    spark.catalog.clearCache()
+  }
+
+  /** Stages `rows` in `inDir` as one parquet file `name`, for a file
+    * source that takes one file per trigger.
+    */
+  private def stageFile(inDir: String, name: String,
+      rows: org.apache.spark.sql.DataFrame): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stage_").toString
+    rows.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(inDir, name))
+    ()
+  }
+
+  test("substring gate replay of an uncommitted batch leaves the store and the gram index unchanged") {
+    val root = java.nio.file.Files.createTempDirectory("graft_breplay_").toString
+    val (inDir, ck, store) = (s"$root/in", s"$root/ck", s"$root/store")
+    new java.io.File(inDir).mkdirs()
+    spark.sql("DROP TABLE IF EXISTS breplay_idx_grams")
+    def ws(tag: String, n: Int): Seq[String] = (0 until n).map(i => s"$tag$i")
+    val (runR, runC) = (ws("rr", 20), ws("cc", 20))
+    graft.operators.Dedup.writeSubstringIndex(
+      Seq(1L -> (runR ++ ws("s", 10)).mkString(" ")).toDF("doc_id", "text"),
+      "breplay_idx", k = 20)
+    def stage(name: String, rows: (Long, Seq[String])*): Unit =
+      stageFile(inDir, name, rows.map { case (id, t) => id -> t.mkString(" ") }
+        .toDF("doc_id", "text"))
+    // batch 0: a copy of the seed run and a novel run C; batch 1: a copy
+    // of run C and a fresh doc; batch 2: a fresh run H and its copy, so
+    // the replay of batch 2 would strip H from doc 300 against its own
+    // grams
+    stage("f1.parquet", 100L -> (ws("a", 4) ++ runR ++ ws("b", 6)),
+      101L -> (runC ++ ws("d", 8)))
+    stage("f2.parquet", 200L -> (ws("e", 5) ++ runC ++ ws("f", 5)),
+      201L -> ws("g", 25))
+    stage("f3.parquet", 300L -> ws("h", 30), 301L -> (ws("i", 3) ++ ws("h", 30)))
+    def gate() = StreamingOps.substringDedupStream(
+      spark.readStream.schema("doc_id BIGINT, text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(inDir),
+      "breplay_idx", store, k = 20, queryName = "graft_substring_gate_replay",
+      checkpointDir = Some(ck))
+    def storeRows() = spark.read.parquet(s"$store/*.parquet")
+      .select($"doc_id", $"text").as[(Long, String)].collect().toSeq.sorted
+    def indexRows() = {
+      spark.catalog.refreshTable("breplay_idx_grams")
+      spark.table("breplay_idx_grams").count()
+    }
+    val q1 = gate()
+    q1.processAllAvailable(); q1.stop()
+    val (stored, grams) = (storeRows(), indexRows())
+    assert(stored.map(_._1) == Seq(100L, 101L, 200L, 201L, 300L, 301L))
+    assert(stored.toMap.apply(200L) == (ws("e", 5) ++ ws("f", 5)).mkString(" "))
+    assert(stored.toMap.apply(301L) == ws("i", 3).mkString(" "))
+    // crash after batch 2's writes, before its commit: the restart
+    // replays batch 2 from its logged offsets
+    Seq("2", ".2.crc").foreach(f => new java.io.File(s"$ck/commits/$f").delete())
+    val q2 = gate()
+    q2.processAllAvailable(); q2.stop()
+    assert(q2.recentProgress.exists(p => p.batchId == 2 && p.numInputRows == 2),
+      "the restart must replay batch 2")
+    assert(storeRows() == stored, "the replay changed the store")
+    assert(indexRows() == grams, "the replay grew the gram index a second time")
+    spark.sql("DROP TABLE IF EXISTS breplay_idx_grams")
+    spark.catalog.clearCache()
+  }
+
+  test("semantic gate replay of an uncommitted batch leaves the store and the vector index unchanged") {
+    val root = java.nio.file.Files.createTempDirectory("graft_vreplay_").toString
+    val (inDir, ck, store) = (s"$root/in", s"$root/ck", s"$root/store")
+    new java.io.File(inDir).mkdirs()
+    Seq("_vecs", "_vecmeta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS vreplay_idx$t"))
+    graft.operators.Dedup.writeSemanticIndex(
+      GenCorpus.generateEmbeddings(spark, 10), "vreplay_idx")
+    def oneHot(d: Int): Seq[Float] = Seq.tabulate(64)(j => if (j == d) 1f else 0f)
+    def nudge(v: Seq[Float]): Seq[Float] = (v.head + 0.01f) +: v.tail
+    def stage(name: String, rows: (Long, Seq[Float])*): Unit =
+      stageFile(inDir, name, rows.toDF("vec_id", "embedding"))
+    // batch 0: two novel vectors; batch 1: a nudge of batch 0's vector 100
+    // and a novel one; batch 2: two novel vectors and a zero vector,
+    // which matches nothing, itself included, so it survives its replay
+    stage("f1.parquet", 100L -> oneHot(1), 101L -> oneHot(2))
+    stage("f2.parquet", 200L -> nudge(oneHot(1)), 201L -> oneHot(3))
+    stage("f3.parquet", 300L -> oneHot(4), 301L -> oneHot(5),
+      302L -> Seq.fill(64)(0f))
+    def gate() = StreamingOps.semanticDedupStream(
+      spark.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
+        .option("maxFilesPerTrigger", 1).parquet(inDir),
+      "vreplay_idx", store, queryName = "graft_semantic_gate_replay",
+      checkpointDir = Some(ck))
+    def storeRows() = spark.read.parquet(s"$store/*.parquet")
+      .select("vec_id").as[Long].collect().toSeq.sorted
+    def indexRows() = {
+      spark.catalog.refreshTable("vreplay_idx_vecs")
+      spark.table("vreplay_idx_vecs").count()
+    }
+    val q1 = gate()
+    q1.processAllAvailable(); q1.stop()
+    val (stored, vecs) = (storeRows(), indexRows())
+    assert(stored == Seq(100L, 101L, 201L, 300L, 301L, 302L), s"stored $stored")
+    Seq("2", ".2.crc").foreach(f => new java.io.File(s"$ck/commits/$f").delete())
+    val q2 = gate()
+    q2.processAllAvailable(); q2.stop()
+    assert(q2.recentProgress.exists(p => p.batchId == 2 && p.numInputRows == 3),
+      "the restart must replay batch 2")
+    assert(storeRows() == stored, "the replay changed the store")
+    assert(indexRows() == vecs, "the replay grew the vector index a second time")
+    Seq("_vecs", "_vecmeta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS vreplay_idx$t"))
     spark.catalog.clearCache()
   }
 
@@ -1042,6 +1167,29 @@ class StreamingSpec extends SparkSpec {
       .orderBy("source").as[(String, Long, Long)].collect().toSeq
     assert(merged == scratch, s"merged=$merged scratch=$scratch")
     assert(merged.map(_._2).sum == 4, "replayed content must not count")
+  }
+
+  test("streaming rollup merge tracks a file:// store and rollup") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream => MS}
+    val root = java.nio.file.Files.createTempDirectory("graft_rolluri_").toString
+    val (store, rollup) = (s"file://$root/store", s"file://$root/rollup")
+    val mem = MS[(Long, String, String)]
+    val q = StreamingOps.rollupStream(
+      mem.toDF().toDF("doc_id", "source", "text"), store, rollup)
+    mem.addData((1L, "A", "alpha"), (2L, "A", "beta"), (3L, "B", "gamma"))
+    q.processAllAvailable()
+    mem.addData((4L, "B", "alpha"), (5L, "B", "delta"))
+    q.processAllAvailable()
+    q.stop()
+    val scratch = graft.pipeline.IncrementalAgg.sourceAgg(
+      spark.read.parquet(store + "/*.parquet")
+        .select($"source", length($"text").cast("long").as("n_chars")))
+      .orderBy("source").as[(String, Long, Long)].collect().toSeq
+    assert(scratch.map(_._2).sum == 4)
+    val merged = spark.read.parquet(rollup)
+      .orderBy("source").as[(String, Long, Long)].collect().toSeq
+    assert(merged == scratch, s"merged=$merged scratch=$scratch")
   }
 
   test("checkpointed ingest restart: each file lands exactly once across restarts") {
