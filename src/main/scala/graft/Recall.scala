@@ -109,7 +109,7 @@ object Recall {
     val methods = Seq[(String, () => DataFrame)](
       ("s02_knn_lsh", () => operators.Similarity.knnLsh(spark, sfDir, k = k)),
       ("s02b_knn_multiprobe",
-        () => operators.Similarity.knnLshMultiprobe(spark, sfDir, k = k)),
+        () => operators.Similarity.knnLsh(spark, sfDir, k = k, nprobe = 8)),
       ("s04_knn_ivf", () => operators.IvfIndex.knnIvf(spark, sfDir, k = k)),
       ("s05_knn_quantized",
         () => operators.Similarity.knnQuantized(spark, sfDir, k = k)),

@@ -360,12 +360,12 @@ object ScaleProbe {
       // claim is recall bought by query-side probes alone, corpus index
       // untouched (s02b) / a bounded probe-side expansion (d11b).
       time(s"knn_multiprobe_x$mult") {
-        operators.Similarity.knnLshMultiprobe(spark, sfDir).count()
+        operators.Similarity.knnLsh(spark, sfDir, nprobe = 8).count()
       }
       locally {
         val brute = operators.Similarity.knnBrute(spark, sfDir)
           .select($"query_id", $"neighbor_id")
-        val mp = operators.Similarity.knnLshMultiprobe(spark, sfDir)
+        val mp = operators.Similarity.knnLsh(spark, sfDir, nprobe = 8)
           .select($"query_id", $"neighbor_id")
         val hit = brute.join(mp, Seq("query_id", "neighbor_id"), "left_semi").count()
         val tot = brute.count()
@@ -374,11 +374,11 @@ object ScaleProbe {
       }
       spark.catalog.clearCache()
       time(s"semantic_multiprobe_x$mult") {
-        operators.Dedup.semanticDedupMultiprobe(spark, sfDir).count()
+        operators.Dedup.semanticDedup(spark, sfDir, nprobe = 3).count()
       }
       locally {
         val basePairs = operators.Dedup.semanticDedup(spark, sfDir).count()
-        val mpPairs = operators.Dedup.semanticDedupMultiprobe(spark, sfDir).count()
+        val mpPairs = operators.Dedup.semanticDedup(spark, sfDir, nprobe = 3).count()
         println(s"""{"probe":"semantic_multiprobe_gain_x$mult","d11_pairs":$basePairs,"d11b_pairs":$mpPairs}""")
       }
       spark.catalog.clearCache()

@@ -56,73 +56,32 @@ object Similarity {
       |FROM ranked WHERE rank <= 5
       |ORDER BY query_id, rank""".stripMargin
 
-  /** Random-hyperplane signature: `planes` pseudo-random ±1 hyperplanes
-    * derived from xxhash64(plane, dim) — deterministic, no stored model.
-    * Bit p = sign of <v, h_p>. Custom Catalyst expression (tight loop; the
-    * nested-aggregate HOF form re-derived plane weights per row and cost
-    * 58 s at sf0.1).
-    */
-  def hyperplaneSig(v: Column, planes: Int, dim: Int): Column =
-    org.apache.spark.sql.graft.GraftFunctions.hyperplane_sig(v, planes)
-
-  /** s02: LSH-bucketed approximate top-k. 6 bands × 6 hyperplanes (tuned
-    * for the ~0.3-cosine neighbor regime of random embeddings — steeper
-    * band OR-construction than classic 4×8); a corpus vector is a
-    * candidate if it matches the query's signature in any band;
-    * candidates are exactly re-ranked by cosine.
-    */
-  def knnLsh(s: SparkSession, dir: String,
-      queryBound: Int = 32, k: Int = 5,
-      bands: Int = 6, planesPerBand: Int = 6, dim: Int = 64): DataFrame = {
-    import s.implicits._
-    val e = Tables.embeddings(s, dir)
-      .select($"vec_id", asDouble($"embedding").as("v"))
-      .withColumn("sig", hyperplaneSig($"v", bands * planesPerBand, dim))
-      .withColumn("band_sigs", transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"),
-          Dedup.shru($"sig", b * planesPerBand)
-            .bitwiseAND((1L << planesPerBand) - 1).as("bits"))))
-
-    val banded = e.select($"vec_id", $"v", explode($"band_sigs").as("bs"))
-      .select($"vec_id", $"v", $"bs.band".as("band"), $"bs.bits".as("bits"))
-
-    val qb = banded.filter($"vec_id" < queryBound)
-      .select($"band", $"bits", $"vec_id".as("query_id"), $"v".as("qv"))
-    val cb = banded.select($"band", $"bits", $"vec_id".as("neighbor_id"), $"v".as("nv"))
-
-    val candidates = qb.join(cb, Seq("band", "bits"))
-      .filter($"query_id" =!= $"neighbor_id")
-      .select($"query_id", $"neighbor_id", $"qv", $"nv")
-      .dropDuplicates("query_id", "neighbor_id")
-
-    val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
-    candidates
-      .withColumn("cos", cosine($"qv", $"nv"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= k)
-      .select($"query_id", $"rank", $"neighbor_id", round($"cos", 6).as("sim"))
-      .orderBy($"query_id", $"rank")
-  }
-
-  /** s02b: multi-probe LSH top-k (Lv et al., VLDB 2007, single-bit
-    * perturbations). Same banded corpus index as s02 — the corpus still
-    * shuffles ONCE on its home band signatures — but each query probes
-    * `nprobe - 1` extra buckets: the home signature with its single
-    * lowest-|margin| hyperplane bit flipped, i.e. the boundaries the
-    * query sits closest to and a true neighbor most plausibly straddles.
+  /** s02/s02b: LSH-bucketed approximate top-k over random-hyperplane
+    * signatures — `hyperplane_sig`'s xxhash64(plane, dim) ±1 family,
+    * deterministic, no stored model. 6 bands × 6 hyperplanes (tuned for
+    * the ~0.3-cosine neighbor regime of random embeddings — steeper band
+    * OR-construction than classic 4×8); a corpus vector is a candidate
+    * if it matches a probe signature in any band; candidates are exactly
+    * re-ranked by cosine. The corpus shuffles ONCE on its home band
+    * signatures.
     *
-    * The expansion is strictly query-side (bounded rows), so recall rises
-    * without touching the corpus index: at 100 TB this is the knob that
-    * buys recall for probe-time instead of for a second corpus shuffle
+    * `nprobe`: s02 is 1 (each query probes its home signature); s02b is
+    * 8, multi-probe LSH (Lv et al., VLDB 2007, single-bit perturbations):
+    * each query also probes its home signature with one of its
+    * `nprobe - 1` lowest-|margin| hyperplane bits flipped — the
+    * boundaries a true neighbor most plausibly straddles. The expansion
+    * is strictly query-side (bounded rows), so recall rises without
+    * touching the corpus index: at 100 TB this is the knob that buys
+    * recall for probe-time instead of for a second corpus shuffle
     * (contrast raising `bands`, which rewrites the index). Each probe sig
     * differs from home in exactly one bit → contributes exactly one new
     * (band, bits) row; dropDuplicates collapses the other bands, so the
-    * probe frame is (bands + nprobe - 1) rows per query.
+    * probe frame is (bands + nprobe - 1) rows per query. At nprobe = 1
+    * `hyperplane_probes` is `[hyperplane_sig]` (one loop computes both).
     */
-  def knnLshMultiprobe(s: SparkSession, dir: String,
+  def knnLsh(s: SparkSession, dir: String,
       queryBound: Int = 32, k: Int = 5,
-      bands: Int = 6, planesPerBand: Int = 6, dim: Int = 64,
-      nprobe: Int = 8): DataFrame = {
+      bands: Int = 6, planesPerBand: Int = 6, nprobe: Int = 1): DataFrame = {
     import s.implicits._
     val planes = bands * planesPerBand
     val e = Tables.embeddings(s, dir)
@@ -135,7 +94,8 @@ object Similarity {
             .bitwiseAND((1L << planesPerBand) - 1).as("bits")))
 
     val cb = e
-      .withColumn("sig", hyperplaneSig($"v", planes, dim))
+      .withColumn("sig",
+        org.apache.spark.sql.graft.GraftFunctions.hyperplane_sig($"v", planes))
       .select($"vec_id".as("neighbor_id"), $"v".as("nv"),
         explode(bandRows($"sig")).as("bs"))
       .select($"neighbor_id", $"nv", $"bs.band".as("band"), $"bs.bits".as("bits"))
@@ -237,7 +197,7 @@ object Similarity {
     "s01_knn_brute" -> ((s: SparkSession, d: String) => knnBrute(s, d)),
     "s05_knn_quantized" -> ((s: SparkSession, d: String) => knnQuantized(s, d)),
     "s02_knn_lsh" -> ((s: SparkSession, d: String) => knnLsh(s, d)),
-    "s02b_knn_multiprobe" -> ((s: SparkSession, d: String) => knnLshMultiprobe(s, d)),
+    "s02b_knn_multiprobe" -> ((s: SparkSession, d: String) => knnLsh(s, d, nprobe = 8)),
     "s03_label_centroids" -> (labelCentroids _),
     "s04_knn_ivf" -> ((s: SparkSession, d: String) => IvfIndex.knnIvf(s, d)),
     "s06_knn_pq" -> ((s: SparkSession, d: String) => PqIndex.knnPq(s, d)))

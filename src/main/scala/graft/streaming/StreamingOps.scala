@@ -510,17 +510,17 @@ object StreamingOps {
       val spark = batch.sparkSession
       import spark.implicits._
       val b = keep(batch)
-      val rewritten = Dedup.substringRewriteIn(spark, indexTable,
+      val (rewritten, grams) = Dedup.substringRewriteIn(spark, indexTable,
         b.select($"doc_id", $"text"), k, keep)
       Trigger(b.drop("text")
           .join(rewritten.select($"doc_id", $"cleaned".as("text")), Seq("doc_id")),
         land = count(lit(1)), grow = count(lit(1)),
         landed = _.write.mode(SaveMode.Overwrite).parquet(s"$storeDir/$bid.parquet"),
-        // grow from the ORIGINAL batch text: the keeper copy of a novel
-        // run survives the rewrite and must be indexed; using b (not the
-        // rewrite) also keeps a replay's grams identical
-        growth = Marked(_ => Dedup.writeSubstringIndex(
-          b.select($"doc_id", $"text"), indexTable, k, mode = SaveMode.Append)))
+        // grow from the ORIGINAL batch text's grams, kept by the probe:
+        // the keeper copy of a novel run survives the rewrite and must be
+        // indexed; using b (not the rewrite) also keeps a replay's grams
+        // identical
+        growth = Marked(_ => Dedup.writeGrams(grams, indexTable, SaveMode.Append)))
     }
 
   /** Streaming SEMANTIC dedup gate — [[dedupStream]]'s contract for
@@ -545,9 +545,9 @@ object StreamingOps {
     * mismatched plane count produces signatures from a different bit
     * space that silently never match (near-zero recall, no error). The
     * default 0 resolves it from the index's own `_vecmeta` sidecar
-    * (written by writeSemanticIndex, r15) so probe and growth append
-    * agree by construction; an explicit value pins it for pre-sidecar
-    * indexes.
+    * (written by writeSemanticIndex, r15), read once per trigger and
+    * passed to both the probe and the growth append, so the two agree by
+    * construction; an explicit value pins it for pre-sidecar indexes.
     *
     * Under an `audit` (the q39 embeddings block as an admission gate),
     * degenerate vectors — NULL components (crash typed training),
@@ -566,14 +566,15 @@ object StreamingOps {
       val spark = batch.sparkSession
       import spark.implicits._
       val b = audit.fold(keep(batch))(admit(batch, bid, storeDir, _, keep)._1)
+      val p = Dedup.storedPlanes(spark, indexTable, planes)
       val dupIds = Dedup.semanticDelta(spark, indexTable, b,
-          planes = planes, nprobe = nprobe, minCos = minCos)
+          planes = p, nprobe = nprobe, minCos = minCos)
         .select($"new_id".as("vec_id")).distinct()
       Trigger(b.join(dupIds, Seq("vec_id"), "left_anti"),
         land = count(lit(1)), grow = count(lit(1)),
         landed = _.write.mode(SaveMode.Overwrite).parquet(s"$storeDir/$bid.parquet"),
         growth = Marked(kept => Dedup.appendSemanticIndex(
-          kept.select($"vec_id", $"embedding"), indexTable, planes = planes)))
+          kept.select($"vec_id", $"embedding"), indexTable, planes = p)))
     }
 
   /** File-source ingest: watch a directory for new parquet drops (the

@@ -1661,10 +1661,18 @@ object GraftFunctions {
     kernel("minhashSig", nonNull(LongType), Seq(Strings), Seq(shingles), k)
   def simhash64(tokens: Column): Column =
     kernel("simhash64", LongType, Seq(Strings), Seq(tokens))
-  def hyperplane_sig(v: Column, planes: Int): Column =
+  // a signature is one bit per plane of a Long: past 64 planes `1L << p`
+  // wraps (the shift distance is masked to 6 bits) onto bit p - 64
+  private def requirePlanes(planes: Int): Unit =
+    require(planes >= 1 && planes <= 64,
+      s"hyperplane planes must be in 1..64, got $planes")
+  def hyperplane_sig(v: Column, planes: Int): Column = {
+    requirePlanes(planes)
     kernel("hyperplaneSig", LongType, Seq(Doubles), Seq(v), planes)
+  }
   def hyperplane_probes(v: Column, planes: Int, nprobe: Int): Column = {
-    require(planes >= 1 && planes <= 64 && nprobe >= 1)
+    requirePlanes(planes)
+    require(nprobe >= 1, s"hyperplane nprobe must be >= 1, got $nprobe")
     kernel("hyperplaneProbes", nonNull(LongType), Seq(Doubles), Seq(v),
       planes, nprobe)
   }

@@ -270,7 +270,7 @@ class DedupSpec extends SparkSpec {
       .select($"vec_a", $"vec_b").as[(Long, Long)].collect().toSet
     val base = Dedup.semanticDedup(spark, sf)
       .select($"vec_a", $"vec_b").as[(Long, Long)].collect().toSet
-    val mp = Dedup.semanticDedupMultiprobe(spark, sf)
+    val mp = Dedup.semanticDedup(spark, sf, nprobe = 3)
       .select($"vec_a", $"vec_b").as[(Long, Long)].collect().toSet
     // within-home-bucket pairs survive identically (same cap, same minCos,
     // same rounding), probes only ADD cross-bucket pairs
@@ -286,17 +286,55 @@ class DedupSpec extends SparkSpec {
     // The int8 prefilter may only DROP pairs whose provable cosine upper
     // bound clears below the rounded threshold — the output (including
     // the exact cos values) must be bit-identical with the prefilter off.
-    val on = Dedup.semanticDedupMultiprobe(spark, sf)
+    val on = Dedup.semanticDedup(spark, sf, planes = 8, nprobe = 3)
       .select($"vec_a", $"vec_b", $"cos")
       .as[(Long, Long, Double)].collect().toSet
     spark.catalog.clearCache()
-    val off = Dedup.semanticDedupMultiprobe(spark, sf, quantPrefilter = false)
+    val vecs = Tables.embeddings(spark, sf).select($"vec_id",
+      graft.functions.VectorFunctions.asDouble($"embedding").as("v"))
+    val off = Dedup.semanticPairsOf(vecs, planes = 8, dim = 64, minCos = 0.3,
+        maxBucket = 512, nprobe = 3, quantPrefilter = false)
       .select($"vec_a", $"vec_b", $"cos")
       .as[(Long, Long, Double)].collect().toSet
     spark.catalog.clearCache()
     assert(on == off,
       s"prefilter changed the result: +${(on -- off).size} -${(off -- on).size}")
     assert(on.nonEmpty, "parity over an empty pair set proves nothing")
+  }
+
+  test("semantic frame projects each hyperplane once for d11 and d11b") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    // a plane projection is the dotProduct kernel against a literal
+    // weight vector; the verify's cosine dots two columns
+    def planeDots(e: Expression): Int = e.collect {
+      case i: StaticInvoke if i.functionName == "dotProduct" &&
+          i.arguments.exists(_.foldable) => 1
+    }.sum
+    for (key <- Seq("d11_semantic_dedup", "d11b_semantic_multiprobe")) {
+      // in plan mode the frame's cache is gone, so each read of the frame
+      // plans its own copy of the subtree that derives `bucket`; walk
+      // expressions, since the frame's copies repeat in the plan string.
+      // Count projections only: there the filter the optimizer infers
+      // from explode(probes) inlines the probe expression above the scan,
+      // where at runtime it reads the cached `probes` column.
+      val plan = try {
+        graft.operators.SelfClean.planMode = true
+        SparkEntry.queries(key)(spark, sf).queryExecution.optimizedPlan
+      } finally graft.operators.SelfClean.planMode = false
+      val frames = plan.collect {
+        case p: Project if p.projectList.exists {
+          case Alias(c, "bucket") => !c.isInstanceOf[Attribute]
+          case _ => false
+        } => p
+      }
+      assert(frames.nonEmpty, s"$key: no projection derives bucket - plan walk is broken")
+      frames.foreach { f =>
+        val dots = f.collect { case p: Project => p.projectList.map(planeDots).sum }.sum
+        assert(dots == 8, s"$key: the frame evaluates $dots plane projections, not 8")
+      }
+    }
   }
 
   test("d12 with nprobe>1: plain clusters only coarsen, never split") {

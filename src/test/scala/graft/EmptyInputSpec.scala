@@ -97,8 +97,8 @@ class EmptyInputSpec extends SparkSpec {
     Seq.empty[(Long, Seq[Float], Int)].toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
     assert(operators.Dedup.segmentNeardup(spark, dir).count() == 0)
-    assert(operators.Dedup.semanticDedupMultiprobe(spark, dir).count() == 0)
-    assert(operators.Similarity.knnLshMultiprobe(spark, dir).count() == 0)
+    assert(operators.Dedup.semanticDedup(spark, dir, nprobe = 3).count() == 0)
+    assert(operators.Similarity.knnLsh(spark, dir, nprobe = 8).count() == 0)
     // composed cluster path, both probe modes and canonical routing
     assert(operators.Dedup.semanticClusters(spark, dir, nprobe = 3).count() == 0)
     assert(operators.Dedup.semanticClusters(spark, dir,

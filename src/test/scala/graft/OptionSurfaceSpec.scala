@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * a static method reached through `KernelCall`, so a new hand-written
   * Catalyst expression class has to be added to an allow-list on
   * purpose. And every streaming trigger runs through StreamingOps' one
-  * trigger skeleton, so a hand-rolled `foreachBatch` fails here.
+  * trigger skeleton, so a hand-rolled `foreachBatch` fails here. And each
+  * vector-LSH family runs one core, so a second semantic projection,
+  * bucket aggregate or probe call fails here.
   */
 class OptionSurfaceSpec extends AnyFunSuite {
 
@@ -99,6 +101,33 @@ class OptionSurfaceSpec extends AnyFunSuite {
     val ops = files.find(_.getName == "StreamingOps.scala").map(read).get
     assert("""releaseCheckpointBlocks\(""".r.findAllMatchIn(ops).toList.size == 1,
       "StreamingOps frees a trigger checkpoint outside the gate skeleton")
+  }
+
+  test("each vector-LSH family has one core: one semantic frame, one bucket " +
+      "aggregate, one probe call") {
+    def read(name: String) = new String(java.nio.file.Files.readAllBytes(
+      sources(new java.io.File("src/main/scala")).find(_.getName == name)
+        .getOrElse(fail(s"$name not found: run from the repository root")).toPath), "UTF-8")
+    val defn = """\bdef\s+(\w+)""".r
+    def enclosing(src: String, call: scala.util.matching.Regex): Seq[String] =
+      call.findAllMatchIn(src).map(m => defn.findAllMatchIn(src.take(m.start))
+        .map(_.group(1)).toSeq.lastOption.getOrElse("")).toSeq
+    val dedup = read("Dedup.scala")
+    // enclosing def -> why it may build the md5 planes or group by bucket
+    val projecting = Map("semanticFrame" -> "the one projection of every plane")
+    val grouping = Map(
+      "bucketStats" -> "the one bucket population aggregate",
+      "semanticClusters" -> "d12's per-bucket union-find groups verified edges")
+    val projectors = enclosing(dedup, """(?<!def )planeWeights\(""".r)
+    assert(projectors.nonEmpty && projectors.forall(projecting.contains),
+      s"planeWeights called outside semanticFrame: ${projectors.mkString(", ")}")
+    val groupers = enclosing(dedup,
+      """groupBy\(\s*(?:\$"bucket"|col\("bucket"\))""".r)
+    assert(groupers.toSet == grouping.keySet && groupers.size == grouping.size,
+      s"a group-by-bucket outside bucketStats: ${groupers.mkString(", ")}")
+    // s02 and s02b are one knnLsh, selected by nprobe
+    assert("""hyperplane_probes\(""".r.findAllMatchIn(read("Similarity.scala")).size == 1,
+      "Similarity calls hyperplane_probes more than once")
   }
 
   test("org.apache.spark.sql.graft declares only the allowed Expression classes") {

@@ -52,7 +52,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("multi-probe lsh: recall dominates single-probe at the same corpus index") {
-    val mp = Similarity.knnLshMultiprobe(spark, sf)
+    val mp = Similarity.knnLsh(spark, sf, nprobe = 8)
       .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
     assert(mp.nonEmpty, "multi-probe LSH returned nothing")
     val recallLsh = brute.intersect(lsh).size.toDouble / brute.size
@@ -71,9 +71,9 @@ class SimilaritySpec extends SparkSpec {
     val truth = operators.Similarity.knnBrute(spark, sf)
       .localCheckpoint()
     val (committed, dCommitted, nq) = Recall.recallAtK(
-      operators.Similarity.knnLshMultiprobe(spark, sf), truth)
+      operators.Similarity.knnLsh(spark, sf, nprobe = 8), truth)
     val (crippled, _, _) = Recall.recallAtK(
-      operators.Similarity.knnLshMultiprobe(spark, sf, nprobe = 1), truth)
+      operators.Similarity.knnLsh(spark, sf), truth)
     info(f"recall@5 committed(nprobe=8)=$committed%.3f " +
       f"crippled(nprobe=1)=$crippled%.3f over $nq queries")
     // the committed config's floor: an nprobe or band-family regression
@@ -270,6 +270,28 @@ class SimilaritySpec extends SparkSpec {
     val mismatched = l.filter { case (q, n, s) =>
       b.get((q, n)).exists(bs => math.abs(bs - s) > 1e-9) }
     assert(mismatched.isEmpty, "exact re-rank must agree with brute cosine")
+  }
+
+  test("hyperplane signatures reject plane counts outside 1..64") {
+    // a signature is one bit per plane of a Long: at 65 planes `1L << p`
+    // wraps (the JVM masks the shift distance) and ORs plane 64's sign
+    // into bit 0; at 0 planes every vector lands in one bucket
+    def failure(run: => Any): String = {
+      val e = intercept[Exception](run)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" / ")
+    }
+    for (planes <- Seq(65, 0)) {
+      val msg = failure(spark.sql(
+        s"SELECT graft_hyperplane_sig(array(1.0d, -2.0d), $planes)").collect())
+      assert(msg.contains("planes"), s"$planes planes: $msg")
+    }
+    // s02's 6 planes per band: 11 bands are 66 planes
+    val lsh = failure(Similarity.knnLsh(spark, sf, bands = 11).collect())
+    assert(lsh.contains("planes"), lsh)
+    // the semantic family's md5 planes set the same bits
+    val sem = failure(operators.Dedup.semanticDedup(spark, sf, planes = 65).collect())
+    assert(sem.contains("planes"), sem)
   }
 
   test("stored pq index: search is identical to the in-query s06 pipeline, " +

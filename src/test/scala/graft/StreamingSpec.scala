@@ -505,6 +505,70 @@ class StreamingSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("substring gate grows its gram index from the probe's kept grams") {
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_subgrow_").toString
+    spark.sql("DROP TABLE IF EXISTS subgrow_idx_grams")
+    def ws(tag: String, n: Int): Seq[String] = (0 until n).map(i => s"$tag$i")
+    graft.operators.Dedup.writeSubstringIndex(
+      Seq(1L -> (ws("rr", 20) ++ ws("s", 10)).mkString(" ")).toDF("doc_id", "text"),
+      "subgrow_idx", k = 20)
+    // the physical plan of every write into the gram table
+    val grows = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.exists {
+          case c: InsertIntoHadoopFsRelationCommand =>
+            c.catalogTable.exists(_.identifier.table == "subgrow_idx_grams")
+          case _ => false
+        }) grows.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val mem = MemoryStream[(Long, String)]
+    val q = StreamingOps.substringDedupStream(
+      mem.toDF().toDF("doc_id", "text"), "subgrow_idx", s"$dir/store", k = 20)
+    try {
+      mem.addData((100L, (ws("a", 4) ++ ws("cc", 20)).mkString(" ")))
+      q.processAllAvailable()
+      mem.addData((200L, (ws("e", 5) ++ ws("cc", 20)).mkString(" ")),
+        (201L, ws("g", 25).mkString(" ")))
+      q.processAllAvailable()
+    } finally {
+      q.stop()
+      org.apache.spark.sql.graft.SparkInternals.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.unregister(l)
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case n => Seq(n)
+    }.flatten
+    val plans = grows.toArray(Array.empty[SparkPlan]).toSeq.map(nodes)
+    assert(plans.size == 2, s"${plans.size} gram-index writes, want one per trigger")
+    plans.foreach { p =>
+      // the cached relation's own plan is not a child of its scan, so a
+      // rolling hash here is a second pass over the batch's text
+      val rehashed = p.flatMap(_.expressions).exists(_.exists {
+        case i: StaticInvoke => i.functionName == "rollingKgramHashes"
+        case _ => false
+      })
+      assert(!rehashed, "the grow step re-hashes the batch text")
+      assert(p.exists {
+        case m: InMemoryTableScanExec =>
+          Set("h1", "h2").subsetOf(m.output.map(_.name).toSet)
+        case _ => false
+      }, "the grow step does not read the kept grams")
+    }
+    spark.sql("DROP TABLE IF EXISTS subgrow_idx_grams")
+    spark.catalog.clearCache()
+  }
+
   test("streaming semantic gate dedups vector arrivals against the growing index") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_sstream_").toString
