@@ -371,9 +371,7 @@ object GenAdversarial {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val outDir = args.headOption.getOrElse("/tmp/graftdata/adv")
     val srcDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     val counts = writeAll(spark, outDir, srcDir)
     println(counts.map { case (k, v) => s""""$k":$v""" }
       .mkString("{", ",", s""","dir":"$outDir"}"""))

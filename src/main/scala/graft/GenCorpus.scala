@@ -125,34 +125,6 @@ object GenCorpus {
       .select($"vec_id", $"embedding", $"label")
   }
 
-  /** Deterministic power-law edge list — the adversarial shape for graph
-    * operators (a web/link graph's hub pages): endpoint sampling via
-    * inverse-CDF of a Zipf-ish distribution over xxhash64 uniforms, so
-    * node 1 is a hub touched by a constant FRACTION of all edges while
-    * the tail is near-uniform. Directed (src, dst) pairs; symmetrize with
-    * `Graph.tradeEdgesOf`-style unions if needed. exponent ≈ 2.0 gives
-    * max-degree ≈ |E|/ζ — a single reducer-busting key by construction.
-    */
-  def generatePowerLawEdges(spark: org.apache.spark.sql.SparkSession,
-      nEdges: Long, nNodes: Long, exponent: Double = 2.0): DataFrame = {
-    import spark.implicits._
-    // src: inverse-CDF Zipf — u uniform in (0,1]; node = u^(-1/(a-1)) - 1,
-    // capped. P(src = 0) ≈ 1 - 2^-(a-1): the hub anchors a constant
-    // fraction of ALL edges. dst: uniform — so distinct() keeps the hub's
-    // degree at corpus-fraction scale instead of collapsing the head×head
-    // pair space (both-endpoints-Zipf yields only ~|head|² distinct pairs).
-    val u = (pmod(xxhash64($"id", lit(31)), lit(1000000)).cast("double")
-      + 1.0) / 1000000.0
-    val zipfSrc = least(
-      (pow(u, -1.0 / (exponent - 1.0)) - 1.0).cast("long"),
-      lit(nNodes - 1))
-    spark.range(nEdges)
-      .select(zipfSrc.as("src_n"),
-        pmod(xxhash64($"id", lit(37)), lit(nNodes)).as("dst_n"))
-      .filter($"src_n" =!= $"dst_n")
-      .distinct()
-  }
-
   /** Deterministic binary media table matching the multimodal record
     * schema (doc_id, kind, payload BINARY, n_bytes, content_hash): each
     * payload is 128–4095 bytes of md5-chained pseudorandom data, kinds
@@ -192,9 +164,7 @@ object GenCorpus {
     val outDir = args.headOption.getOrElse("/tmp/graftdata/sf1")
     val nBase = if (args.length > 1) args(1).toLong else 47500L
     val dupPct = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     val docs = generate(spark, nBase, dupPct)
     docs.repartition(32).write.mode(SaveMode.Overwrite)
       .parquet(s"$outDir/documents.parquet")

@@ -37,9 +37,7 @@ object GenScale {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/graftdata/sf1"
     val mult = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
-    val spark: SparkSession = GraftSession.local(cpus)
+    val spark: SparkSession = GraftSession.local()
 
     def src(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
     def write(t: String, df: DataFrame, parts: Int): Long = {

@@ -69,6 +69,13 @@ object GraftSession {
       case (b, (k, v)) => b.config(k, sys.props.getOrElse(k, v))
     }
 
+  /** Cores for a graft main: `SPARK_GRAFT_CPUS`, else the machine's. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  /** Session for a graft main, at [[cpus]] cores. */
+  def local(): SparkSession = local(cpus)
+
   /** Session for local work with `cpus` cores; registers the graft SQL
     * functions so `graft_*` is available out of the box.
     */

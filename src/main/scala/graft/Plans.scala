@@ -16,14 +16,15 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = GraftSession.local(4)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    // Self-cleaning operators' localCheckpoints become pass-throughs so
-    // this dump shows the pipeline that PRODUCES the checkpoint instead
-    // of one `Scan ExistingRDD` node (VERDICT r17 #2 — d11b/d12/d02c/
-    // d18b/g02b were invisible to the plan gate). Only ever set here:
-    // execution under this flag would recompute released caches.
-    graft.operators.SelfClean.planMode = true
+    // Every plan is built under SelfClean.planned: self-cleaning
+    // operators' localCheckpoints become pass-throughs, so this dump
+    // shows the pipeline that PRODUCES the checkpoint instead of one
+    // `Scan ExistingRDD` node (VERDICT r17 #2 — d11b/d12/d02c/d18b/g02b
+    // were invisible to the plan gate), and kept frames read as the
+    // cached relations the runtime reads.
+    import graft.operators.SelfClean.planned
     // The session default caps plan strings at 100k (p07's driver-CPU
     // guard), but THIS main's whole purpose is complete plan text: d16's
     // Bloom bitmap and s06's PQ codebook literals alone exceed 100k, and
@@ -49,7 +50,7 @@ object Plans {
           "SKIPPED: eager entry (materializes per-stage; final plan is a " +
             "LocalTableScan of the waterfall counts — see the stage " +
             "operators' own plans)\n"
-        else try {
+        else try planned {
           fn(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
         } catch { case NonFatal(e) =>
@@ -75,7 +76,7 @@ object Plans {
           "dump runs at sfDir scale)\n"); sfDir }
     }
     sb.append(s"\n# p07 per-stage plans ($smallDir, via curateFull planHook)\n")
-    try {
+    try planned {
       val docs = Tables.documents(spark, smallDir)
       pipeline.CorpusPipeline.curateFull(
         docs.filter(org.apache.spark.sql.functions.col("doc_id") >= 5),

@@ -99,9 +99,7 @@ object Recall {
     val sfDir = if (args.length > 0) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = if (args.length > 1) Some(args(1)) else None
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val k = 5
     val truth = operators.Similarity.knnBrute(spark, sfDir, k = k)

@@ -7,9 +7,7 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Optional trailing args: query-name filter for local iteration (the
     // driver passes none → full dump). Unknown names fail fast.

@@ -281,19 +281,14 @@ object Multimodal {
   /** Build a binary media table from `documents` (payload = utf8 bytes;
     * in production this column arrives from the object store).
     */
-  def mediaTable(s: SparkSession, dir: String): DataFrame =
-    mediaTableOf(Tables.documents(s, dir))
-
-  /** Core of [[mediaTable]] over any (doc_id, text) frame. */
-  def mediaTableOf(documents: DataFrame): DataFrame = {
-    val s = documents.sparkSession
+  def mediaTable(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // A doc with NULL content has no media record (the object store has
     // nothing to fetch) — without this, the typed decode path's
     // non-nullable payload field turns one scraped null row into a
     // stage-level crash for the whole m-family (found by the
     // GenAdversarial corpus gate).
-    documents.filter($"text".isNotNull).select(
+    Tables.documents(s, dir).filter($"text".isNotNull).select(
       $"doc_id",
       when($"doc_id" % 3 === 0, "image")
         .when($"doc_id" % 3 === 1, "audio")
@@ -412,15 +407,9 @@ object Multimodal {
     * corpus without ever decoding; column pruning keeps the payload bytes
     * out of the scan.
     */
-  def mediaStats(s: SparkSession, dir: String): DataFrame =
-    mediaStatsOf(mediaTable(s, dir))
-
-  /** Core of [[mediaStats]] over any media-record frame (e.g. the
-    * generated binary media table). */
-  def mediaStatsOf(mediaDf: DataFrame): DataFrame = {
-    val s = mediaDf.sparkSession
+  def mediaStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    mediaDf
+    mediaTable(s, dir)
       .groupBy($"kind")
       .agg(count(lit(1)).as("n_assets"),
         sum($"n_bytes").as("total_bytes"),

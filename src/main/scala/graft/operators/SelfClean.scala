@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable.ArrayBuffer
 
 /** The one place graft persists a frame, and its checkpoint, made
   * plan-auditable (VERDICT r17 #2).
@@ -16,38 +17,61 @@ import org.apache.spark.storage.StorageLevel
   * via `localCheckpoint` before the caches go.
   *
   * A checkpointed frame's plan is a single `Scan ExistingRDD` node, which
-  * blinds the plan gate: `graft.Plans` explains the RETURNED frame. In
-  * plan mode ([[planMode]], set only by the Plans main and by specs that
-  * walk a real plan) the checkpoint is a pass-through, so the dump shows
-  * the full physical tree that actually executes to PRODUCE the
-  * checkpoint; at runtime behavior is byte-identical.
+  * blinds the plan gate: `graft.Plans` explains the RETURNED frame. Inside
+  * [[planned]] (used only by the Plans main and by specs that walk a real
+  * plan) the checkpoint is a pass-through and every kept frame stays
+  * cached until the block ends, so the plan shows the full physical tree
+  * that actually executes to PRODUCE the checkpoint, reading each kept
+  * frame through one cached relation as the runtime does; outside the
+  * block behavior is unchanged.
   */
 object SelfClean {
 
-  /** Plan-dump mode: checkpoints become pass-throughs so explain sees
-    * the real pipeline. Never set outside `graft.Plans` and plan-walking
-    * specs — with the flag on, operators return lazy frames whose
-    * internal caches were already released, so EXECUTING them would
-    * recompute (fine for explain, wrong for results).
+  /** The frames kept by scopes inside the running [[planned]] block,
+    * released when it ends; `None` outside one.
     */
-  @volatile var planMode: Boolean = false
+  @volatile private var plannedKeeps: Option[ArrayBuffer[DataFrame]] = None
 
-  /** `df.localCheckpoint(eager)` at runtime; `df` itself in plan mode. */
+  /** Runs `body` in plan mode: checkpoints pass their input through and
+    * each scope's kept frames stay cached until `body` returns or throws,
+    * so a plan built inside `body` reads them as cached relations. Build
+    * plans here; do not run for results — a frame built inside reads
+    * caches that are released on exit. A nested call joins the outer
+    * block.
+    */
+  def planned[A](body: => A): A =
+    if (plannedKeeps.isDefined) body
+    else {
+      val keeps = ArrayBuffer.empty[DataFrame]
+      plannedKeeps = Some(keeps)
+      try body
+      finally {
+        plannedKeeps = None
+        keeps.synchronized(keeps.foreach(_.unpersist()))
+      }
+    }
+
+  /** `df.localCheckpoint(eager)` at runtime; `df` itself in [[planned]]. */
   def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame =
-    if (planMode) df else df.localCheckpoint(eager)
+    if (plannedKeeps.isDefined) df else df.localCheckpoint(eager)
 
   /** Runs `body` with `keep`, which persists a frame `body` reads more
     * than once; everything kept is unpersisted when `body` returns or
-    * throws. `body`'s result must not read a kept frame lazily:
-    * checkpoint it first (see [[releasing]]).
+    * throws (when the enclosing [[planned]] block ends, inside one).
+    * `body`'s result must not read a kept frame lazily: checkpoint it
+    * first (see [[releasing]]).
     */
   def scope[A](body: (DataFrame => DataFrame) => A): A = {
-    val kept = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val kept = ArrayBuffer.empty[DataFrame]
+    val block = plannedKeeps
     try body { df =>
       val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
       kept += cached
       cached
-    } finally kept.foreach(_.unpersist())
+    } finally block match {
+      case Some(keeps) => keeps.synchronized(keeps ++= kept)
+      case None => kept.foreach(_.unpersist())
+    }
   }
 
   /** One cache, one checkpointed result: `body` reads `cache` persisted,

@@ -171,8 +171,8 @@ object DocumentPipeline {
 
   /** p02's shard assignment: uniform in [0, 65536) and bit-for-bit
     * reproducible in the DuckDB oracle (same pattern as p03's split
-    * hash). Exposed so diagnostics (ScaleProbe's balance probe) measure
-    * the SAME layout the packer uses.
+    * hash). Shared by p02's packer and m05's decode-pack, so both shard
+    * a corpus the same way.
     */
   def packShard(shards: Int): org.apache.spark.sql.Column =
     (conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
@@ -1200,14 +1200,9 @@ object DocumentPipeline {
     * set). Explode-shingle + semi-join on the shingle; the benchmark side
     * is tiny and broadcast. The core hygiene op of a training pipeline.
     */
-  def decontaminate(s: SparkSession, dir: String): DataFrame =
-    decontaminateOf(Tables.documents(s, dir))
-
-  /** Core of [[decontaminate]] over any (doc_id, text) frame. */
-  def decontaminateOf(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
+  def decontaminate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sh = docs.select($"doc_id",
+    val sh = Tables.documents(s, dir).select($"doc_id",
       explode(graft.operators.Dedup.shingles($"text", 3)).as("shingle"))
     val benchmark = sh.filter($"doc_id" < 5)
       .select($"shingle").distinct()
@@ -1917,14 +1912,9 @@ object DocumentPipeline {
     * happens either. The regression itself is a |langs|-row moment
     * aggregate.
     */
-  def zipfFit(s: SparkSession, dir: String, topK: Int = 200): DataFrame =
-    zipfFitOf(Tables.documents(s, dir), topK)
-
-  /** Core of [[zipfFit]] over any (lang, text) frame. */
-  def zipfFitOf(documents: DataFrame, topK: Int): DataFrame = {
-    val s = documents.sparkSession
+  def zipfFit(s: SparkSession, dir: String, topK: Int = 200): DataFrame = {
     import s.implicits._
-    val wc = documents
+    val wc = Tables.documents(s, dir)
       .select($"lang", explode(split($"text", " ")).as("w"))
       .groupBy($"lang", $"w").agg(count(lit(1)).as("n"))
     val byLang = org.apache.spark.sql.expressions.Window

@@ -303,9 +303,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("semantic frame projects each hyperplane once for d11 and d11b") {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression}
+    import org.apache.spark.sql.catalyst.expressions.Expression
     import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     // a plane projection is the dotProduct kernel against a literal
     // weight vector; the verify's cosine dots two columns
     def planeDots(e: Expression): Int = e.collect {
@@ -313,27 +313,16 @@ class DedupSpec extends SparkSpec {
           i.arguments.exists(_.foldable) => 1
     }.sum
     for (key <- Seq("d11_semantic_dedup", "d11b_semantic_multiprobe")) {
-      // in plan mode the frame's cache is gone, so each read of the frame
-      // plans its own copy of the subtree that derives `bucket`; walk
-      // expressions, since the frame's copies repeat in the plan string.
-      // Count projections only: there the filter the optimizer infers
-      // from explode(probes) inlines the probe expression above the scan,
-      // where at runtime it reads the cached `probes` column.
-      val plan = try {
-        graft.operators.SelfClean.planMode = true
-        SparkEntry.queries(key)(spark, sf).queryExecution.optimizedPlan
-      } finally graft.operators.SelfClean.planMode = false
-      val frames = plan.collect {
-        case p: Project if p.projectList.exists {
-          case Alias(c, "bucket") => !c.isInstanceOf[Attribute]
-          case _ => false
-        } => p
+      // in plan mode the frame stays cached, so every read of it is one
+      // cached relation, as at runtime: count over the whole plan, each
+      // cached relation's plan once
+      val nodes = graft.operators.SelfClean.planned {
+        planNodes(SparkEntry.queries(key)(spark, sf).queryExecution.executedPlan)
       }
-      assert(frames.nonEmpty, s"$key: no projection derives bucket - plan walk is broken")
-      frames.foreach { f =>
-        val dots = f.collect { case p: Project => p.projectList.map(planeDots).sum }.sum
-        assert(dots == 8, s"$key: the frame evaluates $dots plane projections, not 8")
-      }
+      assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),
+        s"$key: no cached frame in the plan - plan walk is broken")
+      val dots = nodes.map(_.expressions.map(planeDots).sum).sum
+      assert(dots == 8, s"$key: the plan evaluates $dots plane projections, not 8")
     }
   }
 
@@ -571,16 +560,9 @@ class DedupSpec extends SparkSpec {
     // wrapper sees no exchanges at all and would pass vacuously. `got`
     // is checkpointed (a bare `Scan ExistingRDD`), so walk the probe as
     // plan mode builds it, with the checkpoint a pass-through.
-    val probePlan = {
-      graft.operators.SelfClean.planMode = true
-      try Dedup.dedupDelta(spark, "inc_idx_spec", delta)
-        .queryExecution.executedPlan
-      finally graft.operators.SelfClean.planMode = false
-    }
-    val plan = probePlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
+    val plan = graft.operators.SelfClean.planned {
+      planNodes(Dedup.dedupDelta(spark, "inc_idx_spec", delta)
+        .queryExecution.executedPlan)
     }
     val allShuffles = plan.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
@@ -594,11 +576,11 @@ class DedupSpec extends SparkSpec {
     assert(storedScans.nonEmpty,
       "traversal found no stored index scan - plan walk is broken")
     val reshuffledStore = allShuffles.filter { e =>
-      val scans = e.child.collect {
+      val scans = planNodes(e.child).collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
             if f.tableIdentifier.exists(_.table.startsWith("inc_idx_spec")) => f
       }
-      val joins = e.child.collect {
+      val joins = planNodes(e.child).collect {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
       }
       scans.nonEmpty && joins.isEmpty

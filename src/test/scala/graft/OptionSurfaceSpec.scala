@@ -41,9 +41,13 @@ class OptionSurfaceSpec extends AnyFunSuite {
       // a read whose name is not a literal cannot be checked
       assert(anyRead.findAllMatchIn(src).size == names.size,
         s"${f.getPath} reads the environment without a literal name")
-      names
+      f.getName -> names
     }
-    assert(reads.flatten.toSet == allowed)
+    assert(reads.flatMap(_._2).toSet == allowed)
+    // the core count is one rule, GraftSession.cpus, that every main uses
+    val cpuReaders = reads.collect { case (f, ns) if ns.contains("SPARK_GRAFT_CPUS") => f }
+    assert(cpuReaders == Seq("GraftSession.scala"),
+      s"SPARK_GRAFT_CPUS read outside GraftSession: ${cpuReaders.mkString(", ")}")
   }
 
   test("only the CacheHygiene memo registry declares a ConcurrentHashMap") {
@@ -64,8 +68,7 @@ class OptionSurfaceSpec extends AnyFunSuite {
     // file name -> why it may persist or release
     val exempt = Map(
       "SelfClean.scala" -> "the scope: keep persists, its finally unpersists",
-      "SparkInternals.scala" -> "the checkpoint-block sweep behind freeTransient",
-      "ScaleProbe.scala" -> "the scale harness holds its inputs across timed sections")
+      "SparkInternals.scala" -> "the checkpoint-block sweep behind freeTransient")
     val raw = """\.persist\(|\.cache\(\)|\.unpersist\(""".r
     val calling = files.filter { f =>
       !exempt.contains(f.getName) &&

@@ -16,25 +16,22 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("plan mode shows the self-cleaning keys' real pipelines") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.FileSourceScanExec
     // each returns a checkpoint, whose runtime plan is one RDD scan; in
     // plan mode the checkpoint passes the real pipeline through, which
-    // reads the corpus
+    // reads the corpus, directly or through a kept frame's cache
     val selfCleaning = Seq("d10_hot_ngram_mask", "d13_segment_dedup",
       "d18_segment_neardup", "t18_pmi_cooccur", "t24_cosine_apss",
       "s04_knn_ivf", "s06_knn_pq", "p01_corpus_curate",
       "p05_importance_resample", "p08_curriculum")
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case s: FileSourceScanExec => Seq(s)
-    }.flatten
-    val blind = try {
-      graft.operators.SelfClean.planMode = true
-      selfCleaning.filter(name => scans(SparkEntry.queries(name)(spark, sf)
-        .queryExecution.executedPlan).isEmpty)
-    } finally graft.operators.SelfClean.planMode = false
+    val blind = graft.operators.SelfClean.planned {
+      selfCleaning.filter(name => planNodes(SparkEntry.queries(name)(spark, sf)
+        .queryExecution.executedPlan).collect { case s: FileSourceScanExec => s }
+        .isEmpty)
+    }
     assert(blind.isEmpty, s"no table scan in the plan of ${blind.mkString(", ")}")
+    assert(org.apache.spark.sql.graft.SparkInternals.cacheIsEmpty(spark),
+      "plan mode left a kept frame cached")
   }
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {

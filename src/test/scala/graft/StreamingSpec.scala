@@ -329,16 +329,9 @@ class StreamingSpec extends SparkSpec {
     val probe = (Seq((3000L, text(3000L))).toDF("doc_id", "text"))
     // dedupDelta checkpoints its pairs, which hides the probe from the
     // plan; build it in plan mode, where the checkpoint is a pass-through
-    val probePlan = {
-      graft.operators.SelfClean.planMode = true
-      try graft.operators.Dedup.dedupDelta(spark, "cmp_idx", probe)
-        .queryExecution.executedPlan
-      finally graft.operators.SelfClean.planMode = false
-    }
-    val plan = probePlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
+    val plan = graft.operators.SelfClean.planned {
+      planNodes(graft.operators.Dedup.dedupDelta(spark, "cmp_idx", probe)
+        .queryExecution.executedPlan)
     }
     val allShuffles = plan.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
@@ -350,11 +343,11 @@ class StreamingSpec extends SparkSpec {
           if f.tableIdentifier.exists(_.table.startsWith("cmp_idx")) => f
     }.nonEmpty, "traversal found no stored index scan - plan walk is broken")
     val reshuffledStore = allShuffles.filter { e =>
-      val scans = e.child.collect {
+      val scans = planNodes(e.child).collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
             if f.tableIdentifier.exists(_.table.startsWith("cmp_idx")) => f
       }
-      val joins = e.child.collect {
+      val joins = planNodes(e.child).collect {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
       }
       scans.nonEmpty && joins.isEmpty

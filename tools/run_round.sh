@@ -11,18 +11,24 @@ TESTDATA="${GRAFT_TESTDATA:-$HOME/testdata}"
 echo "== sbt test =="
 sbt -batch test 2>&1 | grep -E "Tests: |FAILED" | head -3
 
+# Verify <sfDir> into a fresh <outDir>: a key that fails must not leave
+# an earlier run's parquet for selfcheck to pass, and a failed key (Verify
+# exits 1) stops the round after its `[verify] N failed: …` line
+verify() {
+  rm -rf "$2"
+  SPARK_GRAFT_CPUS=$CPUS sbt -batch "runMain graft.Verify $1 $2" 2>&1 \
+    | { grep -E "\[verify\].*failed" || true; } \
+    || { echo "verify failed on $1: round stopped" >&2; exit 1; }
+}
+
 echo "== verify sf0.01 + duckdb selfcheck =="
-SPARK_GRAFT_CPUS=$CPUS \
-  sbt -batch "runMain graft.Verify $TESTDATA/sf0.01 /tmp/vout" 2>&1 \
-  | grep -E "\[verify\].*failed" || true
+verify $TESTDATA/sf0.01 /tmp/vout
 python3 tools/selfcheck.py /tmp/vout $TESTDATA/sf0.01 | tail -3
 
 echo "== verify sf0.001 + duckdb selfcheck =="
 # scale-dependent value coincidences (round-half ties) show up at one
 # SF and not another — always check both
-SPARK_GRAFT_CPUS=$CPUS \
-  sbt -batch "runMain graft.Verify $TESTDATA/sf0.001 /tmp/vout001" 2>&1 \
-  | grep -E "\[verify\].*failed" || true
+verify $TESTDATA/sf0.001 /tmp/vout001
 python3 tools/selfcheck.py /tmp/vout001 $TESTDATA/sf0.001 | tail -3
 
 echo "== bench sf0.1 =="
